@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * and measure, per N:
   *
   *   - eager `snapshot()` — every add materialized on the driver (the
-  *     pre-r11 only path, and still the DV/mapping fallback);
+  *     DV/mapping fallback);
   *   - `lazySnapshot()` resolve — metadata only, adds stay columnar;
   *   - the unfiltered lazy listing (stats payload elided);
   *   - a point-predicate `listFiles` through [[DeltaFileIndex]]'s
@@ -119,7 +119,7 @@ object DeltaScaleProbe {
       require(eagerSnap.files.size == n, s"eager lost adds: ${eagerSnap.files.size} of $n")
       val (resolved, tResolve) = time(DeltaLake.lazySnapshot(spark, root))
       val ls = resolved.getOrElse(sys.error("checkpointed snapshot must resolve lazily"))
-      val (allAdds, tList) = time(DeltaLake.pruneCheckpointAdds(spark, ls, None))
+      val (allAdds, tList) = time(DeltaLake.pruneCheckpointAdds(spark, ls, Nil))
       require(allAdds.size == n, s"lazy listing lost adds: ${allAdds.size} of $n")
       val mid = (n / 2) * 100 + 7
       val idx = new DeltaFileIndex(spark, root, ls)
@@ -129,25 +129,24 @@ object DeltaScaleProbe {
       val (dirs, tPrune) = time(idx.listFiles(Nil, Seq(pred)))
       val survivors = dirs.map(_.files.length).sum
       require(survivors == 1, s"expected 1 surviving file, got $survivors")
-      // r13: the checkpoint WRITE direction — writeCheckpointV2 streams
-      // adds through parquet-hadoop (O(row-group) memory; sizes come
-      // from the log's own add actions, zero per-file stats). r14: the
-      // PAYLOAD side streams too — adds iterate DRIVER-DIRECT off the
-      // previous checkpoint's own parquet (per-file projection, one row
-      // group at a time, zero Spark jobs) merged with the JSON tail,
-      // never materializing the AddEntry list, so the live peak must
-      // now be FLAT in N (the r12 Seq[Row]+LocalRelation shape held 2-3
-      // add copies; r13 still held the eager snapshot's full AddEntry
-      // list — 2.7 GB at 1M adds).
+      // the checkpoint WRITE direction — writeCheckpointV2 streams adds
+      // through parquet-hadoop (O(row-group) memory; sizes come from the
+      // log's own add actions, zero per-file stats). The PAYLOAD side
+      // streams too — adds iterate DRIVER-DIRECT off the previous
+      // checkpoint's own parquet (per-file projection, one row group at
+      // a time, zero Spark jobs) merged with the JSON tail, never
+      // materializing the AddEntry list, so the live peak must be FLAT
+      // in N (holding the eager snapshot's full AddEntry list costs
+      // 2.7 GB at 1M adds).
       def usedHeap(): Long = {
         val rt = Runtime.getRuntime; rt.totalMemory - rt.freeMemory
       }
       System.gc(); Thread.sleep(200)
       val base = usedHeap()
-      // GC-VERIFIED live-heap sampler (r14): a raw used-heap sample on a
-      // 64g JVM mostly measures eden garbage (minor GC may not fire once
-      // during the whole write), which made the r13 column read as
-      // retained memory when it wasn't. When a sample exceeds the last
+      // GC-VERIFIED live-heap sampler: a raw used-heap sample on a 64g
+      // JVM mostly measures eden garbage (minor GC may not fire once
+      // during the whole write), which reads as retained memory when it
+      // isn't. When a sample exceeds the last
       // verified peak by 128MB the sampler forces a collection and
       // records the LIVE size — the number that must fit a production
       // driver. The write is timed in its own untouched pass first.

@@ -248,14 +248,13 @@ object IcebergScaleProbe extends Serializable {
       val (dirs, tPrune) = time(idx.listFiles(Nil, Seq(pred)))
       val survivors = dirs.map(_.files.length).sum
       require(survivors == 1, s"expected 1 surviving file, got $survivors")
-      // r12: the DELETE-CARRYING composed read — resolve + delete-file
-      // read + plan build, with the data manifests still unread on the
-      // driver (the pre-r12 path materialized every entry here)
+      // the DELETE-CARRYING composed read — resolve + delete-file read +
+      // plan build, with the data manifests still unread on the driver
       val rootD = buildTable(n, manifests, withDelete = true)
       val (delDf, tDelPlan) = time(IcebergTable.read(spark, rootD))
       require(delDf.columns.toSeq == Seq("id", "v"),
         s"delete-carrying read produced schema ${delDf.columns.toSeq}")
-      // r19: add_files registration against n live entries — the
+      // add_files registration against n live entries — the
       // duplicate guard is batch-bounded on the driver (distributed
       // manifest probe), so registration time must not track the
       // table. First call resumes the FOREIGN minimal list (one-time
@@ -299,8 +298,8 @@ object IcebergScaleProbe extends Serializable {
          |`full list` = the unfiltered lazy listing, stats elided.
          |`point-prune` = a pushed `id = k` equality through
          |`IcebergFileIndex.listFiles`: EXECUTORS parse the manifests (one
-         |task per manifest group, Avro core) and evaluate the same
-         |`IcebergEntryPruner` the driver index uses; exactly ONE entry
+         |task per manifest group, Avro core) and run the same
+         |`SkippingKernel` the driver index uses; exactly ONE entry
          |reaches the driver. `delete-plan` (r12) = the full composed
          |`IcebergTable.read` PLAN BUILD over the same table carrying one
          |equality-delete file — resolve, delete parquet read,
@@ -334,7 +333,7 @@ object IcebergScaleProbe extends Serializable {
          |manifest entry, so delete grouping needs only the DELETE files'
          |sequence numbers — the last driver-bound foreign-lake load
          |(delete-carrying snapshots) is closed. Execution-time pruning stays
-         |on executors: `IcebergEntryPruner` treats `__seq` as an exact
+         |on executors: `IcebergEntryFacts` treats `__seq` as an exact
          |per-file bound, so each interval branch lists only its own files
          |(IcebergSpec pins each data file listed exactly once across
          |branches).

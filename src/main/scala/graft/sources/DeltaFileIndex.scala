@@ -1,12 +1,11 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{And => CatalystAnd, AttributeReference, BasePredicate, BoundReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or => CatalystOr, PlanExpression, Predicate => CatalystPredicate}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructType}
-import org.json4s.{JBool, JDouble, JInt, JLong, JObject, JString}
+import org.apache.spark.sql.types.StructType
 
 /** [[FileIndex]] over one Delta snapshot — the batch face of
   * `format("graft-delta")`, mirroring [[GraftFileIndex]]'s shape: ONE
@@ -22,16 +21,14 @@ import org.json4s.{JBool, JDouble, JInt, JLong, JObject, JString}
   * Two modes:
   *
   *   - EAGER (a materialized [[DeltaLake.DeltaSnapshot]]): the full add
-  *     list is driver-resident; pruning is driver-side.
+  *     list is driver-resident; the [[SkippingKernel]] prunes it
+  *     driver-side.
   *   - LAZY (a [[DeltaLake.LazySnapshot]]): the checkpoint's adds stay
-  *     in the checkpoint parquet; [[listFiles]] translates the pushed
-  *     partition + data filters into the shared may-contain condition
-  *     ([[ManifestTable.skippingCond]]) and EXECUTORS evaluate it over
-  *     the checkpoint rows — the driver ever holds only survivors (plus
-  *     the small JSON tail), and their [[FileStatus]]es synthesize from
-  *     the log's `size`/`modificationTime`, zero per-file RPCs. The
-  *     driver-side exact check still re-runs on the survivors, so loose
-  *     translations cost I/O, never correctness. This is
+  *     in the checkpoint parquet; EXECUTORS run the same
+  *     [[SkippingKernel]] over the checkpoint rows — the driver ever
+  *     holds only survivors (plus the small JSON tail), and their
+  *     [[FileStatus]]es synthesize from the log's
+  *     `size`/`modificationTime`, zero per-file RPCs. This is
   *     [[ManifestTable.checkpointPrune]]'s shape ported to the foreign
   *     lake the reference's silver actually is.
   *
@@ -82,7 +79,7 @@ final class DeltaFileIndex private (spark: SparkSession, root: String,
   private def allEntries: Seq[DeltaLake.AddEntry] = source match {
     case Left(files) => files
     case Right(ls) =>
-      DeltaLake.pruneCheckpointAdds(spark, ls, None)
+      DeltaLake.pruneCheckpointAdds(spark, ls, Nil)
         .filterNot(e => ls.tailMasked(e.path)) ++ ls.tailLive
   }
 
@@ -126,241 +123,35 @@ final class DeltaFileIndex private (spark: SparkSession, root: String,
 
   private val tz = spark.conf.get("spark.sql.session.timeZone")
 
-  private def partitionRow(vals: Seq[Option[String]]): InternalRow =
-    InternalRow.fromSeq(vals.zip(partitionSchema.fields).map {
-      case (None, _) => null
-      case (Some(s), f) => Cast(Literal.create(s, StringType), f.dataType, Option(tz)).eval(null)
-    })
-
   private def tupleOf(e: DeltaLake.AddEntry): Seq[Option[String]] =
     partitionColumns.map(c => e.partitionValues.getOrElse(c, None))
 
-  // -------- Delta add-stats data skipping (PROTOCOL.md §Per-file Statistics)
-
-  /** Per-column (min, max, nullCount) parsed from an add's `stats` JSON.
-    * Values stay as JSON scalars; comparisons go through [[cmp]] under
-    * the column's declared type. */
-  private final case class ColStat(min: Option[Any], max: Option[Any], nulls: Option[Long])
-  private final case class FileStats(numRecords: Option[Long], cols: Map[String, ColStat])
-
-  private def statsOfEntry(e: DeltaLake.AddEntry): Option[FileStats] =
-    e.stats.flatMap { raw =>
-      scala.util.Try {
-        val j = org.json4s.jackson.JsonMethods.parse(raw)
-        def scalars(field: String): Map[String, Any] = (j \ field) match {
-          case JObject(fs) => fs.collect {
-            case (k, JInt(n)) => k -> n
-            case (k, JLong(n)) => k -> BigInt(n)
-            case (k, JDouble(d)) => k -> d
-            case (k, JString(s)) => k -> s
-            case (k, JBool(b)) => k -> b
-          }.toMap
-          case _ => Map.empty[String, Any]
-        }
-        val mins = scalars("minValues"); val maxs = scalars("maxValues")
-        val nulls = (j \ "nullCount") match {
-          case JObject(fs) => fs.collect { case (k, JInt(n)) => k -> n.toLong }.toMap
-          case _ => Map.empty[String, Long]
-        }
-        val numRecords = (j \ "numRecords") match {
-          case JInt(n) => Some(n.toLong); case _ => None
-        }
-        val cols = (mins.keySet ++ maxs.keySet ++ nulls.keySet).map { c =>
-          c -> ColStat(mins.get(c), maxs.get(c), nulls.get(c))
-        }.toMap
-        FileStats(numRecords, cols)
-      }.toOption // unparseable stats = no stats: sound, never wrong
-    }
-
-  /** Three-way compare of a stats JSON scalar against a filter literal
-    * under the column type; None = incomparable (no pruning). */
-  private def cmp(statVal: Any, litVal: Any, dt: DataType): Option[Int] = dt match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-         _: org.apache.spark.sql.types.DecimalType =>
-      def big(x: Any): Option[BigDecimal] = x match {
-        case b: BigInt => Some(BigDecimal(b))
-        case b: BigDecimal => Some(b)
-        case n: java.lang.Number => Some(BigDecimal(n.toString))
-        case _ => None
-      }
-      for { a <- big(statVal); b <- big(litVal) } yield a.compare(b)
-    case StringType => (statVal, litVal) match {
-      case (a: String, b: String) => Some(a.compareTo(b))
-      case _ => None
-    }
-    case BooleanType => (statVal, litVal) match {
-      case (a: Boolean, b: Boolean) => Some(a.compareTo(b))
-      case _ => None
-    }
-    case _ => None // dates/timestamps render engine-specifically; skip
-  }
-
-  /** Whether `file` MAY contain a row matching `e` — false only on
-    * proof from (min, max, nullCount); every unknown keeps the file. */
-  private def mayMatch(e: Expression, st: FileStats): Boolean = {
-    def attr(x: Expression): Option[(String, DataType)] = x match {
-      case a: AttributeReference => Some((a.name, a.dataType))
-      case _ => None
-    }
-    def litOf(x: Expression): Option[Any] = x match {
-      case l: Literal if l.value != null =>
-        Some(CatalystTypeConverters.convertToScala(l.value, l.dataType))
-      case _ => None
-    }
-    def colStat(name: String): ColStat = st.cols.getOrElse(name, ColStat(None, None, None))
-    // exists row: v between min..max (unknown bound = unconstrained)
-    def rangeMay(name: String, dt: DataType, lo: Option[Any], hi: Option[Any],
-        loOpen: Boolean, hiOpen: Boolean): Boolean = {
-      val s = colStat(name)
-      val aboveMin = (hi, s.min) match {
-        case (Some(h), Some(mn)) => cmp(mn, h, dt).forall(c => if (hiOpen) c < 0 else c <= 0)
-        case _ => true
-      }
-      val belowMax = (lo, s.max) match {
-        case (Some(l), Some(mx)) => cmp(mx, l, dt).forall(c => if (loOpen) c > 0 else c >= 0)
-        case _ => true
-      }
-      aboveMin && belowMax
-    }
-    e match {
-      case CatalystAnd(l, r) => mayMatch(l, st) && mayMatch(r, st)
-      case CatalystOr(l, r) => mayMatch(l, st) || mayMatch(r, st)
-      case EqualTo(a, v) => (attr(a), litOf(v), attr(v), litOf(a)) match {
-        case (Some((n, dt)), Some(value), _, _) =>
-          rangeMay(n, dt, Some(value), Some(value), loOpen = false, hiOpen = false)
-        case (_, _, Some((n, dt)), Some(value)) =>
-          rangeMay(n, dt, Some(value), Some(value), loOpen = false, hiOpen = false)
-        case _ => true
-      }
-      case LessThan(a, v) => (attr(a), litOf(v), attr(v), litOf(a)) match {
-        case (Some((n, dt)), Some(value), _, _) =>
-          rangeMay(n, dt, None, Some(value), loOpen = false, hiOpen = true)
-        case (_, _, Some((n, dt)), Some(value)) => // value < col
-          rangeMay(n, dt, Some(value), None, loOpen = true, hiOpen = false)
-        case _ => true
-      }
-      case LessThanOrEqual(a, v) => (attr(a), litOf(v), attr(v), litOf(a)) match {
-        case (Some((n, dt)), Some(value), _, _) =>
-          rangeMay(n, dt, None, Some(value), loOpen = false, hiOpen = false)
-        case (_, _, Some((n, dt)), Some(value)) =>
-          rangeMay(n, dt, Some(value), None, loOpen = false, hiOpen = false)
-        case _ => true
-      }
-      case GreaterThan(a, v) => (attr(a), litOf(v), attr(v), litOf(a)) match {
-        case (Some((n, dt)), Some(value), _, _) =>
-          rangeMay(n, dt, Some(value), None, loOpen = true, hiOpen = false)
-        case (_, _, Some((n, dt)), Some(value)) => // value > col
-          rangeMay(n, dt, None, Some(value), loOpen = false, hiOpen = true)
-        case _ => true
-      }
-      case GreaterThanOrEqual(a, v) => (attr(a), litOf(v), attr(v), litOf(a)) match {
-        case (Some((n, dt)), Some(value), _, _) =>
-          rangeMay(n, dt, Some(value), None, loOpen = false, hiOpen = false)
-        case (_, _, Some((n, dt)), Some(value)) =>
-          rangeMay(n, dt, None, Some(value), loOpen = false, hiOpen = false)
-        case _ => true
-      }
-      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        attr(a) match {
-          case Some((n, dt)) => vs.exists { case l: Literal =>
-            litOf(l).forall(v => rangeMay(n, dt, Some(v), Some(v), loOpen = false, hiOpen = false))
-          }
-          case None => true
-        }
-      case IsNull(a) => attr(a) match {
-        case Some((n, _)) => !colStat(n).nulls.contains(0L)
-        case None => true
-      }
-      case IsNotNull(a) => attr(a) match {
-        case Some((n, _)) =>
-          !(colStat(n).nulls.isDefined && st.numRecords.isDefined &&
-            colStat(n).nulls == st.numRecords)
-        case None => true
-      }
-      case _ => true
-    }
-  }
-
-  // -------- pushed-filter → PredNode translation (the lazy prune's input)
-
-  /** A pushed Catalyst filter as the [[ManifestTable.skippingCond]]
-    * predicate tree. Total: unsupported shapes become an opaque node the
-    * translator maps to "no pruning on this subtree" — soundness is the
-    * evaluator's, not this function's. */
-  private def predNodeOf(e: Expression): GraftSqlBridge.PredNode = {
-    import GraftSqlBridge.{PredAttr, PredConst, PredFn}
-    e match {
-      case CatalystAnd(l, r) => PredFn("and", Seq(predNodeOf(l), predNodeOf(r)))
-      case CatalystOr(l, r) => PredFn("or", Seq(predNodeOf(l), predNodeOf(r)))
-      case EqualTo(l, r) => PredFn("=", Seq(predNodeOf(l), predNodeOf(r)))
-      case LessThan(l, r) => PredFn("<", Seq(predNodeOf(l), predNodeOf(r)))
-      case LessThanOrEqual(l, r) => PredFn("<=", Seq(predNodeOf(l), predNodeOf(r)))
-      case GreaterThan(l, r) => PredFn(">", Seq(predNodeOf(l), predNodeOf(r)))
-      case GreaterThanOrEqual(l, r) => PredFn(">=", Seq(predNodeOf(l), predNodeOf(r)))
-      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        PredFn("in", predNodeOf(a) +: vs.map(predNodeOf))
-      case IsNull(a) => PredFn("isnull", Seq(predNodeOf(a)))
-      case IsNotNull(a) => PredFn("isnotnull", Seq(predNodeOf(a)))
-      case a: AttributeReference => PredAttr(a.name)
-      case l: Literal if l.value != null => PredConst(GraftSqlBridge.column(l))
-      case _ => PredFn("opaque", Nil)
-    }
-  }
-
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    // candidate list: eager's driver-resident files, or the lazy
-    // distributed prune's survivors + the JSON tail (the driver-side
-    // exact passes below re-check both, so the coarse prune only ever
-    // SHRINKS the work)
+    // the skipping kernel over add stats and partition values: eager
+    // entries on the driver, lazy checkpoint adds on executors (the JSON
+    // tail on the driver); the complete partition-tuple evaluation then
+    // catches partition shapes the kernel cannot read
+    val filters = partitionFilters ++ dataFilters
+    val kernel = SkippingKernel(filters)
+    val facts = new DeltaLake.AddFacts(tableSchema, partitionColumns, tz)
+    def keep(e: DeltaLake.AddEntry): Boolean = kernel.mayMatch(facts(e))
     val candidates: Seq[DeltaLake.AddEntry] = source match {
-      case Left(files) => files
+      case Left(files) => files.filter(keep)
       case Right(ls) =>
-        val usable = (partitionFilters ++ dataFilters).filter { f =>
-          f.deterministic && f.find(_.isInstanceOf[PlanExpression[_]]).isEmpty
-        }
-        val node = usable.map(predNodeOf)
-          .reduceOption((a, b) => GraftSqlBridge.PredFn("and", Seq(a, b)))
-        DeltaLake.pruneCheckpointAdds(spark, ls, node)
-          .filterNot(e => ls.tailMasked(e.path)) ++ ls.tailLive
+        DeltaLake.pruneCheckpointAdds(spark, ls, filters)
+          .filterNot(e => ls.tailMasked(e.path)) ++ ls.tailLive.filter(keep)
     }
-    val afterPart =
-      if (partitionColumns.isEmpty || partitionFilters.isEmpty) candidates
-      else {
-        val usable = partitionFilters.filter { f =>
-          f.deterministic &&
-            f.find(_.isInstanceOf[PlanExpression[_]]).isEmpty &&
-            f.references.forall(a => partitionSchema.fieldNames.contains(a.name))
-        }
-        if (usable.isEmpty) candidates
-        else {
-          val bound = usable.reduce[Expression](CatalystAnd(_, _)).transform {
-            case a: AttributeReference =>
-              BoundReference(partitionSchema.fieldIndex(a.name), a.dataType, a.nullable)
-          }
-          val pred: BasePredicate = CatalystPredicate.createInterpreted(bound)
-          pred.initialize(0)
-          val verdict = scala.collection.mutable.Map.empty[Seq[Option[String]], Boolean]
-          candidates.filter(e =>
-            verdict.getOrElseUpdate(tupleOf(e), pred.eval(partitionRow(tupleOf(e)))))
-        }
-      }
-    // add-stats skipping over the pushed data filters: a file whose
-    // (min, max, nullCount) prove no row can match never opens
-    val survivors = dataFilters.filter(_.deterministic) match {
-      case Nil => afterPart
-      case fs => afterPart.filter { e =>
-        statsOfEntry(e) match {
-          case Some(st) => fs.forall(f => mayMatch(f, st))
-          case None => true // stats-less adds always scan
-        }
-      }
+    val survivors = SkippingKernel.partitionConjuncts(partitionFilters, partitionColumns) match {
+      case Some(p) => SkippingKernel.partitionMatches(candidates, tupleOf, partitionSchema, p, tz)
+      case None => candidates
     }
     val statuses = statusFor(survivors)
     if (partitionColumns.isEmpty)
       Seq(PartitionDirectory(InternalRow.empty, survivors.map(e => statuses(e.path)).toArray))
     else survivors.groupBy(tupleOf).toSeq.map { case (vals, group) =>
-      PartitionDirectory(partitionRow(vals), group.map(e => statuses(e.path)).toArray)
+      PartitionDirectory(SkippingKernel.partitionRow(vals, partitionSchema, tz),
+        group.map(e => statuses(e.path)).toArray)
     }
   }
 }

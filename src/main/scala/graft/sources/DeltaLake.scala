@@ -2,9 +2,12 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, from_json, lit, when}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType, StructField, StructType}
-import org.json4s.{JArray, JBool, JInt, JNothing, JNull, JObject, JString, JValue}
+import org.apache.spark.unsafe.types.UTF8String
+import org.json4s.{JArray, JBool, JDecimal, JDouble, JInt, JNothing, JNull, JObject, JString, JValue}
 
 /** Read-only reader for Delta Lake tables — the storage format the
   * reference's silver layer actually uses
@@ -671,14 +674,10 @@ object DeltaLake {
     val cores = math.max(1, spark.sparkContext.defaultParallelism)
     val target = math.max(1L << 20, math.min(128L << 20, totalBytes / cores))
     // newSession resets SQL confs to the SparkConf defaults, dropping
-    // runtime-set confs — spark.sql.session.timeZone above all. Delta
-    // partition values and stats serialize timestamps zone-less; the
-    // prune try_casts them under THIS session's zone while the pushed
-    // literals and the driver-side exact re-check of survivors evaluate
-    // under the user session's zone, so a zone mismatch would make the
-    // prune DROP files the re-check never sees — silent missing rows.
-    // Copy every runtime conf across before overriding the split sizes
-    // (static confs reject the set; they are shared via the context).
+    // runtime-set confs; copy every runtime conf across before
+    // overriding the split sizes, so the prune scan reads the checkpoint
+    // as the user session would (static confs reject the set; they are
+    // shared via the context).
     val s2 = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) =>
       try s2.conf.set(k, v) catch { case _: Exception => () }
@@ -693,110 +692,110 @@ object DeltaLake {
   private def checkpointHasDv(spark: SparkSession, ls: LazySnapshot): Boolean =
     !addRowsFrame(spark, ls).filter(col("dv_storage").isNotNull).limit(1).isEmpty
 
-  /** Per-add stat columns in [[ManifestTable.skippingCond]]'s shape
-    * (`mn_<c>`/`mx_<c>` strings in graft's stat encoding, `nu_<c>`/
-    * `rw_<c>` longs), derived ON EXECUTORS from each add row:
+  /** Delta's [[SkippingKernel]] adapter: one add as [[ColBounds]].
     *
-    *   - data columns parse out of the `stats` JSON (`from_json` into
-    *     per-field strings), then re-encode through a `try_cast` to the
-    *     declared type — Delta renders timestamps as ISO-8601 where
-    *     graft's evaluator expects epoch micros, and the try_cast makes
-    *     any malformed stat decode to null = "no stats, keep the file";
-    *   - partition columns synthesize min = max = the add's partition
-    *     value (every row of the file holds exactly that value), with
-    *     nullCount = numRecords when the value is null — so the SAME
-    *     evaluator prunes on partition predicates with no extra code.
+    *   - data columns come from the `stats` JSON (PROTOCOL.md §Per-file
+    *     Statistics), each scalar cast from its text to the declared
+    *     type under the session zone; numbers parse as exact decimals, so
+    *     no bound loses digits on the way. Writers render timestamps at
+    *     millisecond precision, so a timestamp max is widened by 1 ms;
+    *   - partition columns are exact: min = max = the add's partition
+    *     value, and a null value makes every row null.
     *
-    * Sound end to end: a translation/parse failure always degrades to
-    * "may match", and the driver re-checks survivors exactly. */
-  private def eligibleStatFields(ls: LazySnapshot): (Seq[StructField], Seq[StructField]) =
-    ls.schema.fields.filter(f => ManifestTable.statsEligible(f.dataType)).toSeq
-      .partition(f => ls.partitionColumns.contains(f.name))
+    * Unparseable stats or values are unknown: the file may match. */
+  private[graft] final class AddFacts(schema: StructType, partitionColumns: Seq[String],
+      tz: String) extends Serializable {
+    @transient private lazy val casts: Map[String, Expression] = schema.fields.map { f =>
+      f.name -> Cast(BoundReference(0, StringType, true), f.dataType, Some(tz))
+    }.toMap
 
-  /** The `from_json` target for a Delta add's `stats` string: min/max as
-    * raw strings (typed later through a `try_cast`), counts as longs. */
-  private def deltaStatsSchema(ls: LazySnapshot): StructType = {
-    val (_, dataStat) = eligibleStatFields(ls)
-    StructType(Seq(
-      StructField("numRecords", LongType),
-      StructField("minValues",
-        StructType(dataStat.map(f => StructField(f.name, StringType)))),
-      StructField("maxValues",
-        StructType(dataStat.map(f => StructField(f.name, StringType)))),
-      StructField("nullCount",
-        StructType(dataStat.map(f => StructField(f.name, LongType))))))
+    private def decode(c: String, s: String): Option[Any] =
+      try casts.get(c).flatMap(cast => Option(cast.eval(InternalRow(UTF8String.fromString(s)))))
+      catch { case scala.util.control.NonFatal(_) => None }
+
+    private def widenMax(c: String, v: Any): Option[Any] = schema(c).dataType match {
+      case org.apache.spark.sql.types.TimestampType | org.apache.spark.sql.types.TimestampNTZType =>
+        val micros = v.asInstanceOf[Long]
+        if (micros > Long.MaxValue - 1000L) None else Some(micros + 1000L)
+      case _ => Some(v)
+    }
+
+    def apply(e: AddEntry): FileFacts = new FileFacts {
+      private lazy val (rows, mins, maxs, nulls) = parseStats(e.stats)
+      def bounds(c: String): ColBounds =
+        if (partitionColumns.contains(c)) e.partitionValues.getOrElse(c, None) match {
+          case None => ColBounds(None, None, rows, rows)
+          case Some(v) =>
+            val x = decode(c, v)
+            ColBounds(x, x, Some(0L), rows)
+        }
+        else ColBounds(mins.get(c).flatMap(decode(c, _)),
+          maxs.get(c).flatMap(decode(c, _)).flatMap(widenMax(c, _)), nulls.get(c), rows)
+    }
+
+    private def parseStats(raw: Option[String]): (Option[Long], Map[String, String],
+        Map[String, String], Map[String, Long]) = {
+      val none = (None, Map.empty[String, String], Map.empty[String, String],
+        Map.empty[String, Long])
+      raw.flatMap { r =>
+        scala.util.Try {
+          val j = org.json4s.jackson.JsonMethods.parse(r, useBigDecimalForDouble = true)
+          def scalars(field: String): Map[String, String] = (j \ field) match {
+            case JObject(fs) => fs.collect {
+              case (k, JString(v)) => k -> v
+              case (k, JInt(n)) => k -> n.toString
+              case (k, JDecimal(d)) => k -> d.bigDecimal.toPlainString
+              case (k, JDouble(d)) => k -> d.toString
+              case (k, JBool(b)) => k -> b.toString
+            }.toMap
+            case _ => Map.empty
+          }
+          val nulls = (j \ "nullCount") match {
+            case JObject(fs) => fs.collect { case (k, JInt(n)) => k -> n.toLong }.toMap
+            case _ => Map.empty[String, Long]
+          }
+          val rows = (j \ "numRecords") match { case JInt(n) => Some(n.toLong); case _ => None }
+          (rows, scalars("minValues"), scalars("maxValues"), nulls)
+        }.toOption
+      }.getOrElse(none)
+    }
   }
 
-  private def deltaStatColumns(ls: LazySnapshot, parsed: Column): Seq[Column] = {
-    val (partStat, dataStat) = eligibleStatFields(ls)
-    val rw = parsed.getField("numRecords")
-    val dataCols = dataStat.flatMap { f =>
-      def enc(side: String): Column = ManifestTable.statEncode(
-        parsed.getField(side).getField(f.name).try_cast(f.dataType), f.dataType)
-      Seq(enc("minValues").as(s"mn_${f.name}"), enc("maxValues").as(s"mx_${f.name}"),
-        parsed.getField("nullCount").getField(f.name).as(s"nu_${f.name}"),
-        rw.as(s"rw_${f.name}"))
-    }
-    val partCols = partStat.flatMap { f =>
-      val pvc = col("pv").getItem(f.name)
-      val enc = ManifestTable.statEncode(pvc.try_cast(f.dataType), f.dataType)
-      Seq(enc.as(s"mn_${f.name}"), enc.as(s"mx_${f.name}"),
-        when(pvc.isNull, rw).otherwise(lit(0L)).as(s"nu_${f.name}"),
-        rw.as(s"rw_${f.name}"))
-    }
-    dataCols ++ partCols
+  /** The add row [[addRowsFrame]] carries, as an [[AddEntry]]. */
+  private def addEntryOf(r: Row): AddEntry = {
+    val pv =
+      if (r.isNullAt(1)) Map.empty[String, Option[String]]
+      else r.getMap[String, String](1).toMap.map { case (k, v) => k -> Option(v) }
+    val dv =
+      if (r.isNullAt(2)) None
+      else Some(DeletionVectors.Descriptor(r.getString(2), r.getString(3),
+        if (r.isNullAt(4)) None else Some(r.getLong(4)), r.getLong(5), r.getLong(6)))
+    AddEntry(decodePath(r.getString(0)), pv, dv,
+      if (r.isNullAt(7)) None else Some(r.getString(7)),
+      if (r.isNullAt(8)) None else Some(r.getLong(8)),
+      if (r.isNullAt(9)) None else Some(r.getLong(9)))
   }
 
   /** DISTRIBUTED prune of a lazy snapshot's checkpoint adds — the
     * foreign-lake port of [[ManifestTable.checkpointPrune]]: executors
-    * evaluate the may-contain condition over the checkpoint's own
-    * columnar add rows; the driver collects ONLY survivors (with their
-    * stats JSON, so the exact driver-side re-check still tightens).
-    * With no translatable predicate the full set comes back, but
-    * WITHOUT the stats payload — the dominant per-add weight of an
+    * run the [[SkippingKernel]] for the resolved `filters` over
+    * [[AddFacts]] of the checkpoint's own add rows; the driver collects
+    * ONLY survivors. With no readable filter the full set comes back,
+    * but WITHOUT the stats payload — the dominant per-add weight of an
     * eager load. Callers overlay `tailMasked`/`tailLive` on the
     * result. */
   private[graft] def pruneCheckpointAdds(spark: SparkSession, ls: LazySnapshot,
-      pred: Option[org.apache.spark.sql.GraftSqlBridge.PredNode]): Seq[AddEntry] = {
+      filters: Seq[Expression]): Seq[AddEntry] = {
     val frame = addRowsFrame(scanSession(spark, ls), ls)
-    val cond = pred.flatMap(n => ManifestTable.skippingCond(n, ls.schema))
-    val outCols = Seq("rel", "pv", "dv_storage", "dv_payload", "dv_offset",
-      "dv_size", "dv_card", "stats_raw", "sz", "mt")
-    val selected = cond match {
-      case None =>
-        frame.select((outCols.filterNot(_ == "stats_raw").map(col) :+
-          lit(null).cast(StringType).as("stats_raw")): _*)
-          .select(outCols.map(col): _*)
-      case Some(c) =>
-        // Parse each add's stats JSON EXACTLY ONCE per row: the parse is
-        // aliased in its own projection guarded by a nondeterministic
-        // barrier column, so neither CollapseProject (the parsed struct
-        // is non-cheap and multiply referenced) nor predicate pushdown
-        // (blocked by the barrier) can inline one from_json per stat
-        // column — an 8× parse tax at a million adds without it.
-        val parsedFrame = frame.select((outCols.map(col) ++ Seq(
-          from_json(col("stats_raw"), deltaStatsSchema(ls)).as("__stats"),
-          org.apache.spark.sql.functions.rand().as("__nopush"))): _*)
-        // skippingCond returns Some only when a stats-eligible field
-        // exists, and deltaStatColumns emits columns for exactly that
-        // set — so the stat columns are never empty here
-        val statCols = deltaStatColumns(ls, col("__stats"))
-        parsedFrame.select((outCols.map(col) ++ statCols): _*)
-          .filter(c).select(outCols.map(col): _*)
-    }
-    selected.collect().toSeq.map { r =>
-      val pv =
-        if (r.isNullAt(1)) Map.empty[String, Option[String]]
-        else r.getMap[String, String](1).toMap.map { case (k, v) => k -> Option(v) }
-      val dv =
-        if (r.isNullAt(2)) None
-        else Some(DeletionVectors.Descriptor(r.getString(2), r.getString(3),
-          if (r.isNullAt(4)) None else Some(r.getLong(4)), r.getLong(5), r.getLong(6)))
-      AddEntry(decodePath(r.getString(0)), pv, dv,
-        if (r.isNullAt(7)) None else Some(r.getString(7)),
-        if (r.isNullAt(8)) None else Some(r.getLong(8)),
-        if (r.isNullAt(9)) None else Some(r.getLong(9)))
-    }
+    val kernel = SkippingKernel(filters)
+    val selected =
+      if (!kernel.canPrune) frame.withColumn("stats_raw", lit(null).cast(StringType))
+      else {
+        val facts = new AddFacts(ls.schema, ls.partitionColumns,
+          spark.sessionState.conf.sessionLocalTimeZone)
+        frame.filter((r: Row) => kernel.mayMatch(facts(addEntryOf(r))))
+      }
+    selected.collect().toSeq.map(addEntryOf)
   }
 
   /** Total add bytes of a lazy snapshot — one distributed SUM over the
@@ -1162,7 +1161,7 @@ object DeltaLake {
       case BooleanType => Some(v)
       case StringType | DateType => Some(jstr(v))
       case FloatType | DoubleType =>
-        // FP bounds ride as JSON numbers (r19 — both the manifest's
+        // FP bounds ride as JSON numbers (both the manifest's
         // cast-to-string and AdoptStats' toString round-trip exactly);
         // NaN/Infinity are not JSON and would corrupt the stats line —
         // refuse them, the file just never prunes
@@ -1330,7 +1329,7 @@ object DeltaLake {
     Some(v)
   }
 
-  /** Delta's `CONVERT TO DELTA` (r18, the add_files sibling on the
+  /** Delta's `CONVERT TO DELTA` (the add_files sibling on the
     * Delta side): adopt a plain parquet DIRECTORY in place — publish
     * `_delta_log/…0.json` with one `add` per existing parquet file,
     * metadata-only, not a byte rewritten. `partitionCols` names the
@@ -1343,13 +1342,13 @@ object DeltaLake {
     * fs-listing, O(files) metadata like every log replay here.
     *
     * File paths relativize against the QUALIFIED root through
-    * `URI.relativize` (r19, review fix): the old prefix-strip silently
-    * published ABSOLUTE paths as relative when `dir` was spelled
-    * relative or differently-qualified than the listing — corrupting
-    * every `c=v` segment of the absolute path into a phantom partition
+    * `URI.relativize`: a prefix-strip would silently publish ABSOLUTE
+    * paths as relative when `dir` is spelled relative or
+    * differently-qualified than the listing — corrupting every `c=v`
+    * segment of the absolute path into a phantom partition
     * value; a file that does not relativize now refuses loud.
     *
-    * `collectStats` (r19, Delta's own convert default behavior,
+    * `collectStats` (Delta's own convert default behavior,
     * surfaced as a flag): a DISTRIBUTED footer pass (one task per
     * file — the same shape `add_files` uses, [[AdoptStats]]) collects
     * numRecords + per-column min/max/null-counts into each `add`'s
@@ -1372,7 +1371,7 @@ object DeltaLake {
       s"convertToDelta: partition columns ${partitionCols.mkString(",")} must appear " +
         s"in the inferred schema ${schema.fieldNames.mkString(",")}")
     // every parquet file under the root (the shared adoption walk —
-    // hidden dirs AND files skip, review r18: a stray `.part-…-retry`
+    // hidden dirs AND files skip: a stray `.part-…-retry`
     // from an aborted committer is invisible to spark.read.parquet)
     val files = AdoptStats.listDataFiles(fs, qRoot, Seq(".parquet"))
     require(files.nonEmpty, s"convertToDelta: no parquet files under $base")
@@ -1455,10 +1454,9 @@ object DeltaLake {
     * by the classic and V2 writers so the two layouts can never
     * disagree on content. `adds` is an ITERATOR FACTORY, not a
     * materialized list: each add streams straight from the snapshot's
-    * entry into the parquet writer's current row group (the r12
-    * verdict's finding — the old shape built a `Seq[Row]` of every add
-    * and embedded it in a Spark LocalRelation, O(files) driver heap
-    * twice over on a 10M-file table). */
+    * entry into the parquet writer's current row group (a `Seq[Row]`
+    * of every add embedded in a Spark LocalRelation would hold O(files)
+    * driver heap twice over on a 10M-file table). */
   private final case class CheckpointAdd(path: String,
       partitionValues: Map[String, Option[String]], size: Long,
       modificationTime: Long, stats: Option[String],
@@ -1479,7 +1477,7 @@ object DeltaLake {
     * out of the previous checkpoint's own parquet — one row group at a
     * time, driver-direct — merged with the driver-resident JSON tail,
     * so writing a 10M-file checkpoint never holds 10M AddEntry objects
-    * (the r13 verdict's one remaining measured O(N)-driver path).
+    * (otherwise an O(N)-driver path).
     * Unlike [[lazySnapshot]] (whose consumers compose READ plans), the
     * payload tolerates deletion vectors and column mapping — add rows
     * copy through verbatim, DV descriptors included — as long as the
@@ -1526,10 +1524,9 @@ object DeltaLake {
     // the feature form, since dropping the feature would be the worse
     // corruption; the promotion then enumerates the legacy-implied
     // reader AND writer features exactly as PROTOCOL.md's upgrade rule
-    // demands (the r13 ADVICE finding: the old shape emitted
-    // writerFeatures=[columnMapping] alone, dropping appendOnly/
-    // invariants/checkConstraints/changeDataFeed/generatedColumns that
-    // minWriter 5 had granted).
+    // demands (emitting writerFeatures=[columnMapping] alone would drop
+    // appendOnly/invariants/checkConstraints/changeDataFeed/
+    // generatedColumns that minWriter 5 had granted).
     val hasDvs = snap.files.exists(_.dv.isDefined) ||
       snap.readerFeatures.contains("deletionVectors")
     val present = (if (hasDvs) Set("deletionVectors") else Set.empty[String]) ++
@@ -1793,8 +1790,8 @@ object DeltaLake {
     // which tolerates an upper bound — its write loop is
     // hasNext-guarded): with no tail mask, sum the ROW COUNTS off each
     // checkpoint file's parquet footer instead of streaming all 10M
-    // path values a second time (r14 ADVICE: the path-column pass
-    // doubled checkpoint-read I/O per writeCheckpointV2). Footer
+    // path values a second time (a path-column pass would double
+    // checkpoint-read I/O per writeCheckpointV2). Footer
     // counts include the few non-add action rows (protocol/metaData/
     // remove/txn), so this bounds the add count from ABOVE — fewer,
     // larger chunks, never an empty sidecar. A masked tail still pays

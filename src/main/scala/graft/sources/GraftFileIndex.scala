@@ -1,12 +1,11 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{And => CatalystAnd, AttributeReference, BasePredicate, BinaryComparison, BoundReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Or => CatalystOr, PlanExpression, Predicate => CatalystPredicate}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** [[org.apache.spark.sql.execution.datasources.FileIndex]] over one
   * committed [[ManifestTable]] version — the same integration shape Delta
@@ -58,17 +57,14 @@ final class GraftFileIndex(spark: SparkSession, root: String,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val afterPart = prunePartitions(rels, partitionFilters)
-    val survivors = dataFilters.flatMap(toPruningColumn).reduceOption(_ && _) match {
-      case Some(p) => ManifestTable.pruneByStats(spark, afterPart, p, state.schema, state.stats,
-        root, state.properties)
-      case None => afterPart
-    }
+    val survivors = ManifestTable.pruneFiles(spark, root, rels, state.schema,
+      state.partitionBy, state.stats, state.properties, partitionFilters ++ dataFilters)
     if (state.partitionBy.isEmpty)
       Seq(PartitionDirectory(InternalRow.empty, survivors.map(statusOf).toArray))
     else survivors.groupBy(r => ManifestTable.partitionValuesOf(r, state.partitionBy))
       .toSeq.map { case (vals, group) =>
-        PartitionDirectory(partitionRow(vals), group.map(statusOf).toArray)
+        PartitionDirectory(SkippingKernel.partitionRow(vals, partitionSchema, tz),
+          group.map(statusOf).toArray)
       }
   }
 
@@ -98,93 +94,5 @@ final class GraftFileIndex(spark: SparkSession, root: String,
     case i => rel.substring(0, i)
   }
 
-  /** Manifest-layer partition pruning, evaluated COMPLETELY: the resolved
-    * partition filters are rebound onto the partition tuple and run
-    * through Catalyst's interpreted predicate, so every deterministic
-    * filter shape prunes — not just the comparison shapes stats skipping
-    * knows. Filters carrying subqueries (dynamic partition pruning's
-    * placeholder) or non-partition references are skipped: sound, never
-    * wrong. */
-  private def prunePartitions(files: Seq[String], filters: Seq[Expression]): Seq[String] = {
-    if (state.partitionBy.isEmpty || filters.isEmpty || files.isEmpty) return files
-    val usable = filters.filter { f =>
-      f.deterministic &&
-        f.find(_.isInstanceOf[PlanExpression[_]]).isEmpty &&
-        f.references.forall(a => partitionSchema.fieldNames.contains(a.name))
-    }
-    if (usable.isEmpty) return files
-    val bound = usable.reduce[Expression](CatalystAnd(_, _)).transform {
-      case a: AttributeReference =>
-        BoundReference(partitionSchema.fieldIndex(a.name), a.dataType, a.nullable)
-    }
-    val pred: BasePredicate = CatalystPredicate.createInterpreted(bound)
-    pred.initialize(0)
-    val verdict = scala.collection.mutable.Map.empty[Seq[Option[String]], Boolean]
-    files.filter { rel =>
-      val vals = ManifestTable.partitionValuesOf(rel, state.partitionBy)
-      verdict.getOrElseUpdate(vals, pred.eval(partitionRow(vals)))
-    }
-  }
-
   private val tz = spark.conf.get("spark.sql.session.timeZone")
-
-  /** Partition values for one tuple, cast from their path strings to the
-    * declared column types (the typed row `PartitionDirectory` hands the
-    * scan, and the row partition filters evaluate against). */
-  private def partitionRow(vals: Seq[Option[String]]): InternalRow =
-    InternalRow.fromSeq(vals.zip(partitionSchema.fields).map {
-      case (None, _) => null
-      case (Some(s), f) => Cast(Literal.create(s, StringType), f.dataType, Option(tz)).eval(null)
-    })
-
-  /** Best-effort rebuild of a pushed data filter as an UNANALYZED Column,
-    * so [[ManifestTable.pruneByStats]] — the one may-contain evaluator
-    * shared with DELETE/MERGE/UPDATE/readWhere — can translate it.
-    * Unsupported shapes drop to None (prune nothing); AND keeps whichever
-    * side translates, since a weaker predicate only keeps more files. */
-  private def toPruningColumn(e: Expression): Option[Column] = {
-    def scalaLit(l: Literal): Column =
-      lit(CatalystTypeConverters.convertToScala(l.value, l.dataType))
-    def attr(x: Expression): Option[String] = x match {
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    e match {
-      case CatalystAnd(l, r) => (toPruningColumn(l), toPruningColumn(r)) match {
-        case (Some(a), Some(b)) => Some(a && b)
-        case (a, b) => a.orElse(b)
-      }
-      case CatalystOr(l, r) =>
-        for { a <- toPruningColumn(l); b <- toPruningColumn(r) } yield a || b
-      case c: BinaryComparison =>
-        // normalize to `col op const`, mirroring the operator when the
-        // attribute is on the right
-        val normalized = (attr(c.left), c.right, attr(c.right), c.left) match {
-          case (Some(n), l: Literal, _, _) => Some((col(n), scalaLit(l), false))
-          case (_, _, Some(n), l: Literal) => Some((col(n), scalaLit(l), true))
-          case _ => None
-        }
-        normalized.flatMap { case (cc, vc, mirrored) =>
-          c match {
-            case _: EqualTo => Some(cc === vc)
-            case _: LessThan => Some(if (mirrored) cc > vc else cc < vc)
-            case _: LessThanOrEqual => Some(if (mirrored) cc >= vc else cc <= vc)
-            case _: GreaterThan => Some(if (mirrored) cc < vc else cc > vc)
-            case _: GreaterThanOrEqual => Some(if (mirrored) cc <= vc else cc >= vc)
-            case _ => None
-          }
-        }
-      case In(a, vs) if attr(a).isDefined && vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        Some(col(attr(a).get).isin(vs.map { case l: Literal =>
-          CatalystTypeConverters.convertToScala(l.value, l.dataType)
-        }: _*))
-      // null-count skipping: the planner pushes IsNotNull for nearly
-      // every filter, and IS NULL queries are their own shape
-      case org.apache.spark.sql.catalyst.expressions.IsNull(a) =>
-        attr(a).map(col(_).isNull)
-      case org.apache.spark.sql.catalyst.expressions.IsNotNull(a) =>
-        attr(a).map(col(_).isNotNull)
-      case _ => None
-    }
-  }
 }

@@ -3,16 +3,16 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, PlanExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** [[FileIndex]] over one Iceberg snapshot — ONE stock parquet scan
   * whose files are pruned at the index from the MANIFEST's per-file
-  * facts, before any file opens (the shared evaluator is
-  * [[IcebergEntryPruner]]: identity partition values, Appendix-D
-  * bounds, null/value counts, bucket/truncate transform values).
+  * facts, before any file opens (the [[SkippingKernel]] over
+  * [[IcebergEntryFacts]]: identity partition values, Appendix-D
+  * bounds, null counts, bucket/truncate/temporal transform values).
   *
   * The partition schema is EMPTY on purpose: Iceberg data files carry
   * every column (identity-partitioned ones included), so all columns
@@ -25,9 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - EAGER (a materialized [[IcebergTable.IcebergSnapshot]]): one
   *     in-memory entry per live file, driver-side pruning — the shape
   *     for delete-carrying snapshots and bounded tables;
-  *   - LAZY (a [[IcebergTable.LazyIcebergSnapshot]], r11): the
+  *   - LAZY (a [[IcebergTable.LazyIcebergSnapshot]]): the
   *     manifests stay UNREAD until [[listFiles]], which ships the
-  *     pushed filters + the same pruner to EXECUTORS — each task
+  *     pushed filters + the same kernel to EXECUTORS — each task
   *     parses its manifests and evaluates may-contain per entry, the
   *     driver collects only survivors, and their [[FileStatus]]es
   *     synthesize from the manifest-declared `file_size_in_bytes`
@@ -61,7 +61,7 @@ final class IcebergFileIndex private (spark: SparkSession, root: String,
   /** Declared column order, for [[graft.plans.DeclaredOrderRule]]. */
   def declaredFieldOrder: Seq[String] = tableSchema.fieldNames.toIndexedSeq
 
-  private val pruner = new IcebergEntryPruner(tableSchema, partitionFields)
+  private val facts = new IcebergEntryFacts(tableSchema, partitionFields)
 
   override def rootPaths: Seq[Path] = Seq(new Path(root.stripSuffix("/")))
   override def refresh(): Unit = ()
@@ -114,7 +114,7 @@ final class IcebergFileIndex private (spark: SparkSession, root: String,
     * internal form (Avro already hands dates as epoch days and
     * timestamps as micros; only strings need wrapping). */
   private def internalPartValue(e: DataFileEntry, name: String): Any =
-    pruner.identityFieldOf.get(name).flatMap(e.partition.get).map {
+    facts.identityFieldOf.get(name).flatMap(e.partition.get).map {
       case s: String => UTF8String.fromString(s)
       case o => o
     }.orNull
@@ -129,18 +129,16 @@ final class IcebergFileIndex private (spark: SparkSession, root: String,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    // partition-value pruning rides the same bounds evaluator: an
-    // identity value IS an exact (min = max) bound, so both filter
-    // lists prune files before any opens
-    val filters = (partitionFilters ++ dataFilters).filter(f =>
-      f.deterministic && f.find(_.isInstanceOf[PlanExpression[_]]).isEmpty)
+    // partition values ride the same kernel: an identity value IS an
+    // exact (min = max) bound, so both filter lists prune files before
+    // any opens
+    val filters = partitionFilters ++ dataFilters
     val survivors = source match {
       case Left(files) =>
-        if (filters.isEmpty) files
-        else files.filter(e => filters.forall(f => pruner.mayMatch(f, e)))
+        val kernel = SkippingKernel(filters)
+        files.filter(e => kernel.mayMatch(facts(e)))
       case Right(ls) =>
-        // executors parse + prune; the evaluator is the SAME instance
-        // class, so no driver re-check is needed
+        // executors parse + prune with the same kernel and adapter
         IcebergTable.pruneDataManifests(spark, ls, filters, withStats = true)
     }
     val statuses = statusFor(survivors)

@@ -1,25 +1,32 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.expressions.{And => CatalystAnd, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNull, IsNotNull, LessThan, LessThanOrEqual, Literal, Or => CatalystOr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-entry may-contain evaluator over a [[IcebergTable.DataFileEntry]]
-  * — SERIALIZABLE, so the same evaluator that prunes driver-side in
-  * [[IcebergFileIndex]] runs ON EXECUTORS for the distributed manifest
-  * prune ([[IcebergTable.pruneDataManifests]]): one implementation, two
-  * execution sites, no drift. Facts consulted, all manifest-declared:
+/** Iceberg's [[SkippingKernel]] adapter: one [[IcebergTable.DataFileEntry]]
+  * as [[FileFacts]] — SERIALIZABLE, so the kernel that prunes
+  * driver-side in [[IcebergFileIndex]] runs ON EXECUTORS for the
+  * distributed manifest prune ([[IcebergTable.pruneDataManifests]]).
+  * Facts consulted, all manifest-declared:
   *
-  *   - identity-transform partition values (exact: min = max);
+  *   - identity-transform partition values and the synthetic `__seq`
+  *     (exact: min = max);
   *   - `lower_bounds`/`upper_bounds` (Appendix D, decoded for the
   *     orderable primitives; uuid-sourced columns never prune — their
-  *     bounds are raw UUID bytes);
-  *   - `null_value_counts`/`value_counts` for IS [NOT] NULL;
-  *   - `bucket[N]`/`truncate[W]` declared transform values for
-  *     equality/IN (the prune min/max cannot provide on hashed keys).
+  *     bounds are raw UUID bytes). The spec keeps NaN out of bounds
+  *     while Spark sorts NaN greatest (`x > c` matches NaN rows), so a
+  *     float/double upper bound counts only when `nan_value_counts`
+  *     says the file holds no NaN;
+  *   - `null_value_counts` with `record_count`;
+  *   - `year`/`month`/`day`/`hour` partition ordinals, as the value
+  *     range each declares ([[IcebergTransforms.temporalRange]]) — which
+  *     also serves tables whose manifests carry no bounds on the source
+  *     column;
+  *   - `bucket[N]`/`truncate[W]` partition values as equality facts
+  *     (the prune min/max cannot provide on hashed keys).
   *
-  * Sound-only: any bound we cannot decode or compare keeps the file. */
-final class IcebergEntryPruner(schema: StructType,
+  * Anything undecodable is unknown: the file may match. */
+final class IcebergEntryFacts(schema: StructType,
     partitionFields: Seq[IcebergTable.PartitionField]) extends Serializable {
 
   import IcebergTable.{DataFileEntry, FieldIdKey}
@@ -53,210 +60,94 @@ final class IcebergEntryPruner(schema: StructType,
       .flatMap(w => nameOfId.get(pf.sourceId).map(_ -> (pf.name, w)))).toMap
 
   /** Source column name → (spec field, unit) for temporal transforms
-    * (`year`/`month`/`day`/`hour` — Spark/Flink's DEFAULT event-table
-    * partitioning). Order-preserving, so they prune through the RANGE
-    * legs: a file whose declared ordinal is t may hold `v >= L` only
-    * when t >= temporal(L), and `v <= H` only when t <= temporal(H) —
-    * which also rescues tables whose manifests carry no bounds on the
-    * source column (timestamp columns here, see IcebergWriter's stat
-    * set). */
+    * (Spark/Flink's DEFAULT event-table partitioning). */
   private val temporalFieldOf: Map[String, (String, String)] = partitionFields
     .flatMap(pf => IcebergTransforms.temporalUnit(pf.transform)
       .flatMap(u => nameOfId.get(pf.sourceId).map(_ -> (pf.name, u)))).toMap
 
-  /** Whether `e` MAY hold a row of `name` within the given bounds under
-    * a temporal partition on `name`. OPEN bounds tighten by one value
-    * unit before transforming (micros for timestamps, a day for dates:
-    * `v < H` ⟺ `v <= H − 1µs`), so the ubiquitous
-    * `ts >= D AND ts < D+1day` day-slice prunes to exactly one
-    * partition instead of leaking into the boundary one. */
-  private def temporalMay(e: DataFileEntry, name: String, dt: DataType,
-      lo: Option[Any], hi: Option[Any], loOpen: Boolean, hiOpen: Boolean): Boolean =
-    temporalFieldOf.get(name) match {
-      case None => true
-      case Some((pfName, unit)) => e.partition.get(pfName) match {
-        case Some(declared: java.lang.Number) =>
-          val t = declared.intValue
-          // one representable step under the column's internal encoding;
-          // extremes keep the closed (sound) form instead of wrapping
-          def step(v: Any, d: Long): Any = v match {
-            case n: java.lang.Integer if dt == DateType &&
-                n.intValue != Int.MaxValue && n.intValue != Int.MinValue =>
-              java.lang.Integer.valueOf(n.intValue + d.toInt)
-            case n: java.lang.Long if (dt == TimestampType || dt == TimestampNTZType) &&
-                n.longValue != Long.MaxValue && n.longValue != Long.MinValue =>
-              java.lang.Long.valueOf(n.longValue + d)
-            case _ => v
-          }
-          val belowHi = hi.map(h => if (hiOpen) step(h, -1L) else h)
-            .flatMap(IcebergTransforms.temporal(_, dt, unit)).forall(t <= _)
-          val aboveLo = lo.map(l => if (loOpen) step(l, 1L) else l)
-            .flatMap(IcebergTransforms.temporal(_, dt, unit)).forall(t >= _)
-          belowHi && aboveLo
-        case _ => true
-      }
-    }
-
-  /** Effective (min, max) for a column of `e`: an identity partition
-    * value is exact; otherwise decoded manifest bounds. */
-  private def boundsFor(e: DataFileEntry, name: String): (Option[Any], Option[Any]) =
-    if (name == IcebergTable.SeqColName)
-      // the synthetic data-sequence column is exact per file — the
-      // equality-delete interval branches prune to their own files
-      (Some(java.lang.Long.valueOf(e.seq)), Some(java.lang.Long.valueOf(e.seq)))
-    else if (uuidCols.contains(name)) (None, None)
-    else identityFieldOf.get(name).flatMap(e.partition.get) match {
-      case Some(v) => (Some(v), Some(v))
-      case None => idOf.get(name) match {
-        case None => (None, None)
-        case Some(id) =>
-          val dt = typeOf(name)
-          (e.lower.get(id).flatMap(IcebergTable.decodeBound(_, dt)),
-           e.upper.get(id).flatMap(IcebergTable.decodeBound(_, dt)))
-      }
-    }
-
-  /** Whether `e` MAY hold a row with `name = value` under a `bucket[N]`
-    * or `truncate[W]` partition on `name`. */
-  private def bucketMay(e: DataFileEntry, name: String, value: Any): Boolean = {
-    if (uuidCols.contains(name)) return true // uuid hashes over raw bytes, not the string form
-    val byBucket = bucketFieldOf.get(name) match {
-      case None => true
-      case Some((pfName, n)) =>
-        (e.partition.get(pfName), IcebergTransforms.bucket(value, typeOf(name), n)) match {
-          case (Some(declared: java.lang.Number), Some(expected)) =>
-            declared.intValue == expected
-          case _ => true
-        }
-    }
-    val byTrunc = truncFieldOf.get(name) match {
-      case None => true
-      case Some((pfName, w)) =>
-        (e.partition.get(pfName), IcebergTransforms.truncate(value, typeOf(name), w)) match {
-          case (Some(declared: java.lang.Number), Some(expected: Long)) =>
-            declared.longValue == expected
-          case (Some(declared: String), Some(expected: String)) => declared == expected
-          case _ => true
-        }
-    }
-    byBucket && byTrunc
-  }
-
-  /** Compare a decoded manifest value with a literal's INTERNAL value
-    * under the column type; None = incomparable (no pruning). */
-  private def cmp(stat: Any, litInternal: Any, dt: DataType): Option[Int] = dt match {
-    case FloatType | DoubleType =>
-      // ±Infinity is a legitimate bound per the spec (only NaN is
-      // excluded) — Double.compare total-orders it soundly; NaN has no
-      // usable order, so it never prunes.
-      (stat, litInternal) match {
-        case (a: java.lang.Number, b: java.lang.Number) =>
-          val (x, y) = (a.doubleValue, b.doubleValue)
-          if (x.isNaN || y.isNaN) None else Some(java.lang.Double.compare(x, y))
-        case _ => None
-      }
-    case IntegerType | LongType | DateType |
-         TimestampType | TimestampNTZType | ShortType | ByteType =>
-      (stat, litInternal) match {
-        case (a: java.lang.Number, b: java.lang.Number) =>
-          Some(java.lang.Long.compare(a.longValue, b.longValue))
-        case _ => None
-      }
-    case StringType => (stat, litInternal) match {
-      case (a: String, b: UTF8String) => Some(UTF8String.fromString(a).compareTo(b))
-      case (a: String, b: String) => Some(a.compareTo(b))
-      case _ => None
-    }
-    case BooleanType => (stat, litInternal) match {
-      case (a: Boolean, b: Boolean) => Some(a.compareTo(b))
-      case _ => None
-    }
+  /** A manifest or partition value in Catalyst's internal form. */
+  private def internal(v: Any, dt: DataType): Option[Any] = (v, dt) match {
+    case (n: java.lang.Number, IntegerType | DateType) => Some(n.intValue)
+    case (n: java.lang.Number, LongType | TimestampType | TimestampNTZType) => Some(n.longValue)
+    case (n: java.lang.Number, ShortType) => Some(n.shortValue)
+    case (n: java.lang.Number, ByteType) => Some(n.byteValue)
+    case (n: java.lang.Number, FloatType) => Some(n.floatValue)
+    case (n: java.lang.Number, DoubleType) => Some(n.doubleValue)
+    case (s: String, _: StringType) => Some(UTF8String.fromString(s))
+    case (b: java.lang.Boolean, BooleanType) => Some(b.booleanValue)
     case _ => None
   }
 
-  /** Whether `file` MAY contain a matching row — false only on proof. */
-  def mayMatch(expr: Expression, e: DataFileEntry): Boolean = {
-    def attr(x: Expression): Option[(String, DataType)] = x match {
-      case a: AttributeReference => Some((a.name, a.dataType))
-      case _ => None
-    }
-    def litOf(x: Expression): Option[Any] = x match {
-      case l: Literal if l.value != null => Some(l.value)
-      case _ => None
-    }
-    def nullsOf(name: String): Option[Long] = idOf.get(name).flatMap(e.nullCounts.get)
-    def rangeMay(name: String, dt: DataType, lo: Option[Any], hi: Option[Any],
-        loOpen: Boolean, hiOpen: Boolean): Boolean = {
-      val (mn, mx) = boundsFor(e, name)
-      val belowHi = (hi, mn) match {
-        case (Some(h), Some(m)) => cmp(m, h, dt).forall(c => if (hiOpen) c < 0 else c <= 0)
-        case _ => true
-      }
-      val aboveLo = (lo, mx) match {
-        case (Some(l), Some(m)) => cmp(m, l, dt).forall(c => if (loOpen) c > 0 else c >= 0)
-        case _ => true
-      }
-      belowHi && aboveLo && temporalMay(e, name, dt, lo, hi, loOpen, hiOpen)
-    }
-    expr match {
-      case CatalystAnd(l, r) => mayMatch(l, e) && mayMatch(r, e)
-      case CatalystOr(l, r) => mayMatch(l, e) || mayMatch(r, e)
-      case EqualTo(a, v) => (attr(a), litOf(v), attr(v), litOf(a)) match {
-        case (Some((n, dt)), Some(value), _, _) =>
-          rangeMay(n, dt, Some(value), Some(value), loOpen = false, hiOpen = false) &&
-            bucketMay(e, n, value)
-        case (_, _, Some((n, dt)), Some(value)) =>
-          rangeMay(n, dt, Some(value), Some(value), loOpen = false, hiOpen = false) &&
-            bucketMay(e, n, value)
-        case _ => true
-      }
-      case LessThan(a, v) => (attr(a), litOf(v), attr(v), litOf(a)) match {
-        case (Some((n, dt)), Some(value), _, _) =>
-          rangeMay(n, dt, None, Some(value), loOpen = false, hiOpen = true)
-        case (_, _, Some((n, dt)), Some(value)) =>
-          rangeMay(n, dt, Some(value), None, loOpen = true, hiOpen = false)
-        case _ => true
-      }
-      case LessThanOrEqual(a, v) => (attr(a), litOf(v), attr(v), litOf(a)) match {
-        case (Some((n, dt)), Some(value), _, _) =>
-          rangeMay(n, dt, None, Some(value), loOpen = false, hiOpen = false)
-        case (_, _, Some((n, dt)), Some(value)) =>
-          rangeMay(n, dt, Some(value), None, loOpen = false, hiOpen = false)
-        case _ => true
-      }
-      case GreaterThan(a, v) => (attr(a), litOf(v), attr(v), litOf(a)) match {
-        case (Some((n, dt)), Some(value), _, _) =>
-          rangeMay(n, dt, Some(value), None, loOpen = true, hiOpen = false)
-        case (_, _, Some((n, dt)), Some(value)) =>
-          rangeMay(n, dt, None, Some(value), loOpen = false, hiOpen = true)
-        case _ => true
-      }
-      case GreaterThanOrEqual(a, v) => (attr(a), litOf(v), attr(v), litOf(a)) match {
-        case (Some((n, dt)), Some(value), _, _) =>
-          rangeMay(n, dt, Some(value), None, loOpen = false, hiOpen = false)
-        case (_, _, Some((n, dt)), Some(value)) =>
-          rangeMay(n, dt, None, Some(value), loOpen = false, hiOpen = false)
-        case _ => true
-      }
-      case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        attr(a) match {
-          case Some((n, dt)) => vs.exists { case l: Literal =>
-            litOf(l).forall(v =>
-              rangeMay(n, dt, Some(v), Some(v), loOpen = false, hiOpen = false) &&
-                bucketMay(e, n, v))
-          }
-          case None => true
+  /** (min, max) from an identity partition value or the manifest
+    * bounds, narrowed by a temporal partition ordinal. */
+  private def minMax(e: DataFileEntry, name: String, dt: DataType): (Option[Any], Option[Any]) = {
+    val (mn, mx) =
+      if (uuidCols.contains(name)) (None, None)
+      else identityFieldOf.get(name).flatMap(e.partition.get).flatMap(internal(_, dt)) match {
+        case Some(v) => (Some(v), Some(v))
+        case None => idOf.get(name) match {
+          case None => (None, None)
+          case Some(id) =>
+            def decoded(b: Map[Int, Array[Byte]]) =
+              b.get(id).flatMap(IcebergTable.decodeBound(_, dt)).flatMap(internal(_, dt))
+            val nanFree = dt match {
+              case FloatType | DoubleType => e.nanCounts.get(id).contains(0L)
+              case _ => true
+            }
+            (decoded(e.lower), if (nanFree) decoded(e.upper) else None)
         }
-      case IsNull(a) => attr(a) match {
-        case Some((n, _)) => !nullsOf(n).contains(0L)
-        case None => true
       }
-      case IsNotNull(a) => attr(a) match {
-        case Some((n, _)) =>
-          !(nullsOf(n).isDefined && e.recordCount >= 0 && nullsOf(n).contains(e.recordCount))
-        case None => true
+    temporalFieldOf.get(name).flatMap { case (pf, unit) =>
+      e.partition.get(pf).collect { case t: java.lang.Number => t.intValue }
+        .flatMap(IcebergTransforms.temporalRange(_, dt, unit))
+    } match {
+      case None => (mn, mx)
+      case Some((lo, hi)) =>
+        def num(x: Any): Long = x.asInstanceOf[Number].longValue
+        def typed(x: Long): Any = if (dt == DateType) x.toInt else x
+        (Some(mn.filter(num(_) >= lo).getOrElse(typed(lo))),
+          Some(mx.filter(num(_) <= hi).getOrElse(typed(hi))))
+    }
+  }
+
+  def apply(e: DataFileEntry): FileFacts = new FileFacts {
+    private val rows = if (e.recordCount >= 0) Some(e.recordCount) else None
+
+    def bounds(name: String): ColBounds =
+      if (name == IcebergTable.SeqColName) {
+        // the synthetic data-sequence column is exact per file — the
+        // equality-delete interval branches prune to their own files
+        val s = Some(e.seq)
+        ColBounds(s, s, Some(0L), rows)
+      } else typeOf.get(name) match {
+        case None => ColBounds.Unknown
+        case Some(dt) =>
+          val (mn, mx) = minMax(e, name, dt)
+          ColBounds(mn, mx, idOf.get(name).flatMap(e.nullCounts.get), rows)
       }
-      case _ => true
+
+    override def mayEqual(name: String, value: Any): Boolean = {
+      if (uuidCols.contains(name)) return true // uuid hashes over raw bytes, not the string form
+      val byBucket = bucketFieldOf.get(name) match {
+        case None => true
+        case Some((pfName, n)) =>
+          (e.partition.get(pfName), IcebergTransforms.bucket(value, typeOf(name), n)) match {
+            case (Some(declared: java.lang.Number), Some(expected)) =>
+              declared.intValue == expected
+            case _ => true
+          }
+      }
+      val byTrunc = truncFieldOf.get(name) match {
+        case None => true
+        case Some((pfName, w)) =>
+          (e.partition.get(pfName), IcebergTransforms.truncate(value, typeOf(name), w)) match {
+            case (Some(declared: java.lang.Number), Some(expected: Long)) =>
+              declared.longValue == expected
+            case (Some(declared: String), Some(expected: String)) => declared == expected
+            case _ => true
+          }
+      }
+      byBucket && byTrunc
     }
   }
 }

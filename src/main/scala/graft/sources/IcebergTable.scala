@@ -48,9 +48,9 @@ import org.json4s.jackson.JsonMethods
   *     (`lower_bounds`/`upper_bounds`, spec Appendix D single-value
   *     serialization) drive file skipping in [[IcebergFileIndex]].
   *
-  * AVRO data files read through the Avro-core RDD leg (r15,
-  * [[IcebergAvroData]]) and ORC data files through the orc-core RDD
-  * leg (r15, [[IcebergOrcData]]) — both field-id-resolving,
+  * AVRO data files read through the Avro-core RDD leg
+  * ([[IcebergAvroData]]) and ORC data files through the orc-core RDD
+  * leg ([[IcebergOrcData]]) — both field-id-resolving,
   * delete-free snapshots only. Unsupported shapes fail loud rather
   * than mis-read: v2 deletes over Avro/ORC entries, unknown formats
   * and types, and more than [[maxEqualitySeqGroups]] distinct
@@ -73,7 +73,8 @@ object IcebergTable {
       sizeBytes: Long, seq: Long,
       partition: Map[String, Any],
       lower: Map[Int, Array[Byte]], upper: Map[Int, Array[Byte]],
-      nullCounts: Map[Int, Long], valueCounts: Map[Int, Long])
+      nullCounts: Map[Int, Long], valueCounts: Map[Int, Long],
+      nanCounts: Map[Int, Long] = Map.empty)
 
   /** A live delete file: `content` 1 = position deletes, 2 = equality
     * deletes (over `equalityIds`). */
@@ -106,7 +107,7 @@ object IcebergTable {
   /** Unknown-size position-delete sets still ride the bitmap when
     * their parquet FILES total at most this many bytes (file length is
     * always knowable, a driver-side status call per delete file) —
-    * without this gate, an r11 A/B probe measured a byte-small
+    * without this gate, an A/B probe measured a byte-small
     * unknown-count set paying a full sort-merge shuffle of the TABLE
     * (12.7× at 1M deletes over 4M rows). Override per session with
     * `spark.graft.iceberg.maxBitmapDeleteBytes` (bare `graft.` prefix
@@ -118,8 +119,8 @@ object IcebergTable {
     * eq-deletes are short-lived CDC keys, kilobytes to megabytes);
     * bigger sets — a Flink CDC writer can legally park multi-GB
     * equality-delete files between compactions — drop the hint and let
-    * AQE pick the join strategy at runtime, exactly the r10/r11
-    * position-delete lesson (a forced broadcast fires precisely on the
+    * AQE pick the join strategy at runtime, as for position deletes
+    * (a forced broadcast fires precisely on the
     * sets big enough to OOM it). Unknown lengths (a status call fails)
     * count as over-cap: the fallback join is always safe, the forced
     * broadcast is not. Override per session with
@@ -135,10 +136,9 @@ object IcebergTable {
   /** Read a delete-cap override under BOTH historical spellings —
     * `spark.graft.<suffix>` (preferred: matches every other graft knob,
     * `spark.graft.bpe.localVocabCap`, `spark.graft.etl.packBuckets`, …)
-    * and the r12-era bare `graft.<suffix>` (kept for back-compat) —
-    * preferring the spark-prefixed one. The r13 verdict's foot-gun: a
-    * user setting the natural `spark.graft.iceberg.*` spelling was
-    * silently ignored. */
+    * and the older bare `graft.<suffix>` (kept for back-compat) —
+    * preferring the spark-prefixed one, so a user setting the natural
+    * `spark.graft.iceberg.*` spelling is never silently ignored. */
   private def capConf(spark: SparkSession, suffix: String, dflt: Long): Long =
     spark.conf.getOption(s"spark.graft.$suffix")
       .orElse(spark.conf.getOption(s"graft.$suffix"))
@@ -407,9 +407,9 @@ object IcebergTable {
 
   /** DISTRIBUTED manifest prune: executors parse the lazy snapshot's
     * data manifests (Avro core — no driver materialization) and
-    * evaluate the pushed predicates with the SAME
-    * [[IcebergEntryPruner]] the driver-side index uses; only survivors
-    * come back. With no predicate the full listing returns, but with
+    * run the SAME [[SkippingKernel]] over [[IcebergEntryFacts]] the
+    * driver-side index uses; only survivors come back. With no
+    * readable predicate the full listing returns, but with
     * the bounds/count maps elided when `withStats = false` — the
     * dominant per-entry weight. A delete entry inside a DATA manifest
     * (no conforming writer produces one) fails loud rather than
@@ -421,9 +421,9 @@ object IcebergTable {
     val base = ls.root.stripSuffix("/")
     val serConf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val pruner = new IcebergEntryPruner(ls.schema, ls.partitionFields)
-    val fs = filters
-    val parseStats = withStats || fs.nonEmpty
+    val kernel = SkippingKernel(filters)
+    val facts = new IcebergEntryFacts(ls.schema, ls.partitionFields)
+    val parseStats = withStats || kernel.canPrune
     val slices = math.max(1, math.min(ls.dataManifests.size,
       spark.sparkContext.defaultParallelism * 2))
     spark.sparkContext.parallelize(ls.dataManifests, slices)
@@ -437,10 +437,9 @@ object IcebergTable {
           throw new IllegalStateException(
             s"Iceberg data file ${e.path} has format ${e.format} — the lazy parquet " +
               "scan cannot serve a mixed-format snapshot; IcebergTable.read routes " +
-              "mixed snapshots to the eager union automatically (r16) — read through " +
+              "mixed snapshots to the eager union automatically — read through " +
               "it, or rewrite to parquet (IcebergWriter.rewriteCompact)"))
-        if (fs.isEmpty) data
-        else data.filter(e => fs.forall(f => pruner.mayMatch(f, e)))
+        data.filter(e => kernel.mayMatch(facts(e)))
       }.collect().toSeq
   }
 
@@ -850,21 +849,17 @@ object IcebergTable {
                 }.toMap
               case _ => Map.empty
             }
-            val (lower, upper, nulls, counts) =
-              if (!withStats)
-                (Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]],
-                  Map.empty[Int, Long], Map.empty[Int, Long])
-              else (
-                fieldOf(df, "lower_bounds").map(kvPairs).getOrElse(Nil)
-                  .map { case (k, v) => k -> asBytes(v) }.toMap,
-                fieldOf(df, "upper_bounds").map(kvPairs).getOrElse(Nil)
-                  .map { case (k, v) => k -> asBytes(v) }.toMap,
-                fieldOf(df, "null_value_counts").map(kvPairs).getOrElse(Nil)
-                  .map { case (k, v) => k -> asLong(v) }.toMap,
-                fieldOf(df, "value_counts").map(kvPairs).getOrElse(Nil)
-                  .map { case (k, v) => k -> asLong(v) }.toMap)
+            def bytesOf(field: String): Map[Int, Array[Byte]] =
+              if (!withStats) Map.empty
+              else fieldOf(df, field).map(kvPairs).getOrElse(Nil)
+                .map { case (k, v) => k -> asBytes(v) }.toMap
+            def longsOf(field: String): Map[Int, Long] =
+              if (!withStats) Map.empty
+              else fieldOf(df, field).map(kvPairs).getOrElse(Nil)
+                .map { case (k, v) => k -> asLong(v) }.toMap
             dataOut += DataFileEntry(path, fmt, nRec, size, seq, partition,
-              lower, upper, nulls, counts)
+              bytesOf("lower_bounds"), bytesOf("upper_bounds"), longsOf("null_value_counts"),
+              longsOf("value_counts"), longsOf("nan_value_counts"))
           } else {
             import scala.jdk.CollectionConverters._
             val eqIds = fieldOf(df, "equality_ids") match {
@@ -923,19 +918,19 @@ object IcebergTable {
     * files written before a rename serve the renamed schema. */
   def read(spark: SparkSession, root: String, snapshotId: Option[Long] = None,
       asOfTimestampMs: Option[Long] = None): DataFrame = {
-    // LAZY resolution even with deletes present (r12): data manifests
+    // LAZY resolution even with deletes present: data manifests
     // parse on executors, never the driver. None = no live data entry
-    // OR an AVRO/ORC-sampled snapshot (r15) — the eager read serves both
+    // OR an AVRO/ORC-sampled snapshot — the eager read serves both
     // (the trivially empty frame, or the IcebergAvroData leg).
     val ls = lazySnapshot(spark, root, snapshotId, asOfTimestampMs)
     lazyScanSchemas(spark, ls) match {
       case None => readSnapshot(spark, root, materialize(spark, ls))
       case Some(schemas) =>
-        // r16 (review finding): the one-entry sample saying "parquet"
-        // does not prove the SNAPSHOT is parquet — a mixed parquet+ORC/
-        // AVRO table sampled at a parquet entry used to resolve lazily
-        // and then throw at scan time, so whether a table read depended
-        // on manifest entry order. A distributed probe (executors parse,
+        // the one-entry sample saying "parquet" does not prove the
+        // SNAPSHOT is parquet — a mixed parquet+ORC/AVRO table sampled at
+        // a parquet entry would resolve lazily and then throw at scan
+        // time, making a table read depend on manifest entry order. A
+        // distributed probe (executors parse,
         // the driver collects only non-parquet entries — zero rows for
         // the universal all-parquet table) decides the route: any
         // foreign entry sends the snapshot to the eager union, which
@@ -978,7 +973,7 @@ object IcebergTable {
 
   private[graft] def readSnapshot(spark: SparkSession, root: String,
       snap: IcebergSnapshot): DataFrame = {
-    // r15: AVRO data files read through the Avro-core RDD leg
+    // AVRO data files read through the Avro-core RDD leg
     // ([[IcebergAvroData]] — spec Appendix A; some Flink pipelines
     // write them) and ORC data files through the orc-core RDD leg
     // ([[IcebergOrcData]] — the Hive-heritage shape), both unioned
@@ -1021,13 +1016,13 @@ object IcebergTable {
         spark.sparkContext.emptyRDD[Row], stripIds(snap.schema)))
   }
 
-  /** The LAZY read — delete-carrying snapshots included (r12): the
+  /** The LAZY read — delete-carrying snapshots included: the
     * data manifests stay unread on the driver; the scan's
     * [[IcebergFileIndex]] prunes them on executors, position deletes
     * collect only the (bounded) delete rows, and equality deletes
     * apply through the [[SeqColName]] partition column instead of a
     * driver-side file→sequence grouping. None ⇔ no live data entry
-    * anywhere, OR an AVRO/ORC-sampled snapshot (r15) — callers fall back
+    * anywhere, OR an AVRO/ORC-sampled snapshot — callers fall back
     * to the eager read, which serves both. */
   private[graft] def readLazy(spark: SparkSession, root: String,
       ls: LazyIcebergSnapshot): Option[DataFrame] =
@@ -1096,7 +1091,7 @@ object IcebergTable {
     * live entry anywhere: the table is effectively empty and callers
     * route the eager path, whose empty read is trivially cheap. */
   /** None ⇔ the lazy parquet relation cannot serve this snapshot: no
-    * live data entry anywhere, OR (r15) the sampled entry is an AVRO
+    * live data entry anywhere, OR the sampled entry is an AVRO
     * or ORC data file — every caller's None branch materializes the
     * snapshot and reads EAGERLY, which serves all three (the empty
     * frame, the [[IcebergAvroData]] leg, or the [[IcebergOrcData]]
@@ -1327,9 +1322,9 @@ object IcebergTable {
     if ((sizeKnown && declared <= maxBitmapDeleteRows) || (!sizeKnown && bytesBounded)) {
       // dedupe + sort ON EXECUTORS (codegen'd hash aggregate, primitive
       // sort_array), serialize the per-file bitmap driver-side from the
-      // already-sorted array — the r11 shape; the old
-      // groupByKey(#files).distinct.sorted serialized a single hot file's
-      // million positions through one boxed task
+      // already-sorted array — a groupByKey(#files).distinct.sorted
+      // would serialize a single hot file's million positions through
+      // one boxed task
       val grouped = deletes.groupBy(col("__del_name"))
         .agg(org.apache.spark.sql.functions.sort_array(
           org.apache.spark.sql.functions.collect_set(col("__del_pos"))).as("ps"))

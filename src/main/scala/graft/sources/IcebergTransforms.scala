@@ -114,8 +114,8 @@ object IcebergTransforms {
     * define hour on date). Pre-epoch values floor DOWN (floorDiv), per
     * spec. None = not applicable (no pruning, never wrong).
     *
-    * Temporal transforms are ORDER-PRESERVING (unlike bucket), so the
-    * pruner runs them through its RANGE legs, not just equality. */
+    * Temporal transforms are ORDER-PRESERVING (unlike bucket), so a
+    * declared ordinal bounds its file's values ([[temporalRange]]). */
   def temporal(value: Any, dt: DataType, unit: String): Option[Int] = {
     val days: Option[Long] = dt match {
       case DateType => value match {
@@ -146,6 +146,28 @@ object IcebergTransforms {
       case _ => None
     }
   }
+
+  /** Inverse of [[temporal]]: the inclusive range of internal values
+    * (epoch days for dates, epoch micros for timestamps) whose `unit`
+    * ordinal is `t` — what a file's declared temporal partition value
+    * says about its rows. None where [[temporal]] is undefined. */
+  def temporalRange(t: Int, dt: DataType, unit: String): Option[(Long, Long)] =
+    scala.util.Try {
+      val epoch = java.time.LocalDate.ofEpochDay(0)
+      val days: Option[(Long, Long)] = unit match {
+        case "day" => Some((t.toLong, t.toLong))
+        case "month" => Some((epoch.plusMonths(t).toEpochDay, epoch.plusMonths(t + 1L).toEpochDay - 1))
+        case "year" => Some((epoch.plusYears(t).toEpochDay, epoch.plusYears(t + 1L).toEpochDay - 1))
+        case _ => None
+      }
+      dt match {
+        case DateType => days
+        case TimestampType | TimestampNTZType =>
+          if (unit == "hour") Some((t * MicrosPerHour, (t + 1L) * MicrosPerHour - 1))
+          else days.map { case (a, b) => (a * MicrosPerDay, (b + 1) * MicrosPerDay - 1) }
+        case _ => None
+      }
+    }.toOption.flatten
 
   /** The spec's `truncate[W]` of a value in Catalyst-internal form:
     * integers floor to the containing W-wide interval's start

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   * reader specs that consume these tables pin the public FORMAT, not a
   * private round-trip.
   *
-  * Publication is CATALOG-ARBITRATED (r11): every metadata commit
+  * Publication is CATALOG-ARBITRATED: every metadata commit
   * claims its version atomically through an [[IcebergCatalog]] —
   * create-without-overwrite of `v<N>.metadata.json` by default (the
   * spec's Hadoop-catalog rule), or any installed implementation
@@ -60,14 +60,14 @@ object IcebergWriter {
 
   private val states = scala.collection.mutable.Map.empty[String, State]
 
-  /** Canonical state key / metadata `location` for `root` (r13): a
+  /** Canonical state key / metadata `location` for `root`: a
     * scheme'd path (`hdfs://…`, `s3a://…`, a test scheme) normalizes
     * through Hadoop [[HPath]]; a bare local path keeps the absolute
     * `java.io` form already embedded in every previously-published
     * metadata JSON. Every file operation below goes through Hadoop
     * [[FileSystem]], so publish / mirror / expire run against whatever
-    * store the root names — the r12 verdict's top gap was `new
-    * java.io.File("s3a://…")` silently making a nonsense local path. */
+    * store the root names — never a `new java.io.File("s3a://…")`
+    * silently making a nonsense local path. */
   private[graft] def absRoot(root: String): String =
     if (root.matches("^[a-zA-Z][a-zA-Z0-9+.-]*:.*")) new HPath(root).toString
     else new java.io.File(root).getAbsolutePath
@@ -178,6 +178,8 @@ object IcebergWriter {
          |      {"name":"key","type":"int","field-id":119},{"name":"value","type":"long","field-id":120}]},"logicalType":"map"}],"default":null,"field-id":109},
          |    {"name":"null_value_counts","type":["null",{"type":"array","items":{"type":"record","name":"k121_v122","fields":[
          |      {"name":"key","type":"int","field-id":121},{"name":"value","type":"long","field-id":122}]},"logicalType":"map"}],"default":null,"field-id":110},
+         |    {"name":"nan_value_counts","type":["null",{"type":"array","items":{"type":"record","name":"k138_v139","fields":[
+         |      {"name":"key","type":"int","field-id":138},{"name":"value","type":"long","field-id":139}]},"logicalType":"map"}],"default":null,"field-id":137},
          |    {"name":"lower_bounds","type":["null",{"type":"array","items":{"type":"record","name":"k126_v127","fields":[
          |      {"name":"key","type":"int","field-id":126},{"name":"value","type":"bytes","field-id":127}]},"logicalType":"map"}],"default":null,"field-id":125},
          |    {"name":"upper_bounds","type":["null",{"type":"array","items":{"type":"record","name":"k129_v130","fields":[
@@ -228,9 +230,9 @@ object IcebergWriter {
     * the optimized plan. */
   private def withIdMetadata(df: DataFrame, schema: StructType): DataFrame = {
     import org.apache.spark.sql.functions.col
-    // r20 (advisor): the replaced createDataFrame(df.rdd, schema) shape
-    // failed LOUD (ClassCastException) on a type drift between caller
-    // and table schema; an aliasing select would silently stage parquet
+    // a createDataFrame(df.rdd, schema) shape fails LOUD
+    // (ClassCastException) on a type drift between caller and table
+    // schema; an aliasing select would silently stage parquet
     // whose physical types diverge (and footerStats would then quietly
     // fall back, masking the drift). Keep the loud contract.
     schema.fields.foreach { f =>
@@ -355,10 +357,10 @@ object IcebergWriter {
     // through the single-pass repartition+partitionBy write
     val staged: Seq[(String, Long, Seq[(SpecField, Any)], Map[String, Any])] =
       if (st.spec.isEmpty) parts.map { p =>
-        // ONE data pass per part (r19, guide §1.2): the write computes
-        // the frame; count + bounds come from the footer the write just
-        // produced (the pre-r19 shape recomputed every part twice more —
-        // once for count(), once for the stats aggregate). The aggregate
+        // ONE data pass per part: the write computes the frame; count +
+        // bounds come from the footer the write just produced (instead of
+        // recomputing every part twice more — once for count(), once for
+        // the stats aggregate). The aggregate
         // stays as the fallback for any footer the fast path refuses.
         val path = writeDataFile(spark, root, p, st.schema)
         val agg = footerStats(spark, path, statCols).getOrElse(statsOf(p, statCols))
@@ -403,11 +405,11 @@ object IcebergWriter {
         }
         arr
       }
-      // r20 (advisor): the Iceberg spec forbids NaN in lower/upper
-      // bounds. The footer path already refuses NaN (parquet-mr omits
-      // float/double stats once one is seen), but the statsOf AGGREGATE
-      // fallback would publish NaN as max (Spark orders NaN greatest) —
-      // drop such bounds entirely, like an all-null column's.
+      // the Iceberg spec forbids NaN in lower/upper bounds. The footer
+      // path already refuses NaN (parquet-mr omits float/double stats
+      // once one is seen), but the statsOf AGGREGATE fallback would
+      // publish NaN as max (Spark orders NaN greatest) — drop such
+      // bounds entirely, like an all-null column's.
       def noNaN(v: Any): Boolean = v match {
         case f: java.lang.Float => !f.isNaN
         case d: java.lang.Double => !d.isNaN
@@ -428,6 +430,8 @@ object IcebergWriter {
       dataFile.put("upper_bounds", kvBytes(dfSchema.getField("upper_bounds").schema(), uppers))
       dataFile.put("null_value_counts",
         kvLongs(dfSchema.getField("null_value_counts").schema(), nullCounts))
+      dataFile.put("nan_value_counts", kvLongs(dfSchema.getField("nan_value_counts").schema(),
+        nanFreeCounts(uppers.map(_._1), st.schema)))
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1) // ADDED
       e.put("snapshot_id", st.snapshotId)
@@ -439,7 +443,7 @@ object IcebergWriter {
       replace = replaceManifests, op = op)
   }
 
-  /** Iceberg's `add_files`/`migrate` procedure (r18, widened r19):
+  /** Iceberg's `add_files`/`migrate` procedure:
     * REGISTER existing parquet/ORC data files into an Iceberg table
     * without rewriting a byte — metadata-only, the standard migration
     * path for a Hive-heritage directory (reference pipelines accrete
@@ -451,7 +455,7 @@ object IcebergWriter {
     * the collect is bounded at one small tuple per REGISTERED file
     * (metadata scale).
     *
-    * `partitionCols` (r19) declares a HIVE layout — the canonical
+    * `partitionCols` declares a HIVE layout — the canonical
     * adoption target (the reference's silver layout is partition-per-day
     * folders, load_data_task.py:117-145): each file's identity partition
     * tuple parses from the `c=v` segments of its OWN path (url-unescaped
@@ -461,7 +465,7 @@ object IcebergWriter {
     * columns live in the table schema; files need not carry them — the
     * read legs reconstruct identity values from the manifest.
     *
-    * `collectStats` (r19) upgrades the footer pass that is ALREADY
+    * `collectStats` upgrades the footer pass that is ALREADY
     * opening every file: per-column min/max/null-count translate into
     * Appendix-D bounds ([[AdoptStats]] — sound degradation when a
     * footer lacks stats), so an adopted 100 TB table data-skips without
@@ -472,15 +476,15 @@ object IcebergWriter {
     * (spec Appendix C) naming every field — registered files embed no
     * iceberg field ids, and WITHOUT the mapping a conformant foreign
     * reader (Trino, Spark+iceberg-runtime) must null-read every column;
-    * the mapping is what sanctions name binding (r19, the r18 verdict's
-    * top item). A pre-r19 adopted table upgrades to the mapping on its
-    * next registration. The same property marks the data files as NOT
+    * the mapping is what sanctions name binding. An adopted table
+    * published without the mapping upgrades to it on its next
+    * registration. The same property marks the data files as NOT
     * writer-owned, so `expireSnapshots` never deletes adopted files —
     * registration adopts metadata, not data lifecycle.
     *
     * The duplicate-registration guard (a crash-retried add_files must
     * refuse, never serve a file's rows twice) is BATCH-bounded on the
-    * driver (r19): the live set is probed DISTRIBUTED via the lazy
+    * driver: the live set is probed DISTRIBUTED via the lazy
     * snapshot's manifest refs — one task per manifest, each returning
     * only its entry count and any collisions with the (bounded) batch —
     * so driver cost tracks the batch, not the accreting table. Both
@@ -525,7 +529,7 @@ object IcebergWriter {
         "tuple comes from its path, so the layouts must agree")
     // an EXISTING table's schema governs — the caller's `schema` must
     // agree by name+type, or name-fallback binding would silently read
-    // nulls for every table column the files lack (review r18)
+    // nulls for every table column the files lack
     val declared = withIds(schema).fields.map(f => (f.name, f.dataType)).toSeq
     val tables = st.schema.fields.map(f => (f.name, f.dataType)).toSeq
     require(declared == tables,
@@ -534,7 +538,7 @@ object IcebergWriter {
     // duplicate registration guard (the reference procedure's
     // check_duplicate_files): a crash-retried or naively re-run
     // add_files over the same directory must refuse, never serve a
-    // file's rows twice (review r18)
+    // file's rows twice
     val duplicateArgs = files.diff(files.distinct).distinct
     require(duplicateArgs.isEmpty,
       s"add_files: duplicate paths in the file list: ${duplicateArgs.take(3).mkString(",")}")
@@ -652,6 +656,9 @@ object IcebergWriter {
           for { nn <- t._3; id <- fieldIdOf.get(c) }
             yield id -> (java.lang.Long.valueOf(nn): AnyRef)
         })
+        // no nan_value_counts: writers outside Spark (Arrow, parquet-rs,
+        // DuckDB) keep NaN out of footer min/max, so an adopted upper
+        // bound says nothing about NaN rows
         // top-level columns: value count (incl. nulls) = record count
         kv("value_counts", stats.toSeq.sortBy(_._1).flatMap { case (c, _) =>
           fieldIdOf.get(c).map(id => id -> (java.lang.Long.valueOf(n): AnyRef))
@@ -685,8 +692,8 @@ object IcebergWriter {
 
   /** [[statsOf]]' map, but read from the staged parquet FOOTER the
     * write itself just produced — a metadata read instead of a second
-    * full pass over the part (r19; ManifestTable commits made the same
-    * move). Soundness: the staged file is written by THIS session from
+    * full pass over the part (ManifestTable commits do the same).
+    * Soundness: the staged file is written by THIS session from
     * the same frame, and a bound is taken only when the footer's
     * physical+logical type states the table type's value space exactly
     * ([[footerTypeOk]]); NaN never reaches a bound (parquet-mr omits
@@ -698,7 +705,7 @@ object IcebergWriter {
   private def footerStats(spark: SparkSession, path: String,
       statCols: Seq[StructField]): Option[Map[String, Any]] = {
     if (!spark.conf.get("spark.graft.commitStats.footers", "true").toBoolean) return None
-    // r20 (advisor): a session that configures parquet footer-stat
+    // a session that configures parquet footer-stat
     // truncation writes TRUNCATED-but-sound string bounds — true, but
     // not the value the aggregate publishes; refuse the fast path so
     // the two paths stay value-identical.
@@ -771,7 +778,7 @@ object IcebergWriter {
 
   /** One footer bound as the JVM value [[boundBytes]] expects (what the
     * stats aggregate's Row would have held). None refuses the footer.
-    * A float/double bound EQUAL to 0.0 also refuses (r20, advisor): the
+    * A float/double bound EQUAL to 0.0 also refuses: the
     * parquet writer widens ±0.0 bounds (PARQUET-1246 — a -0.0 min may
     * be stored for a column whose true min is +0.0 and vice versa), so
     * a zero bound is the one value where footer and aggregate can
@@ -799,7 +806,7 @@ object IcebergWriter {
     case _ => None
   }
 
-  /** SINGLE-PASS transform-partitioned write (r11): one
+  /** SINGLE-PASS transform-partitioned write: one
     * repartition-on-the-transform-values shuffle routes every row to
     * its partition tuple's writer and `partitionBy` splits one file per
     * tuple — the old shape re-filtered the entire part once PER tuple,
@@ -820,8 +827,8 @@ object IcebergWriter {
     }
     // re-attach field-id metadata for the parquet write (partitionBy
     // keeps the __pv_* columns OUT of the file contents); aliasing
-    // projection, not createDataFrame(.rdd, …) — plan-preserving (r19,
-    // same reasoning as [[withIdMetadata]])
+    // projection, not createDataFrame(.rdd, …) — plan-preserving (same
+    // reasoning as [[withIdMetadata]])
     val ordered = withPv.select(
       st.schema.fields.toSeq.map(f => cl(f.name).as(f.name, f.metadata)) ++
         pvNames.map(cl): _*)
@@ -972,7 +979,7 @@ object IcebergWriter {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val absRoot = this.absRoot(root)
     val conf = hadoopConf(spark)
-    // a fresh session resumes from the published metadata (r13): the
+    // a fresh session resumes from the published metadata: the
     // normal maintenance shape is a cron job that ONLY expires — it
     // must not need a dummy write first. Schema/spec/properties parse
     // back from the current metadata JSON the same way mirror resumes.
@@ -1110,7 +1117,7 @@ object IcebergWriter {
 
   def rewriteCompact(spark: SparkSession, root: String): Unit = {
     // a fresh session resumes from the published metadata exactly like
-    // expireSnapshots (r15): compaction is a maintenance verb, and its
+    // expireSnapshots: compaction is a maintenance verb, and its
     // most important target is a table this writer DIDN'T create — a
     // foreign Avro/ORC-data-file table whose read legs name "rewrite
     // (compact) to parquet" as the fix for v2-delete support. The
@@ -1293,8 +1300,11 @@ object IcebergWriter {
         }
       dataFile.put("lower_bounds", kv(dfSchema.getField("lower_bounds").schema(),
         boundsOf(_.min)))
-      dataFile.put("upper_bounds", kv(dfSchema.getField("upper_bounds").schema(),
-        boundsOf(_.max)))
+      val uppers = boundsOf(_.max)
+      dataFile.put("upper_bounds", kv(dfSchema.getField("upper_bounds").schema(), uppers))
+      dataFile.put("nan_value_counts", kv(dfSchema.getField("nan_value_counts").schema(),
+        nanFreeCounts(uppers.map(_._1), schema)
+          .map { case (id, n) => id -> (java.lang.Long.valueOf(n): AnyRef) }))
       dataFile.put("null_value_counts", kv(dfSchema.getField("null_value_counts").schema(),
         schema.fields.zipWithIndex.flatMap { case (f, i) =>
           colStats.get(f.name).flatMap(_.nulls).map(n => (i + 1) -> (java.lang.Long.valueOf(n): AnyRef))
@@ -1315,6 +1325,19 @@ object IcebergWriter {
     st.snapshotId
   }
 
+  /** `nan_value_counts` for the float/double columns among `upperIds`
+    * (the field ids, 1-based positions in `schema`, whose upper bound is
+    * published) of a file whose stats graft computed from its own rows:
+    * Spark's max sorts NaN greatest and `statBound` refuses NaN, so such
+    * an upper bound certifies a NaN-free file — the fact a reader needs
+    * before trusting it, since `x > c` matches NaN rows. Not for adopted
+    * files, whose footer bounds may leave NaN out. */
+  private def nanFreeCounts(upperIds: Seq[Int], schema: StructType): Seq[(Int, Long)] =
+    upperIds.filter(id => schema.fields(id - 1).dataType match {
+      case FloatType | DoubleType => true
+      case _ => false
+    }).map(_ -> 0L)
+
   /** graft's committed stat rendering → an Appendix-D bound: timestamps
     * are epoch-micros strings (TZ-independent by design), dates ISO,
     * numerics/strings Spark string casts; anything unparseable simply
@@ -1323,8 +1346,8 @@ object IcebergWriter {
     scala.util.Try(dt match {
       case IntegerType => boundBytes(s.trim.toInt, IntegerType)
       case LongType => boundBytes(s.trim.toLong, LongType)
-      case FloatType => boundBytes(s.trim.toFloat, FloatType)
-      case DoubleType => boundBytes(s.trim.toDouble, DoubleType)
+      case FloatType if !s.trim.toFloat.isNaN => boundBytes(s.trim.toFloat, FloatType)
+      case DoubleType if !s.trim.toDouble.isNaN => boundBytes(s.trim.toDouble, DoubleType)
       case StringType => boundBytes(s, StringType)
       case DateType => boundBytes(java.sql.Date.valueOf(s.trim), DateType)
       case TimestampType => boundBytes(s.trim.toLong, LongType) // epoch micros
@@ -1401,12 +1424,12 @@ object IcebergWriter {
         val out = scala.collection.mutable.ListBuffer.empty[ManifestRef]
         while (reader.hasNext) {
           val r = reader.next()
-          // COUNT fields are optional in minimal/foreign lists (r18 —
-          // add_files resumes tables other writers published); SEMANTIC
+          // COUNT fields are optional in minimal/foreign lists
+          // (add_files resumes tables other writers published); SEMANTIC
           // fields (content, sequence numbers, snapshot id) stay
           // strict — a null content silently misclassifying a delete
           // manifest as data would resurrect rows far from the parse
-          // site (review r18)
+          // site
           def optNum(name: String): Option[Long] =
             if (r.getSchema.getField(name) == null) None
             else r.get(name) match { case n: Number => Some(n.longValue); case _ => None }
@@ -1420,11 +1443,10 @@ object IcebergWriter {
           // bounded avro read, resume-time only) rather than degrading
           // to 0 — commitManifest re-publishes these as the refs' true
           // counts, and a durable n_files=0 on a manifest that has
-          // files mis-informs every foreign planner thereafter (review
-          // r18 advice). ADDED entries only (status 1 — the field the
+          // files mis-informs every foreign planner thereafter. ADDED
+          // entries only (status 1 — the field the
           // counts mean); an unreadable manifest degrades to 0 for ITS
           // counts alone, never collapsing the whole resumed lineage
-          // (review r19)
           lazy val recounted: (Long, Long) = scala.util.Try {
             val rdr = new org.apache.avro.file.DataFileReader[GenericRecord](
               new org.apache.avro.mapred.FsInput(new HPath(mPath), conf),

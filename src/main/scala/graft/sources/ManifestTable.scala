@@ -2,6 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import java.nio.charset.StandardCharsets
 import java.util.UUID
@@ -641,7 +644,7 @@ object ManifestTable {
     * are excluded (NaN/-0.0 ordering traps), strings are handled at
     * collection time (dropped beyond 64 chars — a truncated max is not an
     * upper bound). */
-  private[sources] def statsEligible(dt: DataType): Boolean = dt match {
+  private[graft] def statsEligible(dt: DataType): Boolean = dt match {
     case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
          org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType |
          org.apache.spark.sql.types.DateType | org.apache.spark.sql.types.TimestampType |
@@ -664,41 +667,32 @@ object ManifestTable {
     case _ => c.cast("string")
   }
 
-  /** Inverse of [[statEncode]]. */
-  private[sources] def statDecode(c: Column, dt: DataType): Column = dt match {
-    case org.apache.spark.sql.types.TimestampType =>
-      org.apache.spark.sql.functions.timestamp_micros(c.cast("long"))
-    case _ => c.cast(dt)
-  }
+  /** graft's [[SkippingKernel]] adapter: one file's committed stat
+    * strings (manifest lines or checkpoint maps) as [[ColBounds]],
+    * decoded as the inverse of [[statEncode]] — timestamps from epoch
+    * micros, everything else through Spark's string cast. Bounds of
+    * columns outside [[statsEligible]] are never trusted; counts are. */
+  private[graft] final class GraftStatsFacts(schema: StructType) extends Serializable {
+    private val eligible: Map[String, DataType] = schema.fields
+      .collect { case f if statsEligible(f.dataType) => f.name -> f.dataType }.toMap
+    @transient private lazy val casts: Map[String, Expression] = eligible.map { case (c, dt) =>
+      c -> Cast(BoundReference(0, org.apache.spark.sql.types.StringType, true), dt, Some("UTC"))
+    }
 
-  /** The shared skipping evaluation: one local row per file carrying its
-    * stat strings for `statCols` (`mn_<c>`/`mx_<c>`, null when absent),
-    * filtered by `cond` — returns the files that MAY match. Both pruning
-    * paths ([[statsPrune]], [[statsPruneByPredicate]]) go through here so
-    * stat-encoding fixes apply once. */
-  private def filesMayMatch(spark: SparkSession, files: Seq[String], statCols: Seq[String],
-      stats: FileStats, cond: Column): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val raw = StructType(
-      StructField("__idx", org.apache.spark.sql.types.LongType, false) +:
-        statCols.flatMap(c => Seq(
-          StructField(s"mn_$c", org.apache.spark.sql.types.StringType, true),
-          StructField(s"mx_$c", org.apache.spark.sql.types.StringType, true),
-          StructField(s"nu_$c", org.apache.spark.sql.types.LongType, true),
-          StructField(s"rw_$c", org.apache.spark.sql.types.LongType, true))).toIndexedSeq)
-    val rows: java.util.List[Row] = files.zipWithIndex.map { case (f, i) =>
-      Row.fromSeq(i.toLong +: statCols.flatMap { c =>
-        stats.get(f).flatMap(_.get(c)) match {
-          case Some(s) => Seq(s.min.orNull, s.max.orNull,
-            s.nulls.map(java.lang.Long.valueOf).orNull,
-            s.rows.map(java.lang.Long.valueOf).orNull)
-          case None => Seq(null, null, null, null)
-        }
-      }.toIndexedSeq)
-    }.asJava
-    val hit = spark.createDataFrame(rows, raw).filter(cond)
-      .select("__idx").collect().map(_.getLong(0)).toSet
-    files.zipWithIndex.collect { case (f, i) if hit(i) => f }
+    private def decode(c: String, s: String): Option[Any] =
+      try eligible(c) match {
+        case org.apache.spark.sql.types.TimestampType => Some(s.toLong)
+        case _ => Option(casts(c).eval(InternalRow(UTF8String.fromString(s))))
+      } catch { case scala.util.control.NonFatal(_) => None }
+
+    def apply(statOf: String => Option[ColStat]): FileFacts = new FileFacts {
+      def bounds(c: String): ColBounds = statOf(c) match {
+        case None => ColBounds.Unknown
+        case Some(s) if eligible.contains(c) =>
+          ColBounds(s.min.flatMap(decode(c, _)), s.max.flatMap(decode(c, _)), s.nulls, s.rows)
+        case Some(s) => ColBounds(None, None, s.nulls, s.rows)
+      }
+    }
   }
 
   /** Per-writer batch high-water marks committed at `v`. */
@@ -767,10 +761,10 @@ object ManifestTable {
     *      against the partition values parsed from committed paths, so
     *      pruned partitions' files never even enter the reader's file
     *      index (at 100 TB the index itself is driver memory);
-    *   2. stats skipping: the same predicate→may-contain translation
-    *      the DELETE/MERGE/UPDATE localization scans use
-    *      ([[skippingCond]]) drops every file whose committed per-column
-    *      (min, max) range proves `pred` cannot match.
+    *   2. stats skipping: the [[SkippingKernel]] every file index and
+    *      the DELETE/MERGE/UPDATE localization scans use drops every
+    *      file whose committed per-column (min, max, nulls) prove `pred`
+    *      cannot match.
     *
     * Both passes are sound-not-complete: unsupported predicate shapes
     * and missing stats degrade to "open the file", and `pred` is
@@ -808,16 +802,13 @@ object ManifestTable {
   /** DISTRIBUTED pruning off the parquet checkpoint — the step past the
     * driver-parse boundary SCALE.md names: when version `v` carries a
     * checkpoint, a filtered read never materializes the full file list
-    * or stats on the driver. The may-contain condition
-    * ([[skippingCond]], the exact evaluator every localization scan
-    * uses) is evaluated BY EXECUTORS over the checkpoint's columnar
-    * stats maps; only the surviving `(rel, dv)` rows come back —
-    * driver memory is O(survivors), not O(table). Partition-layer,
-    * generated-column, and Bloom pruning then run on the bounded
-    * survivor list with the existing driver-side machinery (same final
-    * set as the text path: these prunes are independent sound filters,
-    * so their order is immaterial). Any surprise degrades to `None` →
-    * the text path. */
+    * or stats on the driver. The [[SkippingKernel]] runs BY EXECUTORS
+    * over the checkpoint's columnar stats maps; only the surviving
+    * `(rel, dv)` rows come back — driver memory is O(survivors), not
+    * O(table). Partition-tuple and Bloom pruning then run on the
+    * bounded survivor list on the driver (same final set as the text
+    * path: these prunes are independent sound filters, so their order
+    * is immaterial). Any surprise degrades to `None` → the text path. */
   private[graft] def checkpointPrune(spark: SparkSession, root: String, v: Long,
       pred: Column): Option[(Seq[String], FileDvs, Option[String], Boolean)] = {
     import org.apache.spark.sql.functions.{col => cl}
@@ -832,28 +823,33 @@ object ManifestTable {
       val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
       val layout = parsePartitionBy(hdr)
       val props = parseProperties(hdr)
-      val augmented = derivedPartitionPred(spark, pred, props, layout.getOrElse(Nil))
-        .map(pred && _).getOrElse(pred)
-      val statCols = schema.fields.filter(f => statsEligible(f.dataType)).map(_.name).toSeq
+      val resolved = withDerivedPartitions(spark, SkippingKernel.resolve(spark, pred, schema),
+        schema, props, layout.getOrElse(Nil))
+      val kernel = SkippingKernel(Seq(resolved))
+      val facts = new GraftStatsFacts(schema)
       val dvCols = Seq("dv_storage", "dv_payload", "dv_offset", "dv_size", "dv_cardinality")
       val frame = spark.read.parquet(p.toString).filter(cl("kind") === "file")
-        .select((cl("rel") +: dvCols.map(cl)) ++ statCols.flatMap(c => Seq(
-          cl("mins").getItem(c).as(s"mn_$c"), cl("maxs").getItem(c).as(s"mx_$c"),
-          cl("nullcnt").getItem(c).as(s"nu_$c"), cl("rowcnt").getItem(c).as(s"rw_$c"))): _*)
-      val filtered = skippingCond(
-          org.apache.spark.sql.GraftSqlBridge.predTree(augmented), schema) match {
-        case Some(cond) => frame.filter(cond)
-        case None => frame
-      }
+      // the stat-map entries of the kernel's columns only, four per
+      // column after `rel` and the five dv fields
+      val cols = kernel.columns.toSeq
+      val statAt = cols.zipWithIndex.map { case (c, i) => c -> (6 + 4 * i) }.toMap
+      val filtered =
+        if (!kernel.canPrune) frame
+        else frame.select((cl("rel") +: dvCols.map(cl)) ++ cols.flatMap(c =>
+            Seq("mins", "maxs", "nullcnt", "rowcnt").map(m => cl(m).getItem(c))): _*)
+          .filter { (r: Row) =>
+            def long(j: Int) = if (r.isNullAt(j)) None else Some(r.getLong(j))
+            kernel.mayMatch(facts(c => statAt.get(c).map(j =>
+              ColStat(Option(r.getString(j)), Option(r.getString(j + 1)), long(j + 2), long(j + 3)))))
+          }
       val survivors = filtered.select(("rel" +: dvCols).map(cl): _*).collect()
-      var rels: Seq[String] = survivors.map(_.getString(0)).toSeq
       val dvs: FileDvs = survivors.collect {
         case r if !r.isNullAt(1) =>
           r.getString(0) -> DvEntry(r.getString(1), r.getString(2), r.getLong(3),
             r.getLong(4), r.getLong(5))
       }.toMap
-      rels = partitionPrune(spark, rels, layout.getOrElse(Nil), schema, augmented)
-      rels = bloomPrune(spark, root, rels, augmented, schema, props)
+      val rels = pruneFiles(spark, root, survivors.map(_.getString(0)).toSeq, schema,
+        layout.getOrElse(Nil), Map.empty, props, Seq(resolved))
       val keep = rels.toSet
       Some((rels, dvs.view.filterKeys(keep).toMap, Some(schemaJson), layout.isDefined))
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -902,12 +898,40 @@ object ManifestTable {
       s"subset of version $v", dvs = parseDvs(lines).filter { case (r, _) => relSet(r) })
   }
 
-  /** [[statsPruneByPredicate]] for the scan integration — the same
-    * may-contain evaluator DELETE/MERGE/readWhere prune with. */
-  private[graft] def pruneByStats(spark: SparkSession, files: Seq[String], pred: Column,
-      schema: StructType, stats: FileStats, root: String = "",
-      properties: Map[String, String] = Map.empty): Seq[String] =
-    statsPruneByPredicate(spark, files, pred, schema, stats, root, properties)
+  /** The files of one snapshot that may hold a row for which the
+    * resolved `pred` is true — what every read, DML localization and
+    * [[GraftFileIndex]] opens. Three sound passes: partition-only
+    * conjuncts over each distinct partition tuple
+    * ([[SkippingKernel.partitionMatches]]), then the [[SkippingKernel]]
+    * over committed stats, with Bloom sidecars as its equality facts
+    * (only files whose min/max admit a looked-up value load theirs). */
+  private[graft] def pruneFiles(spark: SparkSession, root: String, files: Seq[String],
+      schema: StructType, layout: Seq[String], stats: FileStats,
+      properties: Map[String, String], filters: Seq[Expression]): Seq[String] = {
+    val afterPart = SkippingKernel.partitionConjuncts(filters, layout) match {
+      case Some(p) if files.nonEmpty => SkippingKernel.partitionMatches[String](files,
+        parsePartitionValues(_, layout), partitionSchema(schema, layout), p, sessionTz(spark))
+      case _ => files
+    }
+    val kernel = SkippingKernel(filters)
+    if (!kernel.canPrune || afterPart.isEmpty) return afterPart
+    val facts = new GraftStatsFacts(schema)
+    val bloom = bloomFacts(spark, root, schema, properties)
+    afterPart.filter { rel =>
+      val base = facts(c => stats.get(rel).flatMap(_.get(c)))
+      kernel.mayMatch(bloom.fold(base)(b => new FileFacts {
+        def bounds(c: String): ColBounds = base.bounds(c)
+        override def mayEqual(c: String, v: Any): Boolean = b(rel, c, v)
+      }))
+    }
+  }
+
+  private def sessionTz(spark: SparkSession): String =
+    spark.sessionState.conf.sessionLocalTimeZone
+
+  private def partitionSchema(schema: StructType, layout: Seq[String]): StructType =
+    StructType(layout.map(c => schema.fields.find(_.name == c).getOrElse(
+      throw new IllegalStateException(s"partition column $c is missing from the table schema"))))
 
   /** [[parsePartitionValues]] for the scan integration. */
   private[graft] def partitionValuesOf(rel: String, partCols: Seq[String]): Seq[Option[String]] =
@@ -917,21 +941,21 @@ object ManifestTable {
     * partitioned?). Falls back to the full file list when the table
     * carries no schema (nothing to type the stats against). Predicates
     * on the SOURCE column of a generated partition column first gain
-    * derived partition conjuncts ([[derivedPartitionPred]]) so a `ts`
+    * derived partition conjuncts ([[withDerivedPartitions]]) so a `ts`
     * range prunes `day` partitions the query never mentioned. */
   private def pruneForPredicate(spark: SparkSession, lines: Seq[String],
-      pred: Column, root: String = ""): (Seq[String], Option[String], Boolean) = {
+      pred: Column, root: String): (Seq[String], Option[String], Boolean) = {
     val schemaJson = parseSchema(lines)
     val layout = parsePartitionBy(lines)
     val files = lines.filterNot(_.startsWith("#"))
     val pruned = schemaJson match {
       case Some(json) =>
         val schema = DataType.fromJson(json).asInstanceOf[StructType]
-        val augmented = derivedPartitionPred(spark, pred,
-          parseProperties(lines), layout.getOrElse(Nil)).map(pred && _).getOrElse(pred)
-        val afterPart = partitionPrune(spark, files, layout.getOrElse(Nil), schema, augmented)
-        statsPruneByPredicate(spark, afterPart, augmented, schema, parseStats(lines),
-          root, parseProperties(lines))
+        val props = parseProperties(lines)
+        val resolved = withDerivedPartitions(spark, SkippingKernel.resolve(spark, pred, schema),
+          schema, props, layout.getOrElse(Nil))
+        pruneFiles(spark, root, files, schema, layout.getOrElse(Nil), parseStats(lines),
+          props, Seq(resolved))
       case None => files
     }
     (pruned, schemaJson, layout.isDefined)
@@ -942,17 +966,18 @@ object ManifestTable {
     * MONOTONIC non-decreasing (`CAST(c AS DATE)`, `date_trunc(unit, c)`,
     * `year(c)`), a top-level conjunct bounding `c` implies a bound on
     * `p` — `c ∈ [L, U]` ⇒ `p ∈ [f(L), f(U)]` — so the derived conjunct
-    * can only DROP files no matching row lives in. Used for pruning
-    * only, never as a row filter; any shape or evaluation doubt skips
-    * the derivation (costs pruning, never correctness). */
-  private def derivedPartitionPred(spark: SparkSession, pred: Column,
-      properties: Map[String, String], layout: Seq[String]): Option[Column] = {
+    * can only DROP files no matching row lives in. Returns the resolved
+    * `pred` with the derived conjuncts ANDed on — for pruning only,
+    * never as a row filter; any shape or evaluation doubt skips the
+    * derivation (costs pruning, never correctness). */
+  private def withDerivedPartitions(spark: SparkSession, pred: Expression, schema: StructType,
+      properties: Map[String, String], layout: Seq[String]): Expression = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions._
     val gens = generatedExprs(properties).filter { case (c, _) => layout.contains(c) }
-    if (gens.isEmpty) return None
-    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-    // (source column, literal → f(literal), f's result type)
+    if (gens.isEmpty) return pred
+    val tz = Some(sessionTz(spark))
+    // (source column, literal → f(literal))
     def monoOf(sql: String): Option[(String, Literal => Option[Literal])] =
       try spark.sessionState.sqlParser.parseExpression(sql) match {
         case c: Cast if c.child.isInstanceOf[UnresolvedAttribute] &&
@@ -970,38 +995,38 @@ object ManifestTable {
       } catch { case _: Exception => None }
     val monos: Seq[(String, String, Literal => Option[Literal])] =
       gens.toSeq.flatMap { case (p, sql) => monoOf(sql).map { case (src, f) => (p, src, f) } }
-    if (monos.isEmpty) return None
-    val derived = Seq.newBuilder[Column]
-    org.apache.spark.sql.GraftSqlBridge.conjuncts(pred).foreach { conj =>
-      val e = org.apache.spark.sql.GraftSqlBridge.expression(conj)
+    if (monos.isEmpty) return pred
+    val derived = SkippingKernel.conjuncts(pred).flatMap { conj =>
       // (source attr name, literal, op) in both orientations
-      val shape: Option[(String, Literal, String)] = e match {
-        case GreaterThanOrEqual(a: UnresolvedAttribute, l: Literal) => Some((a.name, l, ">="))
-        case GreaterThan(a: UnresolvedAttribute, l: Literal) => Some((a.name, l, ">="))
-        case LessThanOrEqual(a: UnresolvedAttribute, l: Literal) => Some((a.name, l, "<="))
-        case LessThan(a: UnresolvedAttribute, l: Literal) => Some((a.name, l, "<="))
-        case EqualTo(a: UnresolvedAttribute, l: Literal) => Some((a.name, l, "="))
-        case GreaterThanOrEqual(l: Literal, a: UnresolvedAttribute) => Some((a.name, l, "<="))
-        case GreaterThan(l: Literal, a: UnresolvedAttribute) => Some((a.name, l, "<="))
-        case LessThanOrEqual(l: Literal, a: UnresolvedAttribute) => Some((a.name, l, ">="))
-        case LessThan(l: Literal, a: UnresolvedAttribute) => Some((a.name, l, ">="))
-        case EqualTo(l: Literal, a: UnresolvedAttribute) => Some((a.name, l, "="))
+      val shape: Option[(String, Literal, String)] = conj match {
+        case GreaterThanOrEqual(a: AttributeReference, l: Literal) => Some((a.name, l, ">="))
+        case GreaterThan(a: AttributeReference, l: Literal) => Some((a.name, l, ">="))
+        case LessThanOrEqual(a: AttributeReference, l: Literal) => Some((a.name, l, "<="))
+        case LessThan(a: AttributeReference, l: Literal) => Some((a.name, l, "<="))
+        case EqualTo(a: AttributeReference, l: Literal) => Some((a.name, l, "="))
+        case GreaterThanOrEqual(l: Literal, a: AttributeReference) => Some((a.name, l, "<="))
+        case GreaterThan(l: Literal, a: AttributeReference) => Some((a.name, l, "<="))
+        case LessThanOrEqual(l: Literal, a: AttributeReference) => Some((a.name, l, ">="))
+        case LessThan(l: Literal, a: AttributeReference) => Some((a.name, l, ">="))
+        case EqualTo(l: Literal, a: AttributeReference) => Some((a.name, l, "="))
         case _ => None
       }
-      shape.foreach { case (attr, l, op) =>
-        if (l.value != null) monos.foreach { case (p, src, f) =>
-          if (src.equalsIgnoreCase(attr)) f(l).foreach { fl =>
-            val pa = UnresolvedAttribute(p)
-            derived += org.apache.spark.sql.GraftSqlBridge.column(op match {
-              case ">=" => GreaterThanOrEqual(pa, fl)
-              case "<=" => LessThanOrEqual(pa, fl)
-              case _ => EqualTo(pa, fl)
-            })
-          }
+      shape.toSeq.filter(_._2.value != null).flatMap { case (attr, l, op) =>
+        monos.filter(_._2.equalsIgnoreCase(attr)).flatMap { case (p, _, f) =>
+          val pt = schema(p).dataType
+          f(l).flatMap(fl => if (fl.dataType == pt) Some(fl) else evalFold(Cast(fl, pt, tz)))
+            .map { fl =>
+              val pa = AttributeReference(p, pt)()
+              op match {
+                case ">=" => GreaterThanOrEqual(pa, fl)
+                case "<=" => LessThanOrEqual(pa, fl)
+                case _ => EqualTo(pa, fl)
+              }
+            }
         }
       }
     }
-    derived.result().reduceOption(_ && _)
+    (pred +: derived).reduce[Expression](And(_, _))
   }
 
   /** Fold a literal-only expression to a typed literal; None on any
@@ -1012,38 +1037,8 @@ object ManifestTable {
     try {
       val v = e.eval(org.apache.spark.sql.catalyst.InternalRow.empty)
       if (v == null) None
-      else Some(org.apache.spark.sql.catalyst.expressions.Literal.create(v, e.dataType))
+      else Some(org.apache.spark.sql.catalyst.expressions.Literal(v, e.dataType))
     } catch { case _: Exception => None }
-
-  /** Manifest-layer partition pruning: evaluate the partition-only
-    * top-level conjuncts of `pred` against the partition values parsed
-    * from committed file paths. A conjunct whose references are not a
-    * subset of the layout contributes nothing (sound degradation); a
-    * conjunct that is NULL for a partition tuple prunes it, matching row
-    * filter semantics (NULL never matches). Non-deterministic conjuncts
-    * (e.g. `col("p") > rand()`) are skipped — evaluated once per
-    * partition tuple at prune time but re-evaluated per row by the
-    * re-filter, they could prune files whose rows would have matched
-    * (the same guard [[GraftFileIndex.prunePartitions]] applies). */
-  private def partitionPrune(spark: SparkSession, files: Seq[String], layout: Seq[String],
-      schema: StructType, pred: Column): Seq[String] = {
-    import org.apache.spark.sql.GraftSqlBridge
-    if (layout.isEmpty || files.isEmpty) return files
-    lazy val probe = {
-      val typeOf = schema.fields.map(f => f.name -> f.dataType).toMap
-      spark.createDataFrame(new java.util.ArrayList[Row](),
-        StructType(layout.map(c => StructField(c,
-          typeOf.getOrElse(c, org.apache.spark.sql.types.StringType)))))
-    }
-    val partConjs = GraftSqlBridge.conjuncts(pred).filter { c =>
-      GraftSqlBridge.refs(c).exists(rs => rs.nonEmpty && rs.subsetOf(layout.toSet)) &&
-        GraftSqlBridge.isDeterministicOver(probe, c)
-    }
-    if (partConjs.isEmpty) return files
-    val p = partConjs.reduce(_ && _)
-    val keep = filesMatching(spark, files, layout, schema, p)
-    files.filter(keep)
-  }
 
   /** The version a reader at wall-clock `tsMillis` would have seen —
     * Delta's `timestampAsOf` resolution. Commit time is the manifest
@@ -1399,7 +1394,7 @@ object ManifestTable {
     val fs = fsFor(spark, root)
     val tag = UUID.randomUUID().toString.take(8)
     val scratch = new Path(s"${root.stripSuffix("/")}/$StagingDir/$tag")
-    // r19: staged files carry timestamps as INT64 micros (scoped to THIS
+    // staged files carry timestamps as INT64 micros (scoped to THIS
     // write — session default untouched): legacy INT96 publishes no
     // usable footer statistics, so the footer-based commit stats below
     // could never state timestamp bounds. Value-identical on read;
@@ -1433,7 +1428,7 @@ object ManifestTable {
       else stats.map { case (rel, cols) =>
         rel -> cols.map { case (c, s) => toLogicalName.getOrElse(c, c) -> s }
       }
-    // r19: stats come from the just-written footers (metadata reads);
+    // stats come from the just-written footers (metadata reads);
     // the read-back scan remains the fallback for any footer the fast
     // path cannot state
     val staged = collectStatsFromFooters(spark, root, moved, df.schema, physPartitionBy)
@@ -1572,7 +1567,7 @@ object ManifestTable {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** r19 (guide §6): per-file stats from the staged parquet FOOTERS the
+  /** Per-file stats from the staged parquet FOOTERS the
     * write itself just produced, instead of a full read-back scan of
     * every staged byte — the same min/max/null-count/row-count, one
     * metadata read per file. At 100 TB this halves every commit's I/O
@@ -1585,7 +1580,7 @@ object ManifestTable {
     * anything else keeps its null/row counts and degrades to "may
     * match". Rendering matches [[statEncode]] value-for-value
     * (timestamps as epoch micros, dates ISO, decimals plain) so
-    * [[statDecode]] round-trips identically. Strings beyond
+    * [[GraftStatsFacts]] round-trips identically. Strings beyond
     * [[MaxStringStatLen]] drop their bounds like the scan path.
     * Returns None (caller falls back to the scan path) on any footer
     * error or when `spark.graft.commitStats.footers` is set false. */
@@ -1677,7 +1672,7 @@ object ManifestTable {
 
   /** Does the parquet physical+logical type state exactly the TABLE
     * type's value space (so a footer bound is a true bound under
-    * [[statDecode]])? Mirrors what Spark's own writer produces for each
+    * [[GraftStatsFacts]])? Mirrors what Spark's own writer produces for each
     * [[statsEligible]] type; anything foreign refuses bounds. */
   private def commitStatTypeOk(pt: org.apache.parquet.schema.PrimitiveType,
       dt: DataType): Boolean = {
@@ -1721,7 +1716,7 @@ object ManifestTable {
   }
 
   /** Render a footer stat value exactly as [[statEncode]] would have
-    * (value-equality under [[statDecode]], not byte-equality). */
+    * (value-equality under [[GraftStatsFacts]], not byte-equality). */
   private def renderCommitStat(v: AnyRef, dt: DataType): Option[String] = {
     import org.apache.spark.sql.types._
     dt match {
@@ -2826,73 +2821,34 @@ object ManifestTable {
     } finally in.close()
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Drop candidate files whose Bloom sidecar proves a top-level
-    * equality / IN conjunct cannot match. Query literals are CAST to the
-    * column type before hashing (the writer hashed the stored type, so
-    * `col("id") === 42` with an int literal over a bigint column still
-    * agrees); any cast/eval doubt keeps the file. */
-  private def bloomPrune(spark: SparkSession, root: String, files: Seq[String],
-      pred: Column, schema: StructType,
-      properties: Map[String, String]): Seq[String] = {
-    if (files.isEmpty) return files
+  /** Bloom sidecars as the [[SkippingKernel]]'s equality facts:
+    * `(rel, col, v)` is false only when `rel`'s sidecar proves `v`
+    * absent from `col`. The writer hashed the stored type, and the
+    * kernel hands `v` in the column's own type (the resolved predicate
+    * already cast the literal, and the kernel maps a widened value back),
+    * so `col("id") === 42` over a bigint column and `intCol === 42L`
+    * agree. Each sidecar loads, and each looked-up value hashes, at most
+    * once, on demand. None when the table declares no Bloom columns. */
+  private def bloomFacts(spark: SparkSession, root: String, schema: StructType,
+      properties: Map[String, String]): Option[(String, String, Any) => Boolean] = {
     val conf = bloomColumns(properties)
-    if (conf.isEmpty) return files
-    import org.apache.spark.sql.GraftSqlBridge
-    import org.apache.spark.sql.GraftSqlBridge.{PredAttr, PredConst, PredFn, PredNode}
-    def hashOf(n: PredNode, dt: DataType): Option[Long] = n match {
-      case PredConst(c) =>
-        try GraftSqlBridge.foldedConstant(c).flatMap { e =>
-          val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
-          val casted =
-            if (e.dataType == dt) e
-            else org.apache.spark.sql.catalyst.expressions.Cast(e, dt, tz)
-          Option(casted.eval(null)).map { v =>
-            new org.apache.spark.sql.catalyst.expressions.XxHash64(
-              Seq(org.apache.spark.sql.catalyst.expressions.Literal(v, dt)))
-              .eval(null).asInstanceOf[Long]
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-      case _ => None
-    }
-    def attrField(n: PredNode): Option[StructField] = n match {
-      case PredAttr(name) => schema.fields.find(_.name == name)
-      case _ => None
-    }
-    def conjunctsOf(n: PredNode): Seq[PredNode] = n match {
-      case PredFn("and", args) => args.flatMap(conjunctsOf)
-      case other => Seq(other)
-    }
-    def bloomed(f: StructField): Boolean =
-      conf.contains(f.name) && bloomSupported(f.dataType)
-    val checks: Seq[(String, Seq[Long])] =
-      conjunctsOf(GraftSqlBridge.predTree(pred)).flatMap {
-        case PredFn("=", Seq(l, r)) =>
-          (attrField(l).map((_, r)) orElse attrField(r).map((_, l))).flatMap {
-            case (f, v) if bloomed(f) =>
-              hashOf(v, f.dataType).map(h => physicalNameOf(f) -> Seq(h))
-            case _ => None
-          }
-        case PredFn("in", args) if args.length >= 2 =>
-          attrField(args.head).flatMap {
-            case f if bloomed(f) =>
-              val hs = args.tail.map(hashOf(_, f.dataType))
-              if (hs.exists(_.isEmpty)) None
-              else Some(physicalNameOf(f) -> hs.map(_.get))
-            case _ => None
-          }
-        case _ => None
-      }
-    if (checks.isEmpty) return files
+    val bloomed = schema.fields
+      .filter(f => conf.contains(f.name) && bloomSupported(f.dataType))
+      .map(f => f.name -> f).toMap
+    if (bloomed.isEmpty) return None
     val fs = fsFor(spark, root)
-    files.filter { rel =>
-      loadBloomSidecar(fs, root, rel) match {
-        case None => true
-        case Some(m) => checks.forall { case (physCol, hashes) =>
-          m.get(physCol) match {
-            case None => true
-            case Some(bf) => hashes.exists(bf.mightContainLong)
+    val loaded = scala.collection.mutable.HashMap
+      .empty[String, Option[Map[String, org.apache.spark.util.sketch.BloomFilter]]]
+    val hashes = scala.collection.mutable.HashMap.empty[(String, Any), Long]
+    Some { (rel, c, v) =>
+      bloomed.get(c).forall { f =>
+        loaded.getOrElseUpdate(rel, loadBloomSidecar(fs, root, rel))
+          .flatMap(_.get(physicalNameOf(f))).forall { bf =>
+            bf.mightContainLong(hashes.getOrElseUpdate((c, v),
+              new org.apache.spark.sql.catalyst.expressions.XxHash64(
+                Seq(org.apache.spark.sql.catalyst.expressions.Literal(v, f.dataType)))
+                .eval(null).asInstanceOf[Long]))
           }
-        }
       }
     }
   }
@@ -3154,170 +3110,46 @@ object ManifestTable {
   }
 
   /** Data skipping for keyed mutations (Delta's stats-based file
-    * skipping): drop candidate files whose committed per-column (min, max)
-    * range cannot intersect the updates' observed key range. Evaluated
-    * through Catalyst over a tiny local frame (one row per candidate, the
-    * stat strings cast back to the column's type — the exact inverse of
-    * the cast that rendered them), so comparison semantics are Spark's
-    * own. Files without stats for a column are never pruned on it. On a
-    * key-sorted layout ([[graft.operators.Etl.zorderWrite]] /
-    * [[compact]]`(zorderBy)`), a narrow merge localizes to the few files
-    * whose range it overlaps — without this, the localization scan opens
-    * every candidate at least for its footer. */
-  private def statsPrune(spark: SparkSession, candidates: Seq[String], keyCols: Seq[String],
-      schema: StructType, stats: FileStats,
-      updates: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, lit, max, min, when}
+    * skipping): the updates' observed key range `k >= lo AND k <= hi`,
+    * resolved against the table schema, through [[pruneFiles]] — files
+    * whose committed key range cannot intersect it are never opened. A
+    * key column with no non-null update value matches nothing (an
+    * equality join on a null key never matches). On a key-sorted layout
+    * ([[graft.operators.Etl.zorderWrite]] / [[compact]]`(zorderBy)`), a
+    * narrow merge localizes to the few files whose range it overlaps. */
+  private def statsPrune(spark: SparkSession, root: String, candidates: Seq[String],
+      keyCols: Seq[String], schema: StructType, stats: FileStats,
+      properties: Map[String, String], updates: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.functions.{col, lit, max, min}
     val statCols = keyCols.filter(k => statsEligible(schema(k).dataType))
     if (statCols.isEmpty || candidates.isEmpty) return candidates
     if (!candidates.exists(f => stats.get(f).exists(m => statCols.exists(m.contains))))
       return candidates // no stats anywhere — skip the bounds job too
     val aggs = statCols.flatMap(k => Seq(min(col(k)).as(s"lo_$k"), max(col(k)).as(s"hi_$k")))
     val bounds = updates.agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
-    val cond = statCols.zipWithIndex.map { case (k, i) =>
-      val dt = schema(k).dataType
+    val range = statCols.zipWithIndex.map { case (k, i) =>
       val lo = bounds.get(2 * i); val hi = bounds.get(2 * i + 1)
-      if (lo == null || hi == null)
-        // the updates carry no non-null value for this key column: an
-        // equality join on a null key matches nothing, so NO file can
-        // contain a match
-        lit(false)
-      else when(col(s"nu_$k").isNotNull && col(s"rw_$k").isNotNull &&
-          col(s"nu_$k") === col(s"rw_$k"), lit(false)) // all-null keys: no equi-match
-        .otherwise(when(col(s"mn_$k").isNull || col(s"mx_$k").isNull, lit(true))
-          .otherwise(!(statDecode(col(s"mx_$k"), dt) < lit(lo) ||
-            statDecode(col(s"mn_$k"), dt) > lit(hi))))
+      if (lo == null || hi == null) lit(false) else col(k) >= lit(lo) && col(k) <= lit(hi)
     }.reduce(_ && _)
-    filesMayMatch(spark, candidates, statCols, stats, cond)
+    pruneFiles(spark, root, candidates, schema, Nil, stats, properties,
+      Seq(SkippingKernel.resolve(spark, range, schema)))
   }
 
-  /** Best-effort translation of a row predicate into a file-skipping
-    * condition over the per-file stat columns `mn_<c>`/`mx_<c>` (strings,
-    * cast back to their column types): the result is TRUE whenever the
-    * file MAY contain a matching row. Sound by construction — every
-    * unsupported shape (negation, IS NULL, UDFs, column-to-column
-    * comparisons…) translates to TRUE (never skip), and every comparison
-    * guards on missing stats. The supported shapes (=, <, <=, >, >=, IN,
-    * AND, OR against literals) are the ones Delta's data skipping
-    * translates, for the same reason: they bound a column by constants. */
-  /** OR-combine as a BALANCED tree: a plain `reduce(_ || _)` builds a
-    * left-deep chain whose ColumnNode→Expression conversion recurses
-    * per node — an IN list of a few thousand values (the banded dedup
-    * index probe ships ~9 per batch doc) then overflows the stack.
-    * log-depth keeps arbitrarily wide IN lists convertible. */
-  private def orBalanced(cs: Seq[Column]): Column =
-    if (cs.length == 1) cs.head
-    else {
-      val (l, r) = cs.splitAt(cs.length / 2)
-      orBalanced(l) || orBalanced(r)
-    }
-
-  private[sources] def skippingCond(n: org.apache.spark.sql.GraftSqlBridge.PredNode,
-      schema: StructType): Option[Column] = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    import org.apache.spark.sql.GraftSqlBridge.{PredAttr, PredConst, PredFn, PredNode}
-    def statName(x: PredNode): Option[String] = x match {
-      case PredAttr(name) if schema.fieldNames.contains(name) &&
-        statsEligible(schema(name).dataType) => Some(name)
-      case _ => None
-    }
-    def constCol(x: PredNode): Option[Column] = x match {
-      case PredConst(c) => Some(c)
-      case _ => None
-    }
-    // may-contain for `name op constant`, with a missing-stats guard; a
-    // KNOWN all-null column (nulls == rows) cannot match any value
-    // comparison, even with no bounds stored — prune it first
-    def ranged(name: String, cond: (Column, Column) => Column): Column = {
-      val dt = schema(name).dataType
-      val (mn, mx) = (statDecode(col(s"mn_$name"), dt), statDecode(col(s"mx_$name"), dt))
-      when(col(s"nu_$name").isNotNull && col(s"rw_$name").isNotNull &&
-          col(s"nu_$name") === col(s"rw_$name"), lit(false))
-        .otherwise(when(col(s"mn_$name").isNull || col(s"mx_$name").isNull, lit(true))
-          .otherwise(cond(mn, mx)))
-    }
-    // `name op const` comparisons, with the flipped (`const op name`) form
-    // normalized by mirroring the operator
-    def cmp(op: String, l: PredNode, r: PredNode): Option[Column] =
-      (statName(l), constCol(r), statName(r), constCol(l)) match {
-        case (Some(name), Some(v), _, _) => Some(op match {
-          case "=" => ranged(name, (mn, mx) => mn <= v && mx >= v)
-          case "<" => ranged(name, (mn, _) => mn < v)
-          case "<=" => ranged(name, (mn, _) => mn <= v)
-          case ">" => ranged(name, (_, mx) => mx > v)
-          case ">=" => ranged(name, (_, mx) => mx >= v)
-        })
-        case (_, _, Some(name), Some(v)) => Some(op match {
-          case "=" => ranged(name, (mn, mx) => mn <= v && mx >= v)
-          case "<" => ranged(name, (_, mx) => mx > v) // v < c  ⇔  c > v
-          case "<=" => ranged(name, (_, mx) => mx >= v)
-          case ">" => ranged(name, (mn, _) => mn < v)
-          case ">=" => ranged(name, (mn, _) => mn <= v)
-        })
-        case _ => None
-      }
-    n match {
-      // None = tautology (cannot prune on this subtree): true && x = x,
-      // true || x = true
-      case PredFn("and", Seq(l, r)) =>
-        (skippingCond(l, schema), skippingCond(r, schema)) match {
-          case (Some(a), Some(b)) => Some(a && b)
-          case (a, b) => a.orElse(b)
-        }
-      case PredFn("or", Seq(l, r)) =>
-        for { a <- skippingCond(l, schema); b <- skippingCond(r, schema) } yield a || b
-      case PredFn(op @ ("=" | "<" | "<=" | ">" | ">="), Seq(l, r)) => cmp(op, l, r)
-      case PredFn("in", args) if args.length >= 2 && args.tail.forall(constCol(_).isDefined) =>
-        statName(args.head).map { name =>
-          args.tail.map { v =>
-            val vc = constCol(v).get
-            ranged(name, (mn, mx) => mn <= vc && mx >= vc)
-          } match { case cs => orBalanced(cs) }
-        }
-      // null-count skipping (Delta's nullCount): a file with zero nulls
-      // cannot match IS NULL; a file that is ALL null cannot match
-      // IS NOT NULL. Unknown counts (older manifests) may always match.
-      case PredFn("isnull", Seq(a)) => statName(a).map { name =>
-        when(col(s"nu_$name").isNull, lit(true)).otherwise(col(s"nu_$name") > 0)
-      }
-      case PredFn("isnotnull", Seq(a)) => statName(a).map { name =>
-        when(col(s"nu_$name").isNull || col(s"rw_$name").isNull, lit(true))
-          .otherwise(col(s"nu_$name") < col(s"rw_$name"))
-      }
-      case _ => None
-    }
-  }
-
-  /** Drop files whose stats prove `pred` cannot match any of their rows —
-    * [[delete]]'s localization skip, the DELETE analog of [[statsPrune]].
-    * Evaluated over the same tiny local frame (one row per file). */
-  private def statsPruneByPredicate(spark: SparkSession, files: Seq[String],
-      pred: Column, schema: StructType,
-      stats: FileStats, root: String = "",
-      properties: Map[String, String] = Map.empty): Seq[String] = {
-    val afterStats =
-      if (files.isEmpty || stats.isEmpty) files
-      else skippingCond(org.apache.spark.sql.GraftSqlBridge.predTree(pred), schema) match {
-        case None => files // tautological translation prunes nothing
-        case Some(cond) =>
-          val statCols = schema.fields.filter(f => statsEligible(f.dataType)).map(_.name).toSeq
-          filesMayMatch(spark, files, statCols, stats, cond)
-      }
-    // bloom pruning after min/max: point-lookup conjuncts drop survivors
-    // whose sidecar proves the value absent
-    if (root.isEmpty) afterStats
-    else bloomPrune(spark, root, afterStats, pred, schema, properties)
+  /** The files DELETE/UPDATE localize `pred` in: [[pruneFiles]] over
+    * `pred` resolved against the snapshot's schema. */
+  private def candidatesFor(spark: SparkSession, root: String, snap: Snapshot,
+      pred: Column): Seq[String] = snap.schemaJson match {
+    case Some(json) =>
+      val schema = DataType.fromJson(json).asInstanceOf[StructType]
+      pruneFiles(spark, root, snap.files, schema, snap.partitionBy.getOrElse(Nil), snap.stats,
+        snap.properties, Seq(SkippingKernel.resolve(spark, pred, schema)))
+    case None => snap.files
   }
 
   /** The files [[delete]]'s localization scan would open for `pred` after
     * stats skipping — exposed for specs and capacity planning. */
   private[graft] def deleteCandidates(spark: SparkSession, root: String,
-      pred: Column): Seq[String] = {
-    val snap = snapshot(spark, root)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      throw new IllegalStateException(s"table at $root carries no schema"))).asInstanceOf[StructType]
-    statsPruneByPredicate(spark, snap.files, pred, schema, snap.stats, root, snap.properties)
-  }
+      pred: Column): Seq[String] = candidatesFor(spark, root, snapshot(spark, root), pred)
 
   /** The candidate files [[merge]]'s localization scan would open for
     * these updates, after partition and stats pruning — exposed for specs
@@ -3328,9 +3160,9 @@ object ManifestTable {
     val schema = DataType.fromJson(snap.schemaJson.getOrElse(
       throw new IllegalStateException(s"table at $root carries no schema"))).asInstanceOf[StructType]
     val layout = snap.partitionBy.getOrElse(Nil)
-    statsPrune(spark,
+    statsPrune(spark, root,
       pruneCandidates(spark, snap.files, layout, keyCols, schema, updates),
-      keyCols, schema, snap.stats, updates)
+      keyCols, schema, snap.stats, snap.properties, updates)
   }
 
   /** Row-level MERGE — the keyed copy-on-write upsert, Delta's
@@ -3474,9 +3306,9 @@ object ManifestTable {
       keyCols.foreach(k => require(schema.fieldNames.contains(k),
         s"table at $root has no key column $k"))
       val layout = pre.partitionBy.getOrElse(Nil)
-      val candidates = statsPrune(spark,
+      val candidates = statsPrune(spark, root,
         pruneCandidates(spark, pre.files, layout, keyCols, schema, updates),
-        keyCols, schema, pre.stats, updates)
+        keyCols, schema, pre.stats, pre.properties, updates)
       // localization: which committed files contain a matched key. The
       // collect is bounded by the file count — manifest-scale metadata,
       // the same order as the commit itself.
@@ -3657,11 +3489,11 @@ object ManifestTable {
     val preLayout = snapshot(spark, root)
     require(preLayout.version.nonEmpty, s"delete needs an existing table at $root")
     val layout = preLayout.partitionBy.getOrElse(Nil)
-    // ColumnNode-level refs: the Catalyst conversion wraps the node
-    // opaque, so an expression(...).collect over it finds NO attributes —
-    // which would silently disable this fast path for every predicate
-    val refs = org.apache.spark.sql.GraftSqlBridge.refs(pred)
-    if (layout.nonEmpty && refs.exists(rs => rs.nonEmpty && rs.subsetOf(layout.toSet))) {
+    val partitionAligned = layout.nonEmpty && preLayout.schemaJson.exists { json =>
+      val r = SkippingKernel.resolve(spark, pred, DataType.fromJson(json).asInstanceOf[StructType])
+      r.deterministic && r.references.nonEmpty && r.references.forall(a => layout.contains(a.name))
+    }
+    if (partitionAligned) {
       // metadata-only path: partition-aligned predicate, no data read;
       // evaluated on the freshest snapshot inside the commit loop
       return commitWith(spark, root) { snap =>
@@ -3682,11 +3514,7 @@ object ManifestTable {
       val schemaJson = pre.schemaJson
       // stats skipping first: files whose committed ranges prove the
       // predicate can't match are never opened by the localization scan
-      val candidates = schemaJson match {
-        case Some(json) => statsPruneByPredicate(spark, pre.files, pred,
-          DataType.fromJson(json).asInstanceOf[StructType], pre.stats, root, pre.properties)
-        case None => pre.files
-      }
+      val candidates = candidatesFor(spark, root, pre, pred)
       val touched: Set[String] =
         if (candidates.isEmpty) Set.empty
         else readTagged(spark, root, candidates, schemaJson, layout.nonEmpty, dvs = pre.dvs)
@@ -3775,8 +3603,7 @@ object ManifestTable {
         throw new IllegalStateException(s"table at $root carries no schema"))).asInstanceOf[StructType]
       set.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"update SET references unknown column $c"))
-      val candidates = statsPruneByPredicate(spark, pre.files, pred, schema, pre.stats,
-        root, pre.properties)
+      val candidates = candidatesFor(spark, root, pre, pred)
       val touched: Set[String] =
         if (candidates.isEmpty) Set.empty
         else readTagged(spark, root, candidates, schemaJson, layout.nonEmpty, dvs = pre.dvs)
@@ -3944,11 +3771,7 @@ object ManifestTable {
       val pre = snapshot(spark, root)
       val schemaJson = pre.schemaJson
       val layout = pre.partitionBy.getOrElse(Nil)
-      val candidates = schemaJson match {
-        case Some(json) => statsPruneByPredicate(spark, pre.files, pred,
-          DataType.fromJson(json).asInstanceOf[StructType], pre.stats, root, pre.properties)
-        case None => pre.files
-      }
+      val candidates = candidatesFor(spark, root, pre, pred)
       if (candidates.isEmpty) return None
       val matched = readTagged(spark, root, candidates, schemaJson, layout.nonEmpty,
           dvs = pre.dvs, tagPos = true)
@@ -4010,8 +3833,7 @@ object ManifestTable {
       set.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"update SET references unknown column $c"))
       val layout = pre.partitionBy.getOrElse(Nil)
-      val candidates = statsPruneByPredicate(spark, pre.files, pred, schema, pre.stats,
-        root, pre.properties)
+      val candidates = candidatesFor(spark, root, pre, pred)
       if (candidates.isEmpty) return None
       val hit = coalesce(pred, lit(false))
       val matched = readTagged(spark, root, candidates, schemaJson, layout.nonEmpty,
@@ -4591,31 +4413,18 @@ object ManifestTable {
     }
   }
 
-  /** Files whose partition values satisfy `pred`. The predicate runs as a
-    * real Catalyst expression over a tiny local frame of DISTINCT
-    * partition tuples (cast to the table's declared types) — metadata-
-    * scale work (#partitions rows), the file-pruning analog of Delta's
-    * log replay; the data files themselves are never opened. */
+  /** Files whose partition values satisfy `pred`, which must reference
+    * partition columns only: the exact "whole partition matches" test
+    * of [[replaceWhere]], metadata-only [[delete]] and keyed MERGE
+    * localization, run by [[SkippingKernel.partitionMatches]] once per
+    * distinct tuple — the data files themselves are never opened. */
   private def filesMatching(spark: SparkSession, files: Seq[String], partCols: Seq[String],
       schema: StructType, pred: Column): Set[String] = {
-    import org.apache.spark.sql.functions.col
-    import scala.jdk.CollectionConverters._
-    val typeOf = schema.fields.map(f => f.name -> f.dataType).toMap
-    partCols.foreach(c => require(typeOf.contains(c),
-      s"partition column $c is missing from the table schema"))
-    val tuples = files.map(f => parsePartitionValues(f, partCols))
-    val distinctTuples = tuples.distinct
-    if (distinctTuples.isEmpty) return Set.empty
-    val raw = StructType(StructField("__pt_idx", org.apache.spark.sql.types.LongType, false) +:
-      partCols.map(c => StructField(c, org.apache.spark.sql.types.StringType, true)))
-    val rows: java.util.List[Row] = distinctTuples.zipWithIndex.map { case (vs, i) =>
-      Row.fromSeq(i.toLong +: vs.map(_.orNull))
-    }.asJava
-    val typed = spark.createDataFrame(rows, raw)
-      .select(col("__pt_idx") +: partCols.map(c => col(c).cast(typeOf(c)).as(c)): _*)
-    val hit = typed.filter(pred).select("__pt_idx").collect().map(_.getLong(0)).toSet
-    val idxOf = distinctTuples.zipWithIndex.toMap
-    files.zip(tuples).collect { case (f, t) if hit(idxOf(t)) => f }.toSet
+    val resolved = SkippingKernel.resolve(spark, pred, schema)
+    require(resolved.references.forall(a => partCols.contains(a.name)),
+      s"predicate $pred must reference partition columns [${partCols.mkString(",")}] only")
+    SkippingKernel.partitionMatches[String](files, parsePartitionValues(_, partCols),
+      partitionSchema(schema, partCols), resolved, sessionTz(spark)).toSet
   }
 
   // --------------------------------------------------------------- vacuum

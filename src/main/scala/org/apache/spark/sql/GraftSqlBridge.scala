@@ -24,18 +24,10 @@ object GraftSqlBridge {
     * unresolved) Catalyst tree the analyzer keeps resolving — unlike
     * [[expression]]'s opaque lazy wrapper, whose inner
     * UnresolvedFunctions never resolve when returned from a
-    * FunctionRegistry builder (the r15 composite SQL functions need
+    * FunctionRegistry builder (the composite SQL functions need
     * exactly this). */
   def catalystTree(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
-
-  /** Eager Catalyst conversion of a CONSTANT column (a literal, or casts
-    * over one) — unlike [[expression]]'s lazy wrapper, the result is a
-    * real foldable tree a caller can `eval()` driver-side. None when
-    * conversion fails or the tree is not foldable. */
-  def foldedConstant(c: Column): Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-    scala.util.Try(classic.ColumnNodeToExpressionConverter(c.node))
-      .toOption.filter(_.foldable)
 
   /** The ANALYZED logical plan behind a frame — for analysis rules that
     * splice an engine-composed read (e.g. the DV-honoring Delta scan)
@@ -63,85 +55,5 @@ object GraftSqlBridge {
     val classicDf = df.asInstanceOf[classic.Dataset[Row]]
     ofRows(df.sparkSession, execution.LogicalRDD.fromDataset(
       df.queryExecution.toRdd, classicDf, isStreaming = true))
-  }
-
-  /** Public structural mirror of an UNANALYZED predicate's ColumnNode
-    * tree (Spark 4's Column is a facade over `private[sql] ColumnNode`,
-    * and the Catalyst conversion wraps the whole node opaque — so
-    * libraries that want to inspect `col("a") < 50` must mirror here,
-    * inside the sql package). Only the shapes a data-skipping translator
-    * cares about are distinguished; everything else is [[PredOpaque]]. */
-  sealed trait PredNode
-  /** A function application: lowercased name (`and`, `or`, `=`, `<`…). */
-  final case class PredFn(name: String, args: Seq[PredNode]) extends PredNode
-  /** A single-part unresolved column reference. */
-  final case class PredAttr(name: String) extends PredNode
-  /** A constant: a literal or a cast over one, rebuildable as a Column. */
-  final case class PredConst(column: Column) extends PredNode
-  case object PredOpaque extends PredNode
-
-  def predTree(c: Column): PredNode = convertNode(c.node)
-
-  /** Top-level conjuncts of a predicate, split at the ColumnNode level
-    * (the Catalyst conversion wraps the whole node opaque, so
-    * [[expression]]-side splitting sees no `And`). Each conjunct is
-    * returned as a self-contained Column. */
-  def conjuncts(c: Column): Seq[Column] = c.node match {
-    case f: internal.UnresolvedFunction
-        if f.functionName.toLowerCase(java.util.Locale.ROOT) == "and" =>
-      f.arguments.flatMap(a => conjuncts(Column(a)))
-    case _ => Seq(c)
-  }
-
-  /** Whether `c`, resolved as a filter over `df`, contains only
-    * deterministic expressions. Resolution failure counts as
-    * non-deterministic — callers skip the conjunct, which is sound for
-    * pruning (evaluating a non-deterministic predicate once per
-    * partition tuple at prune time and again per row would prune files
-    * whose rows the re-filter would have kept). */
-  def isDeterministicOver(df: DataFrame, c: Column): Boolean =
-    scala.util.Try {
-      df.filter(c).asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.deterministic
-      }.getOrElse(false)
-    }.getOrElse(false)
-
-  /** The single-part column names an unanalyzed predicate references, or
-    * None when the tree contains a node shape this traversal doesn't
-    * know — the caller must then assume unknown columns are involved.
-    * (Catalyst-side `expression(c).collect` cannot do this: the
-    * conversion wraps the whole ColumnNode opaque, so the Catalyst tree
-    * exposes no attribute children.) */
-  def refs(c: Column): Option[Set[String]] = refsOfNode(c.node)
-
-  private def refsOfNode(n: internal.ColumnNode): Option[Set[String]] = {
-    def union(ns: Seq[internal.ColumnNode]): Option[Set[String]] =
-      ns.foldLeft(Option(Set.empty[String])) { (acc, a) =>
-        for { s <- acc; t <- refsOfNode(a) } yield s ++ t
-      }
-    n match {
-      case f: internal.UnresolvedFunction => union(f.arguments)
-      case a: internal.UnresolvedAttribute => Some(Set(a.nameParts.mkString(".")))
-      case _: internal.Literal => Some(Set.empty)
-      case c: internal.Cast => refsOfNode(c.child)
-      case s: internal.SortOrder => refsOfNode(s.child)
-      case a: internal.Alias => refsOfNode(a.child)
-      case w: internal.CaseWhenOtherwise =>
-        union(w.branches.flatMap(b => Seq(b._1, b._2)) ++ w.otherwise.toSeq)
-      case _ => None
-    }
-  }
-
-  private def convertNode(n: internal.ColumnNode): PredNode = n match {
-    case f: internal.UnresolvedFunction =>
-      PredFn(f.functionName.toLowerCase(java.util.Locale.ROOT), f.arguments.map(convertNode))
-    case a: internal.UnresolvedAttribute if a.nameParts.length == 1 =>
-      PredAttr(a.nameParts.head)
-    case l: internal.Literal => PredConst(Column(l))
-    case c: internal.Cast => convertNode(c.child) match {
-      case _: PredConst => PredConst(Column(c))
-      case _ => PredOpaque
-    }
-    case _ => PredOpaque
   }
 }

@@ -71,6 +71,27 @@ class BloomIndexSpec extends SparkSpec {
       .select("v").head.getLong(0) == 2468L)
   }
 
+  test("a bigint literal over an int column (analyzer-widened) still bloom-prunes") {
+    val root = freshRoot()
+    ManifestTable.append(spark, root, spark.range(1).toDF("id")
+      .withColumn("ik", lit(-1)).withColumn("v", lit(0L)))
+    ManifestTable.setProperty(spark, root, "graft.bloom.ik", "true")
+    ManifestTable.delete(spark, root, col("ik") === -1)
+    ManifestTable.append(spark, root,
+      spark.range(4000).toDF("id")
+        .withColumn("ik", col("id").cast("int"))
+        .withColumn("v", col("id") * 2)
+        .repartition(8, org.apache.spark.sql.functions.pmod(hash(col("id")), lit(8))))
+    val all = ManifestTable.scanState(spark, root).files
+    // resolves to cast(ik as bigint) = 1234L: the kernel hands the bloom 1234 as an int
+    val opened = ManifestTable.readCandidates(spark, root, col("ik") === lit(1234L))
+    assert(opened.size < all.size,
+      s"a widened equality should bloom-prune, opened ${opened.size} of ${all.size}")
+    assert(ManifestTable.readWhere(spark, root, col("ik") === lit(1234L))
+      .select("v").head.getLong(0) == 2468L)
+    assert(ManifestTable.readWhere(spark, root, col("ik").isin(7L, 1234L)).count() == 2)
+  }
+
   test("delete localization bloom-prunes; compaction rebuilds sidecars") {
     val root = freshRoot()
     ManifestTable.append(spark, root, spark.range(1).toDF("id")

@@ -843,8 +843,7 @@ class DeltaLakeSpec extends SparkSpec {
   }
 
   test("lazy snapshot: executors prune checkpoint adds; JSON tail reconciles; DV checkpoint falls back") {
-    import graft.sources.ManifestTable
-    import org.apache.spark.sql.GraftSqlBridge
+    import graft.sources.{ManifestTable, SkippingKernel}
     val root = freshRoot()
     // three files with disjoint id ranges, published as one Delta commit
     ManifestTable.append(spark, root, spark.range(0, 100).toDF("id"))
@@ -861,12 +860,12 @@ class DeltaLakeSpec extends SparkSpec {
     assert(ls.tailLive.isEmpty && ls.tailMasked.isEmpty)
 
     // no translatable predicate → full listing, stats payload elided
-    val all = DeltaLake.pruneCheckpointAdds(spark, ls, None)
+    val all = DeltaLake.pruneCheckpointAdds(spark, ls, Nil)
     assert(all.size >= 3 && all.forall(_.stats.isEmpty) && all.forall(_.size.isDefined))
     // the DISTRIBUTED prune itself: a range predicate drops every add
     // whose bounds exclude it, before any driver-side re-check
     val hit = DeltaLake.pruneCheckpointAdds(spark, ls,
-      Some(GraftSqlBridge.predTree(col("id") >= lit(250L))))
+      Seq(SkippingKernel.resolve(spark, col("id") >= lit(250L), ls.schema)))
     assert(hit.nonEmpty && hit.size < all.size,
       s"expected executors to prune ${all.size} adds down, got ${hit.map(_.path)}")
     assert(hit.forall(_.stats.isDefined) && hit.forall(_.size.isDefined))
@@ -914,9 +913,9 @@ class DeltaLakeSpec extends SparkSpec {
       case Right(l) => l
       case Left(_) => fail("partitioned checkpoint must route lazy")
     }
-    val pAll = DeltaLake.pruneCheckpointAdds(spark, pls, None)
-    val pHit = DeltaLake.pruneCheckpointAdds(spark, pls,
-      Some(GraftSqlBridge.predTree(col("day") === lit(java.sql.Date.valueOf("2024-01-01")))))
+    val pAll = DeltaLake.pruneCheckpointAdds(spark, pls, Nil)
+    val pHit = DeltaLake.pruneCheckpointAdds(spark, pls, Seq(SkippingKernel.resolve(spark,
+      col("day") === lit(java.sql.Date.valueOf("2024-01-01")), pls.schema)))
     assert(pHit.size == 1 && pAll.size == 3,
       s"partition-value prune: ${pHit.map(_.path)} of ${pAll.map(_.path)}")
     val pdf = spark.read.format("graft-delta").load(pRoot)

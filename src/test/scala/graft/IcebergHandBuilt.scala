@@ -26,11 +26,22 @@ object IcebergHandBuilt {
       |    {"id":3,"name":"ts","required":false,"type":"timestamptz"}""".stripMargin
 
   /** Publish a table whose data files are the given (path, format,
-    * rows) triples, schema = `fieldsJson` (default: id, label, ts). */
+    * rows) triples, schema = `fieldsJson` (default: id, label, ts).
+    * `bounds` optionally gives a file (by path) its Appendix-D
+    * `lower_bounds`/`upper_bounds` by field id — and nothing else, the
+    * way a writer that does not track NaN counts publishes them. */
   def publish(root: String, files: Seq[(String, String, Long)],
-      fieldsJson: String = DefaultFieldsJson, lastColumnId: Int = 3): Unit = {
+      fieldsJson: String = DefaultFieldsJson, lastColumnId: Int = 3,
+      bounds: Map[String, Map[Int, (Array[Byte], Array[Byte])]] = Map.empty): Unit = {
+    def kvField(name: String, k: Int) =
+      s"""{"name":"$name","type":["null",{"type":"array","items":{"type":"record",""" +
+        s""""name":"k${k}_v${k + 1}","fields":[{"name":"key","type":"int"},""" +
+        """{"name":"value","type":"bytes"}]}}],"default":null}"""
+    val boundFields =
+      if (bounds.isEmpty) ""
+      else s",\n${kvField("lower_bounds", 126)},\n${kvField("upper_bounds", 129)}"
     val entrySchema = new Schema.Parser().parse(
-      """{"type":"record","name":"manifest_entry","fields":[
+      s"""{"type":"record","name":"manifest_entry","fields":[
         |  {"name":"status","type":"int"},
         |  {"name":"snapshot_id","type":["null","long"],"default":null},
         |  {"name":"sequence_number","type":["null","long"],"default":null},
@@ -40,7 +51,7 @@ object IcebergHandBuilt {
         |    {"name":"file_format","type":"string"},
         |    {"name":"partition","type":{"type":"record","name":"r102","fields":[]}},
         |    {"name":"record_count","type":"long"},
-        |    {"name":"file_size_in_bytes","type":"long"}
+        |    {"name":"file_size_in_bytes","type":"long"}$boundFields
         |  ]}}
         |]}""".stripMargin)
     val entries = files.map { case (path, fmt, n) =>
@@ -52,6 +63,18 @@ object IcebergHandBuilt {
         entrySchema.getField("data_file").schema().getField("partition").schema()))
       dfRec.put("record_count", n)
       dfRec.put("file_size_in_bytes", new java.io.File(path).length())
+      bounds.get(path).foreach { byId =>
+        def kv(field: String, pick: ((Array[Byte], Array[Byte])) => Array[Byte]) = {
+          val item = dfRec.getSchema.getField(field).schema().getTypes.get(1).getElementType
+          val arr = new java.util.ArrayList[GenericRecord]()
+          byId.foreach { case (id, lu) =>
+            val r = new GenericData.Record(item)
+            r.put("key", id); r.put("value", java.nio.ByteBuffer.wrap(pick(lu))); arr.add(r)
+          }
+          dfRec.put(field, arr)
+        }
+        kv("lower_bounds", _._1); kv("upper_bounds", _._2)
+      }
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1); e.put("snapshot_id", 1L); e.put("data_file", dfRec)
       e

@@ -322,9 +322,12 @@ class StatsSkippingSpec extends SparkSpec {
       col("day") === lit("2024-01-01").cast("date") && unix_date(col("day")) > rand())
     assert(mixed.nonEmpty && mixed.forall(_.contains("day=2024-01-01")))
     // the guard itself, both verdicts
-    val probe = spark.range(1).toDF("x")
-    assert(!org.apache.spark.sql.GraftSqlBridge.isDeterministicOver(probe, col("x") > rand()))
-    assert(org.apache.spark.sql.GraftSqlBridge.isDeterministicOver(probe, col("x") > 1))
+    val probe = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.LongType)))
+    assert(!graft.sources.SkippingKernel.usable(
+      graft.sources.SkippingKernel.resolve(spark, col("x") > rand(), probe)))
+    assert(graft.sources.SkippingKernel.usable(
+      graft.sources.SkippingKernel.resolve(spark, col("x") > 1, probe)))
   }
 
   test("readWhere on a version pin skips against THAT version's stats") {
