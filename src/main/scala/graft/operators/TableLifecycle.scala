@@ -931,7 +931,7 @@ object TableLifecycle {
       events.sort("event_id").coalesce(2).write.partitionBy("event_type").orc(s"$root/raw")
       val rawPath = new org.apache.hadoop.fs.Path(s"$root/raw")
       val fs = rawPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = graft.sources.AdoptStats.listDataFiles(fs, rawPath, Seq(".orc"))
+      val files = graft.sources.FooterStats.listDataFiles(fs, rawPath, Seq(".orc"))
         .map(_.getPath.toUri.getPath).sorted
       graft.sources.IcebergWriter.addFiles(spark, s"$root/t", events.schema, files,
         partitionCols = Seq("event_type"), collectStats = true)

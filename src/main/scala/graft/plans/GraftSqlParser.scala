@@ -305,7 +305,7 @@ final case class GraftAddFilesCommand(table: String, sourceDir: String,
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new HPath(sourceDir)
     val fs = root.getFileSystem(conf)
-    val files = graft.sources.AdoptStats
+    val files = graft.sources.FooterStats
       .listDataFiles(fs, fs.makeQualified(root), Seq(".parquet", ".orc"))
       .map(_.getPath.toString).sorted
     require(files.nonEmpty, s"add_files: no parquet/orc files under $sourceDir")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.json4s.{JArray, JBool, JDecimal, JDouble, JInt, JNothing, JNull, JObject, JString, JValue}
 
@@ -1162,7 +1162,7 @@ object DeltaLake {
       case StringType | DateType => Some(jstr(v))
       case FloatType | DoubleType =>
         // FP bounds ride as JSON numbers (both the manifest's
-        // cast-to-string and AdoptStats' toString round-trip exactly);
+        // cast-to-string and FooterStats' toString round-trip exactly);
         // NaN/Infinity are not JSON and would corrupt the stats line —
         // refuse them, the file just never prunes
         Some(v).filter(s =>
@@ -1350,7 +1350,7 @@ object DeltaLake {
     *
     * `collectStats` (Delta's own convert default behavior,
     * surfaced as a flag): a DISTRIBUTED footer pass (one task per
-    * file — the same shape `add_files` uses, [[AdoptStats]]) collects
+    * file — the same shape `add_files` uses, [[FooterStats]]) collects
     * numRecords + per-column min/max/null-counts into each `add`'s
     * `stats` JSON, so the adopted table data-skips immediately instead
     * of waiting for an OPTIMIZE rewrite; absent/invalid footer stats
@@ -1373,21 +1373,21 @@ object DeltaLake {
     // every parquet file under the root (the shared adoption walk —
     // hidden dirs AND files skip: a stray `.part-…-retry`
     // from an aborted committer is invisible to spark.read.parquet)
-    val files = AdoptStats.listDataFiles(fs, qRoot, Seq(".parquet"))
+    val files = FooterStats.listDataFiles(fs, qRoot, Seq(".parquet"))
     require(files.nonEmpty, s"convertToDelta: no parquet files under $base")
     // distributed footer pass, keyed by the file's qualified path —
     // only the data columns carry footer stats (partition columns live
     // in the dirs, their values prune through partitionValues already)
-    val statsOf: Map[String, (Long, AdoptStats.ColStats)] =
+    val statsOf: Map[String, (Long, Map[String, ManifestTable.ColStat])] =
       if (!collectStats) Map.empty
       else {
-        val want = AdoptStats.statTypes(
+        val want = FooterStats.statTypes(
           StructType(schema.fields.filterNot(f => partitionCols.contains(f.name))))
         val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
         val paths = files.map(_.getPath.toString)
         val slices = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
         spark.sparkContext.parallelize(paths, slices)
-          .map(p => p -> AdoptStats.parquet(serConf.value, new Path(p), want))
+          .map(p => p -> FooterStats.parquet(serConf.value, new Path(p), want))
           .collect().toMap
       }
     val now = System.currentTimeMillis()
@@ -1417,9 +1417,13 @@ object DeltaLake {
         .map(c => s"${jstr(c)}:${if (segs(c) == HiveNullPartition) "null" else jstr(segs(c))}")
         .mkString(",")
       val statsField = statsOf.get(st.getPath.toString).flatMap { case (n, cs) =>
-        val colStats = cs.map { case (c, (mn, mx, nulls)) =>
-          c -> ManifestTable.ColStat(mn, mx, nulls, Some(n))
-        }
+        // Delta stats carry no NaN count, and footers from writers
+        // outside Spark (Arrow, parquet-rs, DuckDB) leave NaN out of
+        // max: an adopted float max would hide NaN rows from x > c
+        val colStats = cs.map { case (c, s) => c -> (schema(c).dataType match {
+          case FloatType | DoubleType => s.copy(max = None)
+          case _ => s
+        }) }
         // a file whose footer yields no column stats still publishes
         // its row count — numRecords alone lets planners skip scans
         // for LIMIT/count shapes

@@ -171,14 +171,16 @@ object IcebergTransforms {
 
   /** The spec's `truncate[W]` of a value in Catalyst-internal form:
     * integers floor to the containing W-wide interval's start
-    * (`v - (v mod W)` with floored mod, so negatives truncate DOWN),
+    * (`v - (v mod W)` with floored mod, so negatives truncate DOWN; an
+    * int wraps in int arithmetic like the writer and Java Iceberg),
     * strings keep their first W code points. None = not truncatable
     * here (no pruning). */
   def truncate(value: Any, dt: DataType, w: Int): Option[Any] = dt match {
     case IntegerType | LongType => value match {
       case n: java.lang.Number =>
         val l = n.longValue
-        Some(l - java.lang.Math.floorMod(l, w.toLong))
+        val t = l - java.lang.Math.floorMod(l, w.toLong)
+        Some(if (dt == IntegerType) t.toInt.toLong else t)
       case _ => None
     }
     case StringType => value match {

@@ -233,8 +233,8 @@ object IcebergWriter {
     // a createDataFrame(df.rdd, schema) shape fails LOUD
     // (ClassCastException) on a type drift between caller and table
     // schema; an aliasing select would silently stage parquet
-    // whose physical types diverge (and footerStats would then quietly
-    // fall back, masking the drift). Keep the loud contract.
+    // whose physical types diverge (and the footer stats would then
+    // quietly lose their bounds, masking the drift). Keep the loud contract.
     schema.fields.foreach { f =>
       val actual = df.schema(f.name).dataType
       require(actual == f.dataType,
@@ -245,8 +245,7 @@ object IcebergWriter {
 
   /** Write `df` as ONE parquet file under `root/data/`, with field ids
     * embedded, returning the absolute path. Row count and stats come
-    * from the staged footer (or the caller's aggregate fallback) — the
-    * write itself is the only data pass. */
+    * from the staged footer — the write itself is the only data pass. */
   private def writeDataFile(spark: SparkSession, root: String, df: DataFrame,
       schema: StructType): String = {
     val staged = withIdMetadata(df, schema)
@@ -293,19 +292,19 @@ object IcebergWriter {
     append(spark, root, parts)
   }
 
-  /** A spec field's transform evaluated per ROW (a Scala UDF is fine
-    * here: this is the publication writer's split step, not a query
-    * path — query-side pruning uses the manifest-declared values). */
   /** A spec field's transform value as a CODEGEN column
     * ([[graft.plans.IcebergBucketExpr]]/[[graft.plans.IcebergTruncateExpr]]
     * — the spec-vector-pinned hash compiled into the write pipeline's
     * own WholeStageCodegen stage, no per-row UDF boundary). Ints
     * promote to long before bucketing, the spec's own rule
-    * (Appendix B). */
+    * (Appendix B). String values stage behind a one-character prefix:
+    * Spark writes an empty-string partition value into the NULL
+    * directory (`__HIVE_DEFAULT_PARTITION__`), which would tag a file of
+    * `""` rows as NULL. */
   private def transformValueCol(sf: SpecField, dt: DataType): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.{col, concat, expr, lit}
     val c = col(sf.sourceCol)
-    (IcebergTransforms.bucketWidth(sf.transform), IcebergTransforms.truncateWidth(sf.transform)) match {
+    val v = (IcebergTransforms.bucketWidth(sf.transform), IcebergTransforms.truncateWidth(sf.transform)) match {
       case (Some(n), _) => dt match {
         case IntegerType | LongType | StringType =>
           graft.plans.IcebergTransformExprs.bucket(c, n)
@@ -328,14 +327,16 @@ object IcebergWriter {
       }
       // identity over TIMESTAMP stages as epoch MICROS, not the rendered
       // local string: a zone-less string is ambiguous in a DST fall-back
-      // hour (two instants render identically), which would either
-      // mis-key the stats aggregate or collapse two tuples into one
-      // staging dir; micros are the spec's own partition encoding anyway
+      // hour (two instants render identically), which would collapse
+      // two tuples into one staging dir; micros are the spec's own
+      // partition encoding anyway
       case _ if dt == TimestampType =>
         expr(s"unix_micros(`${sf.sourceCol}`)")
       case _ => c // identity (TIMESTAMP_NTZ is zone-less by definition —
                   // its local rendering is unambiguous and parses back exactly)
     }
+    if (dt == StringType && IcebergTransforms.bucketWidth(sf.transform).isEmpty) concat(lit("s"), v)
+    else v
   }
 
   /** Append one snapshot holding `parts`. */
@@ -348,26 +349,14 @@ object IcebergWriter {
     val entrySchema = manifestEntrySchema(st)
     val dfSchema = entrySchema.getField("data_file").schema()
     val partSchema = dfSchema.getField("partition").schema()
-    val statCols = st.schema.fields.filter(f => f.dataType match {
-      case IntegerType | LongType | FloatType | DoubleType | StringType | DateType => true
-      case _ => false
-    }).toSeq
-    // (abs path, record count, partition tuple, name-keyed stat values):
-    // unpartitioned parts write directly; transform-partitioned parts go
-    // through the single-pass repartition+partitionBy write
-    val staged: Seq[(String, Long, Seq[(SpecField, Any)], Map[String, Any])] =
-      if (st.spec.isEmpty) parts.map { p =>
-        // ONE data pass per part: the write computes the frame; count +
-        // bounds come from the footer the write just produced (instead of
-        // recomputing every part twice more — once for count(), once for
-        // the stats aggregate). The aggregate
-        // stays as the fallback for any footer the fast path refuses.
-        val path = writeDataFile(spark, root, p, st.schema)
-        val agg = footerStats(spark, path, statCols).getOrElse(statsOf(p, statCols))
-        (path, agg("__n").asInstanceOf[Long], Nil, agg)
-      }
-      else parts.flatMap(p => writePartTransformed(spark, root, p, st, statCols))
-    val rows = staged.map { case (path, n, tuple, agg) =>
+    val statTypes = FooterStats.statTypes(st.schema)
+    // (abs path, partition tuple): ONE data pass per part — count and
+    // bounds come from the footer the write just produced
+    val staged: Seq[(String, Seq[(SpecField, Any)])] =
+      if (st.spec.isEmpty) parts.map(p => (writeDataFile(spark, root, p, st.schema), Nil))
+      else parts.flatMap(p => writePartTransformed(spark, root, p, st))
+    val rows = staged.map { case (path, tuple) =>
+      val (n, stats) = FooterStats.parquet(conf, new HPath(path), statTypes)
       val dataFile = new GenericData.Record(dfSchema)
       dataFile.put("content", 0)
       dataFile.put("file_path", path)
@@ -387,51 +376,7 @@ object IcebergWriter {
       dataFile.put("partition", pRec)
       dataFile.put("record_count", n)
       dataFile.put("file_size_in_bytes", fs.getFileStatus(new HPath(path)).getLen)
-      def kvBytes(sch: Schema, pairs: Seq[(Int, Array[Byte])]): AnyRef = {
-        val arr = new java.util.ArrayList[GenericRecord]()
-        val item = sch.getTypes.get(1).getElementType
-        pairs.foreach { case (k, v) =>
-          val r = new GenericData.Record(item)
-          r.put("key", k); r.put("value", java.nio.ByteBuffer.wrap(v)); arr.add(r)
-        }
-        arr
-      }
-      def kvLongs(sch: Schema, pairs: Seq[(Int, Long)]): AnyRef = {
-        val arr = new java.util.ArrayList[GenericRecord]()
-        val item = sch.getTypes.get(1).getElementType
-        pairs.foreach { case (k, v) =>
-          val r = new GenericData.Record(item)
-          r.put("key", k); r.put("value", v); arr.add(r)
-        }
-        arr
-      }
-      // the Iceberg spec forbids NaN in lower/upper bounds. The footer
-      // path already refuses NaN (parquet-mr omits float/double stats
-      // once one is seen), but the statsOf AGGREGATE fallback would
-      // publish NaN as max (Spark orders NaN greatest) — drop such
-      // bounds entirely, like an all-null column's.
-      def noNaN(v: Any): Boolean = v match {
-        case f: java.lang.Float => !f.isNaN
-        case d: java.lang.Double => !d.isNaN
-        case _ => true
-      }
-      val lowers = statCols.flatMap { f =>
-        Option(agg(s"mn_${f.name}")).filter(noNaN).map(v =>
-          (st.schema.fieldIndex(f.name) + 1) -> boundBytes(v, f.dataType))
-      }
-      val uppers = statCols.flatMap { f =>
-        Option(agg(s"mx_${f.name}")).filter(noNaN).map(v =>
-          (st.schema.fieldIndex(f.name) + 1) -> boundBytes(v, f.dataType))
-      }
-      val nullCounts = statCols.map { f =>
-        (st.schema.fieldIndex(f.name) + 1) -> (n - agg(s"ct_${f.name}").asInstanceOf[Long])
-      }
-      dataFile.put("lower_bounds", kvBytes(dfSchema.getField("lower_bounds").schema(), lowers))
-      dataFile.put("upper_bounds", kvBytes(dfSchema.getField("upper_bounds").schema(), uppers))
-      dataFile.put("null_value_counts",
-        kvLongs(dfSchema.getField("null_value_counts").schema(), nullCounts))
-      dataFile.put("nan_value_counts", kvLongs(dfSchema.getField("nan_value_counts").schema(),
-        nanFreeCounts(uppers.map(_._1), st.schema)))
+      putStats(dataFile, st.schema, stats, ownFile = true)
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1) // ADDED
       e.put("snapshot_id", st.snapshotId)
@@ -467,7 +412,7 @@ object IcebergWriter {
     *
     * `collectStats` upgrades the footer pass that is ALREADY
     * opening every file: per-column min/max/null-count translate into
-    * Appendix-D bounds ([[AdoptStats]] — sound degradation when a
+    * Appendix-D bounds ([[FooterStats]] — sound degradation when a
     * footer lacks stats), so an adopted 100 TB table data-skips without
     * waiting for a `rewriteCompact`. Off by default: bounds from
     * arbitrary-writer footers are a trust decision the caller makes.
@@ -602,9 +547,9 @@ object IcebergWriter {
           "— pass only NEW files; re-registering would serve their rows twice")
     }
     val statTypes: Map[String, DataType] =
-      if (collectStats) AdoptStats.statTypes(st.schema) else Map.empty
+      if (collectStats) FooterStats.statTypes(st.schema) else Map.empty
     val slices = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    val metas: Array[(String, String, Long, Long, AdoptStats.ColStats)] =
+    val metas: Array[(String, String, Long, Long, Map[String, ManifestTable.ColStat])] =
       spark.sparkContext.parallelize(files, slices).map { f =>
         val p = new HPath(f)
         val fmt = f.toLowerCase(java.util.Locale.ROOT) match {
@@ -614,15 +559,14 @@ object IcebergWriter {
             s"add_files: unsupported data file format for $f (parquet/orc only)")
         }
         val (n, stats) = fmt match {
-          case "PARQUET" => AdoptStats.parquet(serConf.value, p, statTypes)
-          case _ => AdoptStats.orc(serConf.value, p, statTypes)
+          case "PARQUET" => FooterStats.parquet(serConf.value, p, statTypes)
+          case _ => FooterStats.orc(serConf.value, p, statTypes)
         }
         (p.toString, fmt, n, p.getFileSystem(serConf.value).getFileStatus(p).getLen, stats)
       }.collect()
     st.seq += 1; st.snapshotId += 1; st.version += 1
     val entrySchema = manifestEntrySchema(st)
     val dfSchema = entrySchema.getField("data_file").schema()
-    val fieldIdOf = st.schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
     val rows = metas.toSeq.map { case (path, fmt, n, len, stats) =>
       val dataFile = new GenericData.Record(dfSchema)
       dataFile.put("content", 0)
@@ -633,37 +577,9 @@ object IcebergWriter {
       dataFile.put("partition", pRec)
       dataFile.put("record_count", n)
       dataFile.put("file_size_in_bytes", len)
-      if (stats.nonEmpty) {
-        def kv(field: String, pairs: Seq[(Int, AnyRef)]): Unit = {
-          val sch = dfSchema.getField(field).schema()
-          val item = sch.getTypes.get(1).getElementType
-          val arr = new java.util.ArrayList[GenericRecord]()
-          pairs.foreach { case (k, v) =>
-            val r = new GenericData.Record(item); r.put("key", k); r.put("value", v); arr.add(r)
-          }
-          if (pairs.nonEmpty) dataFile.put(field, arr)
-        }
-        def bounds(pick: ((Option[String], Option[String], Option[Long])) => Option[String]) =
-          stats.toSeq.sortBy(_._1).flatMap { case (c, t) =>
-            for {
-              s <- pick(t); id <- fieldIdOf.get(c); dt <- statTypes.get(c)
-              b <- statBound(s, dt)
-            } yield id -> (java.nio.ByteBuffer.wrap(b): AnyRef)
-          }
-        kv("lower_bounds", bounds(_._1))
-        kv("upper_bounds", bounds(_._2))
-        kv("null_value_counts", stats.toSeq.sortBy(_._1).flatMap { case (c, t) =>
-          for { nn <- t._3; id <- fieldIdOf.get(c) }
-            yield id -> (java.lang.Long.valueOf(nn): AnyRef)
-        })
-        // no nan_value_counts: writers outside Spark (Arrow, parquet-rs,
-        // DuckDB) keep NaN out of footer min/max, so an adopted upper
-        // bound says nothing about NaN rows
-        // top-level columns: value count (incl. nulls) = record count
-        kv("value_counts", stats.toSeq.sortBy(_._1).flatMap { case (c, _) =>
-          fieldIdOf.get(c).map(id => id -> (java.lang.Long.valueOf(n): AnyRef))
-        })
-      }
+      // footers of writers outside Spark (Arrow, parquet-rs, DuckDB)
+      // keep NaN out of min/max: an adopted upper bound certifies nothing
+      putStats(dataFile, st.schema, stats, ownFile = false)
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1) // ADDED
       e.put("snapshot_id", st.snapshotId)
@@ -674,151 +590,15 @@ object IcebergWriter {
     commitManifest(conf, root, st, entrySchema, rows, content = 0, op = "append")
   }
 
-  /** Min/max/non-null-count aggregate expressions per stat column, plus
-    * the row count under `__n` — ONE pass computes every per-file stat
-    * the manifest entry needs. */
-  private def statsAggExprs(statCols: Seq[StructField]) = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    count(lit(1)).as("__n") +: statCols.flatMap(f => Seq(
-      min(col(f.name)).as(s"mn_${f.name}"), max(col(f.name)).as(s"mx_${f.name}"),
-      count(col(f.name)).as(s"ct_${f.name}")))
-  }
-
-  private def statsOf(p: DataFrame, statCols: Seq[StructField]): Map[String, Any] = {
-    val exprs = statsAggExprs(statCols)
-    val r = p.agg(exprs.head, exprs.tail: _*).head()
-    r.schema.fieldNames.zipWithIndex.map { case (nm, i) => nm -> r.get(i) }.toMap
-  }
-
-  /** [[statsOf]]' map, but read from the staged parquet FOOTER the
-    * write itself just produced — a metadata read instead of a second
-    * full pass over the part (ManifestTable commits do the same).
-    * Soundness: the staged file is written by THIS session from
-    * the same frame, and a bound is taken only when the footer's
-    * physical+logical type states the table type's value space exactly
-    * ([[footerTypeOk]]); NaN never reaches a bound (parquet-mr omits
-    * float/double stats once a NaN is seen, and a surfaced NaN refuses
-    * below); ±0.0 bounds may be widened by the parquet writer
-    * (PARQUET-1246) — still true bounds. Returns None (caller falls
-    * back to the aggregate) on any footer error, an absent stat while
-    * rows exist, or `spark.graft.commitStats.footers=false`. */
-  private def footerStats(spark: SparkSession, path: String,
-      statCols: Seq[StructField]): Option[Map[String, Any]] = {
-    if (!spark.conf.get("spark.graft.commitStats.footers", "true").toBoolean) return None
-    // a session that configures parquet footer-stat
-    // truncation writes TRUNCATED-but-sound string bounds — true, but
-    // not the value the aggregate publishes; refuse the fast path so
-    // the two paths stay value-identical.
-    if (statCols.exists(_.dataType == StringType) &&
-      hadoopConf(spark).get("parquet.statistics.truncate.length") != null) return None
-    try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new HPath(path), hadoopConf(spark))
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        import scala.jdk.CollectionConverters._
-        val n = r.getRecordCount
-        val blocks = r.getFooter.getBlocks.asScala.toSeq
-        val out = scala.collection.mutable.Map[String, Any]("__n" -> n)
-        statCols.foreach { f =>
-          val chunks = blocks.flatMap(_.getColumns.asScala.find(c =>
-            c.getPath.size == 1 && c.getPath.toDotString == f.name))
-          val stats = chunks.map(_.getStatistics)
-          if (chunks.size != blocks.size || stats.exists(_ == null) ||
-            stats.exists(!_.isNumNullsSet)) return None
-          val nulls = stats.map(_.getNumNulls).sum
-          out(s"ct_${f.name}") = n - nulls
-          if (nulls == n) { // all-null (or empty) part: no bounds, like min/max
-            out(s"mn_${f.name}") = null; out(s"mx_${f.name}") = null
-          } else {
-            if (stats.exists(!_.hasNonNullValue) ||
-              !footerTypeOk(chunks.head.getPrimitiveType, f.dataType)) return None
-            val ord = Ordering.comparatorToOrdering(
-              stats.head.comparator.asInstanceOf[java.util.Comparator[AnyRef]])
-            val lo = stats.map(_.genericGetMin.asInstanceOf[AnyRef]).min(ord)
-            val hi = stats.map(_.genericGetMax.asInstanceOf[AnyRef]).max(ord)
-            (footerValue(lo, f.dataType), footerValue(hi, f.dataType)) match {
-              case (Some(a), Some(b)) =>
-                out(s"mn_${f.name}") = a; out(s"mx_${f.name}") = b
-              case _ => return None
-            }
-          }
-        }
-        Some(out.toMap)
-      } finally r.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Does the staged footer's type state exactly the table type's value
-    * space (so its bound is the same value the stats aggregate would
-    * have produced)? Subset of the [[statsOf]] column set. */
-  private def footerTypeOk(pt: org.apache.parquet.schema.PrimitiveType,
-      dt: DataType): Boolean = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val lt = pt.getLogicalTypeAnnotation
-    def signedInt(w: Int) = lt match {
-      case null => true
-      case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-        i.isSigned && i.getBitWidth == w
-      case _ => false
-    }
-    dt match {
-      case IntegerType => pt.getPrimitiveTypeName == INT32 && signedInt(32)
-      case LongType => pt.getPrimitiveTypeName == INT64 && signedInt(64)
-      case FloatType => pt.getPrimitiveTypeName == FLOAT
-      case DoubleType => pt.getPrimitiveTypeName == DOUBLE
-      case StringType => pt.getPrimitiveTypeName == BINARY &&
-        lt.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-      case DateType => pt.getPrimitiveTypeName == INT32 &&
-        lt.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation]
-      case _ => false
-    }
-  }
-
-  /** One footer bound as the JVM value [[boundBytes]] expects (what the
-    * stats aggregate's Row would have held). None refuses the footer.
-    * A float/double bound EQUAL to 0.0 also refuses: the
-    * parquet writer widens ±0.0 bounds (PARQUET-1246 — a -0.0 min may
-    * be stored for a column whose true min is +0.0 and vice versa), so
-    * a zero bound is the one value where footer and aggregate can
-    * disagree bit-wise while both stay true; the aggregate fallback
-    * keeps the manifests value-identical across the two paths. */
-  private def footerValue(v: AnyRef, dt: DataType): Option[Any] = dt match {
-    case FloatType => v match {
-      case f: java.lang.Float if !f.isNaN && f.floatValue != 0.0f => Some(f)
-      case _ => None
-    }
-    case DoubleType => v match {
-      case d: java.lang.Double if !d.isNaN && d.doubleValue != 0.0d => Some(d)
-      case _ => None
-    }
-    case IntegerType | LongType => Some(v)
-    case StringType => v match {
-      case b: org.apache.parquet.io.api.Binary => Some(b.toStringUsingUTF8)
-      case _ => None
-    }
-    case DateType => v match {
-      case i: java.lang.Integer =>
-        Some(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(i.longValue)))
-      case _ => None
-    }
-    case _ => None
-  }
-
   /** SINGLE-PASS transform-partitioned write: one
     * repartition-on-the-transform-values shuffle routes every row to
     * its partition tuple's writer and `partitionBy` splits one file per
-    * tuple — the old shape re-filtered the entire part once PER tuple,
-    * so `bucket[64]` cost 64 scans of each part. A second single
-    * aggregate pass (groupBy the same transform columns) computes every
-    * tuple's stats at once. Staged tuple values parse back from the
-    * hive directory names — our own writer's rendering of our own
-    * derived columns, cross-checked against the aggregate's typed keys
-    * (a parse drift fails loud, never mis-tags a file). */
+    * tuple, so `bucket[64]` costs one scan of the part, not 64. Staged
+    * tuple values parse back from the hive directory names — our own
+    * writer's rendering of our own derived columns. Returns each file's
+    * absolute path and partition tuple. */
   private def writePartTransformed(spark: SparkSession, root: String, p: DataFrame,
-      st: State, statCols: Seq[StructField])
-      : Seq[(String, Long, Seq[(SpecField, Any)], Map[String, Any])] = {
+      st: State): Seq[(String, Seq[(SpecField, Any)])] = {
     import org.apache.spark.sql.functions.{col => cl}
     val pvNames = st.spec.map(sf => s"__pv_${sf.name}")
     var withPv = p
@@ -837,13 +617,6 @@ object IcebergWriter {
     ordered
       .repartition(pvNames.map(cl): _*)
       .write.partitionBy(pvNames: _*).parquet(tmp)
-    val aggs = statsAggExprs(statCols)
-    val aggRows = withPv.groupBy(pvNames.map(cl): _*).agg(aggs.head, aggs.tail: _*).collect()
-    val aggByTuple: Map[Seq[Any], Map[String, Any]] = aggRows.map { r =>
-      val key: Seq[Any] = pvNames.indices.map(i => r.get(i))
-      key -> r.schema.fieldNames.drop(pvNames.size).zipWithIndex
-        .map { case (nm, i) => nm -> r.get(pvNames.size + i) }.toMap
-    }.toMap
     val fs = fsOf(base, hadoopConf(spark))
     def leaves(dir: HPath, kvs: List[String]): Seq[(List[String], HPath)] = {
       val entries = fs.listStatus(dir)
@@ -863,12 +636,10 @@ object IcebergWriter {
       val tuple: Seq[(SpecField, Any)] = st.spec.zip(kvs).map { case (sf, kv) =>
         sf -> parseDirValue(st, sf, kv.substring(kv.indexOf('=') + 1))
       }
-      val agg = aggByTuple.getOrElse(tuple.map(_._2), sys.error(
-        s"staged tuple ${tuple.map(_._2)} missing from the stats aggregate — dir-name parse drift"))
       val dest = new HPath(s"$base/data/${java.util.UUID.randomUUID()}.parquet")
       fs.mkdirs(dest.getParent)
       require(fs.rename(partFile, dest), s"rename $partFile -> $dest failed")
-      (dest.toString, agg("__n").asInstanceOf[Long], tuple, agg)
+      (dest.toString, tuple)
     }
     fs.delete(new HPath(tmp), true)
     out
@@ -916,8 +687,7 @@ object IcebergWriter {
   /** One staged hive directory value, typed: bucket ordinals are ints,
     * truncate/identity values carry the source column's type — except
     * zoned TIMESTAMP, which stages (and therefore parses back) as
-    * epoch micros so the value matches the stats aggregate's key with
-    * no timezone or DST ambiguity. */
+    * epoch micros, with no timezone or DST ambiguity. */
   private def parseDirValue(st: State, sf: SpecField, raw: String): Any = {
     if (raw == "__HIVE_DEFAULT_PARTITION__") return null
     val v = unescapeHive(raw)
@@ -931,7 +701,7 @@ object IcebergWriter {
       case FloatType => java.lang.Float.valueOf(v.toFloat)
       case DoubleType => java.lang.Double.valueOf(v.toDouble)
       case BooleanType => java.lang.Boolean.valueOf(v.toBoolean)
-      case StringType => v
+      case StringType => v.substring(1) // staged behind a prefix, see transformValueCol
       case DateType => java.sql.Date.valueOf(v)
       case TimestampType => // staged as epoch micros (DST-proof), see transformValueCol
         java.lang.Long.valueOf(v.toLong)
@@ -1201,8 +971,7 @@ object IcebergWriter {
     dataFile.put("file_format", "PARQUET")
     dataFile.put("partition", new GenericData.Record(dfSchema.getField("partition").schema()))
     // record count from the staged footer, not a second pass over keyRows
-    dataFile.put("record_count", footerStats(spark, dest.toString, Nil)
-      .map(_("__n").asInstanceOf[Long]).getOrElse(keyRows.count()))
+    dataFile.put("record_count", FooterStats.parquet(conf, dest, Map.empty)._1)
     dataFile.put("file_size_in_bytes", fsOf(root, conf).getFileStatus(dest).getLen)
     val eqIds = new java.util.ArrayList[Integer]()
     ids.foreach(i => eqIds.add(i))
@@ -1285,30 +1054,7 @@ object IcebergWriter {
       dataFile.put("partition", pRec)
       dataFile.put("record_count", nRec)
       dataFile.put("file_size_in_bytes", len)
-      def kv(sch: Schema, pairs: Seq[(Int, AnyRef)]): AnyRef = {
-        val arr = new java.util.ArrayList[GenericRecord]()
-        val item = sch.getTypes.get(1).getElementType
-        pairs.foreach { case (k, v) =>
-          val r = new GenericData.Record(item); r.put("key", k); r.put("value", v); arr.add(r)
-        }
-        arr
-      }
-      def boundsOf(pick: ManifestTable.ColStat => Option[String]): Seq[(Int, AnyRef)] =
-        schema.fields.zipWithIndex.flatMap { case (f, i) =>
-          colStats.get(f.name).flatMap(pick).flatMap(statBound(_, f.dataType))
-            .map(b => (i + 1) -> (java.nio.ByteBuffer.wrap(b): AnyRef))
-        }
-      dataFile.put("lower_bounds", kv(dfSchema.getField("lower_bounds").schema(),
-        boundsOf(_.min)))
-      val uppers = boundsOf(_.max)
-      dataFile.put("upper_bounds", kv(dfSchema.getField("upper_bounds").schema(), uppers))
-      dataFile.put("nan_value_counts", kv(dfSchema.getField("nan_value_counts").schema(),
-        nanFreeCounts(uppers.map(_._1), schema)
-          .map { case (id, n) => id -> (java.lang.Long.valueOf(n): AnyRef) }))
-      dataFile.put("null_value_counts", kv(dfSchema.getField("null_value_counts").schema(),
-        schema.fields.zipWithIndex.flatMap { case (f, i) =>
-          colStats.get(f.name).flatMap(_.nulls).map(n => (i + 1) -> (java.lang.Long.valueOf(n): AnyRef))
-        }))
+      putStats(dataFile, schema, colStats, ownFile = true)
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1); e.put("snapshot_id", st.snapshotId)
       e.put("sequence_number", null); e.put("data_file", dataFile)
@@ -1325,18 +1071,43 @@ object IcebergWriter {
     st.snapshotId
   }
 
-  /** `nan_value_counts` for the float/double columns among `upperIds`
-    * (the field ids, 1-based positions in `schema`, whose upper bound is
-    * published) of a file whose stats graft computed from its own rows:
-    * Spark's max sorts NaN greatest and `statBound` refuses NaN, so such
-    * an upper bound certifies a NaN-free file — the fact a reader needs
-    * before trusting it, since `x > c` matches NaN rows. Not for adopted
-    * files, whose footer bounds may leave NaN out. */
-  private def nanFreeCounts(upperIds: Seq[Int], schema: StructType): Seq[(Int, Long)] =
-    upperIds.filter(id => schema.fields(id - 1).dataType match {
-      case FloatType | DoubleType => true
-      case _ => false
-    }).map(_ -> 0L)
+  /** The Appendix-D stats of one data file from its per-column graft
+    * stat strings: `lower_bounds`, `upper_bounds`, `null_value_counts`,
+    * `value_counts` and, for a file graft wrote (`ownFile`),
+    * `nan_value_counts` of 0 for each float/double column with an upper
+    * bound. parquet-mr sorts NaN last with `Double.compare` and its
+    * read-side builder then drops both bounds, so on such a file a present
+    * upper bound certifies no NaN — the fact a reader needs before
+    * trusting it, since `x > c` matches NaN rows. */
+  private def putStats(dataFile: GenericData.Record, schema: StructType,
+      stats: Map[String, ManifestTable.ColStat], ownFile: Boolean): Unit = {
+    def put(field: String, pairs: Seq[(Int, AnyRef)]): Unit = if (pairs.nonEmpty) {
+      val item = dataFile.getSchema.getField(field).schema().getTypes.get(1).getElementType
+      val arr = new java.util.ArrayList[GenericRecord]()
+      pairs.foreach { case (k, v) =>
+        val r = new GenericData.Record(item); r.put("key", k); r.put("value", v); arr.add(r)
+      }
+      dataFile.put(field, arr)
+    }
+    val cols = schema.fields.toSeq.zipWithIndex.flatMap { case (f, i) =>
+      stats.get(f.name).map(s => (i + 1, f.dataType, s))
+    }
+    def bounds(pick: ManifestTable.ColStat => Option[String]): Seq[(Int, AnyRef)] =
+      cols.flatMap { case (id, dt, s) =>
+        pick(s).flatMap(statBound(_, dt)).map(b => id -> (java.nio.ByteBuffer.wrap(b): AnyRef))
+      }
+    def counts(pick: ManifestTable.ColStat => Option[Long]): Seq[(Int, AnyRef)] =
+      cols.flatMap { case (id, _, s) => pick(s).map(n => id -> (java.lang.Long.valueOf(n): AnyRef)) }
+    val uppers = bounds(_.max)
+    put("lower_bounds", bounds(_.min))
+    put("upper_bounds", uppers)
+    put("null_value_counts", counts(_.nulls))
+    put("value_counts", counts(_.rows))
+    if (ownFile) put("nan_value_counts", uppers.collect {
+      case (id, _) if schema.fields(id - 1).dataType == FloatType ||
+        schema.fields(id - 1).dataType == DoubleType => id -> (java.lang.Long.valueOf(0L): AnyRef)
+    })
+  }
 
   /** graft's committed stat rendering → an Appendix-D bound: timestamps
     * are epoch-micros strings (TZ-independent by design), dates ISO,

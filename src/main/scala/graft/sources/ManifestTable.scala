@@ -641,9 +641,8 @@ object ManifestTable {
 
   /** Types whose min/max stats are collected: total-ordered, compactly
     * rendered, and exactly round-trippable through a string cast. Floats
-    * are excluded (NaN/-0.0 ordering traps), strings are handled at
-    * collection time (dropped beyond 64 chars — a truncated max is not an
-    * upper bound). */
+    * are excluded (NaN/-0.0 ordering traps); string bounds past
+    * [[MaxStringStatLen]] chars are not stored. */
   private[graft] def statsEligible(dt: DataType): Boolean = dt match {
     case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
          org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType |
@@ -656,22 +655,12 @@ object ManifestTable {
   private val MaxStatsCols = 12
   private val MaxStringStatLen = 64
 
-  /** Render a stats value TZ-independently: a timestamp's plain string
-    * cast depends on `spark.sql.session.timeZone`, so a session with a
-    * different zone would mis-parse every committed bound and silently
-    * mis-skip files — epoch micros round-trip exactly regardless of zone.
-    * Everything else round-trips through Spark's own string cast. */
-  private[sources] def statEncode(c: Column, dt: DataType): Column = dt match {
-    case org.apache.spark.sql.types.TimestampType =>
-      org.apache.spark.sql.functions.unix_micros(c).cast("string")
-    case _ => c.cast("string")
-  }
-
   /** graft's [[SkippingKernel]] adapter: one file's committed stat
     * strings (manifest lines or checkpoint maps) as [[ColBounds]],
-    * decoded as the inverse of [[statEncode]] — timestamps from epoch
-    * micros, everything else through Spark's string cast. Bounds of
-    * columns outside [[statsEligible]] are never trusted; counts are. */
+    * decoded from the form [[FooterStats]] renders — timestamps from
+    * epoch micros (zone-independent), everything else through Spark's
+    * string cast. Bounds of columns outside [[statsEligible]] are never
+    * trusted; counts are. */
   private[graft] final class GraftStatsFacts(schema: StructType) extends Serializable {
     private val eligible: Map[String, DataType] = schema.fields
       .collect { case f if statsEligible(f.dataType) => f.name -> f.dataType }.toMap
@@ -1350,7 +1339,7 @@ object ManifestTable {
   }
 
   /** What [[stage]] produced: committed-relative paths plus the per-file
-    * column ranges collected from the staged data. */
+    * column stats read from the staged footers. */
   private case class Staged(rels: Seq[String],
       stats: FileStats)
 
@@ -1359,12 +1348,9 @@ object ManifestTable {
     * readers until committed. With `partitionBy`, files land in hive-style
     * subdirs whose relative paths carry the partition values.
     *
-    * Stats collection is one extra column-pruned scan of the just-staged
-    * files (Delta collects the same ranges inline during the write): only
-    * [[statsEligible]] non-partition columns, first [[MaxStatsCols]], and
-    * string values past [[MaxStringStatLen]] chars are dropped per file
-    * (a truncated max would not be an upper bound). Collection failures
-    * degrade to no stats, never to a failed write. */
+    * Stats come from the staged files' parquet footers ([[footerStats]]),
+    * never from a scan of the data. An unreadable footer leaves the
+    * commit without stats, never fails the write. */
   private def stage(spark: SparkSession, root: String, df0: DataFrame,
       partitionBy: Seq[String] = Nil,
       constraints: Map[String, String] = Map.empty,
@@ -1428,27 +1414,16 @@ object ManifestTable {
       else stats.map { case (rel, cols) =>
         rel -> cols.map { case (c, s) => toLogicalName.getOrElse(c, c) -> s }
       }
-    // stats come from the just-written footers (metadata reads);
-    // the read-back scan remains the fallback for any footer the fast
-    // path cannot state
-    val staged = collectStatsFromFooters(spark, root, moved, df.schema, physPartitionBy)
-      .orElse(collectStats(spark, root, moved, df.schema, physPartitionBy)) match {
-      case Some((stats0, nonEmpty)) if nonEmpty.subsetOf(moved.toSet) =>
-        val stats = logicalKeys(stats0)
-        // the stats scan read every staged file's footer anyway; files
-        // with ZERO rows (a delete that emptied its partition, an empty
-        // micro-batch slice) are dropped here — they would otherwise sit
-        // in the manifest forever as stats-less, never-prunable entries.
-        // The subset guard keeps this delete fail-safe: if the scan's
-        // rels don't round-trip onto the moved rels (a path-encoding
-        // regression), NOTHING is deleted rather than everything.
-        val (live, empty) = moved.partition(nonEmpty)
-        empty.foreach(rel =>
-          fs.delete(new Path(s"${root.stripSuffix("/")}/$rel"), false))
-        Staged(live, stats)
-      case Some(_) => Staged(moved, Map.empty) // rel mismatch: keep everything
-      case None => Staged(moved, Map.empty) // degraded: keep everything
-    }
+    val footers =
+      try footerStats(spark, root, moved, df.schema, physPartitionBy)
+      catch { case scala.util.control.NonFatal(_) => Map.empty[String, (Long, Map[String, ColStat])] }
+    // files with ZERO rows (a delete that emptied its partition, an
+    // empty micro-batch slice) are dropped: they would otherwise sit in
+    // the manifest forever as stats-less, never-prunable entries
+    val (empty, live) = moved.partition(rel => footers.get(rel).exists(_._1 == 0L))
+    empty.foreach(rel => fs.delete(new Path(s"${root.stripSuffix("/")}/$rel"), false))
+    val staged = Staged(live, logicalKeys(
+      footers.collect { case (rel, (n, cs)) if n > 0 && cs.nonEmpty => rel -> cs }))
     // bloom sidecars ride the stage: configured columns get per-file
     // point-lookup filters next to the bytes (partition columns carry no
     // in-file bytes to index)
@@ -1518,230 +1493,42 @@ object ManifestTable {
     }
   }
 
-  /** Per-file [[ColStat]] per eligible column — (min, max) as strings
-    * cast by Spark (so the prune-time cast back is an exact round-trip)
-    * plus null/row counts — and the set of files that actually contain
-    * rows. Bounds drop to None (counts kept) when the column is all-null
-    * in the file or a string bound exceeds [[MaxStringStatLen]] (a
-    * truncated max is not an upper bound). None = the scan failed (never
-    * fails the write). */
-  private def collectStats(spark: SparkSession, root: String, rels: Seq[String],
-      schema: StructType, partitionBy: Seq[String])
-      : Option[(FileStats, Set[String])] = {
-    import org.apache.spark.sql.functions.{col, count, max, min}
-    if (rels.isEmpty) return Some((Map.empty, Set.empty))
-    val cols = schema.fields
+  /** Per-file stats of the staged files `rels`, read from the footers
+    * the write just produced ([[FooterStats.parquet]], one metadata read
+    * per file): [[statsEligible]] non-partition columns, the first
+    * [[MaxStatsCols]], and no bounds for a string past
+    * [[MaxStringStatLen]] chars. Up to 64 footers are read concurrently
+    * on the driver (each is ~10 ms of FS latency), more by a distributed
+    * pass. Throws on an unreadable footer. */
+  private def footerStats(spark: SparkSession, root: String, rels: Seq[String],
+      schema: StructType, partitionBy: Seq[String]): Map[String, (Long, Map[String, ColStat])] = {
+    if (rels.isEmpty) return Map.empty
+    val want = schema.fields
       .filter(f => !partitionBy.contains(f.name) && statsEligible(f.dataType))
-      .take(MaxStatsCols)
-    try {
-      val base = root.stripSuffix("/")
-      val dataSchema = StructType(schema.fields.filterNot(f => partitionBy.contains(f.name)))
-      val aggs = org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("__n") +:
-        cols.flatMap(f => Seq(
-          statEncode(min(col(f.name)), f.dataType).as(s"mn_${f.name}"),
-          statEncode(max(col(f.name)), f.dataType).as(s"mx_${f.name}"),
-          count(col(f.name)).as(s"ct_${f.name}"))).toIndexedSeq
-      val rows = spark.read.schema(dataSchema).parquet(rels.map(r => s"$base/$r"): _*)
-        .groupBy(col("_metadata.file_path").as("__file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect() // bounded: one row per staged file
-      val stats = rows.map { r =>
-        val rel = relUnderRoot(root, r.getString(0))
-        val n = r.getLong(1)
-        val colStats = cols.zipWithIndex.map { case (f, i) =>
-          val (mn, mx) = (r.getString(2 + 3 * i), r.getString(3 + 3 * i))
-          val nonNull = r.getLong(4 + 3 * i)
-          val tooLong = f.dataType == org.apache.spark.sql.types.StringType &&
-            (mn == null || mx == null || mn.length > MaxStringStatLen || mx.length > MaxStringStatLen)
-          val bounds =
-            if (mn == null || mx == null || tooLong) (None, None)
-            else (Some(mn), Some(mx))
-          f.name -> ColStat(bounds._1, bounds._2, Some(n - nonNull), Some(n))
-        }.toMap
-        rel -> colStats
-      }.filter(_._2.nonEmpty).toMap
-      // a zero-row file contributes no group at all: present = has rows
-      val nonEmpty = rows.map(r => relUnderRoot(root, r.getString(0))).toSet
-      Some((stats, nonEmpty))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Per-file stats from the staged parquet FOOTERS the
-    * write itself just produced, instead of a full read-back scan of
-    * every staged byte — the same min/max/null-count/row-count, one
-    * metadata read per file. At 100 TB this halves every commit's I/O
-    * (the old stats job re-read the entire staged data); locally it
-    * removes one Spark job (+32 tasks) per commit.
-    *
-    * Soundness: a bound is emitted ONLY when the footer states the
-    * table type's value space exactly ([[commitStatTypeOk]] — signed
-    * int widths, STRING/DATE/DECIMAL annotations, TIMESTAMP micros);
-    * anything else keeps its null/row counts and degrades to "may
-    * match". Rendering matches [[statEncode]] value-for-value
-    * (timestamps as epoch micros, dates ISO, decimals plain) so
-    * [[GraftStatsFacts]] round-trips identically. Strings beyond
-    * [[MaxStringStatLen]] drop their bounds like the scan path.
-    * Returns None (caller falls back to the scan path) on any footer
-    * error or when `spark.graft.commitStats.footers` is set false. */
-  private def collectStatsFromFooters(spark: SparkSession, root: String,
-      rels: Seq[String], schema: StructType, partitionBy: Seq[String])
-      : Option[(FileStats, Set[String])] = {
-    if (rels.isEmpty) return Some((Map.empty, Set.empty))
-    if (!spark.conf.get("spark.graft.commitStats.footers", "true").toBoolean) return None
-    val cols = schema.fields
-      .filter(f => !partitionBy.contains(f.name) && statsEligible(f.dataType))
-      .take(MaxStatsCols)
-    val want = cols.map(f => f.name -> f.dataType).toMap
+      .take(MaxStatsCols).map(f => f.name -> f.dataType).toMap
     val base = root.stripSuffix("/")
-    try {
-      val conf = spark.sessionState.newHadoopConf()
-      val metas: Seq[(String, Long, Map[String, ColStat])] =
-        if (rels.size <= 64) {
-          // driver-side, but CONCURRENT: each footer read is ~10 ms of
-          // FS latency, and a serial loop over a 32-file stage would
-          // cost what the old stats job did — a bounded pool keeps the
-          // fast path actually fast
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, math.max(1, rels.size)))
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          try Await.result(Future.sequence(rels.map(rel => Future {
-            val (n, cs) = footerFileStats(conf, new Path(s"$base/$rel"), want)
-            (rel, n, cs)
-          })), Duration.Inf)
-          finally pool.shutdown()
-        }
-        else { // large stages: distribute the footer reads (addFiles pattern)
-          val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-          val slices = math.min(rels.size,
-            math.max(2, spark.sparkContext.defaultParallelism * 2))
-          spark.sparkContext.parallelize(rels, slices).map { rel =>
-            val (n, cs) = footerFileStats(serConf.value, new Path(s"$base/$rel"), want)
-            (rel, n, cs)
-          }.collect().toSeq
-        }
-      val stats = metas.collect { case (rel, n, cs) if n > 0 && cs.nonEmpty => rel -> cs }.toMap
-      val nonEmpty = metas.collect { case (rel, n, _) if n > 0 => rel }.toSet
-      Some((stats, nonEmpty))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** (recordCount, per-column [[ColStat]]) from one staged parquet
-    * footer; mirrors [[collectStats]]' semantics column for column. */
-  private def footerFileStats(conf: org.apache.hadoop.conf.Configuration, p: Path,
-      want: Map[String, DataType]): (Long, Map[String, ColStat]) = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val n = r.getRecordCount
-      import scala.jdk.CollectionConverters._
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      if (blocks.isEmpty || want.isEmpty || n == 0L) return (n, Map.empty)
-      val out = want.map { case (name, dt) =>
-        val chunks = blocks.flatMap(_.getColumns.asScala.find(c =>
-          c.getPath.size == 1 && c.getPath.toDotString == name))
-        val stats = chunks.map(_.getStatistics)
-        val complete = chunks.size == blocks.size && stats.forall(_ != null)
-        val nulls =
-          if (complete && stats.forall(_.isNumNullsSet)) Some(stats.map(_.getNumNulls).sum)
-          else None
-        val boundsOk = complete && commitStatTypeOk(chunks.head.getPrimitiveType, dt) &&
-          stats.forall(_.hasNonNullValue)
-        val (mn0, mx0) =
-          if (!boundsOk) (None, None)
-          else {
-            val ord = Ordering.comparatorToOrdering(
-              stats.head.comparator.asInstanceOf[java.util.Comparator[AnyRef]])
-            val lo = stats.map(_.genericGetMin.asInstanceOf[AnyRef]).min(ord)
-            val hi = stats.map(_.genericGetMax.asInstanceOf[AnyRef]).max(ord)
-            (renderCommitStat(lo, dt), renderCommitStat(hi, dt))
-          }
-        // a truncated/over-long string max is not a usable bound (scan-path rule)
-        val (mn, mx) =
-          if (dt == org.apache.spark.sql.types.StringType &&
-            (mn0.exists(_.length > MaxStringStatLen) || mx0.exists(_.length > MaxStringStatLen)))
-            (None, None)
-          else (mn0, mx0)
-        name -> ColStat(mn, mx, nulls, Some(n))
+    val conf = spark.sessionState.newHadoopConf()
+    val read: Seq[(String, (Long, Map[String, ColStat]))] =
+      if (rels.size <= 64) {
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, rels.size))
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        try Await.result(Future.sequence(rels.map(rel => Future(
+          rel -> FooterStats.parquet(conf, new Path(s"$base/$rel"), want)))), Duration.Inf)
+        finally pool.shutdown()
+      } else {
+        val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+        val slices = math.min(rels.size, math.max(2, spark.sparkContext.defaultParallelism * 2))
+        spark.sparkContext.parallelize(rels, slices).map(rel =>
+          rel -> FooterStats.parquet(serConf.value, new Path(s"$base/$rel"), want)).collect().toSeq
       }
-      (n, out)
-    } finally r.close()
-  }
-
-  /** Does the parquet physical+logical type state exactly the TABLE
-    * type's value space (so a footer bound is a true bound under
-    * [[GraftStatsFacts]])? Mirrors what Spark's own writer produces for each
-    * [[statsEligible]] type; anything foreign refuses bounds. */
-  private def commitStatTypeOk(pt: org.apache.parquet.schema.PrimitiveType,
-      dt: DataType): Boolean = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.spark.sql.types._
-    val lt = pt.getLogicalTypeAnnotation
-    def signedInt(width: Int) = lt match {
-      case null => true
-      case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-        i.isSigned && i.getBitWidth == width
-      case _ => false
-    }
-    dt match {
-      case IntegerType => pt.getPrimitiveTypeName == INT32 && signedInt(32)
-      case LongType => pt.getPrimitiveTypeName == INT64 && signedInt(64)
-      case ShortType => pt.getPrimitiveTypeName == INT32 && signedInt(16)
-      case ByteType => pt.getPrimitiveTypeName == INT32 && signedInt(8)
-      case BooleanType => pt.getPrimitiveTypeName == BOOLEAN
-      case StringType => pt.getPrimitiveTypeName == BINARY &&
-        lt.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-      case DateType => pt.getPrimitiveTypeName == INT32 &&
-        lt.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation]
-      case TimestampType => pt.getPrimitiveTypeName == INT64 && (lt match {
-        // micros regardless of the adjusted flag: the raw long IS the
-        // epoch-micros Spark stored, exactly what statEncode publishes;
-        // INT96 and milli/nano units refuse (GraftSession pins the
-        // writer to TIMESTAMP_MICROS)
-        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-          t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
-        case _ => false
-      })
-      case d: DecimalType => (lt match {
-        case dec: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-          dec.getScale == d.scale && dec.getPrecision == d.precision
-        case _ => false
-      }) && (pt.getPrimitiveTypeName == INT32 || pt.getPrimitiveTypeName == INT64 ||
-        pt.getPrimitiveTypeName == FIXED_LEN_BYTE_ARRAY || pt.getPrimitiveTypeName == BINARY)
-      case _ => false
-    }
-  }
-
-  /** Render a footer stat value exactly as [[statEncode]] would have
-    * (value-equality under [[GraftStatsFacts]], not byte-equality). */
-  private def renderCommitStat(v: AnyRef, dt: DataType): Option[String] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case IntegerType | LongType | ShortType | ByteType | BooleanType => Some(v.toString)
-      case StringType => v match {
-        case b: org.apache.parquet.io.api.Binary => Some(b.toStringUsingUTF8)
-        case _ => None
-      }
-      case DateType => v match {
-        case i: java.lang.Integer => Some(java.time.LocalDate.ofEpochDay(i.longValue).toString)
-        case _ => None
-      }
-      case TimestampType => v match { // raw INT64 micros = statEncode's unix_micros
-        case l: java.lang.Long => Some(l.toString)
-        case _ => None
-      }
-      case d: DecimalType => (v match {
-        case i: java.lang.Integer => Some(java.math.BigDecimal.valueOf(i.longValue, d.scale))
-        case l: java.lang.Long => Some(java.math.BigDecimal.valueOf(l.longValue, d.scale))
-        case b: org.apache.parquet.io.api.Binary =>
-          Some(new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), d.scale))
-        case _ => None
-      }).map(_.toPlainString)
-      case _ => None
-    }
+    // a string bound past the cap is not stored (the manifest line stays small)
+    read.map { case (rel, (n, cs)) => rel -> ((n, cs.map { case (c, s) =>
+      c -> (if (want(c) == org.apache.spark.sql.types.StringType &&
+        (s.min ++ s.max).exists(_.length > MaxStringStatLen)) s.copy(min = None, max = None)
+      else s)
+    })) }.toMap
   }
 
   private def listFilesRecursive(fs: FileSystem, dir: Path): Seq[FileStatus] =

@@ -1196,11 +1196,13 @@ class DeltaLakeSpec extends SparkSpec {
     assert(addLines.count(_.contains("numRecords\\\":0")) === 1,
       "the empty part file adopts with a zero count, no crash")
     assert(log.contains("minValues") && log.contains("maxValues") && log.contains("nullCount"))
-    // FP bounds ride as JSON numbers too (r19 review: they were
-    // collected then silently dropped at render)
-    assert(log.contains("score\\\":1500"), s"double bounds must land in stats: $log")
+    // FP minima ride as JSON numbers too; FP maxima are not adopted
+    // (Delta stats carry no NaN count, and footers from writers outside
+    // Spark leave NaN out of max, so a max could hide NaN rows from x > c)
+    assert(log.contains("score\\\":1500"), s"double minima must land in stats: $log")
+    assert(!log.contains("score\\\":1573.5"), s"adopted double maxima must not: $log")
     // the published bounds actually skip: id >= 1000 scans one file,
-    // and so does the equivalent DOUBLE-column filter
+    // and so does a DOUBLE-column filter served by the minima
     val got = DeltaLake.read(spark, dir).filter(col("id") >= 1000L)
     assert(got.collect().length === 50)
     def filesScanned(df: org.apache.spark.sql.DataFrame): Option[Long] =
@@ -1209,7 +1211,7 @@ class DeltaLakeSpec extends SparkSpec {
       }
     assert(filesScanned(got).contains(1L),
       s"expected 1 scanned file from adopted stats, got ${filesScanned(got)}")
-    val gotFp = DeltaLake.read(spark, dir).filter(col("score") >= 1500.0)
+    val gotFp = DeltaLake.read(spark, dir).filter(col("score") <= 73.5)
     assert(gotFp.collect().length === 50)
     assert(filesScanned(gotFp).contains(1L),
       s"expected 1 scanned file from adopted FP stats, got ${filesScanned(gotFp)}")

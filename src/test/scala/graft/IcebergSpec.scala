@@ -1535,92 +1535,40 @@ class IcebergSpec extends SparkSpec {
       s"refusal must name the transform: ${e.getMessage}")
   }
 
-  test("r19 footer commit stats: manifests are value-identical to the aggregate path " +
-    "(bounds, null counts, record counts) across type corners") {
+  test("footer commit stats: Inf, NaN and zero bounds and eq-delete record counts") {
     import spark.implicits._
+    import org.apache.spark.sql.types.DoubleType
+    def dec(b: Array[Byte], dt: org.apache.spark.sql.types.DataType): Double =
+      IcebergTable.decodeBound(b, dt).get.toString.toDouble
     // corners: nulls mixed into every stat column, an ALL-null column,
-    // ±Infinity doubles, empty strings, dates — plus an empty part
-    def corner: DataFrame = Seq(
-      (0L, Some("alpha"), Some(1.5), Some(java.sql.Date.valueOf("2020-01-01"))),
-      (1L, Some(""), Some(Double.NegativeInfinity), None),
-      (2L, None, Some(Double.PositiveInfinity), Some(java.sql.Date.valueOf("2031-12-31"))),
-      (3L, Some("zz"), None, Some(java.sql.Date.valueOf("1969-07-20")))
-    ).toDF("id", "name", "score", "d").withColumn("allnull", lit(null).cast("string"))
-    def build(flag: Boolean): graft.sources.IcebergTable.IcebergSnapshot = {
-      val root = freshRoot()
-      spark.conf.set("spark.graft.commitStats.footers", flag.toString)
-      try {
-        IcebergWriter.create(spark, root, Seq(corner, corner.limit(0)))
-        IcebergWriter.addEqualityDeletes(spark, root, Seq(3L).toDF("id"), Seq("id"))
-      } finally spark.conf.unset("spark.graft.commitStats.footers")
-      IcebergTable.snapshot(spark, root)
-    }
-    val (fast, slow) = (build(true), build(false))
-    val (fd, sd) = (fast.dataFiles.sortBy(_.recordCount), slow.dataFiles.sortBy(_.recordCount))
-    assert(fd.size === sd.size && fd.size === 2)
-    fd.zip(sd).foreach { case (a, b) =>
-      assert(a.recordCount === b.recordCount)
-      assert(a.nullCounts === b.nullCounts, s"null counts diverge: ${a.nullCounts} vs ${b.nullCounts}")
-      assert(a.lower.keySet === b.lower.keySet && a.upper.keySet === b.upper.keySet,
-        s"bounded column sets diverge: ${a.lower.keySet} vs ${b.lower.keySet}")
-      a.lower.foreach { case (k, v) => assert(v.sameElements(b.lower(k)), s"lower[$k] bytes diverge") }
-      a.upper.foreach { case (k, v) => assert(v.sameElements(b.upper(k)), s"upper[$k] bytes diverge") }
-    }
-    // the ±Inf double bounds made it through the footer path bit-exactly
-    val live = fd.find(_.recordCount == 4L).get
-    val scoreId = 3 // id=1, name=2, score=3, d=4, allnull=5
-    assert(graft.sources.IcebergTable.decodeBound(live.lower(scoreId),
-      org.apache.spark.sql.types.DoubleType).get === Double.NegativeInfinity)
-    assert(graft.sources.IcebergTable.decodeBound(live.upper(scoreId),
-      org.apache.spark.sql.types.DoubleType).get === Double.PositiveInfinity)
-    // equality-delete record count from the staged footer = the keyRows count
-    assert(fast.deleteFiles.nonEmpty &&
-      fast.deleteFiles.map(_.recordCount) === slow.deleteFiles.map(_.recordCount))
-  }
-
-  test("r20 footer commit stats: zero and NaN corners stay value-identical " +
-    "(a ±0.0 bound refuses the footer path; NaN reaches no bound on either path)") {
-    import spark.implicits._
-    // ±0.0: the parquet writer may WIDEN zero bounds (PARQUET-1246 —
-    // store -0.0 as min / +0.0 as max regardless of which zero the data
-    // held), the one case where a true footer bound can differ bit-wise
-    // from the aggregate's; the footer path must refuse it. NaN: the
-    // Iceberg spec forbids NaN bounds — the aggregate fallback (where
-    // Spark's max orders NaN greatest) must drop them too, keeping
-    // counts.
-    def corner: DataFrame = Seq(
-      (0L, Some(-0.0d), Some(1.0f), Some(Double.NaN)),
-      (1L, Some(0.0d), Some(Float.NaN), Some(2.5d)),
-      (2L, Some(3.5d), None, Some(7.0d))
-    ).toDF("id", "z", "fn", "dn")
-    def build(flag: Boolean): graft.sources.IcebergTable.IcebergSnapshot = {
-      val root = freshRoot()
-      spark.conf.set("spark.graft.commitStats.footers", flag.toString)
-      try IcebergWriter.create(spark, root, Seq(corner))
-      finally spark.conf.unset("spark.graft.commitStats.footers")
-      IcebergTable.snapshot(spark, root)
-    }
-    val (fast, slow) = (build(true), build(false))
-    assert(fast.dataFiles.size === 1 && slow.dataFiles.size === 1)
-    val (a, b) = (fast.dataFiles.head, slow.dataFiles.head)
-    assert(a.recordCount === b.recordCount && a.nullCounts === b.nullCounts)
-    assert(a.lower.keySet === b.lower.keySet && a.upper.keySet === b.upper.keySet,
-      s"bounded column sets diverge: ${a.lower.keySet}/${a.upper.keySet} vs " +
-        s"${b.lower.keySet}/${b.upper.keySet}")
-    a.lower.foreach { case (k, v) => assert(v.sameElements(b.lower(k)), s"lower[$k] diverges") }
-    a.upper.foreach { case (k, v) => assert(v.sameElements(b.upper(k)), s"upper[$k] diverges") }
-    // field ids: id=1, z=2, fn=3, dn=4 — the NaN-carrying columns publish
-    // no NaN bound (fn/dn upper dropped; their non-NaN lowers survive),
-    // and every published float/double bound decodes non-NaN
-    assert(!a.upper.contains(3) && !a.upper.contains(4),
-      "a NaN max must not be published as an upper bound")
-    Seq(a.lower, a.upper).foreach(_.foreach { case (k, v) =>
-      if (k == 2 || k == 3 || k == 4)
-        assert(!java.lang.Double.isNaN(graft.sources.IcebergTable.decodeBound(v,
-          if (k == 3) org.apache.spark.sql.types.FloatType
-          else org.apache.spark.sql.types.DoubleType).get.toString.toDouble))
-    })
-    // null counts still real for the NaN columns (NaN is not null)
-    assert(a.nullCounts.get(3).contains(1L) && a.nullCounts.get(4).contains(0L))
+    // ±Infinity doubles, empty strings, dates, ±0.0 and NaN — plus an empty part
+    val corner = Seq(
+      (0L, Some("alpha"), Some(1.5), Some(java.sql.Date.valueOf("2020-01-01")), -0.0d, 1.0f, Double.NaN),
+      (1L, Some(""), Some(Double.NegativeInfinity), None, 0.0d, Float.NaN, 2.5d),
+      (2L, None, Some(Double.PositiveInfinity), Some(java.sql.Date.valueOf("2031-12-31")), 3.5d,
+        2.0f, 7.0d),
+      (3L, Some("zz"), None, Some(java.sql.Date.valueOf("1969-07-20")), 4.0d, 3.0f, 1.0d)
+    ).toDF("id", "name", "score", "d", "z", "fn", "dn")
+      .withColumn("fn", when(col("id") === 3L, lit(null)).otherwise(col("fn")))
+      .withColumn("allnull", lit(null).cast("string"))
+    val root = freshRoot()
+    IcebergWriter.create(spark, root, Seq(corner, corner.limit(0)))
+    IcebergWriter.addEqualityDeletes(spark, root, Seq(3L).toDF("id"), Seq("id"))
+    val snap = IcebergTable.snapshot(spark, root)
+    assert(snap.dataFiles.map(_.recordCount).sorted === Seq(0L, 4L))
+    // field ids: id=1, name=2, score=3, d=4, z=5, fn=6, dn=7, allnull=8
+    val live = snap.dataFiles.find(_.recordCount == 4L).get
+    assert(dec(live.lower(3), DoubleType) === Double.NegativeInfinity)
+    assert(dec(live.upper(3), DoubleType) === Double.PositiveInfinity)
+    assert(live.nullCounts === Map(1 -> 0L, 2 -> 1L, 3 -> 1L, 4 -> 1L, 5 -> 0L, 6 -> 1L,
+      7 -> 0L, 8 -> 4L))
+    assert(!live.lower.contains(8) && !live.upper.contains(8), "an all-null column has no bounds")
+    // a NaN column has no bounds at all; a zero bound may be the other zero
+    Seq(6, 7).foreach(id => assert(!live.lower.contains(id) && !live.upper.contains(id)))
+    assert(dec(live.lower(5), DoubleType) == 0.0 && dec(live.upper(5), DoubleType) === 4.0)
+    // a float/double upper bound of a file graft wrote certifies no NaN
+    assert(live.nanCounts === Map(3 -> 0L, 5 -> 0L))
+    assert(snap.deleteFiles.map(_.recordCount) === Seq(1L))
+    assert(IcebergTable.read(spark, root).count() === 3L)
   }
 }

@@ -60,21 +60,19 @@ class SkippingParitySpec extends SparkSpec {
     assert(got.count() === 1)
   }
 
-  test("Iceberg add_files: footer bounds that leave out NaN rows never hide them from x > c") {
-    // parquet writers outside Spark (Arrow, parquet-rs, DuckDB) keep NaN
-    // out of footer min/max, so an adopted file's upper bound says
-    // nothing about NaN rows; this file's pages hold NaN, its footer [1, 2]
+  /** One parquet file `dir/f0.parquet` holding double `x` =
+    * `[1.0, 2.0, NaN, NaN]` whose footer says `[1.0, 2.0]`, as parquet
+    * writers outside Spark (Arrow, parquet-rs, DuckDB) write it: they keep
+    * NaN out of footer min/max. */
+  private def foreignNaNFile(dir: String): Unit = {
     import org.apache.parquet.column.{Encoding, statistics}
     import org.apache.parquet.hadoop.ParquetFileWriter
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
     import org.apache.parquet.schema.MessageTypeParser
-    import org.apache.spark.sql.types._
-    val root = freshRoot("icebergadopt")
-    val file = s"$root-raw/f0.parquet"
     val values = Seq(1.0, 2.0, Double.NaN, Double.NaN)
     val pq = MessageTypeParser.parseMessageType("message m { required double x; }")
     val w = new ParquetFileWriter(spark.sparkContext.hadoopConfiguration, pq,
-      new org.apache.hadoop.fs.Path(file))
+      new org.apache.hadoop.fs.Path(s"$dir/f0.parquet"))
     val st = statistics.Statistics.createStats(pq.getColumnDescription(Array("x")).getPrimitiveType)
       .asInstanceOf[statistics.DoubleStatistics]
     values.filterNot(_.isNaN).foreach(st.updateStats)
@@ -90,19 +88,48 @@ class SkippingParitySpec extends SparkSpec {
     w.endColumn()
     w.endBlock()
     w.end(new java.util.HashMap[String, String]())
-    IcebergWriter.addFiles(spark, root, StructType(Seq(StructField("x", DoubleType))),
-      Seq(file), collectStats = true)
-    assert(IcebergTable.snapshot(spark, root).dataFiles.map(_.recordCount) === Seq(4L))
-    assert(IcebergTable.snapshot(spark, root).dataFiles.map(_.nanCounts) === Seq(Map.empty),
-      "an adopted footer bound certifies nothing about NaN")
-    // Spark's parquet row-group filter trusts the same footer, so it is
-    // off here: this checks which files the kernel keeps
-    spark.conf.set("spark.sql.parquet.filterPushdown", "false")
-    try {
-      val got = spark.read.format("graft-iceberg").load(root).filter(col("x") > 5.0)
-      assert(filesScanned(got) === 1L)
-      assert(got.count() === 2, "the NaN rows match x > 5 under Spark's ordering")
-    } finally spark.conf.unset("spark.sql.parquet.filterPushdown")
+  }
+
+  // (verb, read format, adopt the file in dir and return the table root,
+  // what the adopted stats must say): an adopted footer max certifies
+  // nothing about NaN rows
+  private val adoptions: Seq[(String, String, String => String, String => Unit)] = Seq(
+    ("Iceberg add_files", "graft-iceberg", { dir =>
+      val root = freshRoot("icebergadopt")
+      import org.apache.spark.sql.types._
+      IcebergWriter.addFiles(spark, root, StructType(Seq(StructField("x", DoubleType))),
+        Seq(s"$dir/f0.parquet"), collectStats = true)
+      root
+    }, { root =>
+      assert(IcebergTable.snapshot(spark, root).dataFiles.map(_.recordCount) === Seq(4L))
+      assert(IcebergTable.snapshot(spark, root).dataFiles.map(_.nanCounts) === Seq(Map.empty),
+        "an adopted footer bound certifies nothing about NaN")
+    }),
+    ("Delta convertToDelta", "graft-delta", { dir =>
+      assert(DeltaLake.convertToDelta(spark, dir, collectStats = true) === 1L)
+      dir
+    }, { root =>
+      val log = new String(Files.readAllBytes(Paths.get(root, "_delta_log", f"${0}%020d.json")),
+        StandardCharsets.UTF_8)
+      assert(log.contains("numRecords\\\":4") && log.contains("minValues\\\":{\\\"x\\\":1.0}"), log)
+      assert(!log.contains("maxValues"), s"Delta stats carry no NaN count, so no adopted max: $log")
+    }))
+
+  adoptions.foreach { case (verb, format, adopt, checkStats) =>
+    test(s"$verb: footer bounds that leave out NaN rows never hide them from x > c") {
+      val dir = freshRoot("foreignnan")
+      foreignNaNFile(dir)
+      val root = adopt(dir)
+      checkStats(root)
+      // Spark's parquet row-group filter trusts the same footer, so it is
+      // off here: this checks which files the kernel keeps
+      spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+      try {
+        val got = spark.read.format(format).load(root).filter(col("x") > 5.0)
+        assert(filesScanned(got) === 1L)
+        assert(got.count() === 2, "the NaN rows match x > 5 under Spark's ordering")
+      } finally spark.conf.unset("spark.sql.parquet.filterPushdown")
+    }
   }
 
   test("x <=> NULL over an analyzer-widened column keeps the files holding NULLs") {
