@@ -1,49 +1,22 @@
 package graft
 
-import org.apache.spark.scheduler._
-import scala.collection.mutable
-
-/** r19 optimization-round measurement harness (guide §1: measure first).
+/** Per-query measurement harness.
   *
   * For each named query: time PLANNING (analysis→physical) separately from
   * EXECUTION (noop materialize, same as Bench), and attribute execution to
-  * task time vs everything else (driver/scheduler/stage gaps) with a
-  * listener. Prints one TSV row per query:
+  * task time vs everything else (driver/scheduler/stage gaps) with
+  * [[ScaleProbe.Acc]]. Prints one TSV row per query:
   *
   *   name  plan_s  exec_s(min of N)  jobs  stages  tasks  task_time_s
   *   gc_s  shuffle_read_mb  shuffle_write_mb
   *
   * `exec_s − task_time_s/cores` ≫ 0 means the bill is stage scheduling /
   * driver work / serial actions, not executor compute — a different fix
-  * class (fewer jobs/stages) than slow tasks (§2/§3/§4 fixes).
+  * class (fewer jobs/stages) than slow tasks.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.ProfileProbe <regex>"
   */
 object ProfileProbe {
-
-  private final class Agg extends SparkListener {
-    var jobs = 0
-    var stages = 0
-    var tasks = 0
-    var taskTimeMs = 0L
-    var gcMs = 0L
-    var shufReadB = 0L
-    var shufWriteB = 0L
-    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = synchronized {
-      stages += 1
-    }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-      tasks += 1
-      val m = t.taskMetrics
-      if (m != null) {
-        taskTimeMs += m.executorRunTime
-        gcMs += m.jvmGCTime
-        shufReadB += m.shuffleReadMetrics.totalBytesRead
-        shufWriteB += m.shuffleWriteMetrics.bytesWritten
-      }
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -72,11 +45,13 @@ object ProfileProbe {
         (System.nanoTime() - t0) / 1e9
       }
       val execs = (1 to passes).map { _ =>
-        val agg = new Agg
+        val agg = new ScaleProbe.Acc
         spark.sparkContext.addSparkListener(agg)
         val t0 = System.nanoTime()
         Bench.materialize(fn(spark, sfDir))
         val dt = (System.nanoTime() - t0) / 1e9
+        // drain before detaching: task-end events still queued would be lost
+        org.apache.spark.GraftSparkBridge.waitListenerBusEmpty(spark.sparkContext)
         spark.sparkContext.removeSparkListener(agg)
         spark.sharedState.cacheManager.clearCache()
         (dt, agg)
@@ -84,9 +59,9 @@ object ProfileProbe {
       val (execMin, agg) = execs.minBy(_._1)
       def f(v: Double) = (math.round(v * 1000) / 1000.0).toString
       println(Seq(name, f(planTimes.min), f(execMin),
-        agg.jobs, agg.stages, agg.tasks,
-        f(agg.taskTimeMs / 1e3), f(agg.gcMs / 1e3),
-        f(agg.shufReadB / 1e6), f(agg.shufWriteB / 1e6)).mkString("\t"))
+        agg.jobs.get, agg.stages.get, agg.tasks.get,
+        f(agg.runMs.get / 1e3), f(agg.gcMs.get / 1e3),
+        f(agg.shufRead.get / 1e6), f(agg.shufWrite.get / 1e6)).mkString("\t"))
     }
     spark.stop()
   }

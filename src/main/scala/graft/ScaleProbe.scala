@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,26 +31,36 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
 
-  /** Sums task metrics between `reset()` and `snapshot()`. Task-end events
-    * arrive on the listener bus asynchronously; callers quiesce (sleep)
-    * before snapshotting.
+  /** The task-metrics listener: counts jobs started, stages completed and
+    * tasks ended, and sums task run time, GC, shuffle read/write, spill
+    * and input rows (peak execution memory is the max per task) between
+    * `reset()` and a read. Events arrive on the listener bus
+    * asynchronously: drain it with `GraftSparkBridge.waitListenerBusEmpty`
+    * before reading, or queued task-end events are missed.
     */
   final class Acc extends SparkListener {
-    val spillMem, spillDisk, shufWrite, shufRead, inRows, runMs = new AtomicLong
-    val peakMem = new AtomicLong
+    val jobs, stages, tasks, runMs, gcMs, shufRead, shufWrite, spillMem, spillDisk,
+      inRows, peakMem = new AtomicLong
+    override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet(); ()
+    }
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
       val m = t.taskMetrics
       if (m != null) {
+        runMs.addAndGet(m.executorRunTime)
+        gcMs.addAndGet(m.jvmGCTime)
+        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         spillMem.addAndGet(m.memoryBytesSpilled)
         spillDisk.addAndGet(m.diskBytesSpilled)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         inRows.addAndGet(m.inputMetrics.recordsRead)
-        runMs.addAndGet(m.executorRunTime)
         peakMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
       }
     }
-    def reset(): Unit = Seq(spillMem, spillDisk, shufWrite, shufRead, inRows, runMs, peakMem).foreach(_.set(0))
+    def reset(): Unit = Seq(jobs, stages, tasks, runMs, gcMs, shufRead, shufWrite,
+      spillMem, spillDisk, inRows, peakMem).foreach(_.set(0))
   }
 
   private val KeyStride = 1L << 40 // far above any sf key; copies never collide

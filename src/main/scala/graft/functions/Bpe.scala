@@ -316,11 +316,10 @@ object Bpe {
         // distributed loop — hours): keep the N heaviest words under a
         // DETERMINISTIC total order (count desc, word asc) and train
         // locally on them. Approximate by declaration: the merge drift
-        // vs exact is measured in BpeScaleProbe and SCALE.md.
+        // vs exact is in SCALE.md, "BPE vocab-scale training".
         // The truncated table must pass the SAME char gate the local
-        // route enforces (r14 ADVICE: the earlier probe measured the
-        // UNTRUNCATED table, so N heavy long words could still exceed
-        // the driver heap the gate exists to bound) — one tiny
+        // route enforces (N heavy long words could otherwise still
+        // exceed the driver heap the gate exists to bound) — one tiny
         // aggregate over the topN rows, then the distributed trainer
         // takes over ON THE TRUNCATED TABLE when the gate fails, so
         // the learned merges match the local route either way.

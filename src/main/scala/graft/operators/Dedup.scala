@@ -518,98 +518,6 @@ object Dedup {
     cross.union(within).orderBy("a", "b")
   }
 
-  /** PROBE-ONLY (r20, `graft.PpjoinProbe`): candidate-volume stats for
-    * the r19 plan (symmetric full probe prefix, per-row positional
-    * filter, distinct) next to the SHIPPED r20 plan (asymmetric
-    * indexing probe prefix, same per-row filter, distinct) over the
-    * same docArr relation — the before/after evidence the
-    * candidate-join rewrite claims. Also records the r20b exploration
-    * (true accumulated-overlap ∀k check) that was measured and
-    * REJECTED: it prunes ~1% more pairs while shuffling 29-86% more
-    * match rows (no per-row filter before the pair aggregate). Returns
-    * prefix/match/candidate-pair counts per variant plus each
-    * candidate set's true verified pair count (equality = losslessness
-    * proof). Never on a query path. */
-  private[graft] def ppjoinProbeStats(t: Tables, tau: Double): Map[String, Long] = {
-    val groupSizes = textGroups(t).select(col("rep").as("doc_id"), size(col("members")).as("gsz"))
-    val sh = shingleRel(t).join(groupSizes, "doc_id")
-    val dfRel = sh.groupBy("sh").agg(sum(col("gsz")).as("df")).filter(col("df") <= DfCap)
-    val kept = sh.join(dfRel, "sh")
-    val docArr = kept.groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("arr"))
-      .select(col("doc_id"), expr("transform(arr, e -> e.sh)").as("shs"), size(col("arr")).as("n"))
-      .withColumn("plen", col("n") - ceil(lit(tau) * col("n")).cast("int") + lit(1))
-      .withColumn("plen_s", least(col("plen"),
-        col("n") - ceil(lit(2 * tau / (1 + tau)) * col("n") - lit(1e-9)).cast("int") + lit(1)))
-      .persist()
-    try {
-      val prefix = docArr
-        .select(col("doc_id"), col("n"), col("plen_s"),
-          posexplode(slice(col("shs"), lit(1), col("plen"))))
-        .select(col("doc_id"), col("n"), col("plen_s"),
-          (col("pos") + 1).as("p"), col("col").as("sh"))
-      // r19 variant: symmetric full prefixes, per-row filter, distinct
-      val r19matched = prefix.as("x").join(prefix.as("y"),
-          col("x.sh") === col("y.sh") && col("x.doc_id") < col("y.doc_id") &&
-            least(col("x.n"), col("y.n")) >= lit(tau) * greatest(col("x.n"), col("y.n")) &&
-            (lit(1) + least(col("x.n") - col("x.p"), col("y.n") - col("y.p"))).cast("double")
-              >= lit(tau / (1 + tau)) * (col("x.n") + col("y.n")) - lit(1e-9))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      // r20 variant: indexing probe prefix + pair-level bound
-      val probe = prefix.filter(col("p") <= col("plen_s"))
-        .select(col("doc_id"), col("n"), col("p"), col("sh"))
-      val index = prefix.select(col("doc_id"), col("n"), col("p"), col("sh"))
-      // r20 variant — the SHIPPED [[ngramPpjoinAt]] candidate shape
-      val r20matched = probe.as("x").join(index.as("y"),
-          col("x.sh") === col("y.sh") &&
-            (col("x.n") < col("y.n") ||
-              (col("x.n") === col("y.n") && col("x.doc_id") < col("y.doc_id"))) &&
-            col("x.n") >= lit(tau) * col("y.n") &&
-            (lit(1) + least(col("x.n") - col("x.p"), col("y.n") - col("y.p"))).cast("double")
-              >= lit(tau / (1 + tau)) * (col("x.n") + col("y.n")) - lit(1e-9))
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("a"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("b"))
-      val r20cand = r20matched.distinct()
-      def verified(cand: DataFrame): Long = cand
-        .join(docArr.select(col("doc_id").as("a"), col("shs").as("sa"), col("n").as("na")), "a")
-        .join(docArr.select(col("doc_id").as("b"), col("shs").as("sb"), col("n").as("nb")), "b")
-        .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-        .filter(col("inter") / (col("na") + col("nb") - col("inter")) >= tau)
-        .count()
-      val r19cand = r19matched.distinct()
-      // r20b variant: NO per-row filter — the complete match sequence per
-      // pair feeds the true PPJoin accumulated check (∀k: k + min(n_x −
-      // px_k, n_y − py_k) ≥ minoverlap, matches rarest-first)
-      val r20bMatched = probe.as("x").join(index.as("y"),
-          col("x.sh") === col("y.sh") &&
-            (col("x.n") < col("y.n") ||
-              (col("x.n") === col("y.n") && col("x.doc_id") < col("y.doc_id"))) &&
-            col("x.n") >= lit(tau) * col("y.n"))
-        .select(least(col("x.doc_id"), col("y.doc_id")).as("a"),
-          greatest(col("x.doc_id"), col("y.doc_id")).as("b"),
-          col("x.n").as("nx"), col("y.n").as("ny"),
-          col("x.p").as("px"), col("y.p").as("py"))
-      val r20bCand = r20bMatched.groupBy("a", "b", "nx", "ny")
-        .agg(sort_array(collect_list(struct(col("px"), col("py")))).as("ms"))
-        .filter(expr(s"forall(zip_with(ms, sequence(1, size(ms)), " +
-          s"(m, k) -> k + least(nx - m.px, ny - m.py) >= " +
-          s"${tau / (1 + tau)} * (nx + ny) - 1e-9), v -> v)"))
-        .select(col("a"), col("b"))
-      Map(
-        "full_prefix_rows" -> prefix.count(),
-        "probe_prefix_rows" -> probe.count(),
-        "r19_matched_rows" -> r19matched.count(),
-        "r19_cand_pairs" -> r19cand.count(),
-        "r20_matched_rows" -> r20matched.count(),
-        "r20_cand_pairs" -> r20cand.count(),
-        "r20b_matched_rows" -> r20bMatched.count(),
-        "r20b_cand_pairs" -> r20bCand.count(),
-        "true_pairs" -> verified(r19cand),
-        "r20_true_pairs" -> verified(r20cand),
-        "r20b_true_pairs" -> verified(r20bCand))
-    } finally { docArr.unpersist(); () }
-  }
-
   // ---- benchmark decontamination -----------------------------------------
 
   /** Stand-in benchmark split: the reference corpus to decontaminate
@@ -1350,9 +1258,9 @@ object Dedup {
     * batch, never re-derived. */
   private[graft] val IndexPbktsProperty = "graft.index.pbkts"
 
-  /** r19 (guide §2: make partitioning scale-adaptive, never a constant
-    * tuned for one environment): derive the index's pbkt count from
-    * the CORPUS SIZE at bootstrap instead of hard-coding 64. Sizing:
+  /** Scale-adaptive partitioning, never a constant tuned for one
+    * environment: derive the index's pbkt count from the CORPUS SIZE at
+    * bootstrap instead of hard-coding 64. Sizing:
     * ~9 banded rows per doc at ~40 B columnar ≈ 360 B of index per
     * corpus doc; targeting ~128 MB per pbkt partition ⇒ one bucket per
     * ~350k docs, rounded up to a power of two (stable doubling), capped
@@ -1360,15 +1268,13 @@ object Dedup {
     * each partition carries the pruning). sf0.1's 5k-doc corpus gets 1
     * bucket — the 64-dir layout was paying a ~800-task tiny-file floor
     * per run for pruning it could never use; a 10^11-doc crawl gets the
-    * 4096 cap. SPARK_GRAFT_INDEX_PBKTS overrides for probes/production
-    * tuning. */
-  private[graft] def indexPbktsForDocs(docs: Long): Int =
-    sys.env.get("SPARK_GRAFT_INDEX_PBKTS").map(_.toInt).getOrElse {
-      val want = math.max(1L, (docs + 349999L) / 350000L)
-      var p = 1
-      while (p < want && p < 4096) p <<= 1
-      p
-    }
+    * 4096 cap. */
+  private[graft] def indexPbktsForDocs(docs: Long): Int = {
+    val want = math.max(1L, (docs + 349999L) / 350000L)
+    var p = 1
+    while (p < want && p < 4096) p <<= 1
+    p
+  }
 
   /** The committed pbkt modulus of an existing index table (bootstrap
     * writes [[IndexPbktsProperty]] atomically with the data; absent ⇒
@@ -1410,9 +1316,9 @@ object Dedup {
     * as the predicate, so the partition layer prunes `pbkt` dirs and
     * per-file bucket min/max stats skip files whose range holds none
     * of the batch's probes — batch cost tracks the BATCH's buckets,
-    * not the corpus (`IncrementalDedupProbe` measures the files-opened
-    * curve). The probe value lists are bounded by the batch BY
-    * CONTRACT (micro-batches, not corpora). Self-matches by id are
+    * not the corpus (SCALE.md "Incremental dedup batch-vs-corpus" has
+    * the files-opened curve). The probe value lists are bounded by the
+    * batch BY CONTRACT (micro-batches, not corpora). Self-matches by id are
     * excluded — a REPLAYED batch finds its own survivor rows and must
     * reach the same verdicts. */
   private[graft] def candidateDupsIndexed(spark: org.apache.spark.sql.SparkSession,
@@ -1589,8 +1495,8 @@ object Dedup {
     * the texts); each NEW snapshot batch computes its own signatures
     * and probes the index through [[candidateDupsIndexed]] — a
     * partition- and stats-PRUNED read (index FILES opened track the
-    * batch's buckets, the r15 verdict's #2, measured by
-    * `IncrementalDedupProbe`'s files-opened sweep) feeding equality
+    * batch's buckets; SCALE.md "Incremental dedup batch-vs-corpus" has
+    * the files-opened sweep) feeding equality
     * joins on (band, bucket) for LSH and (bucket=th0, th1) for the
     * exact arm (verbatim re-crawls are caught even for docs too short
     * to shingle) — drops dups (including within-batch, greedy by id —

@@ -213,7 +213,8 @@ object DeletionVectors {
     * inline descriptors. */
   def serialize(rows: Seq[Long]): Array[Byte] = {
     // primitive sort + in-place dedupe: boxed `.distinct.sorted` was the
-    // hot term of million-row bitmap builds (measured by IcebergAbProbe)
+    // hot term of million-row bitmap builds (SCALE.md, "Iceberg
+    // delete-application A/B")
     val arr = rows.toArray
     java.util.Arrays.sort(arr)
     var n = 0

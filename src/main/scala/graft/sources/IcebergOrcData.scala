@@ -25,14 +25,13 @@ import org.apache.spark.sql.types._
   * file serves the manifest's identity-partition value when one exists,
   * else null.
   *
-  * r16 (the r15 verdict's #6): the leg is now a [[PrunedFilteredScan]]
-  * relation, so Catalyst PUSHES column prunes and filters into it like
-  * any V1 source — and pushed filters compile to an ORC
+  * The leg is a [[PrunedFilteredScan]] relation, so Catalyst PUSHES
+  * column prunes and filters into it like any V1 source — and pushed filters compile to an ORC
   * [[SearchArgument]] built PER FILE against the field-id-resolved
   * file column names, so orc-core skips whole row groups/stripes whose
   * min/max cannot match (a tight filter on a Hive-heritage table no
   * longer decodes every stripe; `IcebergOrcSpec` counts decoded rows,
-  * `IcebergOrcProbe` measures it). Skipping is sound-only: every
+  * SCALE.md "ORC read leg" measures it). Skipping is sound-only: every
   * filter is also re-applied by Spark ([[unhandledFilters]] returns
   * all), and untranslatable filters/types simply never prune.
   *

@@ -297,12 +297,16 @@ object IcebergWriter {
     * — the spec-vector-pinned hash compiled into the write pipeline's
     * own WholeStageCodegen stage, no per-row UDF boundary). Ints
     * promote to long before bucketing, the spec's own rule
-    * (Appendix B). String values stage behind a one-character prefix:
-    * Spark writes an empty-string partition value into the NULL
-    * directory (`__HIVE_DEFAULT_PARTITION__`), which would tag a file of
-    * `""` rows as NULL. */
+    * (Appendix B). String values stage as the hex of their UTF-8 bytes
+    * behind a one-character prefix: Spark writes an empty-string
+    * partition value into the NULL directory
+    * (`__HIVE_DEFAULT_PARTITION__`), which would tag a file of `""` rows
+    * as NULL, and its hive escaping leaves non-ASCII characters raw in
+    * the directory name, which a JVM whose path encoding is not UTF-8
+    * cannot create. Staging directories are temporary (files move to
+    * `data/<uuid>.parquet`), so no name on disk keeps this form. */
   private def transformValueCol(sf: SpecField, dt: DataType): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, concat, expr, lit}
+    import org.apache.spark.sql.functions.{col, concat, expr, hex, lit}
     val c = col(sf.sourceCol)
     val v = (IcebergTransforms.bucketWidth(sf.transform), IcebergTransforms.truncateWidth(sf.transform)) match {
       case (Some(n), _) => dt match {
@@ -335,7 +339,8 @@ object IcebergWriter {
       case _ => c // identity (TIMESTAMP_NTZ is zone-less by definition —
                   // its local rendering is unambiguous and parses back exactly)
     }
-    if (dt == StringType && IcebergTransforms.bucketWidth(sf.transform).isEmpty) concat(lit("s"), v)
+    if (dt == StringType && IcebergTransforms.bucketWidth(sf.transform).isEmpty)
+      concat(lit("s"), hex(v.cast("binary")))
     else v
   }
 
@@ -701,7 +706,9 @@ object IcebergWriter {
       case FloatType => java.lang.Float.valueOf(v.toFloat)
       case DoubleType => java.lang.Double.valueOf(v.toDouble)
       case BooleanType => java.lang.Boolean.valueOf(v.toBoolean)
-      case StringType => v.substring(1) // staged behind a prefix, see transformValueCol
+      case StringType => // staged as prefixed UTF-8 hex, see transformValueCol
+        new String(java.util.HexFormat.of().parseHex(v.substring(1)),
+          java.nio.charset.StandardCharsets.UTF_8)
       case DateType => java.sql.Date.valueOf(v)
       case TimestampType => // staged as epoch micros (DST-proof), see transformValueCol
         java.lang.Long.valueOf(v.toLong)
@@ -1039,9 +1046,10 @@ object IcebergWriter {
       val hp = new org.apache.hadoop.fs.Path(abs)
       val len = hp.getFileSystem(hadoopConf).getFileStatus(hp).getLen
       val colStats = state.stats.getOrElse(rel, Map.empty)
+      // a table with no stats-eligible column records no stats lines, so
+      // such a file takes its row count from its own footer
       val nRec = colStats.values.flatMap(_.rows).headOption.getOrElse(
-        throw new IllegalStateException(
-          s"file $rel of $root carries no row-count stats — re-commit (any verb) to refresh"))
+        FooterStats.parquet(hadoopConf, hp, Map.empty)._1)
       val dataFile = new GenericData.Record(dfSchema)
       dataFile.put("content", 0)
       dataFile.put("file_path", abs)

@@ -603,7 +603,8 @@ object ManifestTable {
     def bound(s: String): Option[String] =
       if (s == AbsentBound) None else Some(unescapePathName(s))
     // single-pass mutable accumulation: a manifest carries files×columns
-    // stat lines (millions at the 100 TB shape — ManifestScaleProbe), and
+    // stat lines (millions at the 100 TB shape — SCALE.md, "Manifest
+    // parse scale"), and
     // the previous groupBy-of-tuples formulation allocated the whole
     // relation twice before building the maps; this is the cold-snapshot
     // hot loop, measured 2.5× end-to-end on 1M-file manifests
@@ -1651,8 +1652,8 @@ object ManifestTable {
     * stays the authoritative, arbitrated commit format; the checkpoint is
     * a derivative columnar encoding of the SAME version that readers
     * prefer when present and fall back from on any miss or corruption
-    * (vacuum reclaims it with its version). ManifestScaleProbe carries
-    * the measured text-vs-checkpoint load curve. */
+    * (vacuum reclaims it with its version). SCALE.md "Manifest parse
+    * scale" carries the measured text-vs-checkpoint load curve. */
   val CheckpointMinFilesProperty = "graft.checkpoint.minFiles"
   private val DefaultCheckpointMinFiles = 100000L
 

@@ -55,6 +55,14 @@ class DvTableSpec extends SparkSpec {
     assert(out.agg(sum("v")).head.getLong(0) == expect)
     assert(manifestLines(root, v.get).exists(_.startsWith("# dv:")),
       "the commit should carry # dv: entries")
+    // the same delete copy-on-write serves the same rows
+    val cow = freshDir()
+    mkTable(cow)
+    ManifestTable.setProperty(spark, cow, ManifestTable.DvProperty, "false")
+    ManifestTable.delete(spark, cow, col("id") % 10 === 3L)
+    val cowRows = ManifestTable.read(spark, cow)
+    assert(cowRows.exceptAll(out).isEmpty && out.exceptAll(cowRows).isEmpty,
+      "merge-on-read and copy-on-write deletes diverge")
   }
 
   test("second MoR delete on the same files merges vectors") {

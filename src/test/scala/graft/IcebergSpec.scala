@@ -257,6 +257,20 @@ class IcebergSpec extends SparkSpec {
       s"partition values must prune: scanned $scanned of ${snap.dataFiles.size}")
   }
 
+  test("mirror of a table with no stats-eligible column takes record counts from footers") {
+    val root = freshRoot()
+    import spark.implicits._
+    import graft.sources.ManifestTable
+    // a double column records no graft stats, so no file has a row count
+    ManifestTable.append(spark, root, (0 until 40).map(_ * 0.5).toDF("x").repartition(3))
+    IcebergWriter.mirror(spark, root)
+    val files = IcebergTable.snapshot(spark, root).dataFiles
+    assert(files.map(_.recordCount).sum === 40L)
+    val got = IcebergTable.read(spark, root)
+    assert(got.count() === 40)
+    assert(got.agg(sum("x")).head().getDouble(0) === (0 until 40).map(_ * 0.5).sum)
+  }
+
   test("mirror refuses deletion-vector'd and column-mapped tables loud") {
     val root = freshRoot()
     import graft.sources.ManifestTable
@@ -1149,6 +1163,7 @@ class IcebergSpec extends SparkSpec {
     val firstFile = IcebergTable.snapshot(spark, root).dataFiles.minBy(_.seq).path
     IcebergWriter.addPositionDeletes(spark, root, Seq(firstFile -> (0L until 3L)))
     val lazyRead = IcebergTable.read(spark, root) // r12: lazy even with deletes
+    assert(lazyRead.columns.toSeq === Seq("id", "name", "score"))
     val expected = ((0L until 50L).toSet -- Set(0L, 1L, 2L, 3L, 5L, 7L)) ++
       ((100L until 150L).toSet - 120L) ++ (200L until 210L).toSet
     assert(lazyRead.select("id").as[Long].collect().toSet === expected)

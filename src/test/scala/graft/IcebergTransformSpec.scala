@@ -8,8 +8,8 @@ import java.nio.file.Files
   * tuple its own rows produce: for every file, the manifest's partition
   * tuple equals the spec's transforms applied to the file's rows. Table-
   * driven over identity, `bucket[N]`, `truncate[W]`, year, month, day and
-  * hour, crossed with the source types the writer accepts, NULLs and
-  * hive-escaped strings included. */
+  * hour, crossed with the source types the writer accepts, NULLs,
+  * hive-escaped and non-ASCII strings included. */
 class IcebergTransformSpec extends SparkSpec {
 
   private def freshRoot(): String =
@@ -20,7 +20,9 @@ class IcebergTransformSpec extends SparkSpec {
     (IntegerType, Seq("-7", "0", "3", "14", "-2147483648"), Seq("bucket[3]", "truncate[10]")),
     (LongType, Seq("-7", "0", "3", "14000000000", "9223372036854775807"),
       Seq("bucket[3]", "truncate[10]")),
-    (StringType, Seq("a/b", "k=v", "50%", "x:y", "sp ace", "#?", "", "abc").map(s => s"'$s'"),
+    // non-ASCII values stage on a JVM whose path encoding is not UTF-8
+    (StringType, Seq("a/b", "k=v", "50%", "x:y", "sp ace", "#?", "", "abc", "\u00fc#?",
+      "\ud83d\ude00x").map(s => s"'$s'"),
       Seq("bucket[3]", "truncate[2]")),
     (DateType, Seq("DATE'1969-12-31'", "DATE'2024-02-29'", "DATE'2024-03-01'", "DATE'1500-06-01'"),
       Seq("year", "month", "day")),

@@ -107,6 +107,8 @@ class ShallowCloneSpec extends SparkSpec {
     val merged = ManifestTable.read(spark, dst)
     assert(merged.filter(col("v") === -7L).count() == 5)
     assert(merged.count() == 980)
+    assert(ManifestTable.read(spark, src).filter(col("v") === -7L).count() == 0,
+      "a merge on the clone must not leak into the source")
   }
 
   test("compact materializes the clone fully local") {
