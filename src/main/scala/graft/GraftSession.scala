@@ -10,6 +10,9 @@ import org.apache.spark.sql.SparkSession
   * 64 MB so every TPC-H-style dimension table short-circuits its shuffle.
   */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries` for every graft session. */
+  val CodegenCacheEntries = 4000
+
   def builder(appName: String = "graft", master: String = "local[32]"): SparkSession.Builder =
     SparkSession
       .builder()
@@ -38,6 +41,18 @@ object GraftSession {
       // per-task state — the fallback safety valve stays for true scale,
       // but stops firing at per-task group counts the hash map can hold.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 8192)
+      // Codegen cache (whole-stage and expression classes): Spark keeps 100
+      // compiled classes by default. One curate pass (gates,
+      // Dedup.survivors, BPE packing) generates ~160 and the 174-key board
+      // ~2 950, so the LRU evicted every class before its reuse and each
+      // pass recompiled them with Janino, mostly on the critical path. A
+      // repeated board run adds ~300 classes (literal-specialized code, and
+      // whole-stage classes named after a stage id AQE numbered
+      // differently); 4000 holds Bench's warmup plus three passes in one
+      // JVM (SCALE.md, "Codegen cache"). A class is ~3 KB of bytecode.
+      // Static conf, read once when CodeGenerator initialises: a session
+      // built outside this builder keeps Spark's default.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       // testdata events.ts is TIMESTAMP(NANOS); surface as long, convert in Tables
       .config("spark.sql.legacy.parquet.nanosAsLong", true)
       // native vector_cosine + CosineFusionRule

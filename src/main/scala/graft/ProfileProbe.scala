@@ -8,11 +8,14 @@ package graft
   * [[ScaleProbe.Acc]]. Prints one TSV row per query:
   *
   *   name  plan_s  exec_s(min of N)  jobs  stages  tasks  task_time_s
-  *   gc_s  shuffle_read_mb  shuffle_write_mb
+  *   gc_s  shuffle_read_mb  shuffle_write_mb  compiles
   *
   * `exec_s − task_time_s/cores` ≫ 0 means the bill is stage scheduling /
   * driver work / serial actions, not executor compute — a different fix
-  * class (fewer jobs/stages) than slow tasks.
+  * class (fewer jobs/stages) than slow tasks. `compiles` counts the
+  * codegen classes Janino compiled during that execution; every pass is
+  * warm, so a non-zero value is a codegen-cache miss (an eviction, or
+  * a class whose name or code differs per run).
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.ProfileProbe <regex>"
   */
@@ -34,7 +37,7 @@ object ProfileProbe {
       try Bench.materialize(fn(spark, sfDir)) catch { case _: Throwable => () }
     }
     spark.sharedState.cacheManager.clearCache()
-    println("name\tplan_s\texec_s\tjobs\tstages\ttasks\ttask_s\tgc_s\tshuf_rd_mb\tshuf_wr_mb")
+    println("name\tplan_s\texec_s\tjobs\tstages\ttasks\ttask_s\tgc_s\tshuf_rd_mb\tshuf_wr_mb\tcompiles")
     ordered.foreach { case (name, fn) =>
       spark.sparkContext.setJobDescription(name)
       // planning: build + force executedPlan, repeated to steady state
@@ -53,15 +56,16 @@ object ProfileProbe {
         // drain before detaching: task-end events still queued would be lost
         org.apache.spark.GraftSparkBridge.waitListenerBusEmpty(spark.sparkContext)
         spark.sparkContext.removeSparkListener(agg)
+        val compiles = agg.compiles // before the next pass compiles more
         spark.sharedState.cacheManager.clearCache()
-        (dt, agg)
+        (dt, agg, compiles)
       }
-      val (execMin, agg) = execs.minBy(_._1)
+      val (execMin, agg, compiles) = execs.minBy(_._1)
       def f(v: Double) = (math.round(v * 1000) / 1000.0).toString
       println(Seq(name, f(planTimes.min), f(execMin),
         agg.jobs.get, agg.stages.get, agg.tasks.get,
         f(agg.runMs.get / 1e3), f(agg.gcMs.get / 1e3),
-        f(agg.shufRead.get / 1e6), f(agg.shufWrite.get / 1e6)).mkString("\t"))
+        f(agg.shufRead.get / 1e6), f(agg.shufWrite.get / 1e6), compiles).mkString("\t"))
     }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -37,10 +38,19 @@ object ScaleProbe {
     * `reset()` and a read. Events arrive on the listener bus
     * asynchronously: drain it with `GraftSparkBridge.waitListenerBusEmpty`
     * before reading, or queued task-end events are missed.
+    *
+    * [[compiles]] reads the codegen classes Janino compiled since
+    * `reset()` (or construction), from Spark's own `CodegenMetrics`
+    * counter. That counter is JVM-wide, not per listener: it counts every
+    * session's compiles in this JVM. A warm pass that still compiles
+    * missed the codegen cache: an eviction, or a class whose name or code
+    * differs per run (whole-stage classes carry AQE's stage id).
     */
   final class Acc extends SparkListener {
     val jobs, stages, tasks, runMs, gcMs, shufRead, shufWrite, spillMem, spillDisk,
       inRows, peakMem = new AtomicLong
+    private val compiles0 = new AtomicLong(compileCount)
+    def compiles: Long = compileCount - compiles0.get
     override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
       stages.incrementAndGet(); ()
@@ -59,9 +69,16 @@ object ScaleProbe {
         peakMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
       }
     }
-    def reset(): Unit = Seq(jobs, stages, tasks, runMs, gcMs, shufRead, shufWrite,
-      spillMem, spillDisk, inRows, peakMem).foreach(_.set(0))
+    def reset(): Unit = {
+      Seq(jobs, stages, tasks, runMs, gcMs, shufRead, shufWrite,
+        spillMem, spillDisk, inRows, peakMem).foreach(_.set(0))
+      compiles0.set(compileCount)
+    }
   }
+
+  /** Codegen classes (whole-stage and expression) compiled in this JVM
+    * so far. */
+  def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private val KeyStride = 1L << 40 // far above any sf key; copies never collide
 

@@ -184,7 +184,7 @@ object Dedup {
     val within = withinGroupPairs(groups)
       .join(sizes.select(col("doc_id").as("rep")), "rep") // rep must have shingles
       .select(col("a"), col("b"), lit(1.0).as("jaccard"))
-    cross.union(within).orderBy("a", "b")
+    cross.union(within)
   }
 
   private def ngramJaccardSqlAt(tau: Double) =
@@ -986,9 +986,13 @@ object Dedup {
       .localCheckpoint(eager = true)
     // the fixpoint loop only carries nodes that have edges — docs outside
     // the pair graph are their own cluster and join back at the end, so
-    // loop state is proportional to near-duplicate density, not corpus size
-    val edgeNodes = edges.select(col("a").as("doc_id")).distinct()
-    var labels = edgeNodes.select(col("doc_id"), col("doc_id").as("lbl")).localCheckpoint(eager = true)
+    // loop state is proportional to near-duplicate density, not corpus size.
+    // Labels start at least(doc, min neighbour): the state one propagation
+    // round from lbl = doc_id reaches, without that round's jobs
+    var labels = edges.groupBy(col("a").as("doc_id"))
+      .agg(min(col("b")).as("nb"))
+      .select(col("doc_id"), least(col("doc_id"), col("nb")).as("lbl"))
+      .localCheckpoint(eager = true)
     var changed = 1L
     var iter = 0
     // min-label propagation strictly shrinks labels, so it always reaches
@@ -1003,8 +1007,8 @@ object Dedup {
         .groupBy(col("b").as("doc_id"))
         .agg(min(col("lbl")).as("nlbl"))
       // the convergence count rides the checkpoint's own materialization
-      // via observe() (r19) — the loop's wall clock is serial job
-      // latency, and a separate count() action per iteration doubled it
+      // via observe() — the loop's wall clock is serial job latency, and
+      // a separate count() action per iteration doubled it
       val obs = org.apache.spark.sql.Observation(s"cc_changed_$iter")
       val updated = labels
         .join(neighborMin, Seq("doc_id"), "left")
@@ -1065,8 +1069,8 @@ object Dedup {
     }
     // the order-independent edge-set fingerprint (count + bit_xor of the
     // row hash) rides each checkpoint's own materialization via
-    // observe() (r19) — a separate aggregate action per round doubled
-    // the loop's serial job latency; same math as before
+    // observe() — a separate aggregate action per round doubled the
+    // loop's serial job latency
     val fpExprs = Seq(
       count(lit(1)).as("n"),
       coalesce(bit_xor(Hashing.md5Long(concat_ws(":", col("a"), col("b")))), lit(0L)).as("x"))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed row models for the tables where compile-time safety pays off. */
 object Models {
@@ -18,9 +19,21 @@ object Models {
   * columns and push filters into the scan. At cluster scale these would be
   * catalog tables partitioned/bucketed by their natural keys; the query code
   * is agnostic to that.
+  *
+  * Spark infers a parquet schema with a one-task job on every read, so an
+  * instance infers each table's schema once, on its first read, and hands
+  * it to every later read. Every call still returns a fresh relation, so
+  * self-joins keep distinct attribute ids. A table rewritten under a live
+  * instance with a different schema needs a new instance.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]
+
+  private def t(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemas.computeIfAbsent(name, _ => spark.read.parquet(path).schema))
+      .parquet(path)
+  }
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")

@@ -1,7 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
 import graft.operators.Profiler
 import graft.sources.Tables
+import org.apache.spark.GraftSparkBridge.waitListenerBusEmpty
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 
 class TablesSpec extends SparkSpec {
 
@@ -12,6 +17,28 @@ class TablesSpec extends SparkSpec {
     val topSpender = t.ordersDs.collect().maxBy(_.o_totalprice)
     assert(topSpender.o_totalprice > 0)
     assert(t.documentsDs.filter((d: graft.sources.Models.Document) => d.n_chars > 0).count() > 0)
+  }
+
+  test("an instance infers each table's schema once; every read is a fresh relation") {
+    val t = Tables(spark, sf0001)
+    val first = t.documents
+    val jobs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    waitListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val second = try {
+      val d = t.documents
+      waitListenerBusEmpty(spark.sparkContext)
+      d
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0L, "the second read inferred the schema again")
+    assert(second.schema === first.schema)
+    assert(second.collect().toSet === spark.read.parquet(s"$sf0001/documents.parquet").collect().toSet)
+    // distinct attribute ids: a self-join resolves without ambiguity
+    val self = first.as("x").join(second.as("y"), col("x.doc_id") === col("y.doc_id"))
+    assert(self.count() === first.count())
   }
 
   test("approx profile variant (HLL distinct) is close to exact") {
