@@ -1251,8 +1251,8 @@ object Dedup {
   }
 
   /** DEFAULT hive-partition count of the BANDED index layout
-    * ([[bandedIndexOf]]) — the fallback for pre-r19 tables without the
-    * [[IndexPbktsProperty]] and for the probes' fixed-layout sweeps. */
+    * ([[bandedIndexOf]]) — the modulus of index tables written without
+    * the [[IndexPbktsProperty]] ([[indexPbktsOf]]). */
   private[graft] val IndexPbkts = 64
 
   /** Table property pinning the index's pbkt modulus. The probe's
@@ -1295,16 +1295,13 @@ object Dedup {
     * plus ONE exact-arm row per doc under the SAME key shape —
     * band = −1, bucket = th0, with th1 carried for pair confirmation —
     * so both candidate arms are equality probes into one keyed,
-    * partition-pruned relation. `pbkt = bucket % IndexPbkts` is the
+    * partition-pruned relation. `pbkt = bucket % pbkts` is the
     * hive partition column; within a partition, writers sort by bucket
     * so per-file min/max stats stay tight and the probe's bucket IN
     * list skips files. ~9 narrow rows per doc (shingle-less docs: just
     * the exact row) versus the old 1 wide row — the 2-3× storage is
     * the price of file-level probe locality, the classic
     * index-vs-heap trade. */
-  private[graft] def bandedIndexOf(sigs: DataFrame): DataFrame =
-    bandedIndexOf(sigs, IndexPbkts)
-
   private[graft] def bandedIndexOf(sigs: DataFrame, pbkts: Int): DataFrame = {
     val lsh = bandBucketsOf(sigs).withColumn("th1", lit(null).cast("long"))
     val exact = sigs.select(col("doc_id"), lit(-1).as("band"),
@@ -1326,8 +1323,7 @@ object Dedup {
     * excluded — a REPLAYED batch finds its own survivor rows and must
     * reach the same verdicts. */
   private[graft] def candidateDupsIndexed(spark: org.apache.spark.sql.SparkSession,
-      indexRoot: String, batchSigs: DataFrame,
-      pbkts: Int = IndexPbkts): DataFrame = {
+      indexRoot: String, batchSigs: DataFrame, pbkts: Int): DataFrame = {
     // probe re-derives per use (keys collect + two joins) — batch-sized
     // row-local work, cheaper than a persist round trip. `pbkts` MUST
     // be the index table's own modulus ([[indexPbktsOf]]).
@@ -1360,37 +1356,6 @@ object Dedup {
       .select(col("b.doc_id").as("doc_id"), col("i.doc_id").as("m"))
   }
 
-  /** Candidate (batch doc, prior doc) matches for the incremental
-    * family: LSH band collisions and exact-text-hash equality against
-    * the INDEX (self-matches by id excluded — a REPLAYED batch finds
-    * its own survivors in the index and must reach the same verdicts)
-    * plus both arms WITHIN the batch, greedy by id. Every join blocks
-    * on an equality key; nothing is corpus². */
-  private[graft] def candidateDups(batchSigs: DataFrame, index: DataFrame): DataFrame = {
-    val indexBuckets = bandBucketsOf(index)
-    val batchBuckets = bandBucketsOf(batchSigs)
-    val vsIndex = batchBuckets.as("b").join(indexBuckets.as("i"),
-        col("b.band") === col("i.band") && col("b.bucket") === col("i.bucket") &&
-          col("b.doc_id") =!= col("i.doc_id"))
-      .select(col("b.doc_id").as("doc_id"), col("i.doc_id").as("m"))
-    val vsBatch = batchBuckets.as("x").join(batchBuckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.doc_id") > col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("m"))
-    // exact arm: the text-hash key catches VERBATIM re-crawls even of
-    // docs too short to shingle (null signatures never band-match)
-    val exactCols = Seq("th0", "th1")
-    val exVsIndex = batchSigs.as("b").join(index.as("i"),
-        exactCols.map(c => col(s"b.$c") === col(s"i.$c")).reduce(_ && _) &&
-          col("b.doc_id") =!= col("i.doc_id"))
-      .select(col("b.doc_id").as("doc_id"), col("i.doc_id").as("m"))
-    val exVsBatch = batchSigs.as("x").join(batchSigs.as("y"),
-        exactCols.map(c => col(s"x.$c") === col(s"y.$c")).reduce(_ && _) &&
-          col("x.doc_id") > col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("m"))
-    vsIndex.union(vsBatch).union(exVsIndex).union(exVsBatch)
-  }
-
   /** Within-batch-only candidates (the bootstrap batch has no index). */
   private[graft] def candidateDupsNoIndex(batchSigs: DataFrame): DataFrame = {
     val batchBuckets = bandBucketsOf(batchSigs)
@@ -1409,8 +1374,9 @@ object Dedup {
     * production crawl pipeline actually deploys: each micro-batch of
     * documents (`doc_id`, `text`, anything else ignored) dedupes
     * against the persisted signature index at `indexRoot`
-    * ([[candidateDups]] — LSH bands + exact hashes + within-batch
-    * greedy-by-id) and appends the survivors' index rows EXACTLY-ONCE
+    * ([[candidateDupsIndexed]] plus [[candidateDupsNoIndex]] — LSH
+    * bands + exact hashes + within-batch greedy-by-id) and appends the
+    * survivors' index rows EXACTLY-ONCE
     * ([[ManifestTable.exactlyOnceMergeWriter]] txn mark per
     * `(appId, batchId)`); the first batch bootstraps the index.
     *

@@ -756,7 +756,7 @@ object TableLifecycle {
       ManifestTable.setProperty(spark, root, "graft.bloom.ekey", "0.01")
       ManifestTable.append(spark, root, events.repartition(8, col("ekey")))
       val pred = col("ekey").isin("e-7", "e-97", "e-123")
-      val total = ManifestTable.scanState(spark, root).files.size
+      val total = ManifestTable.snapshot(spark, root).files.size
       val opened = ManifestTable.readCandidates(spark, root, pred).size
       val out = ManifestTable.readWhere(spark, root, pred)
         .select(col("ekey"), col("event_type"), round(col("value"), 4).as("value"))
@@ -970,11 +970,11 @@ object TableLifecycle {
     withScratchTable("graft_dvmor") { root =>
       ManifestTable.append(spark, root, events.repartition(8))
       ManifestTable.setProperty(spark, root, ManifestTable.DvProperty, "true")
-      val before = ManifestTable.scanState(spark, root).files.toSet
+      val before = ManifestTable.snapshot(spark, root).files.toSet
       ManifestTable.delete(spark, root, col("event_id") % 5 === 2L)
       ManifestTable.update(spark, root, col("event_id") % 5 === 3L,
         Map("value" -> (col("value") * 2)))
-      val after = ManifestTable.scanState(spark, root).files.toSet
+      val after = ManifestTable.snapshot(spark, root).files.toSet
       val out = ManifestTable.read(spark, root)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"), round(sum("value"), 4).as("sum_value"))

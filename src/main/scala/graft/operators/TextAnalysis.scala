@@ -1224,8 +1224,9 @@ object TextAnalysis {
     * MinHash-LSH NEAR-dup (production funnels run near-dup AFTER
     * exact: the exact pass is cheap and shrinks the LSH input; a doc
     * drops when any of its 8 signature bands collides with a
-    * SMALLER-id doc that also reached this stage — `candidateDups`'
-    * greedy-by-id rule, deterministic and engine-portable) →
+    * SMALLER-id doc that also reached this stage — the greedy-by-id
+    * rule of `Dedup.candidateDupsNoIndex`, deterministic and
+    * engine-portable) →
     * LM-PERPLEXITY bucket gate (r16's `text_lm_pruned` +
     * `text_ppl_ref_sample` machinery composed IN: train the
     * count-pruned stupid-backoff bigram LM on the corpus's `en`

@@ -32,8 +32,7 @@ object GraftTableResolution extends Rule[LogicalPlan] {
       case r: DataSourceV2Relation
           if r.table.isInstanceOf[GraftTableV2] && !writeTargets.contains(r) =>
         val t = r.table.asInstanceOf[GraftTableV2]
-        val v1 = LogicalRelation(GraftDataSource.relationFor(
-          SparkSession.active, t.root, Some(t.state.version), None))
+        val v1 = LogicalRelation(GraftDataSource.relationFor(SparkSession.active, t.state, None))
         val byName = v1.output.map(a => a.name -> a).toMap
         // declared order with the v2 relation's exprIds
         val cols: Seq[NamedExpression] = r.output.map { o =>

@@ -33,17 +33,19 @@ trait CommitArbiter {
   * manifest is fully written and closed before the rename, so readers can
   * never observe a torn file; the no-overwrite rename loses cleanly to a
   * concurrent committer. (The local FS delegates to POSIX rename, which
-  * silently overwrites — there the exists() guard carries exclusivity:
-  * single-writer semantics, test-grade only.) */
+  * silently overwrites — there the exists() guard carries exclusivity,
+  * and the guard and the rename run under one JVM-wide lock, so racing
+  * committers in one process cannot both see the target absent and both
+  * rename: single-process semantics, test-grade only.) */
 object RenameArbiter extends CommitArbiter {
   def publish(fs: FileSystem, target: Path, content: Array[Byte]): Boolean = {
     val tmp = new Path(target.getParent, s".tmp-${UUID.randomUUID()}")
     fs.mkdirs(target.getParent)
     val out = fs.create(tmp, false)
     try out.write(content) finally out.close()
-    if (fs.exists(target)) { fs.delete(tmp, false); false }
-    else if (fs.rename(tmp, target)) true
-    else { fs.delete(tmp, false); false }
+    val won = synchronized(!fs.exists(target) && fs.rename(tmp, target))
+    if (!won) fs.delete(tmp, false)
+    won
   }
 }
 

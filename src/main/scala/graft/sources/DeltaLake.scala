@@ -1210,7 +1210,7 @@ object DeltaLake {
     * place, e.g. right after each batch commit. */
   def mirror(spark: SparkSession, root: String): Option[Long] = {
     val base = root.stripSuffix("/")
-    val state = ManifestTable.scanState(spark, root)
+    val state = ManifestTable.snapshot(spark, root)
     val logDir = new Path(s"$base/_delta_log")
     val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prev = if (fs.exists(logDir)) Some(snapshot(spark, root)) else None
@@ -1227,7 +1227,7 @@ object DeltaLake {
       s""""delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"$maxId""""
     }.getOrElse("")
     val sameMeta = prev.exists(p =>
-      p.schema == deltaSchema && p.partitionColumns == state.partitionBy &&
+      p.schema == deltaSchema && p.partitionColumns == state.layout &&
         p.columnMapping == mappedSchema.isDefined)
     // graft deletion vectors translate verbatim: our `_dv` files ARE the
     // protocol's DV-file layout, so `f`-storage entries publish as
@@ -1283,7 +1283,7 @@ object DeltaLake {
         Seq(s"""{"metaData":{"id":"${java.util.UUID.randomUUID()}",""" +
           """"format":{"provider":"parquet","options":{}},""" +
           s""""schemaString":${jstr(deltaSchema.json)},""" +
-          s""""partitionColumns":[${state.partitionBy.map(jstr).mkString(",")}],""" +
+          s""""partitionColumns":[${state.layout.map(jstr).mkString(",")}],""" +
           s""""configuration":{$configJson},"createdTime":$now}}""")
       else Nil)
     // under mapping Delta keys per-file stats by PHYSICAL column name
@@ -1300,8 +1300,8 @@ object DeltaLake {
       // decodePath on the read side keeps them absolute
       val p = new Path(ManifestTable.resolveEntry(root, rel))
       val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-      val pv = state.partitionBy
-        .zip(ManifestTable.partitionValuesOf(rel, state.partitionBy))
+      val pv = state.layout
+        .zip(ManifestTable.partitionValuesOf(rel, state.layout))
         .map { case (c, value) => s"${jstr(c)}:${value.map(jstr).getOrElse("null")}" }
         .mkString(",")
       val colStats0 = state.stats.getOrElse(rel, Map.empty)

@@ -350,8 +350,8 @@ final case class GraftTableV2(catalog: String, root: String, pinnedVersion: Opti
   private def spark: SparkSession = SparkSession.active
 
   // resolved once per analysis; a fresh query re-loads the table handle
-  private[graft] lazy val state: ManifestTable.ScanState =
-    ManifestTable.scanState(spark, root, pinnedVersion)
+  private[graft] lazy val state: ManifestTable.Snapshot =
+    ManifestTable.snapshot(spark, root, pinnedVersion)
 
   override def name(): String =
     s"$catalog.`$root`" + pinnedVersion.map(v => s"@v$v").getOrElse("")
@@ -376,14 +376,14 @@ final case class GraftTableV2(catalog: String, root: String, pinnedVersion: Opti
   }
 
   override def partitioning(): Array[Transform] =
-    state.partitionBy.map(Expressions.identity).toArray
+    state.layout.map(Expressions.identity).toArray
 
   override def properties(): java.util.Map[String, String] =
-    (ManifestTable.properties(spark, root) ++ Map(
+    (state.properties ++ Map(
       TableCatalog.PROP_PROVIDER -> "graft",
       TableCatalog.PROP_LOCATION -> root)).asJava
 
-  override def version(): String = state.version.toString
+  override def version(): String = state.committed.toString
 
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
@@ -392,7 +392,7 @@ final case class GraftTableV2(catalog: String, root: String, pinnedVersion: Opti
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(pinnedVersion.isEmpty,
       s"$name is version-pinned (time travel) — writes go to the live table")
-    new GraftWriteBuilder(root, state.partitionBy)
+    new GraftWriteBuilder(root, state.layout)
   }
 }
 

@@ -68,7 +68,7 @@ final class GraftDataSource extends RelationProvider with CreatableRelationProvi
           .getOrElse(java.sql.Timestamp.valueOf(ts).getTime)
         ManifestTable.versionAsOf(spark, root, millis)
       })
-    GraftDataSource.relationFor(spark, root, version, None)
+    GraftDataSource.relationFor(spark, ManifestTable.snapshot(spark, root, version), None)
   }
 
   /** `.option("readChangeFeed", "true")` — the batch face of
@@ -125,7 +125,7 @@ final class GraftDataSource extends RelationProvider with CreatableRelationProvi
     require(schema.isEmpty,
       """format("graft") derives the stream schema from the table's manifest; drop .schema(...)""")
     val root = rootOf(parameters)
-    val base = ManifestTable.scanState(sqlContext.sparkSession, root, None).schema
+    val base = ManifestTable.snapshot(sqlContext.sparkSession, root).schema
     val out =
       if (wantsChangeFeed(parameters)) StructType(base.fields ++ Seq(
         org.apache.spark.sql.types.StructField(ManifestTable.ChangeTypeCol,
@@ -177,8 +177,10 @@ private[graft] object GraftDataSource {
   /** `<root>@vN` — the version-pinned path spelling. */
   private[sources] val AtVersion = "(.*)@v(\\d+)$".r
 
-  /** The batch relation both faces share: a [[GraftFileIndex]] (optionally
-    * restricted to a file subset) under the stock parquet format — or,
+  /** The batch relation both faces share, over ONE loaded snapshot (the
+    * DV and mapping checks and the scanned files come from the same
+    * version): a [[GraftFileIndex]] (optionally restricted to a file
+    * subset) under the stock parquet format — or,
     * when the snapshot carries deletion vectors, a [[DvRelation]]: the
     * plain file-index scan would resurrect DV'd rows (it cannot express
     * the per-file `_metadata.row_index` anti-join), so the DV-aware
@@ -189,10 +191,10 @@ private[graft] object GraftDataSource {
     * [[ManifestTable.addedRelsBetween]] fails loud on vector changes and
     * the snapshot batch routes through [[ManifestTable.read]] — enforced
     * here rather than assumed. */
-  def relationFor(spark: SparkSession, root: String, version: Option[Long],
+  def relationFor(spark: SparkSession, state: ManifestTable.Snapshot,
       onlyRels: Option[Seq[String]],
       serveDvdSubsetPlain: Boolean = false): BaseRelation = {
-    val state = ManifestTable.scanState(spark, root, version)
+    val root = state.root
     val dvs = state.dvs
     // a column-mapped snapshot's files spell columns physically — the
     // stock file-index scan cannot translate, so the mapped table serves
@@ -202,9 +204,9 @@ private[graft] object GraftDataSource {
     val mapped = state.schema.fields.exists(_.metadata.contains(ManifestTable.PhysNameKey))
     onlyRels match {
       case None if dvs.nonEmpty || mapped =>
-        return new DvRelation(spark, root, version)
+        return new DvRelation(spark, state)
       case Some(rels) if mapped =>
-        return new FeedRelation(ManifestTable.readListedSubset(spark, root, version, rels))
+        return new FeedRelation(ManifestTable.readListedSubset(spark, state, rels))
       case Some(rels) if !serveDvdSubsetPlain =>
         val dvd = rels.filter(dvs.contains)
         require(dvd.isEmpty,
@@ -212,7 +214,7 @@ private[graft] object GraftDataSource {
             "this path cannot apply vectors; read through ManifestTable.read")
       case _ =>
     }
-    val index = new GraftFileIndex(spark, root, version, onlyRels)
+    val index = new GraftFileIndex(spark, state, onlyRels)
     HadoopFsRelation(index, index.partitionSchema, index.dataSchema, None,
       new ParquetFileFormat, Map.empty)(spark)
   }
@@ -255,11 +257,12 @@ private[graft] object GraftDataSource {
   * narrow projection over the result. Spark re-applies all filters above
   * this scan (default `unhandledFilters`), so a filter this translation
   * skips costs I/O, never correctness. */
-private[sources] final class DvRelation(spark: SparkSession, root: String,
-    version: Option[Long]) extends BaseRelation
-    with org.apache.spark.sql.sources.PrunedFilteredScan {
+private[sources] final class DvRelation(spark: SparkSession, state: ManifestTable.Snapshot)
+    extends BaseRelation with org.apache.spark.sql.sources.PrunedFilteredScan {
+  private val root = state.root
+  private val version = state.version
   override val sqlContext: SQLContext = spark.sqlContext
-  override val schema: StructType = ManifestTable.scanState(spark, root, version).schema
+  override val schema: StructType = state.schema
   override def needConversion: Boolean = false
   override def buildScan(requiredColumns: Array[String],
       filters: Array[org.apache.spark.sql.sources.Filter])
@@ -309,7 +312,7 @@ final class GraftStreamSource(spark: SparkSession, root: String,
     skipChangeCommits: Boolean = false) extends Source
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
-  private val tableSchema: StructType = ManifestTable.scanState(spark, root, None).schema
+  private val tableSchema: StructType = ManifestTable.snapshot(spark, root).schema
 
   override val schema: StructType =
     if (changeFeed) StructType(tableSchema.fields ++ Seq(
@@ -415,7 +418,7 @@ final class GraftStreamSource(spark: SparkSession, root: String,
         GraftSqlBridge.streamingFrame(
           ManifestTable.readChangeFeed(spark, root, s, endV))
       case _ =>
-        val state = ManifestTable.scanState(spark, root, Some(endV))
+        val state = ManifestTable.snapshot(spark, root, Some(endV))
         val df = startV match {
           case None if state.dvs.nonEmpty =>
             // initial snapshot of a deletion-vector'd table: the shared
@@ -433,7 +436,7 @@ final class GraftStreamSource(spark: SparkSession, root: String,
             // vector from a commit the consumer opted out of — serve the
             // file as it was appended (Delta's option semantics), which
             // is exactly the unguarded plain scan
-            val relation = GraftDataSource.relationFor(spark, root, Some(endV), Some(rels),
+            val relation = GraftDataSource.relationFor(spark, state, Some(rels),
               serveDvdSubsetPlain = skipChangeCommits)
             GraftSqlBridge.ofRows(spark, LogicalRelation(relation, isStreaming = true))
         }

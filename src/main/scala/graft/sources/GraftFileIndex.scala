@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.StructType
   * The reference reaches the equivalent path through `format("delta")`
   * (pipeline/airflow/dags/load_data_task.py:147).
   *
-  * Scale shape: construction reads ONE manifest; `listFiles` does one
+  * Scale shape: the index serves one loaded [[ManifestTable.Snapshot]]
+  * (the caller's — it reads no manifest itself); `listFiles` does one
   * `listStatus` per distinct data directory (what any hive-layout listing
   * pays) and zero data-file opens; partition filters are evaluated once
   * per DISTINCT partition tuple, not per file.
@@ -27,21 +28,21 @@ import org.apache.spark.sql.types.StructType
   * `onlyRels` restricts the index to a file subset — the streaming
   * source's per-batch increments ride the same scan path.
   */
-final class GraftFileIndex(spark: SparkSession, root: String,
-    version: Option[Long] = None, onlyRels: Option[Seq[String]] = None)
+final class GraftFileIndex(spark: SparkSession, state: ManifestTable.Snapshot,
+    onlyRels: Option[Seq[String]] = None)
   extends FileIndex {
 
-  private val state = ManifestTable.scanState(spark, root, version)
+  private val root = state.root
   private val rels: Seq[String] = onlyRels.getOrElse(state.files)
   private val base = root.stripSuffix("/")
 
   override val partitionSchema: StructType =
-    StructType(state.partitionBy.map(c => state.schema(c)))
+    StructType(state.layout.map(c => state.schema(c)))
 
   /** The non-partition columns, in declared order — what the relation
     * reads from the files themselves. */
   val dataSchema: StructType =
-    StructType(state.schema.filterNot(f => state.partitionBy.contains(f.name)))
+    StructType(state.schema.filterNot(f => state.layout.contains(f.name)))
 
   /** The manifest's full declared column order — [[graft.plans.DeclaredOrderRule]]
     * projects relations back to it (the V1 file-source convention puts
@@ -58,10 +59,10 @@ final class GraftFileIndex(spark: SparkSession, root: String,
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val survivors = ManifestTable.pruneFiles(spark, root, rels, state.schema,
-      state.partitionBy, state.stats, state.properties, partitionFilters ++ dataFilters)
-    if (state.partitionBy.isEmpty)
+      state.layout, state.stats, state.properties, partitionFilters ++ dataFilters)
+    if (state.layout.isEmpty)
       Seq(PartitionDirectory(InternalRow.empty, survivors.map(statusOf).toArray))
-    else survivors.groupBy(r => ManifestTable.partitionValuesOf(r, state.partitionBy))
+    else survivors.groupBy(r => ManifestTable.partitionValuesOf(r, state.layout))
       .toSeq.map { case (vals, group) =>
         PartitionDirectory(SkippingKernel.partitionRow(vals, partitionSchema, tz),
           group.map(statusOf).toArray)
@@ -83,7 +84,7 @@ final class GraftFileIndex(spark: SparkSession, root: String,
       inDir.map { rel =>
         val name = rel.substring(rel.lastIndexOf('/') + 1)
         rel -> listed.getOrElse(name, throw new IllegalStateException(
-          s"file $rel is committed at v${state.version} of $root but missing on disk " +
+          s"file $rel is committed at v${state.committed} of $root but missing on disk " +
             "(vacuumed with the version still live?)"))
       }
     }

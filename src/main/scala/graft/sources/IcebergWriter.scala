@@ -1012,7 +1012,7 @@ object IcebergWriter {
     * timestamp stats as epoch micros and dates as ISO strings, both
     * loss-free into Appendix-D bounds. */
   def mirror(spark: SparkSession, root: String): Long = {
-    val state = ManifestTable.scanState(spark, root)
+    val state = ManifestTable.snapshot(spark, root)
     require(state.schema.fields.forall(f => !f.metadata.contains(ManifestTable.PhysNameKey)),
       s"column-mapped table at $root cannot mirror to Iceberg (name mapping would need " +
         "per-file physical schemas); mirror to Delta instead")
@@ -1022,7 +1022,7 @@ object IcebergWriter {
     val schema = withIds(StructType(state.schema.fields.map(f =>
       StructField(f.name, f.dataType, f.nullable))))
     val props = Map(NameMappingProp -> nameMappingJson(schema))
-    val mirrorSpec = state.partitionBy.map(c => SpecField(c, c, "identity"))
+    val mirrorSpec = state.layout.map(c => SpecField(c, c, "identity"))
     val st = states.get(absRoot) match {
       case Some(prev) if prev.schema == schema && prev.spec == mirrorSpec =>
         prev
@@ -1055,7 +1055,7 @@ object IcebergWriter {
       dataFile.put("file_path", abs)
       dataFile.put("file_format", "PARQUET")
       val pRec = new GenericData.Record(partSchema)
-      state.partitionBy.zip(ManifestTable.partitionValuesOf(rel, state.partitionBy))
+      state.layout.zip(ManifestTable.partitionValuesOf(rel, state.layout))
         .foreach { case (c, v) =>
           pRec.put(c, v.map(typedPartitionValue(_, schema(c).dataType)).orNull)
         }

@@ -567,10 +567,6 @@ object ManifestTable {
     finally in.close()
   }
 
-  /** Relative data-file paths committed at `v`. */
-  private def listedFiles(fs: FileSystem, root: String, v: Long): Seq[String] =
-    listedLines(fs, root, v).filterNot(_.startsWith("#"))
-
   private def parseTxns(lines: Seq[String]): Map[String, Long] =
     lines.collect {
       case l if l.startsWith(TxnPrefix) =>
@@ -685,35 +681,89 @@ object ManifestTable {
     }
   }
 
-  /** Per-writer batch high-water marks committed at `v`. */
-  private def listedTxns(fs: FileSystem, root: String, v: Long): Map[String, Long] =
-    parseTxns(listedLines(fs, root, v))
+  /** One committed version of a table, as [[snapshot]] loads it: the
+    * live files, their deletion vectors and the header lines (txn marks,
+    * schema, layout, constraints, properties, op, dataChange, the
+    * commit's own change-data files). Per-file stats parse on first use,
+    * so routes that walk many versions ([[readChangeFeed]],
+    * [[netFileChanges]], [[vacuum]]) never pay for them. `version = None`
+    * is a root with no commit yet. */
+  private[graft] final class Snapshot private[ManifestTable] (val root: String,
+      val version: Option[Long], val files: Seq[String],
+      private[ManifestTable] val header: Seq[String], val dvs: FileDvs,
+      loadStats: () => FileStats) {
+    lazy val stats: FileStats = loadStats()
+    val txns: Map[String, Long] = parseTxns(header)
+    val schemaJson: Option[String] = parseSchema(header)
+    val partitionBy: Option[Seq[String]] = parsePartitionBy(header)
+    val constraints: Map[String, String] = parseConstraints(header)
+    val properties: Map[String, String] = parseProperties(header)
+    def dataChange: Boolean = parseDataChange(header)
+    def cdcFiles: Seq[String] = parseCdcFiles(header)
+    /** The partition columns; empty when unpartitioned. */
+    def layout: Seq[String] = partitionBy.getOrElse(Nil)
+    /** The loaded version; fails on a root with no commit. */
+    def committed: Long = version.getOrElse(
+      throw new IllegalStateException(s"no committed version at $root"))
+    /** The declared schema; fails on a version without a schema line. */
+    lazy val schema: StructType = DataType.fromJson(schemaJson.getOrElse(
+      throw new IllegalStateException(s"version $committed of $root carries no schema line")))
+      .asInstanceOf[StructType]
+  }
 
-  /** One consistent view of the freshest committed state, re-read on every
-    * commit attempt so schema/layout decisions are race-safe. */
-  private case class Snapshot(version: Option[Long], files: Seq[String],
-      txns: Map[String, Long], schemaJson: Option[String], partitionBy: Option[Seq[String]],
-      stats: FileStats = Map.empty,
-      constraints: Map[String, String] = Map.empty,
-      properties: Map[String, String] = Map.empty,
-      dvs: FileDvs = Map.empty)
-
-  private def snapshot(spark: SparkSession, root: String): Snapshot =
-    currentVersion(spark, root) match {
-      case None => Snapshot(None, Nil, Map.empty, None, None)
-      case Some(v) =>
-        loadCheckpoint(spark, root, v) match {
-          case Some((hdr, files, stats, dvs)) =>
-            Snapshot(Some(v), files, parseTxns(hdr), parseSchema(hdr),
-              parsePartitionBy(hdr), stats, parseConstraints(hdr),
-              parseProperties(hdr), dvs)
-          case None =>
-            val lines = listedLines(fsFor(spark, root), root, v)
-            Snapshot(Some(v), lines.filterNot(_.startsWith("#")), parseTxns(lines),
-              parseSchema(lines), parsePartitionBy(lines), parseStats(lines),
-              parseConstraints(lines), parseProperties(lines), parseDvs(lines))
-        }
+  /** The one loader: version `version` of `root` (the latest commit when
+    * None; an empty [[Snapshot]] when the root has none). Every read,
+    * every verb and every commit attempt ([[commitWith]]) starts here, so
+    * schema/layout decisions are made against one consistent view. */
+  private[graft] def snapshot(spark: SparkSession, root: String,
+      version: Option[Long] = None): Snapshot =
+    version.orElse(currentVersion(spark, root)) match {
+      case None => emptySnapshot(root)
+      case Some(v) => loadVersion(spark, root, v, hasCheckpoint(spark, root, v))
     }
+
+  private def emptySnapshot(root: String): Snapshot =
+    new Snapshot(root, None, Nil, Nil, Map.empty, () => Map.empty)
+
+  /** Version `v` from its parquet checkpoint when `checkpointed`, else —
+    * or when the checkpoint is unreadable — from its text manifest; the
+    * only place that chooses between the two encodings. A missing
+    * manifest is a version [[vacuum]] reclaimed. */
+  private def loadVersion(spark: SparkSession, root: String, v: Long,
+      checkpointed: Boolean): Snapshot =
+    (if (checkpointed) loadCheckpoint(spark, root, v) else None).getOrElse {
+      val lines =
+        try listedLines(fsFor(spark, root), root, v)
+        catch {
+          case e: java.io.FileNotFoundException => throw new IllegalStateException(
+            s"version $v of $root no longer exists (vacuumed?)", e)
+        }
+      // one pass: a manifest carries files×columns stat lines, and only
+      // the header is parsed eagerly
+      val files = List.newBuilder[String]
+      val header = List.newBuilder[String]
+      val statLines = List.newBuilder[String]
+      val dvLines = List.newBuilder[String]
+      lines.foreach { l =>
+        if (!l.startsWith("#")) files += l
+        else if (l.startsWith(StatsPrefix)) statLines += l
+        else if (l.startsWith(DvPrefix)) dvLines += l
+        else header += l
+      }
+      val stats = statLines.result()
+      new Snapshot(root, Some(v), files.result(), header.result(),
+        parseDvs(dvLines.result()), () => parseStats(stats))
+    }
+
+  private def hasCheckpoint(spark: SparkSession, root: String, v: Long): Boolean = {
+    val p = checkpointPath(root, v)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    catch { case scala.util.control.NonFatal(_) => false }
+  }
+
+  private def versionOrLatest(spark: SparkSession, root: String, version: Option[Long]): Long =
+    version.orElse(currentVersion(spark, root)).getOrElse(
+      throw new IllegalStateException(s"no committed version at $root"))
 
   /** What a commit publishes besides its file list. `stats` holds every
     * known per-file column range; [[tryCommit]] writes only the entries
@@ -731,13 +781,10 @@ object ManifestTable {
 
   /** Snapshot read at the latest (or an explicit) version. */
   def read(spark: SparkSession, root: String, version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val fs = fsFor(spark, root)
-    val lines = listedLines(fs, root, v)
-    readFiles(spark, root, lines.filterNot(_.startsWith("#")),
-      parseSchema(lines), parsePartitionBy(lines).isDefined, s"version $v",
-      dvs = parseDvs(lines))
+    val snap = snapshot(spark, root, version)
+    val v = snap.committed
+    readFiles(spark, root, snap.files, snap.schemaJson, snap.partitionBy.isDefined,
+      s"version $v", dvs = snap.dvs)
   }
 
   /** Filtered snapshot read with READ-TIME data skipping — Delta's
@@ -765,28 +812,29 @@ object ManifestTable {
     * thousands. */
   def readWhere(spark: SparkSession, root: String, pred: Column,
       version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    checkpointPrune(spark, root, v, pred) match {
-      case Some((rels, dvs, schemaJson, partitioned)) =>
-        readFiles(spark, root, rels, schemaJson, partitioned, s"version $v",
-          dvs = dvs).filter(pred)
-      case None =>
-        val lines = listedLines(fsFor(spark, root), root, v)
-        val (pruned, schemaJson, partitioned) = pruneForPredicate(spark, lines, pred, root)
-        readFiles(spark, root, pruned, schemaJson, partitioned, s"version $v",
-          dvs = parseDvs(lines)).filter(pred)
-    }
+    val v = versionOrLatest(spark, root, version)
+    val (rels, dvs, schemaJson, partitioned) = selectFiles(spark, root, v, pred)
+    readFiles(spark, root, rels, schemaJson, partitioned, s"version $v", dvs = dvs).filter(pred)
   }
 
   /** The files a [[readWhere]] scan would open for `pred` — exposed for
     * specs and capacity planning. */
   private[graft] def readCandidates(spark: SparkSession, root: String, pred: Column,
-      version: Option[Long] = None): Seq[String] = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    checkpointPrune(spark, root, v, pred).map(_._1).getOrElse(
-      pruneForPredicate(spark, listedLines(fsFor(spark, root), root, v), pred, root)._1)
+      version: Option[Long] = None): Seq[String] =
+    selectFiles(spark, root, versionOrLatest(spark, root, version), pred)._1
+
+  /** The files of version `v` a scan for `pred` opens, with their
+    * deletion vectors, the schema and whether the table is partitioned:
+    * [[checkpointPrune]] when `v` has a checkpoint, else the loaded
+    * snapshot through [[candidates]]. */
+  private def selectFiles(spark: SparkSession, root: String, v: Long,
+      pred: Column): (Seq[String], FileDvs, Option[String], Boolean) = {
+    val checkpointed = hasCheckpoint(spark, root, v)
+    (if (checkpointed) checkpointPrune(spark, root, v, pred) else None).getOrElse {
+      // a checkpoint checkpointPrune could not use is not read twice
+      val snap = loadVersion(spark, root, v, checkpointed = false)
+      (candidates(spark, snap, pred), snap.dvs, snap.schemaJson, snap.partitionBy.isDefined)
+    }
   }
 
   /** DISTRIBUTED pruning off the parquet checkpoint — the step past the
@@ -799,12 +847,11 @@ object ManifestTable {
     * bounded survivor list on the driver (same final set as the text
     * path: these prunes are independent sound filters, so their order
     * is immaterial). Any surprise degrades to `None` → the text path. */
-  private[graft] def checkpointPrune(spark: SparkSession, root: String, v: Long,
+  private def checkpointPrune(spark: SparkSession, root: String, v: Long,
       pred: Column): Option[(Seq[String], FileDvs, Option[String], Boolean)] = {
     import org.apache.spark.sql.functions.{col => cl}
     val p = checkpointPath(root, v)
     try {
-      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) return None
       // header from the streaming Group reader (the meta row is row 0) —
       // a Spark job just to fetch one row would double the prune latency
       // on small checkpointed tables
@@ -845,47 +892,15 @@ object ManifestTable {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Everything a scan integration ([[GraftFileIndex]]) needs from one
-    * committed version, read in one manifest pass. Requires a schema line
-    * (every table this writer commits carries one). */
-  private[graft] case class ScanState(version: Long, files: Seq[String],
-      schema: StructType, partitionBy: Seq[String],
-      stats: FileStats, dvs: FileDvs = Map.empty,
-      properties: Map[String, String] = Map.empty)
-
-  private[graft] def scanState(spark: SparkSession, root: String,
-      version: Option[Long] = None): ScanState = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    loadCheckpoint(spark, root, v) match {
-      case Some((hdr, files, stats, dvs)) =>
-        val schemaJson = parseSchema(hdr).getOrElse(throw new IllegalStateException(
-          s"version $v of $root carries no schema line"))
-        ScanState(v, files, DataType.fromJson(schemaJson).asInstanceOf[StructType],
-          parsePartitionBy(hdr).getOrElse(Nil), stats, dvs, parseProperties(hdr))
-      case None =>
-        val lines = listedLines(fsFor(spark, root), root, v)
-        val schemaJson = parseSchema(lines).getOrElse(throw new IllegalStateException(
-          s"version $v of $root carries no schema line"))
-        ScanState(v, lines.filterNot(_.startsWith("#")),
-          DataType.fromJson(schemaJson).asInstanceOf[StructType],
-          parsePartitionBy(lines).getOrElse(Nil), parseStats(lines), parseDvs(lines),
-          parseProperties(lines))
-    }
-  }
-
-  /** A listed-file subset of one version, read through the full
+  /** A listed-file subset of one loaded version, read through the full
     * mapping/DV-aware path — what the streaming source's per-batch reads
     * use when the table is column-mapped (the stock file-index scan
     * cannot translate physical names). */
-  private[graft] def readListedSubset(spark: SparkSession, root: String,
-      version: Option[Long], rels: Seq[String]): DataFrame = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val lines = listedLines(fsFor(spark, root), root, v)
+  private[graft] def readListedSubset(spark: SparkSession, snap: Snapshot,
+      rels: Seq[String]): DataFrame = {
     val relSet = rels.toSet
-    readFiles(spark, root, rels, parseSchema(lines), parsePartitionBy(lines).isDefined,
-      s"subset of version $v", dvs = parseDvs(lines).filter { case (r, _) => relSet(r) })
+    readFiles(spark, snap.root, rels, snap.schemaJson, snap.partitionBy.isDefined,
+      s"subset of version ${snap.committed}", dvs = snap.dvs.filter { case (r, _) => relSet(r) })
   }
 
   /** The files of one snapshot that may hold a row for which the
@@ -927,29 +942,22 @@ object ManifestTable {
   private[graft] def partitionValuesOf(rel: String, partCols: Seq[String]): Seq[Option[String]] =
     parsePartitionValues(rel, partCols)
 
-  /** Shared pruning for the read path: (surviving files, schema json,
-    * partitioned?). Falls back to the full file list when the table
-    * carries no schema (nothing to type the stats against). Predicates
-    * on the SOURCE column of a generated partition column first gain
+  /** The files of `snap` that may hold a row matching `pred` — what
+    * [[readWhere]]'s text path, DELETE and UPDATE open: [[pruneFiles]]
+    * over `pred` resolved against the snapshot's schema. Predicates on
+    * the SOURCE column of a generated partition column first gain
     * derived partition conjuncts ([[withDerivedPartitions]]) so a `ts`
-    * range prunes `day` partitions the query never mentioned. */
-  private def pruneForPredicate(spark: SparkSession, lines: Seq[String],
-      pred: Column, root: String): (Seq[String], Option[String], Boolean) = {
-    val schemaJson = parseSchema(lines)
-    val layout = parsePartitionBy(lines)
-    val files = lines.filterNot(_.startsWith("#"))
-    val pruned = schemaJson match {
-      case Some(json) =>
-        val schema = DataType.fromJson(json).asInstanceOf[StructType]
-        val props = parseProperties(lines)
-        val resolved = withDerivedPartitions(spark, SkippingKernel.resolve(spark, pred, schema),
-          schema, props, layout.getOrElse(Nil))
-        pruneFiles(spark, root, files, schema, layout.getOrElse(Nil), parseStats(lines),
-          props, Seq(resolved))
-      case None => files
+    * range prunes `day` partitions the predicate never mentions. The
+    * full file list when the table carries no schema (nothing to type
+    * the stats against). */
+  private def candidates(spark: SparkSession, snap: Snapshot, pred: Column): Seq[String] =
+    if (snap.schemaJson.isEmpty) snap.files
+    else {
+      val resolved = withDerivedPartitions(spark,
+        SkippingKernel.resolve(spark, pred, snap.schema), snap.schema, snap.properties, snap.layout)
+      pruneFiles(spark, snap.root, snap.files, snap.schema, snap.layout, snap.stats,
+        snap.properties, Seq(resolved))
     }
-    (pruned, schemaJson, layout.isDefined)
-  }
 
   /** Delta's generated-column partition pruning, the sound monotone
     * core: when partition column `p` is generated as `f(c)` with `f`
@@ -1101,29 +1109,21 @@ object ManifestTable {
     * to intermediate versions are untouched, and the restore itself can be
     * undone by another restore. No data is rewritten — the new manifest
     * re-lists `version`'s still-present files (restore before [[vacuum]];
-    * a vacuumed target fails on the manifest read). Schema and layout
+    * a vacuumed target fails in the loader). Schema and layout
     * revert with the contents; txn marks are NOT reverted — they are
     * writer-progress state, and replaying an already-seen batch after a
     * restore would otherwise double-append. */
   def restore(spark: SparkSession, root: String, version: Long): Long = {
     checkCommitScheme(spark, root)
-    val fs = fsFor(spark, root)
-    val lines =
-      try listedLines(fs, root, version)
-      catch {
-        case e: java.io.FileNotFoundException => throw new IllegalStateException(
-          s"version $version of $root no longer exists (vacuumed?); restore needs its manifest", e)
-      }
-    val files = lines.filterNot(_.startsWith("#"))
-    files.find { rel =>
+    val target = snapshot(spark, root, Some(version))
+    target.files.find { rel =>
       val p = new Path(resolveEntry(root, rel))
       !p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }.foreach { gone =>
       throw new IllegalStateException(
         s"cannot restore $root to v$version: data file $gone was vacuumed")
     }
-    val dvs = parseDvs(lines)
-    dvs.collectFirst { case (_, e) if e.storage == "f" => e }.foreach { e =>
+    target.dvs.collectFirst { case (_, e) if e.storage == "f" => e }.foreach { e =>
       val abs = if (isAbsEntry(e.payload)) e.payload
         else s"${root.stripSuffix("/")}/${e.payload}"
       val p = new Path(abs)
@@ -1132,10 +1132,10 @@ object ManifestTable {
           s"cannot restore $root to v$version: deletion-vector file ${e.payload} was vacuumed")
     }
     commitWith(spark, root) { snap =>
-      Some((files, snap.txns,
-        CommitMeta(parseSchema(lines), parsePartitionBy(lines), stats = parseStats(lines),
-          op = "restore", constraints = parseConstraints(lines),
-          properties = parseProperties(lines), dvs = dvs)))
+      Some((target.files, snap.txns,
+        CommitMeta(target.schemaJson, target.partitionBy, stats = target.stats,
+          op = "restore", constraints = target.constraints,
+          properties = target.properties, dvs = target.dvs)))
     }.get
   }
 
@@ -1171,27 +1171,25 @@ object ManifestTable {
       else srcBase0
     require(srcBase.startsWith("/"),
       s"shallow clone needs an absolute source root, got $srcRoot")
-    val v = version.orElse(currentVersion(spark, srcRoot)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $srcRoot"))
-    val lines = listedLines(fsFor(spark, srcRoot), srcRoot, v)
+    val src = snapshot(spark, srcRoot, Some(versionOrLatest(spark, srcRoot, version)))
     // cloning a clone re-points at the same external files
     def ext(rel: String): String = if (isAbsEntry(rel)) rel else s"$srcBase/$rel"
-    val files = lines.filterNot(_.startsWith("#")).map(ext)
-    val stats = parseStats(lines).map { case (rel, m) => ext(rel) -> m }
+    val files = src.files.map(ext)
+    val stats = src.stats.map { case (rel, m) => ext(rel) -> m }
     // deletion vectors ride along: entry keys re-point with their files,
     // and `f`-storage payloads become absolute into the SOURCE's _dv dir
     // (inline payloads carry their bytes with them) — the clone reads the
     // source's vectors without copying them, and its own later mutations
     // write vectors under its OWN root
-    val dvs = parseDvs(lines).map { case (rel, e) =>
+    val dvs = src.dvs.map { case (rel, e) =>
       ext(rel) -> (if (e.storage == "f") e.copy(payload = ext(e.payload)) else e)
     }
     commitWith(spark, dstRoot) { snap =>
       require(snap.version.isEmpty,
         s"shallow clone target $dstRoot already has a committed version")
-      Some((files, Map.empty, CommitMeta(parseSchema(lines), parsePartitionBy(lines),
-        stats = stats, op = "clone", constraints = parseConstraints(lines),
-        properties = parseProperties(lines), dvs = dvs)))
+      Some((files, Map.empty, CommitMeta(src.schemaJson, src.partitionBy,
+        stats = stats, op = "clone", constraints = src.constraints,
+        properties = src.properties, dvs = dvs)))
     }.get
   }
 
@@ -1604,10 +1602,13 @@ object ManifestTable {
       } ++
       meta.cdcFiles.map(r => s"$CdcPrefix${escapeStat(r)}")
 
+  private def renderTxns(txns: Map[String, Long]): Seq[String] =
+    txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a:$b" }
+
   private def tryCommit(fs: FileSystem, root: String, v: Long, files: Seq[String],
       txns: Map[String, Long], meta: CommitMeta): Boolean = {
     val target = manifestPath(root, v)
-    val txnLines = txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a:$b" }
+    val txnLines = renderTxns(txns)
     // stats only for files actually committed — entries for files dropped
     // by this commit fall away with them
     val statLines = files.flatMap { f =>
@@ -1776,24 +1777,19 @@ object ManifestTable {
     val threshold = meta.properties.get(CheckpointMinFilesProperty)
       .flatMap(_.trim.toLongOption).getOrElse(DefaultCheckpointMinFiles)
     if (files.size < threshold) return
-    val header = (OpPrefix + meta.op) +: (renderHeader(meta) ++
-      txns.toSeq.sortBy(_._1).map { case (a, b) => s"$TxnPrefix$a:$b" })
+    val header = (OpPrefix + meta.op) +: (renderHeader(meta) ++ renderTxns(txns))
     try writeCheckpointFile(spark, root, v, header, files, meta.stats, meta.dvs)
     catch { case scala.util.control.NonFatal(_) => () }
   }
 
   /** Publish the parquet checkpoint of a version explicitly (rebuilt
-    * from its text manifest), regardless of the threshold. Returns the
-    * checkpointed version. */
+    * from its loaded [[Snapshot]]), regardless of the threshold. Returns
+    * the checkpointed version. */
   def writeManifestCheckpoint(spark: SparkSession, root: String,
       version: Option[Long] = None): Long = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    val lines = listedLines(fsFor(spark, root), root, v)
-    val header = lines.filter(l => l.startsWith("#") &&
-      !l.startsWith(StatsPrefix) && !l.startsWith(DvPrefix))
-    writeCheckpointFile(spark, root, v, header,
-      lines.filterNot(_.startsWith("#")), parseStats(lines), parseDvs(lines))
+    val snap = snapshot(spark, root, version)
+    val v = snap.committed
+    writeCheckpointFile(spark, root, v, snap.header, snap.files, snap.stats, snap.dvs)
     v
   }
 
@@ -1816,21 +1812,19 @@ object ManifestTable {
     } finally reader.close()
   }
 
-  /** Load version `v` from its parquet checkpoint:
-    * (header lines, files, stats, dvs) — or None (absent/corrupt →
-    * text path). Streamed through parquet-hadoop's Group reader on the
+  /** Load version `v` from its parquet checkpoint — or None (unreadable
+    * → [[loadVersion]]'s text path). Streamed through parquet-hadoop's Group reader on the
     * driver — no Spark job, maps built directly, which is what makes
     * the columnar decode actually beat the line parse (a
     * `spark.read.parquet().collect()` formulation was measured SLOWER
     * than the text path: the catalyst→external Row/Map conversion
     * dominates). */
   private def loadCheckpoint(spark: SparkSession, root: String,
-      v: Long): Option[(Seq[String], Seq[String], FileStats, FileDvs)] = {
+      v: Long): Option[Snapshot] = {
     import org.apache.parquet.example.data.Group
     val p = checkpointPath(root, v)
     try {
       val conf = spark.sparkContext.hadoopConfiguration
-      if (!p.getFileSystem(conf).exists(p)) return None
       val reader = org.apache.parquet.hadoop.ParquetReader
         .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
         .withConf(conf).build()
@@ -1884,7 +1878,8 @@ object ManifestTable {
           }
           g = reader.read()
         }
-        Some((header, files.result(), stats.toMap, dvs.toMap))
+        val fileStats = stats.toMap
+        Some(new Snapshot(root, Some(v), files.result(), header, dvs.toMap, () => fileStats))
       } finally reader.close()
     } catch { case scala.util.control.NonFatal(_) => None }
   }
@@ -2073,7 +2068,7 @@ object ManifestTable {
     * partitioning requires an exclusive [[overwrite]], and racing one
     * against an append must fail loud, not publish a mixed layout. */
   private def requireLayout(op: String, snap: Snapshot, layout: Seq[String]): Unit = {
-    val snapLayout = snap.partitionBy.getOrElse(Nil)
+    val snapLayout = snap.layout
     if (snap.version.isDefined && snapLayout != layout)
       throw new IllegalStateException(
         s"$op staged files partitioned by [${layout.mkString(",")}] but the table is now " +
@@ -2102,7 +2097,7 @@ object ManifestTable {
     // authoritative, and asking for a different one is an error
     val layout =
       if (pre.version.isDefined) {
-        val p = pre.partitionBy.getOrElse(Nil)
+        val p = pre.layout
         require(partitionBy.isEmpty || partitionBy == p,
           s"table at $root is partitioned by [${p.mkString(",")}]; exactlyOnceAppend cannot " +
             s"change the layout to [${partitionBy.mkString(",")}]")
@@ -2168,7 +2163,7 @@ object ManifestTable {
     val fs = fsFor(spark, root)
     val pre = snapshot(spark, root)
     if (pre.txns.get(appId).exists(batchId <= _)) return None
-    val layout = if (partitionBy.nonEmpty) partitionBy else pre.partitionBy.getOrElse(Nil)
+    val layout = if (partitionBy.nonEmpty) partitionBy else pre.layout
     val withGen0 = applyGenerated(df, pre.properties, pre.schemaJson)
     val staged = stage(spark, root, sizedForWrite(spark, withGen0, layout, pre.properties),
       layout, pre.constraints ++ generatedChecks(df, pre.properties),
@@ -2242,7 +2237,7 @@ object ManifestTable {
     val pre = snapshot(spark, root)
     val layout =
       if (pre.version.isDefined) {
-        val p = pre.partitionBy.getOrElse(Nil)
+        val p = pre.layout
         require(partitionBy.isEmpty || partitionBy == p,
           s"table at $root is partitioned by [${p.mkString(",")}]; append cannot change the " +
             s"layout to [${partitionBy.mkString(",")}] (overwrite can)")
@@ -2659,7 +2654,7 @@ object ManifestTable {
   private def requireUnreferenced(op: String, spark: SparkSession, root: String,
       snap: Snapshot, colName: String): Unit = {
     val lower = colName.toLowerCase(java.util.Locale.ROOT)
-    if (snap.partitionBy.getOrElse(Nil).exists(_.equalsIgnoreCase(colName)))
+    if (snap.layout.exists(_.equalsIgnoreCase(colName)))
       throw new IllegalArgumentException(
         s"$op $colName at $root: it is a partition column — hive-style paths spell its name; " +
           "rewrite the table (overwrite with a new layout) instead")
@@ -2697,8 +2692,7 @@ object ManifestTable {
   def enableColumnMapping(spark: SparkSession, root: String): Long = {
     commitWith(spark, root) { snap =>
       require(snap.version.nonEmpty, s"enableColumnMapping needs an existing table at $root")
-      val base = DataType.fromJson(snap.schemaJson.getOrElse(throw new IllegalStateException(
-        s"table at $root carries no schema line"))).asInstanceOf[StructType]
+      val base = snap.schema
       if (isMapped(base) && snap.properties.get(MappingProperty).exists(_ == "name")) None
       else {
         base.fieldNames.foreach(n => requirePlainName("column name", n))
@@ -2730,8 +2724,7 @@ object ManifestTable {
     requirePlainName("renameColumn target", newName)
     commitWith(spark, root) { snap =>
       require(snap.version.nonEmpty, s"renameColumn needs an existing table at $root")
-      val base = DataType.fromJson(snap.schemaJson.getOrElse(throw new IllegalStateException(
-        s"table at $root carries no schema line"))).asInstanceOf[StructType]
+      val base = snap.schema
       require(isMapped(base),
         s"renameColumn at $root needs column mapping — enableColumnMapping(root) (or SQL " +
           s"ALTER TABLE … SET TBLPROPERTIES ('$MappingProperty'='name')) first; without it " +
@@ -2774,8 +2767,7 @@ object ManifestTable {
   def dropColumn(spark: SparkSession, root: String, name: String): Long = {
     commitWith(spark, root) { snap =>
       require(snap.version.nonEmpty, s"dropColumn needs an existing table at $root")
-      val base = DataType.fromJson(snap.schemaJson.getOrElse(throw new IllegalStateException(
-        s"table at $root carries no schema line"))).asInstanceOf[StructType]
+      val base = snap.schema
       require(isMapped(base),
         s"dropColumn at $root needs column mapping — enableColumnMapping(root) first; " +
           "without it a drop would have to rewrite every data file")
@@ -2806,8 +2798,7 @@ object ManifestTable {
     requirePlainName("addColumn name", name)
     commitWith(spark, root) { snap =>
       require(snap.version.nonEmpty, s"addColumn needs an existing table at $root")
-      val base = DataType.fromJson(snap.schemaJson.getOrElse(throw new IllegalStateException(
-        s"table at $root carries no schema line"))).asInstanceOf[StructType]
+      val base = snap.schema
       require(!base.fieldNames.exists(_.equalsIgnoreCase(name)),
         s"addColumn at $root: column $name already exists")
       val field =
@@ -2923,21 +2914,10 @@ object ManifestTable {
       Seq(SkippingKernel.resolve(spark, range, schema)))
   }
 
-  /** The files DELETE/UPDATE localize `pred` in: [[pruneFiles]] over
-    * `pred` resolved against the snapshot's schema. */
-  private def candidatesFor(spark: SparkSession, root: String, snap: Snapshot,
-      pred: Column): Seq[String] = snap.schemaJson match {
-    case Some(json) =>
-      val schema = DataType.fromJson(json).asInstanceOf[StructType]
-      pruneFiles(spark, root, snap.files, schema, snap.partitionBy.getOrElse(Nil), snap.stats,
-        snap.properties, Seq(SkippingKernel.resolve(spark, pred, schema)))
-    case None => snap.files
-  }
-
   /** The files [[delete]]'s localization scan would open for `pred` after
     * stats skipping — exposed for specs and capacity planning. */
   private[graft] def deleteCandidates(spark: SparkSession, root: String,
-      pred: Column): Seq[String] = candidatesFor(spark, root, snapshot(spark, root), pred)
+      pred: Column): Seq[String] = candidates(spark, snapshot(spark, root), pred)
 
   /** The candidate files [[merge]]'s localization scan would open for
     * these updates, after partition and stats pruning — exposed for specs
@@ -2945,9 +2925,8 @@ object ManifestTable {
   private[graft] def localizationCandidates(spark: SparkSession, root: String,
       updates: DataFrame, keyCols: Seq[String]): Seq[String] = {
     val snap = snapshot(spark, root)
-    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-      throw new IllegalStateException(s"table at $root carries no schema"))).asInstanceOf[StructType]
-    val layout = snap.partitionBy.getOrElse(Nil)
+    val schema = snap.schema
+    val layout = snap.layout
     statsPrune(spark, root,
       pruneCandidates(spark, snap.files, layout, keyCols, schema, updates),
       keyCols, schema, snap.stats, snap.properties, updates)
@@ -3093,7 +3072,7 @@ object ManifestTable {
       val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
       keyCols.foreach(k => require(schema.fieldNames.contains(k),
         s"table at $root has no key column $k"))
-      val layout = pre.partitionBy.getOrElse(Nil)
+      val layout = pre.layout
       val candidates = statsPrune(spark, root,
         pruneCandidates(spark, pre.files, layout, keyCols, schema, updates),
         keyCols, schema, pre.stats, pre.properties, updates)
@@ -3276,18 +3255,16 @@ object ManifestTable {
     val fs = fsFor(spark, root)
     val preLayout = snapshot(spark, root)
     require(preLayout.version.nonEmpty, s"delete needs an existing table at $root")
-    val layout = preLayout.partitionBy.getOrElse(Nil)
-    val partitionAligned = layout.nonEmpty && preLayout.schemaJson.exists { json =>
-      val r = SkippingKernel.resolve(spark, pred, DataType.fromJson(json).asInstanceOf[StructType])
+    val layout = preLayout.layout
+    val partitionAligned = layout.nonEmpty && preLayout.schemaJson.isDefined && {
+      val r = SkippingKernel.resolve(spark, pred, preLayout.schema)
       r.deterministic && r.references.nonEmpty && r.references.forall(a => layout.contains(a.name))
     }
     if (partitionAligned) {
       // metadata-only path: partition-aligned predicate, no data read;
       // evaluated on the freshest snapshot inside the commit loop
       return commitWith(spark, root) { snap =>
-        val schema = DataType.fromJson(snap.schemaJson.getOrElse(
-          throw new IllegalStateException(s"table at $root carries no schema"))).asInstanceOf[StructType]
-        val dropped = filesMatching(spark, snap.files, layout, schema, pred)
+        val dropped = filesMatching(spark, snap.files, layout, snap.schema, pred)
         if (dropped.isEmpty) None
         else Some((snap.files.filterNot(dropped), snap.txns,
           CommitMeta(snap.schemaJson, snap.partitionBy, stats = snap.stats -- dropped,
@@ -3302,10 +3279,10 @@ object ManifestTable {
       val schemaJson = pre.schemaJson
       // stats skipping first: files whose committed ranges prove the
       // predicate can't match are never opened by the localization scan
-      val candidates = candidatesFor(spark, root, pre, pred)
+      val cands = candidates(spark, pre, pred)
       val touched: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else readTagged(spark, root, candidates, schemaJson, layout.nonEmpty, dvs = pre.dvs)
+        if (cands.isEmpty) Set.empty
+        else readTagged(spark, root, cands, schemaJson, layout.nonEmpty, dvs = pre.dvs)
           .filter(pred)
           .select("__file").distinct().collect()
           .map(r => relUnderRoot(root, r.getString(0))).toSet
@@ -3371,7 +3348,7 @@ object ManifestTable {
     val fs = fsFor(spark, root)
     val first = snapshot(spark, root)
     require(first.version.nonEmpty, s"update needs an existing table at $root")
-    val layout = first.partitionBy.getOrElse(Nil)
+    val layout = first.layout
     set.keys.foreach { c =>
       require(!layout.contains(c),
         s"update cannot change partition column $c — rows would have to MOVE files; " +
@@ -3387,14 +3364,13 @@ object ManifestTable {
     while (true) {
       val pre = snapshot(spark, root)
       val schemaJson = pre.schemaJson
-      val schema = DataType.fromJson(schemaJson.getOrElse(
-        throw new IllegalStateException(s"table at $root carries no schema"))).asInstanceOf[StructType]
+      val schema = pre.schema
       set.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"update SET references unknown column $c"))
-      val candidates = candidatesFor(spark, root, pre, pred)
+      val cands = candidates(spark, pre, pred)
       val touched: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else readTagged(spark, root, candidates, schemaJson, layout.nonEmpty, dvs = pre.dvs)
+        if (cands.isEmpty) Set.empty
+        else readTagged(spark, root, cands, schemaJson, layout.nonEmpty, dvs = pre.dvs)
           .filter(pred)
           .select("__file").distinct().collect()
           .map(r => relUnderRoot(root, r.getString(0))).toSet
@@ -3558,10 +3534,10 @@ object ManifestTable {
     while (true) {
       val pre = snapshot(spark, root)
       val schemaJson = pre.schemaJson
-      val layout = pre.partitionBy.getOrElse(Nil)
-      val candidates = candidatesFor(spark, root, pre, pred)
-      if (candidates.isEmpty) return None
-      val matched = readTagged(spark, root, candidates, schemaJson, layout.nonEmpty,
+      val layout = pre.layout
+      val cands = candidates(spark, pre, pred)
+      if (cands.isEmpty) return None
+      val matched = readTagged(spark, root, cands, schemaJson, layout.nonEmpty,
           dvs = pre.dvs, tagPos = true)
         .filter(coalesce(pred, lit(false)))
       val fresh = collectNewDvBlobs(spark, root, matched)
@@ -3615,16 +3591,14 @@ object ManifestTable {
     while (true) {
       val pre = snapshot(spark, root)
       val schemaJson = pre.schemaJson
-      val schema = DataType.fromJson(schemaJson.getOrElse(
-        throw new IllegalStateException(s"table at $root carries no schema")))
-        .asInstanceOf[StructType]
+      val schema = pre.schema
       set.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"update SET references unknown column $c"))
-      val layout = pre.partitionBy.getOrElse(Nil)
-      val candidates = candidatesFor(spark, root, pre, pred)
-      if (candidates.isEmpty) return None
+      val layout = pre.layout
+      val cands = candidates(spark, pre, pred)
+      if (cands.isEmpty) return None
       val hit = coalesce(pred, lit(false))
-      val matched = readTagged(spark, root, candidates, schemaJson, layout.nonEmpty,
+      val matched = readTagged(spark, root, cands, schemaJson, layout.nonEmpty,
           dvs = pre.dvs, tagPos = true)
         .filter(hit)
       val fresh = collectNewDvBlobs(spark, root, matched)
@@ -3718,7 +3692,7 @@ object ManifestTable {
     val df = read(spark, root, pre.version)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val nFiles = math.max(1L, (bytes / (targetFileMb.toLong * 1024 * 1024)).toLong)
-    val layout = pre.partitionBy.getOrElse(Nil)
+    val layout = pre.layout
     require(zorderBy.isEmpty || zorderBy.length == 2,
       s"z-order clustering interleaves exactly two key columns, got $zorderBy")
     require(zorderBy.intersect(layout).isEmpty,
@@ -3792,7 +3766,7 @@ object ManifestTable {
     val small = sized.filter(_._2 < smallMb.toLong * 1024 * 1024)
     if (small.size < 2) return pre.version.get
     val rewritten = small.map(_._1).toSet
-    val layout = pre.partitionBy.getOrElse(Nil)
+    val layout = pre.layout
     val bytes = small.map(_._2).sum
     val nFiles = math.max(1L, bytes / (targetFileMb.toLong * 1024 * 1024) + 1).toInt
     val packed = {
@@ -3842,11 +3816,11 @@ object ManifestTable {
   def changesBetween(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long, includeRemoves: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val (added, removed, toLines, layouts, fromDvs) =
+    val (added, removed, to, layouts, fromDvs) =
       netFileChanges(spark, root, fromVersion, toVersion, allowRemoves = includeRemoves)
-    val toSchema = parseSchema(toLines)
-    val toDvs = parseDvs(toLines)
-    val partitioned = parsePartitionBy(toLines).isDefined
+    val toSchema = to.schemaJson
+    val toDvs = to.dvs
+    val partitioned = to.partitionBy.isDefined
     val what = s"changes ($fromVersion, $toVersion]"
     if (!includeRemoves)
       readFiles(spark, root, added, toSchema, partitioned, what, dvs = toDvs)
@@ -3863,8 +3837,7 @@ object ManifestTable {
       // committed under the old layout would read their partition columns
       // as null and a downstream fold would subtract from a bogus null
       // group — fail loud, like the vacuumed-manifest case
-      if (removed.nonEmpty &&
-          layouts.exists(_ != parsePartitionBy(toLines).getOrElse(Nil)))
+      if (removed.nonEmpty && layouts.exists(_ != to.layout))
         throw new IllegalStateException(
           s"the partition layout of $root changed inside ($fromVersion, $toVersion] — " +
             "removed files cannot be read consistently under the final layout; " +
@@ -3913,17 +3886,7 @@ object ManifestTable {
     import org.apache.spark.sql.functions.{col, lit}
     require(fromVersion >= 0 && toVersion > fromVersion,
       s"readChangeFeed needs 0 <= fromVersion < toVersion, got ($fromVersion, $toVersion]")
-    val fs = fsFor(spark, root)
-    def linesAt(v: Long): Seq[String] =
-      try listedLines(fs, root, v)
-      catch {
-        case e: java.io.FileNotFoundException => throw new IllegalStateException(
-          s"version $v of $root no longer exists (vacuumed?) — the change feed " +
-            s"($fromVersion, $toVersion] cannot be reconstructed", e)
-      }
-    val toLines = linesAt(toVersion)
-    val schema = DataType.fromJson(parseSchema(toLines).getOrElse(throw new IllegalStateException(
-      s"version $toVersion of $root carries no schema line"))).asInstanceOf[StructType]
+    val schema = snapshot(spark, root, Some(toVersion)).schema
     // align a contributing frame to the target schema + feed columns:
     // columns a later version added read as null for earlier commits.
     // Matching is by PHYSICAL name where the schemas carry column
@@ -3941,19 +3904,18 @@ object ManifestTable {
         else lit(null).cast(f.dataType).as(f.name)
       } :+ col(ChangeTypeCol) :+ lit(v).as(CommitVersionCol): _*)
     }
-    var prevFiles: Seq[String] =
-      if (fromVersion == 0) Nil else linesAt(fromVersion).filterNot(_.startsWith("#"))
-    var prevDvs: FileDvs =
-      if (fromVersion == 0) Map.empty else parseDvs(linesAt(fromVersion))
+    var prevSnap =
+      if (fromVersion == 0) emptySnapshot(root) else snapshot(spark, root, Some(fromVersion))
     val parts = Seq.newBuilder[DataFrame]
     (fromVersion + 1 to toVersion).foreach { v =>
-      val lines = linesAt(v)
-      val files = lines.filterNot(_.startsWith("#"))
-      if (parseDataChange(lines)) {
-        val vSchema = parseSchema(lines)
-        val vPartitioned = parsePartitionBy(lines).isDefined
-        val curDvs = parseDvs(lines)
-        val cdcRels = parseCdcFiles(lines)
+      val snap = snapshot(spark, root, Some(v))
+      val (prevFiles, prevDvs) = (prevSnap.files, prevSnap.dvs)
+      val files = snap.files
+      val curDvs = snap.dvs
+      if (snap.dataChange) {
+        val vSchema = snap.schemaJson
+        val vPartitioned = snap.partitionBy.isDefined
+        val cdcRels = snap.cdcFiles
         if (cdcRels.nonEmpty) {
           // cdc files: full row + _change_type, written unpartitioned
           val cdcSchema = vSchema.map { j =>
@@ -4007,8 +3969,7 @@ object ManifestTable {
           }
         }
       }
-      prevFiles = files
-      prevDvs = parseDvs(lines)
+      prevSnap = snap
     }
     val built = parts.result()
     // The feed plans ONE scan per contributing version — the right shape
@@ -4053,7 +4014,7 @@ object ManifestTable {
     * [[addedRelsBetween]]: signed add/remove counts per file over the
     * range (in-range churn cancels), `dataChange:false` commits
     * contribute nothing. Returns (netAdded, netRemoved, toVersion's
-    * manifest lines, the partition layouts seen over the range,
+    * snapshot, the partition layouts seen over the range,
     * fromVersion's deletion vectors — net-removed files read under
     * them). Any deletion-vector CHANGE inside the range fails loud in
     * both modes: it removes (or revives) rows without touching the file
@@ -4062,25 +4023,16 @@ object ManifestTable {
   private def netFileChanges(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long, allowRemoves: Boolean,
       skipChangeCommits: Boolean = false)
-      : (Seq[String], Seq[String], Seq[String], Set[Seq[String]], FileDvs) = {
+      : (Seq[String], Seq[String], Snapshot, Set[Seq[String]], FileDvs) = {
     require(0 <= fromVersion && fromVersion <= toVersion,
       s"need 0 <= fromVersion <= toVersion, got ($fromVersion, $toVersion]")
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
     require(toVersion <= cur, s"toVersion $toVersion is beyond the latest commit v$cur")
-    val fs = fsFor(spark, root)
-    def linesOf(v: Long): Seq[String] =
-      try listedLines(fs, root, v)
-      catch {
-        case e: java.io.FileNotFoundException => throw new IllegalStateException(
-          s"manifest v$v at $root no longer exists (vacuumed?); changesBetween needs every " +
-            s"manifest in [$fromVersion, $toVersion]", e)
-      }
-    var prev: Set[String] =
-      if (fromVersion == 0) Set.empty
-      else linesOf(fromVersion).filterNot(_.startsWith("#")).toSet
-    var prevDvs: FileDvs =
-      if (fromVersion == 0) Map.empty else parseDvs(linesOf(fromVersion))
+    val from =
+      if (fromVersion == 0) emptySnapshot(root) else snapshot(spark, root, Some(fromVersion))
+    var prev: Set[String] = from.files.toSet
+    var prevDvs: FileDvs = from.dvs
     // NET add/remove count per file over the range. A file added then
     // removed inside the range (merge rewrite churn, restore ping-pong)
     // nets to 0 and is skipped — its rows both appeared and disappeared,
@@ -4088,14 +4040,15 @@ object ManifestTable {
     // this is a signed count, not two sets.
     val net = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val layouts = scala.collection.mutable.Set.empty[Seq[String]]
-    if (fromVersion > 0)
-      layouts += parsePartitionBy(linesOf(fromVersion)).getOrElse(Nil)
+    if (fromVersion > 0) layouts += from.layout
+    var to = from
     ((fromVersion + 1) to toVersion).foreach { v =>
-      val lines = linesOf(v)
-      layouts += parsePartitionBy(lines).getOrElse(Nil)
-      val files = lines.filterNot(_.startsWith("#"))
-      if (parseDataChange(lines)) {
-        val curDvs = parseDvs(lines)
+      val snap = snapshot(spark, root, Some(v))
+      to = snap
+      layouts += snap.layout
+      val files = snap.files
+      val curDvs = snap.dvs
+      if (snap.dataChange) {
         // a deletion-vector change on a carried file removed (or, under
         // restore, revived) ROWS without touching the file list — a
         // file-level diff cannot represent it in either mode; the
@@ -4133,31 +4086,27 @@ object ManifestTable {
         }
       }
       prev = files.toSet
-      prevDvs = parseDvs(lines)
+      prevDvs = curDvs
     }
-    val toLines = linesOf(toVersion)
     // remove + re-add across versions dodges the per-version carried-file
     // check above (the re-add sees the file absent from `prev`), and a
     // restore can re-add a path under a DIFFERENT vector: a net-zero file
     // whose endpoint vectors differ changed rows invisibly to the file
     // diff — same failure, caught at the endpoints
-    val fromDvs: FileDvs =
-      if (fromVersion == 0) Map.empty else parseDvs(linesOf(fromVersion))
-    val endDvs = parseDvs(toLines)
     val netZeroChanged = net.collect {
-      case (f, 0) if !skipChangeCommits && fromDvs.get(f) != endDvs.get(f) => f
+      case (f, 0) if !skipChangeCommits && from.dvs.get(f) != to.dvs.get(f) => f
     }
     if (netZeroChanged.nonEmpty) throw new IllegalStateException(
       s"($fromVersion, $toVersion] of $root re-added ${netZeroChanged.size} file(s) under " +
         "a different deletion vector (restore?) — a file-level diff cannot represent " +
         "row-level invalidation; use readChangeFeed for this range, or re-derive " +
         "downstream state from a full read of the new snapshot")
-    // toVersion's lines ride along so callers read with ITS schema/layout:
-    // columns added by evolution in the range surface (null for files
-    // written before the add)
+    // toVersion's snapshot rides along so callers read with ITS
+    // schema/layout: columns added by evolution in the range surface
+    // (null for files written before the add)
     (net.collect { case (f, n) if n > 0 => f }.toSeq,
       net.collect { case (f, n) if n < 0 => f }.toSeq,
-      toLines, layouts.toSet, fromDvs)
+      to, layouts.toSet, from.dvs)
   }
 
   // ------------------------------------------------ partition-value logic
@@ -4268,7 +4217,19 @@ object ManifestTable {
         dropByCount.intersect(monotonized.filter(_._2 < cutT).map(_._1).toSet)
     }
     val (drop, keep) = versions.partition(reclaimable)
-    val live = keep.flatMap(listedFiles(fs, base, _)).toSet
+    // one load per retained version: its data files, its change-data
+    // files (referenced by exactly one manifest each) and its
+    // root-relative `f`-storage deletion-vector files (absolute payloads
+    // belong to a clone SOURCE and are never this root's to reclaim)
+    val live, liveCdc, liveDv = scala.collection.mutable.HashSet.empty[String]
+    keep.foreach { v =>
+      val snap = snapshot(spark, base, Some(v))
+      live ++= snap.files
+      liveCdc ++= snap.cdcFiles
+      liveDv ++= snap.dvs.values.collect {
+        case e if e.storage == "f" && !isAbsEntry(e.payload) => e.payload
+      }
+    }
     // dryRun (Delta `VACUUM … DRY RUN`): count what WOULD be reclaimed,
     // touch nothing — manifests included
     if (!dryRun) drop.foreach { v =>
@@ -4291,32 +4252,25 @@ object ManifestTable {
         if (!dryRun) pruneEmptyDirs(fs, dataDir) // drop partition dirs emptied above
         n
       }
-    // change-data files: referenced by `# cdc:` lines of exactly one
-    // manifest each — reclaimable once that manifest is gone (the feed
-    // over a vacuumed range fails loud anyway)
+    // change-data files: reclaimable once their manifest is gone (the
+    // feed over a vacuumed range fails loud anyway)
     val cdcDir = new Path(s"$base/$CdcDir")
     val removedCdc =
       if (!fs.exists(cdcDir)) 0
       else {
-        val liveCdc = keep.flatMap(v => parseCdcFiles(listedLines(fs, base, v))).toSet
         listFilesRecursive(fs, cdcDir).count { st =>
           val rel = s"$CdcDir/${relativeTo(cdcDir, st.getPath)}"
           !liveCdc.contains(rel) && st.getModificationTime < cutoff &&
             (dryRun || fs.delete(st.getPath, false))
         }
       }
-    // deletion-vector files: referenced by `f`-storage `# dv:` entries of
-    // retained manifests (payloads are root-relative; absolute payloads
-    // belong to a clone SOURCE and are never this root's to reclaim) —
-    // reclaimable once no retained manifest references them (purged by
-    // compaction, or their manifests vacuumed above)
+    // deletion-vector files: reclaimable once no retained manifest
+    // references them (purged by compaction, or their manifests vacuumed
+    // above)
     val dvDir = new Path(s"$base/$DvDir")
     val removedDv =
       if (!fs.exists(dvDir)) 0
       else {
-        val liveDv = keep.flatMap(v => parseDvs(listedLines(fs, base, v)).values.collect {
-          case e if e.storage == "f" && !isAbsEntry(e.payload) => e.payload
-        }).toSet
         listFilesRecursive(fs, dvDir).count { st =>
           val rel = s"$DvDir/${relativeTo(dvDir, st.getPath)}"
           !liveDv.contains(rel) && st.getModificationTime < cutoff &&
@@ -4379,7 +4333,7 @@ object ManifestTable {
       try p.getFileSystem(hc).getFileStatus(p).getLen catch { case _: java.io.IOException => 0L }
     }.sum
     (snap.version.get, snap.files.size.toLong, bytes,
-      snap.partitionBy.getOrElse(Nil), snap.dvs.size.toLong, snap.properties)
+      snap.layout, snap.dvs.size.toLong, snap.properties)
   }
 
   /** Remove now-empty subdirectories of `dir` (never `dir` itself);

@@ -13,7 +13,7 @@ class AutoOptimizeSpec extends SparkSpec {
   private def freshDir(): String = Files.createTempDirectory("autoopt").toString + "/t"
 
   private def files(root: String): Seq[String] =
-    ManifestTable.scanState(spark, root).files
+    ManifestTable.snapshot(spark, root).files
 
   test("bin-packing compact rewrites only the small files") {
     val root = freshDir()

@@ -30,7 +30,7 @@ class BloomIndexSpec extends SparkSpec {
     ManifestTable.setProperty(spark, root, "graft.bloom.k", "0.01")
     ManifestTable.delete(spark, root, col("k") === "boot")
     seed(root)
-    val all = ManifestTable.scanState(spark, root).files
+    val all = ManifestTable.snapshot(spark, root).files
     // min/max alone keeps every file…
     val statsOnly = ManifestTable.readCandidates(spark, root, col("v") >= 0L)
     assert(statsOnly.size == all.size)
@@ -57,7 +57,7 @@ class BloomIndexSpec extends SparkSpec {
         .withColumn("k", concat(lit("key-"), col("id")))
         .withColumn("v", col("id") * 2)
         .repartition(8, org.apache.spark.sql.functions.pmod(hash(col("id")), lit(8))))
-    val all = ManifestTable.scanState(spark, root).files
+    val all = ManifestTable.snapshot(spark, root).files
     val inOpened = ManifestTable.readCandidates(spark, root,
       col("id").isin(7L, 1234L))
     assert(inOpened.size < all.size,
@@ -82,7 +82,7 @@ class BloomIndexSpec extends SparkSpec {
         .withColumn("ik", col("id").cast("int"))
         .withColumn("v", col("id") * 2)
         .repartition(8, org.apache.spark.sql.functions.pmod(hash(col("id")), lit(8))))
-    val all = ManifestTable.scanState(spark, root).files
+    val all = ManifestTable.snapshot(spark, root).files
     // resolves to cast(ik as bigint) = 1234L: the kernel hands the bloom 1234 as an int
     val opened = ManifestTable.readCandidates(spark, root, col("ik") === lit(1234L))
     assert(opened.size < all.size,
@@ -99,7 +99,7 @@ class BloomIndexSpec extends SparkSpec {
     ManifestTable.setProperty(spark, root, "graft.bloom.k", "0.01")
     ManifestTable.delete(spark, root, col("k") === "boot")
     seed(root)
-    val all = ManifestTable.scanState(spark, root).files
+    val all = ManifestTable.snapshot(spark, root).files
     val touched = ManifestTable.deleteCandidates(spark, root, col("k") === "key-99")
     assert(touched.size < all.size,
       s"delete localization should bloom-prune, got ${touched.size} of ${all.size}")
@@ -108,7 +108,7 @@ class BloomIndexSpec extends SparkSpec {
     // compact rewrites everything — fresh files get fresh sidecars
     ManifestTable.compact(spark, root, targetFileMb = 1)
     val after = ManifestTable.readCandidates(spark, root, col("k") === "key-1234")
-    val compacted = ManifestTable.scanState(spark, root).files
+    val compacted = ManifestTable.snapshot(spark, root).files
     assert(after.size <= compacted.size)
     assert(ManifestTable.readWhere(spark, root, col("k") === "key-1234")
       .select("v").head.getLong(0) == 2468L)
@@ -138,7 +138,7 @@ class BloomIndexSpec extends SparkSpec {
     assert(!after.exists(before.toSet), "vacuumed files release their sidecars")
     // deleting a live sidecar degrades to open-the-file, never mis-reads
     after.foreach(_.delete())
-    val all = ManifestTable.scanState(spark, root).files
+    val all = ManifestTable.snapshot(spark, root).files
     val opened = ManifestTable.readCandidates(spark, root, col("k") === "key-123")
     assert(opened.size == all.size, "no sidecar = no bloom pruning")
     assert(ManifestTable.readWhere(spark, root, col("k") === "key-123")
@@ -158,7 +158,7 @@ class BloomIndexSpec extends SparkSpec {
     // sidecars were always keyed by the stable physical name)
     assert(ManifestTable.properties(spark, root).contains("graft.bloom.doc_key"))
     assert(!ManifestTable.properties(spark, root).contains("graft.bloom.k"))
-    val all = ManifestTable.scanState(spark, root).files
+    val all = ManifestTable.snapshot(spark, root).files
     val opened = ManifestTable.readCandidates(spark, root, col("doc_key") === "key-1234")
     assert(opened.size < all.size / 2,
       s"bloom keyed by physical name should survive the rename, opened ${opened.size}")

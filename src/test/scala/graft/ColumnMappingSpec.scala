@@ -23,10 +23,10 @@ class ColumnMappingSpec extends SparkSpec {
   test("rename is metadata-only: same files, old bytes read under the new name") {
     val root = freshRoot()
     seed(root)
-    val filesBefore = ManifestTable.scanState(spark, root).files
+    val filesBefore = ManifestTable.snapshot(spark, root).files
     ManifestTable.enableColumnMapping(spark, root)
     ManifestTable.renameColumn(spark, root, "v", "value")
-    val st = ManifestTable.scanState(spark, root)
+    val st = ManifestTable.snapshot(spark, root)
     assert(st.files == filesBefore, "rename must not touch data files")
     val out = ManifestTable.read(spark, root)
     assert(out.columns.toSeq == Seq("id", "value", "s"))
@@ -69,7 +69,7 @@ class ColumnMappingSpec extends SparkSpec {
     assert(merged.count() == 5 && merged.agg(sum("value")).head.getLong(0) == -5L)
     // physical bytes of every post-mapping file spell the stable name "v"
     val physCols = spark.read.parquet(
-      ManifestTable.scanState(spark, root).files
+      ManifestTable.snapshot(spark, root).files
         .map(r => s"$root/$r"): _*).columns.toSet
     assert(physCols == Set("id", "v", "s"), s"files must keep physical names, got $physCols")
   }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.sources.{CommitArbiter, ConditionalPutArbiter, ConditionalPutStore, ManifestTable}
+import graft.sources.{CommitArbiter, ConditionalPutArbiter, ConditionalPutStore, ManifestTable,
+  RenameArbiter}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -150,6 +151,32 @@ class CommitArbiterSpec extends SparkSpec {
       Await.result(writer, 120.seconds); Await.result(reader, 120.seconds)
       assert(ManifestTable.read(spark, root).count() == 60)
     }
+  }
+
+  test("RenameArbiter on the local FS: racing publishers of one version, exactly one wins") {
+    // exists() stalls after it looks, so both publishers would pass the
+    // absent-target check before either renames if the check and the
+    // rename were not one atomic step; POSIX rename then overwrites and
+    // both report a win
+    val fs = new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def exists(f: Path): Boolean = {
+        val seen = super.exists(f)
+        Thread.sleep(200)
+        seen
+      }
+    }
+    fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    val target = new Path(Files.createTempDirectory("rename").toString, "_manifests/v1.manifest")
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val racers = Seq("a", "b").map(w =>
+      w -> Future(RenameArbiter.publish(fs, target, w.getBytes("UTF-8"))))
+    val won = racers.collect { case (w, f) if Await.result(f, 30.seconds) => w }
+    assert(won.size == 1, s"publishers that won: $won")
+    val published = Files.readAllBytes(java.nio.file.Paths.get(target.toUri.getPath))
+    assert(new String(published, "UTF-8") == won.head)
+    assert(fs.listStatus(target.getParent).map(_.getPath.getName).toSeq == Seq("v1.manifest"))
   }
 
   // ---- the concrete Hadoop-FS store (S3A createFile().overwrite(false)

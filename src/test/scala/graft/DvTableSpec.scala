@@ -91,11 +91,11 @@ class DvTableSpec extends SparkSpec {
   test("a fully-dead file drops from the manifest instead of carrying a tombstone vector") {
     val root = freshDir()
     mkTable(root)
-    val before = ManifestTable.scanState(spark, root).files.size
+    val before = ManifestTable.snapshot(spark, root).files.size
     // the range layout puts ids 0..249 in file 1: kill them all
     val v = ManifestTable.delete(spark, root, col("id") < 250L)
     assert(v.isDefined)
-    val state = ManifestTable.scanState(spark, root)
+    val state = ManifestTable.snapshot(spark, root)
     assert(state.files.size < before,
       s"fully-dead file should leave the list ($before -> ${state.files.size})")
     assert(ManifestTable.read(spark, root).count() == 750)

@@ -60,7 +60,7 @@ class GeneratedColumnsSpec extends SparkSpec {
     val root = freshDir()
     mkGenTable(root)
     ManifestTable.append(spark, root, events(40))
-    val allFiles = ManifestTable.scanState(spark, root).files
+    val allFiles = ManifestTable.snapshot(spark, root).files
     val lo = java.sql.Timestamp.valueOf("2023-11-14 23:00:00")
     val hi = java.sql.Timestamp.valueOf("2023-11-15 23:00:00")
     val pred = col("ts") >= lit(lo) && col("ts") <= lit(hi)
@@ -75,6 +75,33 @@ class GeneratedColumnsSpec extends SparkSpec {
     assert(got == want && got > 0)
   }
 
+  test("DELETE localizes a ts range to its day partitions when ts carries no stats") {
+    val root = freshDir()
+    // 13 stats-eligible columns ahead of `ts` take all 12 stats slots, so
+    // only the derived `day` conjuncts can prune a `ts` predicate
+    def wide(n: Int) = events(n).select(
+      Seq(col("id")) ++ (1 to 12).map(i => (col("id") + i).as(s"c$i")) ++
+        Seq(col("ts"), col("v")): _*)
+    ManifestTable.append(spark, root,
+      wide(0).withColumn("day", col("ts").cast("date")), partitionBy = Seq("day"))
+    ManifestTable.setProperty(spark, root,
+      s"${ManifestTable.GeneratedPrefix}day", "CAST(ts AS DATE)")
+    ManifestTable.append(spark, root, wide(40))
+    val all = ManifestTable.snapshot(spark, root).files
+    val pred = col("ts") >= expr("TIMESTAMP '2023-11-15 00:00:00'") &&
+      col("ts") <= expr("TIMESTAMP '2023-11-15 23:59:59'")
+    val opened = ManifestTable.deleteCandidates(spark, root, pred)
+    assert(opened.nonEmpty && opened.forall(_.contains("day=2023-11-15")),
+      s"DELETE must open only the 2023-11-15 files: $opened of ${all.size}")
+    val before = ManifestTable.read(spark, root).collect().toSet
+    val matching = ManifestTable.read(spark, root).filter(pred).collect().toSet
+    assert(matching.nonEmpty)
+    assert(ManifestTable.delete(spark, root, pred).isDefined)
+    val after = ManifestTable.read(spark, root).collect().toSet
+    assert(before -- after == matching)
+    assert(after.size == before.size - matching.size)
+  }
+
   test("year() generation prunes too; non-monotonic shapes just skip derivation") {
     val root = freshDir()
     ManifestTable.append(spark, root,
@@ -86,7 +113,7 @@ class GeneratedColumnsSpec extends SparkSpec {
     val df = spark.range(20).toDF("id")
       .withColumn("ts", expr("timestamp_micros(cast(1500000000000000 + id * 31536000000000 as long))"))
     ManifestTable.append(spark, root, df)
-    val all = ManifestTable.scanState(spark, root).files.size
+    val all = ManifestTable.snapshot(spark, root).files.size
     val opened = ManifestTable.readCandidates(spark, root,
       col("ts") >= lit(java.sql.Timestamp.valueOf("2020-01-01 00:00:00")))
     assert(opened.size < all, s"year derivation should prune, got $opened of $all")

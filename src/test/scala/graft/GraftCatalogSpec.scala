@@ -34,7 +34,7 @@ class GraftCatalogSpec extends SparkSpec {
     // INSERT OVERWRITE replaces contents, keeps the layout
     spark.sql("INSERT OVERWRITE graft.events_t VALUES (9, 'click')")
     assert(spark.sql("SELECT id FROM graft.events_t").head.getLong(0) == 9)
-    assert(ManifestTable.scanState(spark, root).partitionBy == Seq("kind"))
+    assert(ManifestTable.snapshot(spark, root).layout == Seq("kind"))
     // SHOW TABLES sees it; DROP removes data (managed table)
     assert(spark.sql("SHOW TABLES IN graft").collect().map(_.getString(1)).contains("events_t"))
     spark.sql("DROP TABLE graft.events_t")

@@ -98,7 +98,7 @@ class GraftDataSourceSpec extends SparkSpec {
       .repartitionByRange(4, col("id")).sortWithinPartitions("id")
     df.write.format("graft").partitionBy("k").mode("append").save(root)
 
-    val index = new GraftFileIndex(spark, root)
+    val index = new GraftFileIndex(spark, ManifestTable.snapshot(spark, root))
     val all = index.listFiles(Nil, Nil).map(_.files.size).sum
     val kAttr = AttributeReference("k", IntegerType, nullable = true)()
     val idAttr = AttributeReference("id", LongType, nullable = true)()
@@ -132,6 +132,22 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(perPartition < all, s"SQL filter must prune ($perPartition vs $all files)")
     // the batch reader honors the same suffix
     assert(spark.read.format("graft").load(s"$root@v$v1").count() == 40)
+  }
+
+  test("SQL-on-file: planning one SELECT opens the manifest once") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("gds_opens").toString + "/t"
+    val root = "graftfs:" + dir
+    ManifestTable.append(spark, root,
+      (0 until 40).map(i => (i.toLong, i % 4)).toDF("id", "k"), partitionBy = Seq("k"))
+    ManifestTable.append(spark, root, (40 until 60).map(i => (i.toLong, i % 4)).toDF("id", "k"))
+    val opens = GraftTestFs.opensDuring {
+      spark.sql(s"SELECT id FROM graft.`$root` WHERE k = 2").queryExecution.executedPlan
+    }.filter(p => p.startsWith(dir) && p.endsWith(".manifest"))
+    // the catalog's table handle, the relation's DV/mapping check and
+    // the file index all serve the one loaded snapshot
+    assert(opens.size == 1, s"manifest opened ${opens.size} times: $opens")
+    assert(spark.sql(s"SELECT id FROM graft.`$root` WHERE k = 2").count() == 15)
   }
 
   test("streaming source: snapshot first batch, then per-commit increments") {

@@ -101,13 +101,13 @@ class IncrementalDedupSpec extends SparkSpec {
     // 200 shingled corpus docs spread rows across the 64 pbkt partitions
     val corpus = (1L to 200L).map(i => i -> filler(i)).toDF("doc_id", "text")
     ManifestTable.append(spark, root,
-      Dedup.bandedIndexOf(Dedup.sigsAllOver(corpus))
+      Dedup.bandedIndexOf(Dedup.sigsAllOver(corpus), Dedup.IndexPbkts)
         .repartition(col("pbkt")).sortWithinPartitions("bucket"),
       partitionBy = Seq("pbkt"))
     val allFiles = ManifestTable.readCandidates(spark, root, lit(true)).size
     // a ONE-doc batch probes at most 9 buckets -> at most 9 pbkt partitions
     val batchSigs = Dedup.sigsAllOver(Seq(9999L -> filler(1)).toDF("doc_id", "text"))
-    val probe = Dedup.bandedIndexOf(batchSigs)
+    val probe = Dedup.bandedIndexOf(batchSigs, Dedup.IndexPbkts)
     val keys = probe.select("pbkt", "bucket").distinct().collect()
     val pred = col("pbkt").isin(keys.map(_.getLong(0)).distinct.toIndexedSeq: _*) &&
       col("bucket").isin(keys.map(_.getLong(1)).distinct.toIndexedSeq: _*)
@@ -116,7 +116,8 @@ class IncrementalDedupSpec extends SparkSpec {
       s"probe must open batch-tracked files, opened $opened of $allFiles")
     // and the pruned read still finds the re-crawl: the seeded text of
     // doc 1 matches doc 9999's probes through the skipping read
-    val cands = Dedup.candidateDupsIndexed(spark, root, batchSigs).collect()
+    val cands =
+      Dedup.candidateDupsIndexed(spark, root, batchSigs, Dedup.IndexPbkts).collect()
     assert(cands.map(r => (r.getLong(0), r.getLong(1))).contains((9999L, 1L)),
       "pruned probe must still surface the true match")
   }

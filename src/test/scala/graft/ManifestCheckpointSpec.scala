@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Parquet manifest checkpoints: a derivative columnar encoding of one
-  * version's (full) manifest that readers prefer and fall back from —
-  * the text manifest stays the authoritative, arbitrated commit
-  * format. */
+  * version's (full) manifest that the loader ([[ManifestTable.snapshot]])
+  * and the checkpoint prune prefer and fall back from — the text manifest
+  * stays the authoritative, arbitrated commit format. */
 class ManifestCheckpointSpec extends SparkSpec {
 
   private def freshRoot(): String =
@@ -18,6 +18,9 @@ class ManifestCheckpointSpec extends SparkSpec {
     spark.range(start, start + n).toDF("id")
       .withColumn("grp", (col("id") % 4).cast("long"))
       .withColumn("v", (col("id") * 10).cast("long"))
+
+  private def ckptOf(root: String, v: Long): java.io.File = new java.io.File(
+    f"${new java.io.File(root).getAbsolutePath}/_manifests/v$v%020d.checkpoint.parquet")
 
   private def ckptFiles(root: String): Seq[java.io.File] = {
     val dir = new java.io.File(s"${new java.io.File(root).getAbsolutePath}/_manifests")
@@ -64,17 +67,14 @@ class ManifestCheckpointSpec extends SparkSpec {
       .withColumn("v", (col("id") * 10).cast("long"))
       .repartitionByRange(8, col("id"))
     ManifestTable.append(spark, root, df)
-    ManifestTable.setProperty(spark, root, ManifestTable.CheckpointMinFilesProperty, "1")
-    ManifestTable.append(spark, root, rows(4000, 100))
-    assert(ckptFiles(root).nonEmpty)
+    val v2 = ManifestTable.setProperty(spark, root, ManifestTable.CheckpointMinFilesProperty, "1")
+    val v3 = ManifestTable.append(spark, root, rows(4000, 100))
+    assert(ckptOf(root, v2).exists() && ckptOf(root, v3).exists())
     val pred = col("id") >= 100L && col("id") < 300L
-    // the distributed path must actually ENGAGE (not silently fall back)
-    val direct = ManifestTable.checkpointPrune(spark, root,
-      ManifestTable.currentVersion(spark, root).get, pred)
-    assert(direct.isDefined, "checkpointPrune fell back to the text path")
     val viaCkpt = ManifestTable.readCandidates(spark, root, pred)
     val rowsCkpt = ManifestTable.readWhere(spark, root, pred).orderBy("id").collect()
-    // drop the sidecar: the text path must produce the identical prune set
+    val v2Ckpt = Files.readAllBytes(ckptOf(root, v2).toPath)
+    // drop the sidecars: the text path must produce the identical prune set
     ckptFiles(root).foreach(f => assert(f.delete()))
     val viaText = ManifestTable.readCandidates(spark, root, pred)
     assert(viaCkpt.toSet === viaText.toSet,
@@ -83,6 +83,63 @@ class ManifestCheckpointSpec extends SparkSpec {
     val rowsText = ManifestTable.readWhere(spark, root, pred).orderBy("id").collect()
     assert(rowsCkpt.toSeq === rowsText.toSeq)
     assert(rowsCkpt.length === 200)
+    // the file selection must actually ENGAGE the checkpoint (not silently
+    // fall back): under v2's checkpoint, v4 holds none of the files
+    // appended after v2 (the local filesystem's checksum sidecar goes, or
+    // the swapped bytes would read as corrupt)
+    val v4 = ManifestTable.append(spark, root, rows(4100, 100))
+    val fresh = col("id") >= 4000L
+    val ck4 = ckptOf(root, v4)
+    new java.io.File(ck4.getParentFile, s".${ck4.getName}.crc").delete()
+    Files.write(ck4.toPath, v2Ckpt)
+    assert(ManifestTable.readCandidates(spark, root, fresh).isEmpty,
+      "the file selection fell back to the text path")
+    assert(ck4.delete())
+    assert(ManifestTable.readCandidates(spark, root, fresh).size === 8)
+  }
+
+  test("the loader serves the checkpoint: v1's checkpoint under v2's name reads as v1") {
+    val root = freshRoot()
+    ManifestTable.append(spark, root, rows(0, 30))
+    val v1 = ManifestTable.writeManifestCheckpoint(spark, root)
+    val v2 = ManifestTable.append(spark, root, rows(30, 30))
+    Files.copy(ckptOf(root, v1).toPath, ckptOf(root, v2).toPath)
+    val got = ManifestTable.read(spark, root, Some(v2)).orderBy("id").collect()
+    assert(got.length === 30)
+    assert(got.toSeq === ManifestTable.read(spark, root, Some(v1)).orderBy("id").collect().toSeq)
+  }
+
+  test("checkpoint = text: every field of the loaded snapshot agrees") {
+    val root = freshRoot()
+    // partitioned, stats over escaped strings and nulls, a txn mark, a
+    // constraint, properties, deletion vectors
+    val df = spark.range(0, 120).toDF("id")
+      .withColumn("grp", (col("id") % 3).cast("long"))
+      .withColumn("s", when(col("id") % 7 === 0, lit(null).cast("string"))
+        .when(col("id") % 5 === 0, lit("50%\tdone"))
+        .otherwise(concat(lit("s"), col("id").cast("string"))))
+      .withColumn("d", col("id") * 1.5)
+    ManifestTable.exactlyOnceAppend(spark, root, df.repartition(3), "app", 7L,
+      partitionBy = Seq("grp"))
+    ManifestTable.addConstraint(spark, root, "id_nonneg", "id >= 0")
+    ManifestTable.setProperty(spark, root, ManifestTable.DvProperty, "true")
+    ManifestTable.setProperty(spark, root, "custom.key", "a\tb %")
+    ManifestTable.setProperty(spark, root, ManifestTable.CheckpointMinFilesProperty, "1")
+    val v = ManifestTable.delete(spark, root, col("id") % 10 === 3L).get
+    def fields(s: ManifestTable.Snapshot): Seq[Any] = Seq(s.version, s.files, s.stats, s.dvs,
+      s.txns, s.schema, s.layout, s.constraints, s.properties, s.dataChange, s.cdcFiles)
+    // the commit-time checkpoint (rendered from the committed state) and
+    // the explicit one (rebuilt from the loaded text) both load as text does
+    for (explicit <- Seq(false, true)) {
+      if (explicit) ManifestTable.writeManifestCheckpoint(spark, root)
+      assert(ckptOf(root, v).exists())
+      val viaCkpt = ManifestTable.snapshot(spark, root)
+      assert(viaCkpt.dvs.nonEmpty && viaCkpt.txns == Map("app" -> 7L) &&
+        viaCkpt.stats.values.exists(_.contains("s")))
+      assert(ckptOf(root, v).delete())
+      val viaText = ManifestTable.snapshot(spark, root)
+      fields(viaCkpt).zip(fields(viaText)).foreach { case (c, t) => assert(c == t) }
+    }
   }
 
   test("checkpointed readWhere still applies deletion vectors") {

@@ -206,7 +206,16 @@ class ManifestTableSpec extends SparkSpec {
     val removed = ManifestTable.vacuum(spark, root, keepVersions = 1, minAgeMs = 0)
     assert(removed == 10) // the 10 pre-compaction fragments
     assert(ManifestTable.read(spark, root).count() == 100)
-    intercept[Exception] { ManifestTable.read(spark, root, Some(1L)).count() }
+    // every reader of the vacuumed v1 fails the same way, in the loader
+    def failure(body: => Any): String = intercept[IllegalStateException](body).getMessage
+    val messages = Seq(
+      failure(ManifestTable.read(spark, root, Some(1L))),
+      failure(ManifestTable.readWhere(spark, root,
+        org.apache.spark.sql.functions.col("id") < 5L, Some(1L))),
+      failure(ManifestTable.restore(spark, root, 1L)),
+      failure(ManifestTable.readChangeFeed(spark, root, 0L, 2L)))
+    assert(messages.distinct == Seq(s"version 1 of $root no longer exists (vacuumed?)"),
+      messages)
   }
 
   private def setManifestMtime(root: String, v: Long, ts: Long): Unit = {

@@ -35,7 +35,7 @@ class SqlParitySpec extends SparkSpec {
     val root = freshDir() + "/t"
     ManifestTable.append(spark, root,
       spark.range(100).toDF("id").repartitionByRange(4, col("id")))
-    val victim = ManifestTable.scanState(spark, root).files.head
+    val victim = ManifestTable.snapshot(spark, root).files.head
     new java.io.File(s"$root/$victim").delete()
     // damaged: a full read now fails at scan time
     intercept[Exception] { ManifestTable.read(spark, root).count() }
