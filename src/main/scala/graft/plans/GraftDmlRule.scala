@@ -191,8 +191,11 @@ final case class GraftUpdateCommand(root: String, pred: Column, set: Map[String,
   * the rows some clause touches — matched rows with no applicable clause
   * stay untouched, unmatched DELETE-condition rows still INSERT, Delta's
   * clause semantics), and `M && deleteCond` becomes the verb's tombstone
-  * column. With the full UPDATE-star + INSERT-star pair and no DELETE,
-  * the source passes through un-joined — the verb IS that upsert. */
+  * column. The narrowing runs inside each merge attempt, against that
+  * attempt's snapshot ([[ManifestTable.mergeWith]]), so the matched flag
+  * and the localization never see two versions of the target. With the
+  * full UPDATE-star + INSERT-star pair and no DELETE, the source passes
+  * through un-joined — the verb IS that upsert. */
 final case class GraftMergeCommand(root: String, source: LogicalPlan, keys: Seq[String],
     hasUpdate: Boolean, hasInsert: Boolean, deleteCond: Option[Column])
     extends LeafRunnableCommand {
@@ -216,22 +219,20 @@ final case class GraftMergeCommand(root: String, source: LogicalPlan, keys: Seq[
       ManifestTable.merge(spark, root, conform(src, Nil), keys)
       return Seq.empty
     }
-    val existing = ManifestTable.read(spark, root)
-      .select(keys.map(col): _*).distinct().withColumn(MatchFlag, lit(true))
-    val m = org.apache.spark.sql.functions.coalesce(col(MatchFlag), lit(false))
-    val flagged = src.join(existing, keys, "left")
-    val keep = deleteCond match {
-      case Some(c) => (m && (lit(hasUpdate) || c)) || (!m && lit(hasInsert))
-      case None => (m && lit(hasUpdate)) || (!m && lit(hasInsert))
+    def narrow(target: DataFrame): DataFrame = {
+      val existing = target.select(keys.map(col): _*).distinct().withColumn(MatchFlag, lit(true))
+      val m = org.apache.spark.sql.functions.coalesce(col(MatchFlag), lit(false))
+      val flagged = src.join(existing, keys, "left")
+      deleteCond match {
+        case Some(c) =>
+          val keep = (m && (lit(hasUpdate) || c)) || (!m && lit(hasInsert))
+          conform(flagged.filter(keep).withColumn(TombCol, m && c), Seq(TombCol))
+        case None =>
+          conform(flagged.filter((m && lit(hasUpdate)) || (!m && lit(hasInsert))), Nil)
+      }
     }
-    deleteCond match {
-      case Some(c) =>
-        ManifestTable.merge(spark, root,
-          conform(flagged.filter(keep).withColumn(TombCol, m && c), Seq(TombCol)),
-          keys, deleteCol = Some(TombCol))
-      case None =>
-        ManifestTable.merge(spark, root, conform(flagged.filter(keep), Nil), keys)
-    }
+    ManifestTable.mergeWith(spark, root, keys, Right(narrow _),
+      deleteCol = deleteCond.map(_ => TombCol))
     Seq.empty
   }
 }

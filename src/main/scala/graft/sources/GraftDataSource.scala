@@ -251,28 +251,23 @@ private[graft] object GraftDataSource {
 }
 
 /** Batch relation for a deletion-vector'd snapshot: each `buildScan`
-  * re-plans through [[ManifestTable.readWhere]] with the pushed filters
-  * recombined into one predicate, so the DV-aware read keeps manifest
-  * partition pruning and per-file stats skipping; column pruning is a
-  * narrow projection over the result. Spark re-applies all filters above
-  * this scan (default `unhandledFilters`), so a filter this translation
-  * skips costs I/O, never correctness. */
+  * reads the relation's own loaded snapshot through
+  * [[ManifestTable.readSnapshot]] with the pushed filters recombined into
+  * one predicate, so the DV-aware read keeps manifest partition pruning
+  * and per-file stats skipping without loading the manifest again;
+  * column pruning is a narrow projection over the result. Spark
+  * re-applies all filters above this scan (default `unhandledFilters`),
+  * so a filter this translation skips costs I/O, never correctness. */
 private[sources] final class DvRelation(spark: SparkSession, state: ManifestTable.Snapshot)
     extends BaseRelation with org.apache.spark.sql.sources.PrunedFilteredScan {
-  private val root = state.root
-  private val version = state.version
   override val sqlContext: SQLContext = spark.sqlContext
   override val schema: StructType = state.schema
   override def needConversion: Boolean = false
   override def buildScan(requiredColumns: Array[String],
       filters: Array[org.apache.spark.sql.sources.Filter])
       : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val pred = filters.flatMap(GraftDataSource.filterColumn)
-      .reduceOption(_ && _)
-    val base = pred match {
-      case Some(p) => ManifestTable.readWhere(spark, root, p, version)
-      case None => ManifestTable.read(spark, root, version)
-    }
+    val base = ManifestTable.readSnapshot(spark, state,
+      filters.flatMap(GraftDataSource.filterColumn).reduceOption(_ && _))
     val pruned = base.select(requiredColumns.toIndexedSeq.map(n => col(s"`$n`")): _*)
     pruned.queryExecution.toRdd
       .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
@@ -425,7 +420,7 @@ final class GraftStreamSource(spark: SparkSession, root: String,
             // file-index path cannot apply vectors — serve the DV-aware
             // read, streaming-tagged. Later batches never see DV'd files:
             // addedRelsBetween fails loud on any vector change in-range.
-            GraftSqlBridge.streamingFrame(ManifestTable.read(spark, root, Some(endV)))
+            GraftSqlBridge.streamingFrame(ManifestTable.readSnapshot(spark, state))
           case _ =>
             val rels = startV match {
               case None => state.files

@@ -780,11 +780,19 @@ object ManifestTable {
       dvs: FileDvs = Map.empty)
 
   /** Snapshot read at the latest (or an explicit) version. */
-  def read(spark: SparkSession, root: String, version: Option[Long] = None): DataFrame = {
-    val snap = snapshot(spark, root, version)
-    val v = snap.committed
-    readFiles(spark, root, snap.files, snap.schemaJson, snap.partitionBy.isDefined,
-      s"version $v", dvs = snap.dvs)
+  def read(spark: SparkSession, root: String, version: Option[Long] = None): DataFrame =
+    readSnapshot(spark, snapshot(spark, root, version))
+
+  /** Read one loaded version, all of it or, with `pred`, the files
+    * [[candidates]] keeps for it with `pred` re-applied row-level — what
+    * a caller already holding the [[Snapshot]] reads without loading the
+    * manifest again. */
+  private[graft] def readSnapshot(spark: SparkSession, snap: Snapshot,
+      pred: Option[Column] = None): DataFrame = {
+    val rels = pred.fold(snap.files)(candidates(spark, snap, _))
+    val df = readFiles(spark, snap.root, rels, snap.schemaJson, snap.partitionBy.isDefined,
+      s"version ${snap.committed}", dvs = snap.dvs)
+    pred.fold(df)(df.filter)
   }
 
   /** Filtered snapshot read with READ-TIME data skipping — Delta's
@@ -2350,10 +2358,134 @@ object ManifestTable {
 
   // ------------------------------------------------- row-level mutations
 
-  /** Thrown internally when a copy-on-write rewrite loses an optimistic
-    * race; the outer loop recomputes against the fresh snapshot. */
-  private final class CowConflict(msg: String) extends RuntimeException(msg)
+  /** Row-level DML isolation. MERGE, DELETE and UPDATE, in both their
+    * copy-on-write and deletion-vector forms, run one optimistic
+    * protocol ([[rowLevel]], Delta's): read a snapshot, localize the
+    * files the verb touches, stage their rewrite (or new deletion
+    * vectors plus the rows they replace), then commit through
+    * [[commitWith]] unless a commit that landed since the snapshot
+    * conflicts under the verb's rule — in which case the verb
+    * recomputes against the fresh snapshot, up to [[MaxCowRetries]]
+    * times. Over the rule's scope, a conflict is a changed file set
+    * (all-files scope only), a removed file, or a changed deletion
+    * vector; plus a changed constraint set where `constraints` is set.
+    * `replay` verbs carry a streaming writer's `(appId, batchId)` mark
+    * and skip as already applied when the fresh snapshot holds it.
+    *
+    * {{{
+    * op             scope          constraints  replay
+    * merge          all files      yes          yes
+    * delete         touched files  no           no
+    * update         touched files  yes          no
+    * addConstraint  any commit     -            no
+    * }}}
+    *
+    * Touched-file scope is Delta's WriteSerializable: a commit that
+    * leaves the touched files and their vectors alone (an append, a
+    * rewrite elsewhere) serializes after the DELETE or UPDATE. MERGE
+    * watches every file because a concurrently added file may hold a
+    * matched key; UPDATE and MERGE write rows, so a new constraint must
+    * see them. [[addConstraint]] validated the whole table, so any commit
+    * invalidates it. */
+  private final case class ConflictRule(scope: ConflictScope, constraints: Boolean,
+      replay: Boolean)
+  private sealed trait ConflictScope
+  private case object AllFiles extends ConflictScope
+  private case object TouchedFiles extends ConflictScope
+  private case object AnyCommit extends ConflictScope
+
+  private val ConflictRules: Map[String, ConflictRule] = Map(
+    "merge" -> ConflictRule(AllFiles, constraints = true, replay = true),
+    "delete" -> ConflictRule(TouchedFiles, constraints = false, replay = false),
+    "update" -> ConflictRule(TouchedFiles, constraints = true, replay = false),
+    "addConstraint" -> ConflictRule(AnyCommit, constraints = false, replay = false))
+
+  /** A lost optimistic race; `fresh` is the snapshot that showed it,
+    * which the next attempt starts from. */
+  private final class CowConflict(msg: String, val fresh: Snapshot) extends RuntimeException(msg)
   private val MaxCowRetries = 5
+
+  /** The one conflict check: throws [[CowConflict]] when `snap`, the
+    * freshest commit, conflicts with what `op` staged against `pre`
+    * under `op`'s [[ConflictRules]] row (`touched` = the files it
+    * rewrote or attached vectors to). */
+  private def requireNoConflict(op: String, pre: Snapshot, snap: Snapshot,
+      touched: Set[String]): Unit = {
+    val rule = ConflictRules(op)
+    val watched = if (rule.scope == AllFiles) pre.files.toSet else touched
+    val live = snap.files.toSet
+    val why =
+      if (rule.scope == AnyCommit) Option.when(snap.version != pre.version)("the table changed")
+      else if (rule.scope == AllFiles && live != watched) Some("files changed")
+      else if (!watched.subsetOf(live)) Some("a touched file was removed")
+      else if (watched.exists(r => snap.dvs.get(r) != pre.dvs.get(r)))
+        Some("a touched file's deletion vector changed")
+      else if (rule.constraints && snap.constraints != pre.constraints)
+        Some("constraints changed")
+      else None
+    why.foreach(w => throw new CowConflict(
+      s"$op at ${pre.root}: $w since v${pre.version.getOrElse(0L)}", snap))
+  }
+
+  /** Run `attempt` from `first`; on a [[CowConflict]] run it again from
+    * the snapshot that showed the conflict, failing after
+    * [[MaxCowRetries]] lost races. */
+  private def optimistic[A](op: String, root: String, first: Snapshot)(
+      attempt: Snapshot => A): A = {
+    @scala.annotation.tailrec
+    def loop(pre: Snapshot, lost: Int): A =
+      (try Right(attempt(pre)) catch { case c: CowConflict => Left(c) }) match {
+        case Right(a) => a
+        case Left(c) if lost + 1 >= MaxCowRetries =>
+          throw new java.util.ConcurrentModificationException(
+            s"$op lost $MaxCowRetries optimistic races at $root: ${c.getMessage}")
+        case Left(c) => loop(c.fresh, lost + 1)
+      }
+    loop(first, 0)
+  }
+
+  /** What one attempt of a row-level verb staged against its snapshot:
+    * `removed` files leave the table (copy-on-write), `dvs` are the
+    * touched files' merged deletion vectors (the DV form; a file whose
+    * vector kills every row leaves too), `staged` the new data files,
+    * `dvRels`/`cdcRels` the vector and change-data files beside them.
+    * `schemaJson` replaces the table schema (a MERGE's evolution). */
+  private case class RowRewrite(removed: Set[String], staged: Staged,
+      dvs: FileDvs = Map.empty, dvRels: Seq[String] = Nil, cdcRels: Seq[String] = Nil,
+      schemaJson: Option[String] = None)
+
+  /** The row-level core: per attempt, `plan` localizes and stages
+    * against the attempt's snapshot (None = nothing to do), then the
+    * rewrite commits under `op`'s [[ConflictRules]] row, with `txn`'s
+    * mark when given. `first` is attempt 0's snapshot, so a verb that
+    * loaded one to choose its route does not load it again. */
+  private def rowLevel(spark: SparkSession, root: String, op: String, first: Snapshot,
+      txn: Option[(String, Long)] = None)(plan: Snapshot => Option[RowRewrite]): Option[Long] = {
+    val fs = fsFor(spark, root)
+    optimistic(op, root, first) { pre =>
+      plan(pre).flatMap { rw =>
+        val rels = rw.staged.rels ++ rw.dvRels ++ rw.cdcRels
+        val committed = cleanupOnFailure(fs, root, rels) {
+          commitWith(spark, root) { snap =>
+            if (ConflictRules(op).replay &&
+                txn.exists { case (a, b) => snap.txns.get(a).exists(b <= _) }) None
+            else {
+              requireNoConflict(op, pre, snap, rw.removed ++ rw.dvs.keySet)
+              requireLayout(op, snap, pre.layout)
+              val dropped = rw.removed ++ fullyDead(snap.stats, rw.dvs)
+              Some((snap.files.filterNot(dropped) ++ rw.staged.rels, snap.txns ++ txn,
+                CommitMeta(rw.schemaJson.orElse(snap.schemaJson).orElse(pre.schemaJson),
+                  snap.partitionBy, stats = (snap.stats -- dropped) ++ rw.staged.stats,
+                  op = op, constraints = snap.constraints, cdcFiles = rw.cdcRels,
+                  dvs = rw.dvs)))
+            }
+          }
+        }
+        if (committed.isEmpty) deleteStaged(fs, root, rels)
+        committed
+      }
+    }
+  }
 
   // ------------------------------------------------------- constraints
 
@@ -2373,31 +2505,24 @@ object ManifestTable {
     require(name.nonEmpty && !name.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"constraint name must be non-empty without control characters, got '$name'")
     checkCommitScheme(spark, root)
-    var attempt = 0
-    while (attempt < MaxCowRetries) {
-      val pre = snapshot(spark, root)
+    optimistic("addConstraint", root, snapshot(spark, root)) { pre =>
       require(pre.version.nonEmpty, s"addConstraint needs an existing table at $root")
       require(!pre.constraints.contains(name),
         s"constraint $name already exists at $root (dropConstraint first)")
-      val bad = read(spark, root, pre.version)
+      val bad = readSnapshot(spark, pre)
         .filter(not(coalesce(expr(exprSql).cast("boolean"), lit(true))))
         .limit(1).collect() // 1-row bound: only an example violation
       require(bad.isEmpty,
         s"cannot add CHECK constraint $name ($exprSql) at $root: existing data violates it, " +
           s"e.g. ${bad.headOption.getOrElse("")}")
-      try {
-        return commitWith(spark, root) { snap =>
-          if (snap.version != pre.version)
-            throw new CowConflict(s"addConstraint at $root: table changed during validation")
-          Some((snap.files, snap.txns,
-            CommitMeta(snap.schemaJson, snap.partitionBy, dataChange = false,
-              stats = snap.stats, op = "addConstraint",
-              constraints = snap.constraints + (name -> exprSql))))
-        }.get
-      } catch { case _: CowConflict => attempt += 1 }
+      commitWith(spark, root) { snap =>
+        requireNoConflict("addConstraint", pre, snap, Set.empty)
+        Some((snap.files, snap.txns,
+          CommitMeta(snap.schemaJson, snap.partitionBy, dataChange = false,
+            stats = snap.stats, op = "addConstraint",
+            constraints = snap.constraints + (name -> exprSql))))
+      }.get
     }
-    throw new java.util.ConcurrentModificationException(
-      s"addConstraint lost $MaxCowRetries validation races at $root")
   }
 
   /** Remove a named constraint; None when it does not exist (no-op). */
@@ -2925,12 +3050,27 @@ object ManifestTable {
   private[graft] def localizationCandidates(spark: SparkSession, root: String,
       updates: DataFrame, keyCols: Seq[String]): Seq[String] = {
     val snap = snapshot(spark, root)
-    val schema = snap.schema
-    val layout = snap.layout
-    statsPrune(spark, root,
-      pruneCandidates(spark, snap.files, layout, keyCols, schema, updates),
-      keyCols, schema, snap.stats, snap.properties, updates)
+    mergeCandidates(spark, snap, snap.schema, keyCols, updates)
   }
+
+  /** [[pruneCandidates]] then [[statsPrune]] over one snapshot. */
+  private def mergeCandidates(spark: SparkSession, pre: Snapshot, schema: StructType,
+      keyCols: Seq[String], updates: DataFrame): Seq[String] =
+    statsPrune(spark, pre.root,
+      pruneCandidates(spark, pre.files, pre.layout, keyCols, schema, updates),
+      keyCols, schema, pre.stats, pre.properties, updates)
+
+  /** The files among `cands` holding a row `matching` keeps, found by a
+    * column-pruned scan of (row, file) pairs: the localization step of
+    * every copy-on-write verb. The collect is bounded by the file count
+    * — manifest-scale metadata, the same order as the commit itself. */
+  private def localize(spark: SparkSession, pre: Snapshot, cands: Seq[String],
+      schemaJson: Option[String])(matching: DataFrame => DataFrame): Set[String] =
+    if (cands.isEmpty) Set.empty
+    else matching(readTagged(spark, pre.root, cands, schemaJson, pre.layout.nonEmpty,
+        dvs = pre.dvs))
+      .select("__file").distinct().collect()
+      .map(r => relUnderRoot(pre.root, r.getString(0))).toSet
 
   /** Row-level MERGE — the keyed copy-on-write upsert, Delta's
     * `MERGE INTO target USING updates ON keys WHEN MATCHED THEN UPDATE SET *
@@ -2948,10 +3088,7 @@ object ManifestTable {
     * column stats ([[statsPrune]]) — on a key-sorted layout a narrow
     * merge opens only the files whose committed key range it overlaps.
     *
-    * Concurrency: optimistic. ANY concurrent file change (append included
-    * — a concurrently appended file may contain matched keys) invalidates
-    * the localization, so the merge recomputes against the fresh snapshot,
-    * up to [[MaxCowRetries]] times. `txn = Some(appId -> batchId)` gives
+    * Concurrency: [[ConflictRules]]. `txn = Some(appId -> batchId)` gives
     * streaming-writer replay idempotence, exactly as [[exactlyOnceAppend]]
     * (replays return None without staging).
     *
@@ -2977,41 +3114,66 @@ object ManifestTable {
     * periodic [[compact]]`(zorderBy = …)` restores tight ranges. */
   def merge(spark: SparkSession, root: String, updates0: DataFrame, keyCols: Seq[String],
       mergeSchema: Boolean = false, txn: Option[(String, Long)] = None,
-      deleteCol: Option[String] = None): Option[Long] = {
+      deleteCol: Option[String] = None): Option[Long] =
+    mergeWith(spark, root, keyCols, Left(updates0), mergeSchema, txn, deleteCol)
+
+  /** [[merge]] from a fixed source (`Left`), or from a source each
+    * attempt builds from the target as of its own snapshot (`Right`):
+    * SQL MERGE's clause narrowing, whose matched flag must come from the
+    * same snapshot the attempt localizes against — a key another writer
+    * inserts mid-merge is then matched on the retry, never overwritten. */
+  private[graft] def mergeWith(spark: SparkSession, root: String, keyCols: Seq[String],
+      source: Either[DataFrame, DataFrame => DataFrame], mergeSchema: Boolean = false,
+      txn: Option[(String, Long)] = None, deleteCol: Option[String] = None): Option[Long] = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    keyCols.foreach(k => require(updates0.columns.contains(k),
-      s"merge source has no key column $k (source columns: ${updates0.columns.mkString(",")})"))
-    deleteCol.foreach { d =>
-      require(updates0.columns.contains(d), s"merge deleteCol $d is not a source column")
-      require(!keyCols.contains(d), s"merge deleteCol $d cannot be a key column")
-    }
+    source.swap.foreach(requireMergeSource(_, keyCols, deleteCol))
     checkCommitScheme(spark, root)
-    val preSnap = snapshot(spark, root)
+    val first = snapshot(spark, root)
     // replay fast-path BEFORE any Spark job: a replayed streaming batch
     // (same appId, batchId ≤ committed mark) costs one manifest read, not
     // a persist + uniqueness aggregation (mirrors exactlyOnceAppend's
-    // skip-without-staging); the race-safe check re-runs inside decide
+    // skip-without-staging); the race-safe check re-runs at commit
     txn.foreach { case (appId, batchId) =>
-      if (preSnap.txns.get(appId).exists(batchId <= _)) return None
+      if (first.txns.get(appId).exists(batchId <= _)) return None
     }
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // generated columns the source omits are computed up front (before
     // the persist, so the computation runs once); carried ones validate
-    // in-write at stage time
-    val updates1 = applyGenerated(updates0, preSnap.properties, preSnap.schemaJson)
-    // the source participates in ~5 jobs (uniqueness check, stat bounds,
-    // semi-join localization, anti-join rewrite, union) — materialize it
-    // once instead of re-running its plan each time (Delta materializes
-    // the MERGE source for the same reason, which also pins sources with
-    // nondeterministic expressions to ONE evaluation). Skipped when the
-    // caller already persisted it.
-    val callerPersisted = updates0.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val reusable = callerPersisted && (updates1 eq updates0)
-    val updates = if (reusable) updates0
-      else updates1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      mergeImpl(spark, root, updates, keyCols, mergeSchema, txn, deleteCol)
-    } finally {
-      if (!reusable) { updates.unpersist(); () }
+    // in-write at stage time. The source participates in ~5 jobs
+    // (uniqueness check, stat bounds, semi-join localization, anti-join
+    // rewrite, union) — materialize it once instead of re-running its
+    // plan each time (Delta materializes the MERGE source for the same
+    // reason, which also pins sources with nondeterministic expressions
+    // to ONE evaluation). Skipped when the caller already persisted it.
+    def prepare(src: DataFrame, snap: Snapshot): DataFrame = {
+      val generated = applyGenerated(src, snap.properties, snap.schemaJson)
+      if ((generated eq src) &&
+          src.storageLevel != org.apache.spark.storage.StorageLevel.NONE) src
+      else {
+        val p = generated.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        persisted += p
+        p
+      }
+    }
+    val fixed = source.swap.toOption.map(prepare(_, first))
+    try rowLevel(spark, root, "merge", first, txn) { pre =>
+      require(pre.version.nonEmpty, s"merge needs an existing table at $root")
+      val updates = fixed.getOrElse {
+        val narrowed = source.toOption.get(readSnapshot(spark, pre))
+        requireMergeSource(narrowed, keyCols, deleteCol)
+        prepare(narrowed, pre)
+      }
+      mergePlan(spark, pre, updates, keyCols, mergeSchema, txn, deleteCol)
+    } finally persisted.foreach(_.unpersist())
+  }
+
+  private def requireMergeSource(updates: DataFrame, keyCols: Seq[String],
+      deleteCol: Option[String]): Unit = {
+    keyCols.foreach(k => require(updates.columns.contains(k),
+      s"merge source has no key column $k (source columns: ${updates.columns.mkString(",")})"))
+    deleteCol.foreach { d =>
+      require(updates.columns.contains(d), s"merge deleteCol $d is not a source column")
+      require(!keyCols.contains(d), s"merge deleteCol $d cannot be a key column")
     }
   }
 
@@ -3036,10 +3198,14 @@ object ManifestTable {
     props.get("graft.schema.autoMerge").contains("true") ||
       spark.conf.getOption("spark.graft.schema.autoMerge").contains("true")
 
-  private def mergeImpl(spark: SparkSession, root: String, updates: DataFrame,
+  /** One MERGE attempt against `pre`: localize, then stage the rewrite. */
+  private def mergePlan(spark: SparkSession, pre: Snapshot, updates: DataFrame,
       keyCols: Seq[String], mergeSchema: Boolean, txn: Option[(String, Long)],
-      deleteCol: Option[String]): Option[Long] = {
+      deleteCol: Option[String]): Option[RowRewrite] = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    val root = pre.root
+    if (txn.exists { case (appId, batchId) => pre.txns.get(appId).exists(batchId <= _) })
+      return None
     requireUniqueKeys("merge", updates, keyCols)
     // the tombstone marker is merge-protocol metadata, not table data: it
     // is excluded from the schema contract and from inserted rows. Rows
@@ -3050,140 +3216,90 @@ object ManifestTable {
       case None => updates
       case Some(d) => updates.filter(not(coalesce(col(d), lit(false)))).drop(d)
     }
-    val fs = fsFor(spark, root)
-    var attempt = 0
-    while (true) {
-      val pre = snapshot(spark, root)
-      require(pre.version.nonEmpty, s"merge needs an existing table at $root")
-      txn.foreach { case (appId, batchId) =>
-        if (pre.txns.get(appId).exists(batchId <= _)) return None
-      }
-      // a merge source omitting an identity column would conform it to
-      // NULL — allocation inside a keyed upsert is ambiguous (which rows
-      // are inserts is only known mid-plan), so require it explicit
-      // (checked before the generic drift message, which would fire too)
-      identitySpecs(pre.properties).foreach { sp =>
-        require(updates.columns.contains(sp.col),
-          s"merge source must carry identity column ${sp.col} explicitly — " +
-            "allocate ids with append, or provide them in the source")
-      }
-      val schemaJson = checkOrMergeSchema("merge", pre.schemaJson, dataUpdates.schema,
-        mergeSchema || autoMergeEnabled(spark, pre.properties))
-      val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      keyCols.foreach(k => require(schema.fieldNames.contains(k),
-        s"table at $root has no key column $k"))
-      val layout = pre.layout
-      val candidates = statsPrune(spark, root,
-        pruneCandidates(spark, pre.files, layout, keyCols, schema, updates),
-        keyCols, schema, pre.stats, pre.properties, updates)
-      // localization: which committed files contain a matched key. The
-      // collect is bounded by the file count — manifest-scale metadata,
-      // the same order as the commit itself.
-      val touched: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else readTagged(spark, root, candidates, Some(schemaJson), layout.nonEmpty,
-            dvs = pre.dvs)
-          .select((keyCols :+ "__file").map(col): _*)
-          .join(updates.select(keyCols.map(col): _*), keyCols, "left_semi")
-          .select("__file").distinct().collect()
-          .map(r => relUnderRoot(root, r.getString(0))).toSet
-      val mergedRows = {
-        // survivors anti-join ALL update keys (tombstones included — their
-        // matched rows must vanish); only non-tombstone rows insert
-        val ups = conformTo(upserts, schema)
-        if (touched.isEmpty) ups
-        else conformTo(
-          readFiles(spark, root, touched.toSeq, Some(schemaJson), layout.nonEmpty, "merge",
-              dvs = pre.dvs)
-            .join(updates.select(keyCols.map(col): _*), keyCols, "left_anti"), schema)
-          .unionByName(ups)
-      }
-      // row-level CDC: matched rows pair update_preimage/update_postimage,
-      // tombstone-matched rows emit delete, unmatched upserts emit insert —
-      // Delta's MERGE change-feed row set, captured only when asked for
-      val cdcRels =
-        if (!cdcEnabled(pre)) Nil
-        else {
-          val ups = conformTo(upserts, schema)
-          val oldMatched =
-            if (touched.isEmpty) None
-            else Some(readFiles(spark, root, touched.toSeq, Some(schemaJson), layout.nonEmpty,
-              "merge cdc", dvs = pre.dvs)
-              .join(updates.select(keyCols.map(col): _*), keyCols, "left_semi"))
-          val tombKeys = deleteCol.map(d =>
-            updates.filter(coalesce(col(d), lit(false))).select(keyCols.map(col): _*))
-          val deletes = for (om <- oldMatched; tk <- tombKeys)
-            yield om.join(tk, keyCols, "left_semi").withColumn(ChangeTypeCol, lit("delete"))
-          val preims = oldMatched.map { om =>
-            tombKeys.map(tk => om.join(tk, keyCols, "left_anti")).getOrElse(om)
-              .withColumn(ChangeTypeCol, lit("update_preimage"))
-          }
-          val matchedKeys = oldMatched.map(_.select(keyCols.map(col): _*).distinct())
-          val postims = matchedKeys.map(mk =>
-            ups.join(mk, keyCols, "left_semi").withColumn(ChangeTypeCol, lit("update_postimage")))
-          val inserts = matchedKeys.map(mk => ups.join(mk, keyCols, "left_anti")).getOrElse(ups)
-            .withColumn(ChangeTypeCol, lit("insert"))
-          stageCdc(spark, root,
-            (deletes.toSeq ++ preims.toSeq ++ postims.toSeq :+ inserts).reduce(_ unionByName _),
-            tableSchemaJson = Some(schemaJson))
-        }
-      // Size the rewrite before staging (Delta's optimized write): the
-      // anti-join leaves the rewrite spread over every shuffle partition
-      // — and AQE's default parallelism-first coalescing keeps them all —
-      // so a 2-file merge would otherwise stage ~32 sliver files, layout
-      // churn that compounds with every merge. One output file per
-      // ~128 MB of REPLACED parquet instead (inserts ride along — merge
-      // sources are small next to the files they touch); the explicit
-      // repartition is deterministic where a REBALANCE hint is at the
-      // mercy of parallelismFirst. Pure inserts keep the source's own
-      // partitioning, as before. Partitioned tables hash on the layout so
-      // each hive dir gets whole tasks (the compact() pattern).
-      val sized =
-        if (touched.isEmpty) mergedRows
-        else {
-          val bytes = touched.toSeq.map { rel =>
-            val p = new Path(resolveEntry(root, rel))
-            try p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
-            catch { case _: java.io.IOException => 0L }
-          }.sum
-          val n = math.max(1L, bytes / (128L * 1024 * 1024) + 1).toInt
-          if (layout.isEmpty) mergedRows.repartition(n)
-          else mergedRows.repartition(n, layout.map(col): _*)
-        }
-      val staged = stage(spark, root, sized, layout,
-        pre.constraints ++ generatedChecks(sized, pre.properties),
-        tableSchemaJson = Some(schemaJson), tableProperties = pre.properties)
-      try {
-        val committed = cleanupOnFailure(fs, root, staged.rels ++ cdcRels) {
-          commitWith(spark, root) { snap =>
-            if (txn.exists { case (a, b) => snap.txns.get(a).exists(b <= _) }) None
-            else if (snap.files.toSet != pre.files.toSet)
-              throw new CowConflict(s"merge at $root: files changed since v${pre.version.get}")
-            else if (snap.dvs != pre.dvs)
-              throw new CowConflict(
-                s"merge at $root: deletion vectors changed since v${pre.version.get}")
-            else if (snap.constraints != pre.constraints)
-              throw new CowConflict(s"merge at $root: constraints changed since v${pre.version.get}")
-            else {
-              requireLayout("merge", snap, layout)
-              Some((snap.files.filterNot(touched) ++ staged.rels,
-                txn.map { case (a, b) => snap.txns + (a -> b) }.getOrElse(snap.txns),
-                CommitMeta(Some(schemaJson), snap.partitionBy,
-                  stats = (snap.stats -- touched) ++ staged.stats, op = "merge",
-                  constraints = snap.constraints, cdcFiles = cdcRels)))
-            }
-          }
-        }
-        if (committed.isEmpty) deleteStaged(fs, root, staged.rels ++ cdcRels)
-        return committed
-      } catch {
-        case c: CowConflict => // staged already cleaned by cleanupOnFailure
-          attempt += 1
-          if (attempt >= MaxCowRetries) throw new java.util.ConcurrentModificationException(
-            s"merge lost $MaxCowRetries optimistic races at $root: ${c.getMessage}")
-      }
+    // a merge source omitting an identity column would conform it to
+    // NULL — allocation inside a keyed upsert is ambiguous (which rows
+    // are inserts is only known mid-plan), so require it explicit
+    // (checked before the generic drift message, which would fire too)
+    identitySpecs(pre.properties).foreach { sp =>
+      require(updates.columns.contains(sp.col),
+        s"merge source must carry identity column ${sp.col} explicitly — " +
+          "allocate ids with append, or provide them in the source")
     }
-    None // unreachable
+    val schemaJson = checkOrMergeSchema("merge", pre.schemaJson, dataUpdates.schema,
+      mergeSchema || autoMergeEnabled(spark, pre.properties))
+    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    keyCols.foreach(k => require(schema.fieldNames.contains(k),
+      s"table at $root has no key column $k"))
+    val layout = pre.layout
+    val keys = updates.select(keyCols.map(col): _*)
+    // localization: which committed files contain a matched key
+    val touched = localize(spark, pre, mergeCandidates(spark, pre, schema, keyCols, updates),
+      Some(schemaJson))(_.select((keyCols :+ "__file").map(col): _*).join(keys, keyCols, "left_semi"))
+    def touchedRows(what: String): DataFrame =
+      readFiles(spark, root, touched.toSeq, Some(schemaJson), layout.nonEmpty, what,
+        dvs = pre.dvs)
+    val mergedRows = {
+      // survivors anti-join ALL update keys (tombstones included — their
+      // matched rows must vanish); only non-tombstone rows insert
+      val ups = conformTo(upserts, schema)
+      if (touched.isEmpty) ups
+      else conformTo(touchedRows("merge").join(keys, keyCols, "left_anti"), schema)
+        .unionByName(ups)
+    }
+    // row-level CDC: matched rows pair update_preimage/update_postimage,
+    // tombstone-matched rows emit delete, unmatched upserts emit insert —
+    // Delta's MERGE change-feed row set, captured only when asked for
+    val cdcRels =
+      if (!cdcEnabled(pre)) Nil
+      else {
+        val ups = conformTo(upserts, schema)
+        val oldMatched =
+          if (touched.isEmpty) None
+          else Some(touchedRows("merge cdc").join(keys, keyCols, "left_semi"))
+        val tombKeys = deleteCol.map(d =>
+          updates.filter(coalesce(col(d), lit(false))).select(keyCols.map(col): _*))
+        val deletes = for (om <- oldMatched; tk <- tombKeys)
+          yield om.join(tk, keyCols, "left_semi").withColumn(ChangeTypeCol, lit("delete"))
+        val preims = oldMatched.map { om =>
+          tombKeys.map(tk => om.join(tk, keyCols, "left_anti")).getOrElse(om)
+            .withColumn(ChangeTypeCol, lit("update_preimage"))
+        }
+        val matchedKeys = oldMatched.map(_.select(keyCols.map(col): _*).distinct())
+        val postims = matchedKeys.map(mk =>
+          ups.join(mk, keyCols, "left_semi").withColumn(ChangeTypeCol, lit("update_postimage")))
+        val inserts = matchedKeys.map(mk => ups.join(mk, keyCols, "left_anti")).getOrElse(ups)
+          .withColumn(ChangeTypeCol, lit("insert"))
+        stageCdc(spark, root,
+          (deletes.toSeq ++ preims.toSeq ++ postims.toSeq :+ inserts).reduce(_ unionByName _),
+          tableSchemaJson = Some(schemaJson))
+      }
+    // Size the rewrite before staging (Delta's optimized write): the
+    // anti-join leaves the rewrite spread over every shuffle partition
+    // — and AQE's default parallelism-first coalescing keeps them all —
+    // so a 2-file merge would otherwise stage ~32 sliver files, layout
+    // churn that compounds with every merge. One output file per
+    // ~128 MB of REPLACED parquet instead (inserts ride along — merge
+    // sources are small next to the files they touch); the explicit
+    // repartition is deterministic where a REBALANCE hint is at the
+    // mercy of parallelismFirst. Pure inserts keep the source's own
+    // partitioning, as before. Partitioned tables hash on the layout so
+    // each hive dir gets whole tasks (the compact() pattern).
+    val sized =
+      if (touched.isEmpty) mergedRows
+      else {
+        val bytes = touched.toSeq.map { rel =>
+          val p = new Path(resolveEntry(root, rel))
+          try p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
+          catch { case _: java.io.IOException => 0L }
+        }.sum
+        val n = math.max(1L, bytes / (128L * 1024 * 1024) + 1).toInt
+        if (layout.isEmpty) mergedRows.repartition(n)
+        else mergedRows.repartition(n, layout.map(col): _*)
+      }
+    val staged = stage(spark, root, sized, layout,
+      pre.constraints ++ generatedChecks(sized, pre.properties),
+      tableSchemaJson = Some(schemaJson), tableProperties = pre.properties)
+    Some(RowRewrite(touched, staged, cdcRels = cdcRels, schemaJson = Some(schemaJson)))
   }
 
   /** `foreachBatch` adapter for exactly-once streaming UPSERT — the
@@ -3239,6 +3355,9 @@ object ManifestTable {
     * with matches are rewritten to their surviving rows, all in one commit.
     * Rows where `pred` is NULL are kept (SQL DELETE semantics). Returns
     * None when nothing matched (no new version — Delta's no-op DELETE).
+    * Under [[DvProperty]] the touched files keep their bytes and gain
+    * deletion vectors instead ([[rewriteWhere]]). Concurrency:
+    * [[ConflictRules]].
     *
     * When the table is hive-partitioned and `pred` references partition
     * columns ONLY, no data is read or rewritten at all: matching files are
@@ -3250,85 +3369,25 @@ object ManifestTable {
     * [[changesBetween]] fails loud over a range containing it; pass
     * `includeRemoves = true` to fold deletes downstream. */
   def delete(spark: SparkSession, root: String, pred: Column): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     checkCommitScheme(spark, root)
-    val fs = fsFor(spark, root)
-    val preLayout = snapshot(spark, root)
-    require(preLayout.version.nonEmpty, s"delete needs an existing table at $root")
-    val layout = preLayout.layout
-    val partitionAligned = layout.nonEmpty && preLayout.schemaJson.isDefined && {
-      val r = SkippingKernel.resolve(spark, pred, preLayout.schema)
+    val first = snapshot(spark, root)
+    require(first.version.nonEmpty, s"delete needs an existing table at $root")
+    val layout = first.layout
+    val partitionAligned = layout.nonEmpty && first.schemaJson.isDefined && {
+      val r = SkippingKernel.resolve(spark, pred, first.schema)
       r.deterministic && r.references.nonEmpty && r.references.forall(a => layout.contains(a.name))
     }
-    if (partitionAligned) {
+    if (partitionAligned)
       // metadata-only path: partition-aligned predicate, no data read;
       // evaluated on the freshest snapshot inside the commit loop
-      return commitWith(spark, root) { snap =>
+      commitWith(spark, root) { snap =>
         val dropped = filesMatching(spark, snap.files, layout, snap.schema, pred)
         if (dropped.isEmpty) None
         else Some((snap.files.filterNot(dropped), snap.txns,
           CommitMeta(snap.schemaJson, snap.partitionBy, stats = snap.stats -- dropped,
           op = "delete", constraints = snap.constraints)))
       }
-    }
-    // merge-on-read: attach deletion vectors instead of rewriting files
-    if (dvEnabled(preLayout.properties)) return deleteMor(spark, root, pred)
-    var attempt = 0
-    while (true) {
-      val pre = snapshot(spark, root)
-      val schemaJson = pre.schemaJson
-      // stats skipping first: files whose committed ranges prove the
-      // predicate can't match are never opened by the localization scan
-      val cands = candidates(spark, pre, pred)
-      val touched: Set[String] =
-        if (cands.isEmpty) Set.empty
-        else readTagged(spark, root, cands, schemaJson, layout.nonEmpty, dvs = pre.dvs)
-          .filter(pred)
-          .select("__file").distinct().collect()
-          .map(r => relUnderRoot(root, r.getString(0))).toSet
-      if (touched.isEmpty) return None
-      val survivors = readFiles(spark, root, touched.toSeq, schemaJson, layout.nonEmpty,
-          "delete", dvs = pre.dvs)
-        .filter(not(coalesce(pred, lit(false))))
-      // row-level CDC (Delta's _change_data): the deleted rows, captured
-      // minimally — only when the table property asks for it
-      val cdcRels =
-        if (!cdcEnabled(pre)) Nil
-        else stageCdc(spark, root,
-          readFiles(spark, root, touched.toSeq, schemaJson, layout.nonEmpty, "delete cdc",
-              dvs = pre.dvs)
-            .filter(coalesce(pred, lit(false)))
-            .withColumn(ChangeTypeCol, lit("delete")), tableSchemaJson = schemaJson)
-      val staged = stage(spark, root, survivors, layout,
-        tableSchemaJson = schemaJson, tableProperties = pre.properties)
-      try {
-        val committed = cleanupOnFailure(fs, root, staged.rels ++ cdcRels) {
-          commitWith(spark, root) { snap =>
-            // only removal of a file we rewrote invalidates the rewrite;
-            // concurrent appends serialize AFTER this delete untouched
-            if (!touched.subsetOf(snap.files.toSet))
-              throw new CowConflict(s"delete at $root: a rewritten file was removed concurrently")
-            // a concurrent DV attach on a file we rewrote from its OLD
-            // vector would resurrect those rows in our rewrite
-            if (touched.exists(r => snap.dvs.get(r) != pre.dvs.get(r)))
-              throw new CowConflict(
-                s"delete at $root: a rewritten file's deletion vector changed concurrently")
-            requireLayout("delete", snap, layout)
-            Some((snap.files.filterNot(touched) ++ staged.rels, snap.txns,
-              CommitMeta(snap.schemaJson.orElse(schemaJson), snap.partitionBy,
-                stats = (snap.stats -- touched) ++ staged.stats, op = "delete",
-                constraints = snap.constraints, cdcFiles = cdcRels)))
-          }
-        }
-        return committed
-      } catch {
-        case c: CowConflict =>
-          attempt += 1
-          if (attempt >= MaxCowRetries) throw new java.util.ConcurrentModificationException(
-            s"delete lost $MaxCowRetries optimistic races at $root: ${c.getMessage}")
-      }
-    }
-    None // unreachable
+    else rewriteWhere(spark, "delete", first, pred, Map.empty)
   }
 
   /** Row-level UPDATE — Delta's `UPDATE t SET c = expr WHERE pred`:
@@ -3339,99 +3398,104 @@ object ManifestTable {
     * or NULL are carried unchanged. Set expressions are cast to the
     * column's declared type; partition columns cannot be updated
     * (that is row movement — express it as delete + append). Returns
-    * None when nothing matched (no new version). */
+    * None when nothing matched (no new version). Under [[DvProperty]]
+    * the matched rows die by deletion vector and their updated versions
+    * append ([[rewriteWhere]]). Concurrency: [[ConflictRules]]. */
   def update(spark: SparkSession, root: String, pred: Column,
       set: Map[String, Column]): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "update needs at least one SET column")
     checkCommitScheme(spark, root)
-    val fs = fsFor(spark, root)
     val first = snapshot(spark, root)
     require(first.version.nonEmpty, s"update needs an existing table at $root")
-    val layout = first.layout
     set.keys.foreach { c =>
-      require(!layout.contains(c),
+      require(!first.layout.contains(c),
         s"update cannot change partition column $c — rows would have to MOVE files; " +
           "express this as delete + append")
       require(!generatedExprs(first.properties).contains(c),
         s"update cannot SET generated column $c — it recomputes from its generation " +
           "expression when a source column changes")
     }
-    // merge-on-read: dead-row vectors on touched files + appended updated
-    // rows, instead of whole-file rewrites
-    if (dvEnabled(first.properties)) return updateMor(spark, root, pred, set)
-    var attempt = 0
-    while (true) {
-      val pre = snapshot(spark, root)
+    rewriteWhere(spark, "update", first, pred, set)
+  }
+
+  /** DELETE (`set` empty) or UPDATE of the rows where `pred` is true,
+    * through [[rowLevel]]. Each attempt finds the candidate files by
+    * stats skipping, then:
+    *
+    *   - copy-on-write: localizes the files holding a matching row and
+    *     rewrites them whole — survivors only, or every row with `set`
+    *     applied;
+    *   - under [[DvProperty]] (merge-on-read): collects the matching
+    *     LIVE rows' positions into one deletion vector per touched file
+    *     and appends the matched rows with `set` applied (nothing for a
+    *     DELETE). At 100 TB this is the difference between KBs of bitmap
+    *     and TBs of rewrite for a point-ish mutation: the write scales
+    *     with matched rows, not with the files they sit in; the read-side
+    *     cost amortizes until [[compact]] purges the vectors.
+    *
+    * With [[CdcProperty]], the matched rows are captured as `delete`, or
+    * as `update_preimage` + `update_postimage` pairs. */
+  private def rewriteWhere(spark: SparkSession, op: String, first: Snapshot, pred: Column,
+      set: Map[String, Column]): Option[Long] = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
+    val hit = coalesce(pred, lit(false))
+    rowLevel(spark, first.root, op, first) { pre =>
+      val root = pre.root
       val schemaJson = pre.schemaJson
-      val schema = pre.schema
-      set.keys.foreach(c => require(schema.fieldNames.contains(c),
+      val partitioned = pre.layout.nonEmpty
+      set.keys.foreach(c => require(pre.schema.fieldNames.contains(c),
         s"update SET references unknown column $c"))
-      val cands = candidates(spark, pre, pred)
-      val touched: Set[String] =
-        if (cands.isEmpty) Set.empty
-        else readTagged(spark, root, cands, schemaJson, layout.nonEmpty, dvs = pre.dvs)
-          .filter(pred)
-          .select("__file").distinct().collect()
-          .map(r => relUnderRoot(root, r.getString(0))).toSet
-      if (touched.isEmpty) return None
-      val hit = coalesce(pred, lit(false))
       // generated columns recompute AFTER the SET (Delta's behavior when a
       // source column changes); identity for rows the update didn't touch
-      def regen(df: DataFrame): DataFrame =
-        generatedExprs(pre.properties).foldLeft(df) { case (d, (c, e)) =>
-          d.withColumn(c, org.apache.spark.sql.functions.expr(e).cast(schema(c).dataType))
-        }
-      def applySet(df: DataFrame): DataFrame =
-        regen(df.select(schema.fields.toIndexedSeq.map { f =>
+      def applySet(df: DataFrame): DataFrame = {
+        val schema = pre.schema
+        val assigned = df.select(schema.fields.toIndexedSeq.map { f =>
           set.get(f.name) match {
             case Some(e) => when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
             case None => col(f.name)
           }
-        }: _*))
-      val rewritten = applySet(
-        readFiles(spark, root, touched.toSeq, schemaJson, layout.nonEmpty, "update",
-          dvs = pre.dvs))
-      // row-level CDC: each matched row as an update_preimage (OLD row)
-      // + update_postimage (SET applied) pair
-      val cdcRels =
+        }: _*)
+        generatedExprs(pre.properties).foldLeft(assigned) { case (d, (c, e)) =>
+          d.withColumn(c, org.apache.spark.sql.functions.expr(e).cast(schema(c).dataType))
+        }
+      }
+      def stageRows(df: DataFrame): Staged =
+        stage(spark, root, df, pre.layout, if (set.isEmpty) Map.empty else pre.constraints,
+          tableSchemaJson = schemaJson, tableProperties = pre.properties)
+      def cdc(matched: DataFrame): Seq[String] =
         if (!cdcEnabled(pre)) Nil
-        else {
-          val matched = readFiles(spark, root, touched.toSeq, schemaJson, layout.nonEmpty,
-            "update cdc", dvs = pre.dvs).filter(hit)
-          stageCdc(spark, root,
-            matched.withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(applySet(matched).withColumn(ChangeTypeCol, lit("update_postimage"))),
-            tableSchemaJson = schemaJson)
+        else stageCdc(spark, root,
+          if (set.isEmpty) matched.withColumn(ChangeTypeCol, lit("delete"))
+          else matched.withColumn(ChangeTypeCol, lit("update_preimage"))
+            .unionByName(applySet(matched).withColumn(ChangeTypeCol, lit("update_postimage"))),
+          tableSchemaJson = schemaJson)
+      // stats skipping first: files whose committed ranges prove the
+      // predicate can't match are never opened by the localization scan
+      val cands = candidates(spark, pre, pred)
+      if (dvEnabled(pre.properties)) {
+        val fresh =
+          if (cands.isEmpty) Nil
+          else collectNewDvBlobs(spark, root, readTagged(spark, root, cands, schemaJson,
+            partitioned, dvs = pre.dvs, tagPos = true).filter(hit))
+        Option.when(fresh.nonEmpty) {
+          val (entries, dvRels) = buildDvEntries(spark, root, pre, fresh)
+          val matched = readFiles(spark, root, entries.keys.toSeq, schemaJson, partitioned, op,
+            dvs = pre.dvs).filter(hit)
+          val cdcRels = cdc(matched)
+          val staged = if (set.isEmpty) Staged(Nil, Map.empty) else stageRows(applySet(matched))
+          RowRewrite(Set.empty, staged, entries, dvRels, cdcRels)
         }
-      val staged = stage(spark, root, rewritten, layout, pre.constraints,
-        tableSchemaJson = schemaJson, tableProperties = pre.properties)
-      try {
-        val committed = cleanupOnFailure(fs, root, staged.rels ++ cdcRels) {
-          commitWith(spark, root) { snap =>
-            if (!touched.subsetOf(snap.files.toSet))
-              throw new CowConflict(s"update at $root: a rewritten file was removed concurrently")
-            else if (touched.exists(r => snap.dvs.get(r) != pre.dvs.get(r)))
-              throw new CowConflict(
-                s"update at $root: a rewritten file's deletion vector changed concurrently")
-            else if (snap.constraints != pre.constraints)
-              throw new CowConflict(s"update at $root: constraints changed concurrently")
-            requireLayout("update", snap, layout)
-            Some((snap.files.filterNot(touched) ++ staged.rels, snap.txns,
-              CommitMeta(snap.schemaJson.orElse(schemaJson), snap.partitionBy,
-                stats = (snap.stats -- touched) ++ staged.stats, op = "update",
-                constraints = snap.constraints, cdcFiles = cdcRels)))
-          }
+      } else {
+        val touched = localize(spark, pre, cands, schemaJson)(_.filter(pred))
+        Option.when(touched.nonEmpty) {
+          val rows = readFiles(spark, root, touched.toSeq, schemaJson, partitioned, op,
+            dvs = pre.dvs)
+          val cdcRels = cdc(rows.filter(hit))
+          val staged = stageRows(if (set.isEmpty) rows.filter(not(hit)) else applySet(rows))
+          RowRewrite(touched, staged, cdcRels = cdcRels)
         }
-        return committed
-      } catch {
-        case c: CowConflict =>
-          attempt += 1
-          if (attempt >= MaxCowRetries) throw new java.util.ConcurrentModificationException(
-            s"update lost $MaxCowRetries optimistic races at $root: ${c.getMessage}")
       }
     }
-    None // unreachable
   }
 
   // ------------------------------------------- merge-on-read internals
@@ -3518,144 +3582,6 @@ object ManifestTable {
       case (rel, e) if stats.get(rel).exists(_.values.exists(_.rows.contains(e.cardinality))) =>
         rel
     }.toSet
-
-  /** [[delete]] under [[DvProperty]] — merge-on-read: localize matching
-    * LIVE rows exactly like the copy-on-write path, but commit a deletion
-    * vector per touched file instead of rewriting it. At 100 TB this is
-    * the difference between KBs of bitmap and TBs of rewrite for a
-    * point-ish delete; the read-side cost (per-file anti-join on
-    * `_metadata.row_index`) amortizes until [[compact]] purges the
-    * vectors. Same optimistic concurrency as copy-on-write, with the DV
-    * entries of touched files added to the conflict check. */
-  private def deleteMor(spark: SparkSession, root: String, pred: Column): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    val fs = fsFor(spark, root)
-    var attempt = 0
-    while (true) {
-      val pre = snapshot(spark, root)
-      val schemaJson = pre.schemaJson
-      val layout = pre.layout
-      val cands = candidates(spark, pre, pred)
-      if (cands.isEmpty) return None
-      val matched = readTagged(spark, root, cands, schemaJson, layout.nonEmpty,
-          dvs = pre.dvs, tagPos = true)
-        .filter(coalesce(pred, lit(false)))
-      val fresh = collectNewDvBlobs(spark, root, matched)
-      if (fresh.isEmpty) return None
-      val (entries, dvRels) = buildDvEntries(spark, root, pre, fresh)
-      val touched = entries.keySet
-      val cdcRels =
-        if (!cdcEnabled(pre)) Nil
-        else stageCdc(spark, root,
-          readFiles(spark, root, touched.toSeq, schemaJson, layout.nonEmpty, "delete cdc",
-              dvs = pre.dvs)
-            .filter(coalesce(pred, lit(false)))
-            .withColumn(ChangeTypeCol, lit("delete")), tableSchemaJson = schemaJson)
-      try {
-        val committed = cleanupOnFailure(fs, root, dvRels ++ cdcRels) {
-          commitWith(spark, root) { snap =>
-            if (!touched.subsetOf(snap.files.toSet))
-              throw new CowConflict(s"delete at $root: a DV'd file was removed concurrently")
-            if (touched.exists(r => snap.dvs.get(r) != pre.dvs.get(r)))
-              throw new CowConflict(
-                s"delete at $root: a file's deletion vector changed concurrently")
-            requireLayout("delete", snap, layout)
-            val dead = fullyDead(snap.stats, entries)
-            Some((snap.files.filterNot(dead), snap.txns,
-              CommitMeta(snap.schemaJson.orElse(schemaJson), snap.partitionBy,
-                stats = snap.stats -- dead, op = "delete",
-                constraints = snap.constraints, cdcFiles = cdcRels, dvs = entries)))
-          }
-        }
-        return committed
-      } catch {
-        case c: CowConflict =>
-          attempt += 1
-          if (attempt >= MaxCowRetries) throw new java.util.ConcurrentModificationException(
-            s"delete lost $MaxCowRetries optimistic races at $root: ${c.getMessage}")
-      }
-    }
-    None // unreachable
-  }
-
-  /** [[update]] under [[DvProperty]] — merge-on-read: the matched rows'
-    * old positions die via deletion vectors and their SET-applied
-    * versions APPEND as new files (Delta's DV-backed UPDATE). Untouched
-    * rows of touched files are never rewritten — the write cost scales
-    * with matched rows, not with the files they sit in. */
-  private def updateMor(spark: SparkSession, root: String, pred: Column,
-      set: Map[String, Column]): Option[Long] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    val fs = fsFor(spark, root)
-    var attempt = 0
-    while (true) {
-      val pre = snapshot(spark, root)
-      val schemaJson = pre.schemaJson
-      val schema = pre.schema
-      set.keys.foreach(c => require(schema.fieldNames.contains(c),
-        s"update SET references unknown column $c"))
-      val layout = pre.layout
-      val cands = candidates(spark, pre, pred)
-      if (cands.isEmpty) return None
-      val hit = coalesce(pred, lit(false))
-      val matched = readTagged(spark, root, cands, schemaJson, layout.nonEmpty,
-          dvs = pre.dvs, tagPos = true)
-        .filter(hit)
-      val fresh = collectNewDvBlobs(spark, root, matched)
-      if (fresh.isEmpty) return None
-      val (entries, dvRels) = buildDvEntries(spark, root, pre, fresh)
-      val touched = entries.keySet
-      def applySet(df: DataFrame): DataFrame = {
-        val assigned = df.select(schema.fields.toIndexedSeq.map { f =>
-          set.get(f.name) match {
-            case Some(e) => when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
-        // generated columns recompute from the updated row
-        generatedExprs(pre.properties).foldLeft(assigned) { case (d, (c, e)) =>
-          d.withColumn(c, org.apache.spark.sql.functions.expr(e).cast(schema(c).dataType))
-        }
-      }
-      val oldMatched = readFiles(spark, root, touched.toSeq, schemaJson, layout.nonEmpty,
-        "update", dvs = pre.dvs).filter(hit)
-      val newRows = applySet(oldMatched)
-      val cdcRels =
-        if (!cdcEnabled(pre)) Nil
-        else stageCdc(spark, root,
-          oldMatched.withColumn(ChangeTypeCol, lit("update_preimage"))
-            .unionByName(newRows.withColumn(ChangeTypeCol, lit("update_postimage"))),
-          tableSchemaJson = schemaJson)
-      val staged = stage(spark, root, newRows, layout, pre.constraints,
-        tableSchemaJson = schemaJson, tableProperties = pre.properties)
-      try {
-        val committed = cleanupOnFailure(fs, root, staged.rels ++ dvRels ++ cdcRels) {
-          commitWith(spark, root) { snap =>
-            if (!touched.subsetOf(snap.files.toSet))
-              throw new CowConflict(s"update at $root: a DV'd file was removed concurrently")
-            if (touched.exists(r => snap.dvs.get(r) != pre.dvs.get(r)))
-              throw new CowConflict(
-                s"update at $root: a file's deletion vector changed concurrently")
-            if (snap.constraints != pre.constraints)
-              throw new CowConflict(s"update at $root: constraints changed concurrently")
-            requireLayout("update", snap, layout)
-            val dead = fullyDead(snap.stats, entries)
-            Some((snap.files.filterNot(dead) ++ staged.rels, snap.txns,
-              CommitMeta(snap.schemaJson.orElse(schemaJson), snap.partitionBy,
-                stats = (snap.stats -- dead) ++ staged.stats, op = "update",
-                constraints = snap.constraints, cdcFiles = cdcRels, dvs = entries)))
-          }
-        }
-        return committed
-      } catch {
-        case c: CowConflict =>
-          attempt += 1
-          if (attempt >= MaxCowRetries) throw new java.util.ConcurrentModificationException(
-            s"update lost $MaxCowRetries optimistic races at $root: ${c.getMessage}")
-      }
-    }
-    None // unreachable
-  }
 
   /** Compact the current snapshot into ~targetFileMb files and commit the
     * rewrite as one manifest rename, marked `dataChange:false` so

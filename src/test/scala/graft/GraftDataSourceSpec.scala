@@ -150,6 +150,21 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(spark.sql(s"SELECT id FROM graft.`$root` WHERE k = 2").count() == 15)
   }
 
+  test("SQL-on-file: planning one SELECT of a deletion-vector'd table opens the manifest once") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("gds_dv_opens").toString + "/t"
+    val root = "graftfs:" + dir
+    ManifestTable.append(spark, root, (0 until 40).map(i => (i.toLong, i % 4)).toDF("id", "k"))
+    ManifestTable.setProperty(spark, root, ManifestTable.DvProperty, "true")
+    ManifestTable.delete(spark, root, col("id") === 2L)
+    val opens = GraftTestFs.opensDuring {
+      spark.sql(s"SELECT id FROM graft.`$root` WHERE k = 2").queryExecution.executedPlan
+    }.filter(p => p.startsWith(dir) && p.endsWith(".manifest"))
+    // the DV-aware relation scans the snapshot the catalog loaded
+    assert(opens.size == 1, s"manifest opened ${opens.size} times: $opens")
+    assert(spark.sql(s"SELECT id FROM graft.`$root` WHERE k = 2").count() == 9)
+  }
+
   test("streaming source: snapshot first batch, then per-commit increments") {
     import spark.implicits._
     val root = tmp("gds_src")
